@@ -502,12 +502,19 @@ def _read_cpu_ticks() -> "tuple[int, int] | None":
     None when unavailable (non-Linux)."""
     try:
         with open("/proc/stat") as f:
-            parts = f.readline().split()
+            return _cpu_ticks(f.readline())
     except OSError:
         return None
+
+
+def _cpu_ticks(line: str) -> "tuple[int, int] | None":
+    """(steal_ticks, total_ticks) of one /proc/stat cpu line. The total
+    sums fields 0-7 (user..steal) only: guest and guest_nice are already
+    counted inside user and nice."""
+    parts = line.split()
     if not parts or parts[0] != "cpu":
         return None
-    vals = [int(x) for x in parts[1:]]
+    vals = [int(x) for x in parts[1:9]]
     steal = vals[7] if len(vals) > 7 else 0
     return steal, sum(vals)
 

@@ -452,6 +452,14 @@ def test_bench_steal_share_self_label():
     assert bench._steal_share(None, (1, 2)) is None
     assert bench._steal_share((1, 2), None) is None
     assert bench._steal_share((1, 2), (1, 2)) is None
+    # the total sums fields 0-7 only: guest/guest_nice (fields 8-9) are
+    # already inside user/nice and must not be counted twice
+    line = "cpu  100 20 30 800 10 0 5 35 400 60\n"
+    assert bench._cpu_ticks(line) == (35, 1000)
+    assert bench._steal_share(
+        bench._cpu_ticks(line), bench._cpu_ticks("cpu  200 20 30 850 10 0 5 85 500 60")
+    ) == 0.25
+    assert bench._cpu_ticks("intr 1 2 3") is None
     # the live reader returns a plausible pair on Linux
     ticks = bench._read_cpu_ticks()
     if ticks is not None:

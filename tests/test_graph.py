@@ -10,6 +10,7 @@ from unifydb_spark.operators.graph import (
     degrees,
     pagerank,
     ref_edges,
+    shortest_paths,
     triangle_count,
 )
 
@@ -217,6 +218,26 @@ def test_connected_components_long_chain_converges_logarithmically(spark):
     assert {r["component"] for r in rows} == {0}
     steps = instrument.counters.get("cc_supersteps", 99)
     assert steps <= 15, f"chain of {n} took {steps} supersteps"
+
+
+def test_shortest_paths_chain_and_zero_supersteps(spark):
+    """BFS distances on an undirected chain 0-1-2-3 plus an unreachable
+    pair 7-8; max_iter=0 runs no superstep and returns the sources at
+    distance 0."""
+    from unifydb_spark import instrument
+
+    edges = spark.createDataFrame(
+        [(0, 1), (2, 1), (2, 3), (7, 8)], "src bigint, dst bigint"
+    )
+    for max_iter, want, steps in (
+        (20, {0: 0, 1: 1, 2: 2, 3: 3}, 4),
+        (2, {0: 0, 1: 1, 2: 2}, 2),
+        (0, {0: 0}, 0),
+    ):
+        instrument.reset()
+        got = shortest_paths(edges, [0], max_iter=max_iter).collect()
+        assert {r["node"]: r["dist"] for r in got} == want
+        assert instrument.counters["bfs_supersteps"] == steps
 
 
 def test_degree_assortativity_star_vs_clique(spark):

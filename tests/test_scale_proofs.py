@@ -1050,7 +1050,7 @@ def test_concurrent_fixpoints_shared_session(spark):
     (b) the SHARED session's spark.sql.shuffle.partitions is NEVER
     observed narrowed and is unchanged afterwards — the narrowing lives
     entirely in the thread-local private planning session
-    (rules._frontier_checkpoint re-binds the delta plan), so a user
+    (iterate.checkpoint re-binds the delta plan), so a user
     sharing one session cannot be planned at another query's frontier
     width."""
     import threading

@@ -134,3 +134,38 @@ def test_unsupported_accept_400(srv):
     )
     assert status == 400
     assert "Unsupported accept type" in raw
+
+
+def test_query_compiles_once(spark):
+    """/query compiles each request once and decodes that result: a
+    second compile would re-run a recursive rule's whole fixpoint."""
+    from unifydb_spark.values import Ref
+
+    eng = Engine(spark, FactStore(spark).seed(
+        [(i, ":parent", Ref(i + 1), 0, True) for i in range(1, 5)]
+    ))
+    compiles = []
+    compile_once = eng.compile
+
+    def counted(*args, **kwargs):
+        compiles.append(1)
+        return compile_once(*args, **kwargs)
+
+    eng.compile = counted
+    server, port = serve_background(eng)
+    try:
+        status, res = _post(port, "/query", {"query": {
+            "find": ["?y"],
+            "where": [{"$call": ["anc", {"$ref": 1}, "?y"]}],
+            "rules": [
+                [{"$call": ["anc", "?x", "?y"]}, ["?x", ":parent", "?y"]],
+                [{"$call": ["anc", "?x", "?y"]}, ["?x", ":parent", "?z"],
+                 {"$call": ["anc", "?z", "?y"]}],
+            ],
+        }})
+    finally:
+        server.shutdown()
+    assert status == 200, res
+    assert res["columns"] == ["y"]
+    assert sorted(r[0]["$ref"] for r in res["results"]) == [2, 3, 4, 5]
+    assert len(compiles) == 1

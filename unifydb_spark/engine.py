@@ -102,16 +102,14 @@ class Engine:
     def query_rows(self, q: dict, db: Optional[Db] = None) -> list[tuple]:
         """Collect results decoded to Python values (Ref for entity ids,
         nested lists for JSON values) — the reference's :results shape."""
-        df, reprs = self.compile(q, db)
-        out = []
-        for row in df.collect():
-            vals = []
-            for name in df.columns:
-                v = row[name]
-                r = reprs.get(name, "")
-                vals.append(_decode(v, r))
-            out.append(tuple(vals))
-        return out
+        return decode_rows(*self.compile(q, db))
+
+
+def decode_rows(df: DataFrame, reprs: dict) -> list[tuple]:
+    """Collect a compiled query's result DataFrame, decoding each column
+    by its repr (the pair `Engine.compile` returns)."""
+    cols = [(name, reprs.get(name, "")) for name in df.columns]
+    return [tuple(_decode(row[name], r) for name, r in cols) for row in df.collect()]
 
 
 def _decode(v: Any, repr_: str) -> Any:

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from unifydb_spark import iterate
+
 DEC = "decimal(38,18)"
 
 
@@ -173,31 +175,24 @@ def connected_components(
     # frontier-width the supersteps (the rules.py fixpoint pattern): on a
     # small graph every per-superstep shuffle input is node/edge-sized,
     # and session-width exchanges are pure scheduler overhead (measured
-    # ~1s/superstep on a 477-node pair graph at 32 partitions). The hint
-    # bounds EVERY shuffle input in the scoped plans (labels n, prop <=
-    # n, undirected edges <= 2m), so a big graph keeps the session width
-    # — and the exchange-reuse layout — untouched.
-    from unifydb_spark.query.rules import _frontier_checkpoint, _frontier_parts
-
-    spark = edges.sparkSession
+    # ~1s/superstep on a 477-node pair graph at 32 partitions). The row
+    # bound covers EVERY shuffle input in the superstep plans (labels n,
+    # prop <= n, undirected edges <= 2m), so a big graph keeps the session
+    # width — and the exchange-reuse layout — untouched.
     hint = n + 2 * m
-    try:
-        session_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        session_width = None
-    width = (
-        _frontier_parts(session_width, hint) if session_width else None
-    )
     # hash-partition the (static) edge relation on the per-superstep
     # aggregate/join key ONCE, at the superstep width so the layout is
     # reused (a width mismatch would re-exchange the edges every round)
     key = "dst" if broadcast_labels else "src"
-    und_base = edges.select("src", "dst").unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
     und = (
-        und_base.repartition(width, key) if width else und_base.repartition(key)
-    ).persist()
+        edges.select("src", "dst")
+        .unionByName(
+            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+        .distinct()
+        .repartition(iterate.width(edges.sparkSession, hint), key)
+        .persist()
+    )
     # the edge cache feeds only the loop; the returned labels derive from a
     # checkpointed frame, so the finally-unpersist leaks nothing to callers
     try:
@@ -216,8 +211,7 @@ def connected_components(
             lab2 = merged.select(
                 F.col("node").alias("_jn"), F.col("component").alias("_jc")
             )
-            merged = _frontier_checkpoint(
-                spark,
+            merged = iterate.checkpoint(
                 merged.join(
                     lab2, merged["component"] == lab2["_jn"], "left"
                 )
@@ -394,14 +388,14 @@ def shortest_paths(edges: DataFrame, sources: list[int], max_iter: int = 20) -> 
     frontier = dist
     # edge cache feeds only the loop; dist is checkpointed every superstep
     try:
+        d = 0  # max_iter=0: the sources alone, no superstep
         for d in range(1, max_iter + 1):
-            nxt = (
+            nxt = iterate.checkpoint(
                 und.join(frontier, und["src"] == frontier["node"])
                 .select(F.col("dst").alias("node"))
                 .distinct()
                 .join(dist, "node", "left_anti")
                 .withColumn("dist", F.lit(d))
-                .localCheckpoint()
             )
             if nxt.limit(1).count() == 0:
                 break

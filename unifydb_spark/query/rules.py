@@ -12,9 +12,11 @@ query.clj:271). Here:
  - recursive rule sets (detected per strongly-connected component of the
    rule call graph) run as a driver-side **semi-naive fixpoint**: only the
    last iteration's delta feeds the recursive branches, new tuples are
-   anti-joined against the accumulated total, and `localCheckpoint()` cuts
-   the growing plan lineage each round (SURVEY §4 custom-work item 1).
-   An iteration cap guards non-termination on pathological rules.
+   anti-joined against the accumulated total, and `iterate.checkpoint`
+   cuts the growing plan lineage each round (SURVEY §4 custom-work item
+   1). One loop (`_semi_naive`) runs both the fixpoint and its magic-sets
+   demand seeding; an iteration cap guards non-termination on
+   pathological rules.
 
 Scale notes: the fixpoint's per-iteration work is distinct+anti-join on the
 IDB key columns — both shuffle on the same keys, so AQE coalesces them; the
@@ -24,13 +26,12 @@ is rejected at compile time.
 
 from __future__ import annotations
 
-import contextlib
 import itertools
-import threading
 from typing import Optional
 
 from pyspark.sql import functions as F
 
+from unifydb_spark import instrument, iterate
 from unifydb_spark.query import compile as C
 from unifydb_spark.query.parse import (
     And,
@@ -51,126 +52,6 @@ _FRESH = itertools.count()
 
 MAX_ITERATIONS = 100
 
-# Frontier-sized shuffles (round-13, VERDICT r12 ask #1): the fixpoint
-# loops run O(rounds) driver actions whose inputs are the per-round
-# deltas. When the measured frontier is tiny (r137's demand chain is 6
-# rows), planning every round's distinct/anti-join at the session's
-# shuffle width (32 on the bench) schedules thousands of empty tasks —
-# the instrumented job count is flat across rounds (93 jobs), so the
-# wall-clock regression the round-12 bench flagged was per-task
-# scheduler overhead, not plan growth. Scope the rounds to a partition
-# count derived from the rows we ALREADY count each round (no extra
-# jobs); any frontier past _FRONTIER_SESSION_ROWS — or an unknown size —
-# keeps the session setting, so real data is never squeezed. AQE stays
-# on: checkpointed tiny deltas broadcast against EDB sides regardless.
-_FRONTIER_ROWS_PER_PARTITION = 2_000
-_FRONTIER_SESSION_ROWS = 100_000
-
-# Frontier narrowing is ISOLATED BY CONSTRUCTION (round-15, VERDICT r14
-# ask #4): the round's delta plan is re-bound to a PRIVATE thread-local
-# `spark.newSession()` clone (shared SparkContext, own SQLConf) whose
-# shuffle width carries the narrowed value, checkpointed there, and the
-# materialized LogicalRDD re-bound to the calling session — the shared
-# session's conf is never touched, so a user running unrelated queries
-# (or a second fixpoint) concurrently on ONE SparkSession can never be
-# planned at another query's narrowed width (pinned by
-# tests/test_scale_proofs.py::test_concurrent_fixpoints_shared_session).
-# `_frontier_shuffle` below remains only as the conf-mutating FALLBACK
-# for environments where the plan re-bind hook is unavailable; the lock
-# serializes that path (interleaved fixpoints must not read each other's
-# narrowed value as "the session setting").
-_FRONTIER_LOCK = threading.RLock()  # RLock: nested fixpoints (cross-SCC
-# rule calls execute driver-side during compilation) must not self-deadlock
-
-_PRIVATE_SESSIONS = threading.local()  # thread-local: concurrent fixpoints
-# get distinct private sessions, so no conf race without any lock
-
-
-def _narrow_session(spark):
-    """The calling thread's private planning session for `spark`'s
-    context — created once per (thread, base session), conf re-set per
-    narrowed checkpoint. Holds a strong ref to the base so the id() key
-    can never be reused while the clone lives."""
-    cache = getattr(_PRIVATE_SESSIONS, "by_base", None)
-    if cache is None:
-        cache = _PRIVATE_SESSIONS.by_base = {}
-    ent = cache.get(id(spark))
-    if ent is None or ent[0] is not spark:
-        ent = cache[id(spark)] = (spark, spark.newSession())
-    return ent[1]
-
-
-def _rebind(df, session):
-    """Re-bind a DataFrame's logical plan to another session of the same
-    SparkContext (Dataset.ofRows) — planning/execution then read THAT
-    session's SQLConf."""
-    from pyspark.sql import DataFrame
-
-    jdf = session._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-        session._jsparkSession, df._jdf.logicalPlan()
-    )
-    return DataFrame(jdf, session)
-
-
-def _frontier_checkpoint(spark, df, hint: Optional[int]):
-    """localCheckpoint(eager) `df` with its internal shuffles planned at
-    the frontier-scoped width, WITHOUT mutating `spark`'s conf: re-bind
-    the plan to the thread's private session, narrow THAT session's
-    shuffle width, materialize, and re-bind the resulting LogicalRDD to
-    the calling session. No-op width when the hint is unknown or big
-    enough to want the session setting; falls back to the locked
-    conf-mutation scope if the re-bind hook is unavailable."""
-    try:
-        session = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        return df.localCheckpoint(eager=True)
-    want = session if hint is None else _frontier_parts(session, int(hint))
-    if want >= session:
-        return df.localCheckpoint(eager=True)
-    try:
-        priv = _narrow_session(spark)
-        priv.conf.set("spark.sql.shuffle.partitions", str(want))
-        ck = _rebind(df, priv).localCheckpoint(eager=True)
-        return _rebind(ck, spark)
-    except Exception:
-        with _frontier_shuffle(spark, hint):
-            return df.localCheckpoint(eager=True)
-
-
-def _frontier_parts(session: int, hint: int) -> int:
-    if hint > _FRONTIER_SESSION_ROWS:
-        return session
-    return max(1, min(session, -(-hint // _FRONTIER_ROWS_PER_PARTITION)))
-
-
-@contextlib.contextmanager
-def _frontier_shuffle(spark, hint: Optional[int]):
-    """Scope spark.sql.shuffle.partitions to the measured frontier size
-    for one fixpoint round; restores the session value on exit. No-op
-    when the hint is unknown or big enough to want the session width.
-
-    The hint must bound every shuffle INPUT in the scoped plan, not just
-    the frontier rows — callers checkpoint round-invariant relations
-    (e.g. magic-step EDB distincts) BEFORE entering this scope and fold
-    their counted sizes into the hint, so a full-table shuffle can never
-    be funneled through a 1-partition exchange (round-14 ADVICE)."""
-    with _FRONTIER_LOCK:
-        conf = spark.conf
-        try:
-            session = int(conf.get("spark.sql.shuffle.partitions"))
-        except Exception:
-            yield
-            return
-        want = session if hint is None else _frontier_parts(session, int(hint))
-        if want >= session:
-            yield
-            return
-        conf.set("spark.sql.shuffle.partitions", str(want))
-        try:
-            yield
-        finally:
-            conf.set("spark.sql.shuffle.partitions", str(session))
-
 
 class RulesEnv:
     def __init__(self, rules: tuple, max_iterations: int = MAX_ITERATIONS):
@@ -179,7 +60,22 @@ class RulesEnv:
             self.by_name.setdefault(r.name, []).append(r)
         self.overlays: dict[str, C.Rel] = {}
         self.max_iterations = max_iterations
-        self._recursive_names = self._find_recursive()
+        # transitive closure of the rule call graph: name -> names it reaches
+        reach = {
+            n: set().union(*(self._called(r.body) for r in rs)) & set(self.by_name)
+            for n, rs in self.by_name.items()
+        }
+        changed = True
+        while changed:
+            changed = False
+            for n in reach:
+                ext = set().union(*(reach.get(m, set()) for m in reach[n]))
+                if not ext <= reach[n]:
+                    reach[n] |= ext
+                    changed = True
+        self._reach = reach
+        # a name is recursive if it reaches itself
+        self._recursive_names = {n for n in reach if n in reach[n]}
 
     def _called(self, clause) -> set:
         if isinstance(clause, RuleApp):
@@ -193,39 +89,9 @@ class RulesEnv:
             return self._called(clause.clause)
         return set()
 
-    def _find_recursive(self) -> set:
-        # transitive closure of the rule call graph; a name is recursive if
-        # it reaches itself
-        edges = {
-            n: set().union(*(self._called(r.body) for r in rs)) & set(self.by_name)
-            for n, rs in self.by_name.items()
-        }
-        reach = {n: set(e) for n, e in edges.items()}
-        changed = True
-        while changed:
-            changed = False
-            for n in reach:
-                ext = set().union(*(reach.get(m, set()) for m in reach[n]))
-                if not ext <= reach[n]:
-                    reach[n] |= ext
-                    changed = True
-        return {n for n in reach if n in reach[n]}
-
     def scc_of(self, name: str) -> set:
         # mutually-recursive group: names that reach each other
-        edges = {
-            n: set().union(*(self._called(r.body) for r in rs)) & set(self.by_name)
-            for n, rs in self.by_name.items()
-        }
-        reach = {n: set(e) for n, e in edges.items()}
-        changed = True
-        while changed:
-            changed = False
-            for n in reach:
-                ext = set().union(*(reach.get(m, set()) for m in reach[n]))
-                if not ext <= reach[n]:
-                    reach[n] |= ext
-                    changed = True
+        reach = self._reach
         return {m for m in reach.get(name, set()) | {name}
                 if name in reach.get(m, set()) and m in reach.get(name, set())}
 
@@ -406,16 +272,12 @@ def _axiom_rel(db, rule: Rule, app: RuleApp) -> Optional[C.Rel]:
 
 
 def compile_rule_app(db, app: RuleApp, env: Optional["RulesEnv"]) -> C.Rel:
-    if env is None or app.name not in env.by_name:
-        if env is not None and app.name in env.overlays:
-            ov = env.overlays[app.name]
-            params = tuple(Var(n) for n in ov.vars)
-            return _adapt(ov, params, app.args)
-        raise QueryError("unknown-rule", f"Unknown rule {app.name}", rule=app.name)
-    if app.name in env.overlays:
+    if env is not None and app.name in env.overlays:
         ov = env.overlays[app.name]
         params = tuple(Var(n) for n in ov.vars)
         return _adapt(ov, params, app.args)
+    if env is None or app.name not in env.by_name:
+        raise QueryError("unknown-rule", f"Unknown rule {app.name}", rule=app.name)
     if app.name in env._recursive_names:
         idb = _fixpoint(db, app.name, env, seed_args=app.args)
         params = tuple(Var(n) for n in idb.vars)
@@ -612,8 +474,6 @@ def _magic_seed(db, name: str, env: "RulesEnv", scc: set, app_args) -> Optional[
     total = C.Rel(
         spark.range(1).select(*seed_cols).localCheckpoint(eager=True), seed_vars
     )
-    from unifydb_spark import instrument
-
     if not steps:
         # every recursive call re-uses the head's bound vars verbatim:
         # demand never grows beyond the call-site constants
@@ -624,20 +484,19 @@ def _magic_seed(db, name: str, env: "RulesEnv", scc: set, app_args) -> Optional[
     # (rest-clauses join -> select -> distinct). Checkpoint each ONCE at
     # the session shuffle width, before any frontier narrowing: (a) the
     # full-EDB distinct no longer re-executes every round, and (b) it can
-    # never be planned inside a narrowed scope. The counted step sizes
-    # fold into the per-round width hint so the guard bounds shuffle
-    # INPUT size, not just frontier rows (round-14 ADVICE, medium).
+    # never be planned inside a narrowed round. The counted step sizes
+    # fold into the per-round row bound so it bounds shuffle INPUT size,
+    # not just frontier rows (round-14 ADVICE, medium).
     ckpt_steps, max_step_rows = [], 0
     for step, kinds in steps:
         df = step.df.localCheckpoint(eager=True)
         max_step_rows = max(max_step_rows, df.count())
         ckpt_steps.append((C.Rel(df, dict(step.vars)), kinds))
-    steps = ckpt_steps
-    delta = total
-    demand_rows = 1  # the seed row; grows by each round's counted fresh
-    for _round in range(env.max_iterations):
+
+    def advance(_name, deltas):
+        delta = deltas[name]
         produced = []
-        for step, kinds in steps:
+        for step, kinds in ckpt_steps:
             nxt = C.join_rels(delta, step, "inner")
             sel, vars_out = [], {}
             for k, kind in enumerate(kinds):
@@ -648,23 +507,64 @@ def _magic_seed(db, name: str, env: "RulesEnv", scc: set, app_args) -> Optional[
                     sel.append(C.bt(f"__c{k}").alias(f"__m{k}"))
                     vars_out[f"__m{k}"] = step.vars[f"__c{k}"]
             produced.append(C.Rel(nxt.df.select(*sel), vars_out))
-        prod = C.align_union(produced)
-        fresh = C.join_rels(
-            C.Rel(prod.df.distinct(), dict(prod.vars)), total, "left_anti"
-        )
-        fresh_df = _frontier_checkpoint(
-            spark, fresh.df, demand_rows + max_step_rows
-        )
-        cnt = fresh_df.count()
-        if cnt == 0:
-            instrument.note("rule_magic_rounds", _round + 1)
-            instrument.note("rule_magic_size", total.df.count())
-            return bound, total
-        demand_rows += cnt
-        union = C.align_union([total, C.Rel(fresh_df, dict(fresh.vars))])
-        total = C.Rel(union.df, dict(union.vars))
-        delta = C.Rel(fresh_df, dict(fresh.vars))
-    return None  # demand set did not close — fall back to the full closure
+        return C.align_union(produced)
+
+    totals = {name: total}
+    # the seed row plus the largest step relation bound the first round
+    rounds, fresh_rows, closed = _semi_naive(
+        totals, advance, 1 + max_step_rows, env.max_iterations
+    )
+    if not closed:
+        return None  # demand set did not close — fall back to the full closure
+    instrument.note("rule_magic_rounds", rounds)
+    # the total is the seed row UNION ALL each (disjoint) counted delta
+    instrument.note("rule_magic_size", 1 + fresh_rows)
+    return bound, totals[name]
+
+
+def _semi_naive(totals: dict, advance, rows: Optional[int], max_rounds: int) -> tuple:
+    """Semi-naive rounds over `totals` ({name: checkpointed Rel}), which
+    are advanced in place. Each round, name by name, `advance(name,
+    deltas)` derives candidate tuples from the previous round's deltas;
+    the distinct candidates not yet in the name's total are checkpointed
+    (`iterate.checkpoint`, sized by `rows`: counted rows that bound every
+    shuffle input of a round, None when unknown), counted, and unioned
+    into the total. A round that finds nothing new closes the loop.
+
+    Returns (rounds, fresh rows over all rounds, closed); closed is False
+    when `max_rounds` rounds ran without closing."""
+    deltas = dict(totals)
+    fresh_rows = 0
+    for rnd in range(1, max_rounds + 1):
+        new_deltas: dict[str, C.Rel] = {}
+        round_rows = 0
+        for n in totals:
+            produced = advance(n, deltas)
+            fresh = C.join_rels(
+                C.Rel(produced.df.distinct(), dict(produced.vars)),
+                totals[n],
+                "left_anti",
+            )
+            fresh_df = iterate.checkpoint(fresh.df, rows)
+            cnt = fresh_df.count()
+            round_rows += cnt
+            if rows is not None:
+                rows += cnt
+            if cnt > 0:
+                new_deltas[n] = C.Rel(fresh_df, dict(fresh.vars))
+                # keep the total LAZY: both inputs are already checkpointed
+                # (the total's blocks, each delta above), so the union is a
+                # scan of materialized blocks — eagerly re-checkpointing it
+                # here would rewrite the whole accumulated total every
+                # round (quadratic materialization in the fixpoint size)
+                totals[n] = C.align_union([totals[n], new_deltas[n]])
+            else:
+                new_deltas[n] = C.Rel(fresh_df.limit(0), dict(fresh.vars))
+        fresh_rows += round_rows
+        if round_rows == 0:
+            return rnd, fresh_rows, True
+        deltas = new_deltas
+    return max_rounds, fresh_rows, False
 
 
 def _restrict_to_magic(rel: C.Rel, magic: Optional[tuple]) -> C.Rel:
@@ -711,7 +611,6 @@ def _fixpoint(db, name: str, env: "RulesEnv", seed_args=None) -> C.Rel:
             magic = None
 
     totals: dict[str, C.Rel] = {}
-    deltas: dict[str, C.Rel] = {}
     for n in scc:
         if not base[n]:
             raise QueryError(
@@ -721,66 +620,30 @@ def _fixpoint(db, name: str, env: "RulesEnv", seed_args=None) -> C.Rel:
         r = _restrict_to_magic(r, magic)
         df = r.df.distinct().localCheckpoint(eager=True)
         totals[n] = C.Rel(df, dict(r.vars))
-        deltas[n] = totals[n]
 
-    from unifydb_spark import instrument
+    def advance(n, deltas):
+        # recursive branches see the previous delta for SCC calls
+        env.overlays.update(deltas)
+        try:
+            produced = C.align_union([_positional(db, rule, env) for rule in rec[n]])
+        finally:
+            for m in scc:
+                env.overlays.pop(m, None)
+        return _restrict_to_magic(produced, magic)
 
     base_rows = totals[name].df.count()
-    instrument.bump("rule_fixpoint_delta_rows", base_rows)
-    # frontier-size hint: exact for single-member SCCs (the counted base
-    # + every counted delta = every row any round's plan can hold); for
-    # multi-member SCCs the other members' bases are never counted, so
-    # the hint stays None and rounds keep the session shuffle width
-    frontier_rows = base_rows if len(scc) == 1 else None
-
-    for _round in range(env.max_iterations):
-        instrument.note("rule_fixpoint_rounds", _round + 1)
-        new_deltas: dict[str, C.Rel] = {}
-        any_new = False
-        for n in scc:
-            if not rec[n]:
-                continue
-            # recursive branches see the previous delta for SCC calls
-            env.overlays.update({m: deltas[m] for m in scc})
-            try:
-                produced = C.align_union(
-                    [_positional(db, rule, env) for rule in rec[n]]
-                )
-            finally:
-                for m in scc:
-                    env.overlays.pop(m, None)
-            produced = _restrict_to_magic(produced, magic)
-            tot = totals[n]
-            fresh = C.join_rels(
-                C.Rel(produced.df.distinct(), dict(produced.vars)), tot, "left_anti"
-            )
-            fresh_df = _frontier_checkpoint(
-                db.store.spark, fresh.df, frontier_rows
-            )
-            cnt = fresh_df.count()
-            if frontier_rows is not None:
-                frontier_rows += cnt
-            instrument.bump("rule_fixpoint_delta_rows", cnt)
-            if cnt > 0:
-                any_new = True
-                union = C.align_union(
-                    [totals[n], C.Rel(fresh_df, dict(fresh.vars))]
-                )
-                # keep the total LAZY: both inputs are already checkpointed
-                # (base at entry, each delta above), so the union is a scan
-                # of materialized blocks — eagerly re-checkpointing it here
-                # would rewrite the whole accumulated total every iteration
-                # (quadratic materialization in the fixpoint size)
-                totals[n] = C.Rel(union.df, dict(union.vars))
-                new_deltas[n] = C.Rel(fresh_df, dict(fresh.vars))
-            else:
-                new_deltas[n] = C.Rel(
-                    fresh_df.limit(0), dict(fresh.vars)
-                )
-        deltas = new_deltas if new_deltas else deltas
-        if not any_new:
-            return totals[name]
-    raise QueryError(
-        "fixpoint-divergence",
-        f"rule {name} did not reach a fixpoint in {env.max_iterations} iterations",
+    # row bound: exact for single-member SCCs (the counted base + every
+    # counted delta = every row any round's plan can hold); for
+    # multi-member SCCs the other members' bases are never counted, so it
+    # stays unknown and rounds keep the session shuffle width
+    rounds, fresh_rows, closed = _semi_naive(
+        totals, advance, base_rows if len(scc) == 1 else None, env.max_iterations
     )
+    instrument.bump("rule_fixpoint_delta_rows", base_rows + fresh_rows)
+    instrument.note("rule_fixpoint_rounds", rounds)
+    if not closed:
+        raise QueryError(
+            "fixpoint-divergence",
+            f"rule {name} did not reach a fixpoint in {env.max_iterations} iterations",
+        )
+    return totals[name]

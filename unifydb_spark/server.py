@@ -198,6 +198,7 @@ class EngineHandler(BaseHTTPRequestHandler):
                 db = self.engine.db(
                     req.get("tx-id", "latest"), bool(req.get("historical", False))
                 )
+                from unifydb_spark.engine import decode_rows
                 from unifydb_spark.resources import persist_scope
 
                 # results are materialized inside the scope; its exit drops
@@ -205,10 +206,9 @@ class EngineHandler(BaseHTTPRequestHandler):
                 # drain would evict caches concurrent in-flight queries
                 # (other handler threads) are still using
                 with persist_scope():
-                    df, _ = self.engine.compile(q, db)
-                    cols = df.columns
-                    rows = self.engine.query_rows(q, db)
-                return self._send(200, {"columns": cols, "results": rows})
+                    df, reprs = self.engine.compile(q, db)
+                    rows = decode_rows(df, reprs)
+                return self._send(200, {"columns": df.columns, "results": rows})
             if self.path == "/transact":
                 report = self.engine.transact(
                     _normalize_query(req.get("tx-data") or [])
