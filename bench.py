@@ -1078,7 +1078,9 @@ def _tail_line(
     headline fields always; regressions/solo_retimes/jobs_drift capped at
     3 entries when the full lists don't fit (totals preserved in *_n);
     then per_query {name: {median, jobs}} entries greedily, most
-    expensive first, until the budget is reached."""
+    expensive first, until the budget is reached; if the line is still
+    over budget, the capped lists are dropped (jobs_drift first,
+    regressions last) with their *_n totals kept."""
     line = {
         "metric": "headline_query_total",
         "value": out["value"],
@@ -1122,6 +1124,15 @@ def _tail_line(
             del per_query[name]
             break
         line["per_query_n"] = len(per_query)
+    # hard guard: entry names long enough to overflow even the capped
+    # lists drop those lists (their *_n totals stay) until the line fits
+    for key, full in (("jobs_drift", jobs_drift),
+                      ("solo_retimes", solo_retimes),
+                      ("regressions", regressions)):
+        if len(json.dumps(line)) <= budget:
+            break
+        line[f"{key}_n"] = len(full)
+        del line[key]
     return line
 
 

@@ -153,9 +153,13 @@ def test_cli_start_server_on_txlog_backend(tmp_path, spark):
 def test_config_unknown_backend_and_protocol_error(tmp_path):
     from unifydb_spark import cli
 
-    config.load_env(overrides={"storage-backend": "bogus"})
-    with pytest.raises(config.ConfigError, match="bogus"):
-        cli._make_store(None)
+    # "parquet" is not a backend name: "txlog" is the durable parquet store
+    for name in ("bogus", "parquet"):
+        config.load_env(
+            overrides={"storage-backend": name, "storage-path": str(tmp_path)}
+        )
+        with pytest.raises(config.ConfigError, match=f"unknown.*{name}"):
+            cli._make_store(None)
     config.load_env(overrides={"commit-protocol": "carrier-pigeon"})
     with pytest.raises(config.ConfigError, match="carrier-pigeon"):
         config.commit_protocol()

@@ -431,6 +431,29 @@ def test_bench_tail_line_byte_budget():
     # per_query still present (smaller, but never empty)
     assert line2["per_query_n"] == len(line2["per_query"]) > 0
 
+    # entry names so long that even the 3-entry capped lists overflow:
+    # the lists are dropped (totals kept) until the line fits
+    long_times = {f"r{i:03d}_" + "x" * 300: t
+                  for i, t in enumerate(times.values())}
+    long_jobs = {n: 10 for n in long_times}
+    long_regs = [dict(r, name=n)
+                 for r, n in zip(regs, sorted(long_times)[:60])]
+    long_solos = {r["name"]: {"reps": [3.9, 4.1], "median": 4.0, "jobs": 9,
+                              "ratio": 2.0} for r in long_regs}
+    long_drift = [dict(d, name=r["name"])
+                  for d, r in zip(drift, long_regs)]
+    line3 = bench._tail_line(out, long_times, long_jobs, long_regs,
+                             long_solos, long_drift)
+    s3 = json.dumps(line3)
+    assert len(s3) <= bench.TAIL_LINE_BUDGET
+    assert json.loads(s3) == line3
+    assert line3["regressions_n"] == 60
+    assert line3["solo_retimes_n"] == 60
+    assert line3["jobs_drift_n"] == 60
+    assert "jobs_drift" not in line3  # dropped first
+    for k in ("metric", "value", "n", "sf", "quotable", "runs"):
+        assert k in line3
+
 
 def test_bench_steal_share_self_label():
     """Round-16: steady hypervisor CPU steal inflates every median

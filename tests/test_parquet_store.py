@@ -1,18 +1,18 @@
-"""Cross-backend conformance: the golden semantics on the durable parquet
-fact log (dedup windows + cardinality + historical + pull exercise the
-non-clean read path that MemoryBackend tests may miss)."""
+"""Cross-backend conformance: the golden semantics on the durable
+commit-log parquet fact store (dedup windows + cardinality + historical +
+pull exercise the non-clean read path that MemoryBackend tests may miss)."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from unifydb_spark import Engine, FactStore, Ref
-from unifydb_spark.store import ParquetBackend
+from unifydb_spark.txlog import LogParquetBackend
 
 
 @pytest.fixture(scope="module")
 def eng(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("pq") / "facts")
-    eng = Engine(spark, FactStore(spark, ParquetBackend(spark, path)))
+    eng = Engine(spark, FactStore(spark, LogParquetBackend(spark, path)))
     # schema: :aliases is cardinality-many
     eng.transact([
         ["add", "s", ":unifydb/schema", ":aliases"],
@@ -86,7 +86,7 @@ def test_concurrent_transact_serializes(spark, tmp_path_factory):
     import threading
 
     path = str(tmp_path_factory.mktemp("pqc") / "facts")
-    store = FactStore(spark, ParquetBackend(spark, path))
+    store = FactStore(spark, LogParquetBackend(spark, path))
     eng = Engine(spark, store)
     eng.transact([["add", "seed", ":name", "name-seed"]])
 

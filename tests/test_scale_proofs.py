@@ -600,6 +600,13 @@ def test_ivf_pq_search_out_of_corpus_queries(spark, emb, tmp_path):
         assert sorted(r["rank"] for r in rs) == [1, 2, 3, 4, 5]
         # a barely-perturbed query's nearest neighbor is its source
         assert min(rs, key=lambda r: r["rank"])["neighbor_id"] == qid - 1_000_000
+    # a query vector shorter than the index dim is rejected, not ranked
+    # over its matching dims only
+    short = queries.select(
+        "vec_id", F.slice("embedding", 1, idx["dim"] - 1).alias("embedding")
+    )
+    with pytest.raises(Exception, match="query vector has"):
+        ivf_pq_search(short, idx, nprobe=2, topk=5).collect()
 
 
 def test_ivf_pq_index_append_grows_index_searchably(spark, emb, tmp_path):

@@ -1,16 +1,14 @@
 """Fact-log compaction + Engine.explain surface."""
 
-import os
-
 import pytest
 
 from unifydb_spark import Engine, FactStore
-from unifydb_spark.store import ParquetBackend
+from unifydb_spark.txlog import LogParquetBackend
 
 
 def test_compact_preserves_facts_and_queries(spark, tmp_path):
     path = str(tmp_path / "facts")
-    store = FactStore(spark, ParquetBackend(spark, path))
+    store = FactStore(spark, LogParquetBackend(spark, path))
     eng = Engine(spark, store)
     ids = {}
     for i in range(6):  # 6 txs -> >= 6 file groups
@@ -19,13 +17,13 @@ def test_compact_preserves_facts_and_queries(spark, tmp_path):
         ids[i] = r["tempids"][f"e{i}"]
     eng.transact([[":unifydb/retract", ids[0], ":name", "N0"]])
     before = sorted(map(tuple, store.backend.facts_df().collect()))
-    n_files_before = len([f for f in os.listdir(path) if f.endswith(".parquet")])
+    n_files_before = len(store.backend._live_files())
 
-    store.backend.compact(target_files=2)
+    store.backend.checkpoint()
 
     after = sorted(map(tuple, store.backend.facts_df().collect()))
     assert before == after  # content identical, layout changed
-    n_files_after = len([f for f in os.listdir(path) if f.endswith(".parquet")])
+    n_files_after = len(store.backend._live_files())
     assert n_files_after < n_files_before
     # snapshot semantics intact (retraction still collapses)
     assert eng.query_rows({"find": ["?n"], "where": [[ids[0], ":name", "?n"]]}) == []
@@ -71,11 +69,20 @@ def test_materialize_snapshot(spark, tmp_path):
     eng.transact([[":unifydb/retract", eid, ":color", "red"],
                   ["add", eid, ":color", "blue"]])
     snap = store.materialize_snapshot(str(tmp_path / "snap"))
+    snap_tx = snap.backend.latest_tx()
     assert snap.backend.clean  # no retractions survive materialization
+    with pytest.raises(FileExistsError):  # an existing path is refused
+        store.materialize_snapshot(str(tmp_path / "snap"))
     got = Engine(spark, snap).query_rows(
         {"find": ["?c"], "where": [[eid, ":color", "?c"]]}
     )
     assert got == [("blue",)]
+    # the snapshot is a writable commit-log store
+    r2 = snap.transact([["add", eid, ":n", 2]])
+    assert r2["tempids"]["unifydb.tx"] > snap_tx
+    assert Engine(spark, snap).query_rows(
+        {"find": ["?n"], "where": [[eid, ":n", "?n"]]}
+    ) == [(2,)]
 
 
 def test_materialize_snapshot_bucketed_colocates_joins(spark):

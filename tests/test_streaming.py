@@ -9,12 +9,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from unifydb_spark import Engine, FactStore
-from unifydb_spark.store import ParquetBackend
 from unifydb_spark.streaming import (
     events_to_facts,
     read_event_stream,
     running_latest,
-    stream_facts_to_store,
     stream_facts_to_txlog,
     txlog_stream_id,
     windowed_metrics,
@@ -53,14 +51,16 @@ def _stage_events(spark, input_dir, n_files=3):
     return normalize_event_ts(raw)
 
 
-def test_stream_facts_to_store_and_time_travel(spark, tmpdirs):
+def test_stream_facts_to_txlog_time_travel(spark, tmpdirs):
+    from unifydb_spark.txlog import LogParquetBackend
+
     ev = _stage_events(spark, tmpdirs["input"])
     stream = read_event_stream(spark, tmpdirs["input"])
-    q = stream_facts_to_store(
-        events_to_facts(stream), tmpdirs["store"], tmpdirs["ckpt"]
+    store = FactStore(spark, LogParquetBackend(spark, tmpdirs["store"]))
+    q = stream_facts_to_txlog(
+        events_to_facts(stream), store.backend, tmpdirs["ckpt"]
     )
     q.awaitTermination(120)
-    store = FactStore(spark, ParquetBackend(spark, tmpdirs["store"]))
     assert store.backend.facts_df().count() == ev.count()
     # the streamed store answers time-travel queries like the batch one
     eng = Engine(spark, store)

@@ -13,11 +13,12 @@ names are still accepted for CLI compatibility.
 
 Storage backend selection mirrors cli/start.clj's make-storage-backend
 (reference src/unifydb/cli/start.clj:41-49 selects the storage service
-from config the same way): memory | parquet (storage-path) | jdbc
-(jdbc-url) | txlog (storage-path; the ACID commit-log store, with
-`commit-protocol` posix | conditional-put selecting the atomic publish
-primitive and `maintain-every` / `vacuum-retention-seconds` /
-`truncate-log` driving the auto-maintenance policy).
+from config the same way): memory | jdbc (jdbc-url) | txlog
+(storage-path; the ACID commit-log store and the only durable parquet
+store, with `commit-protocol` posix | conditional-put selecting the
+atomic publish primitive and `maintain-every` /
+`vacuum-retention-seconds` / `truncate-log` driving the
+auto-maintenance policy).
 """
 
 from __future__ import annotations
@@ -37,13 +38,6 @@ def _make_store(spark):
     backend = config.storage_backend()
     if backend == "memory":
         return FactStore(spark)
-    if backend == "parquet":
-        path = config.storage_path()
-        if not path:
-            raise config.ConfigError(
-                "storage-backend parquet requires storage-path"
-            )
-        return FactStore(spark, path=path)
     if backend == "jdbc":
         return FactStore(spark, backend=JdbcBackend(spark, config.jdbc_url()))
     if backend == "txlog":

@@ -2742,9 +2742,21 @@ def ivf_pq_search(
     residual = index["residual"]
     cex = F.broadcast(spark.read.parquet(f"{path}/centroids"))
     cb = F.broadcast(spark.read.parquet(f"{path}/codebook"))
+    # the probe fold assumes dense, full-dim query vectors: a short one
+    # would be ranked over only its matching dims, so reject it — lazily,
+    # inside the projection, with no extra Spark job
+    qvec = F.col(vec_col)
+    qvec = F.when(
+        qvec.isNotNull() & (F.size(qvec) != dim),
+        F.raise_error(F.concat(
+            F.lit("ivf_pq_search: query vector has "),
+            F.size(qvec).cast("string"),
+            F.lit(f" dims; index dim {dim}"),
+        )),
+    ).otherwise(qvec)
     qex = queries.select(
         F.col(id_col).alias("query_id"),
-        F.posexplode(F.col(vec_col)).alias("d", "qx"),
+        F.posexplode(qvec).alias("d", "qx"),
     ).withColumn("qx", F.col("qx").cast("double"))
     from unifydb_spark.resources import tracked_persist
 

@@ -115,107 +115,6 @@ class MemoryBackend:
         return out
 
 
-class ParquetBackend:
-    """Parquet-directory fact log: each transaction appends files atomically
-    (the reference's single KV `commit!`, src/unifydb/kvstore.clj:105-121 /
-    storage.clj:12-29; on a real deployment this would be a Delta table —
-    plain parquet keeps the container dependency-free)."""
-
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-        self._version = 0
-        self._stats: Optional[tuple] = None  # (version, max_id, latest_tx, clean)
-
-    def _exists(self) -> bool:
-        import os
-
-        return os.path.isdir(self.path) and any(
-            f.endswith(".parquet") for f in os.listdir(self.path)
-        )
-
-    def append(self, rows: Iterable[tuple]) -> None:
-        df = self.spark.createDataFrame(list(rows), schema=FACT_SCHEMA)
-        df.write.mode("append").parquet(self.path)
-        self._version += 1
-
-    def facts_df(self) -> DataFrame:
-        if not self._exists():
-            return self.spark.createDataFrame([], schema=FACT_SCHEMA)
-        return self.spark.read.schema(FACT_SCHEMA).parquet(self.path)
-
-    def _compute_stats(self) -> tuple:
-        if self._stats is None or self._stats[0] != self._version:
-            if not self._exists():
-                self._stats = (self._version, 0, 0, True)
-            else:
-                row = self.facts_df().agg(
-                    F.greatest(
-                        F.max("e"), F.max("tx"), F.coalesce(F.max("v_ref"), F.lit(0))
-                    ).alias("mx"),
-                    F.max("tx").alias("mtx"),
-                    F.min("added").alias("all_added"),
-                    F.countDistinct("tx").alias("ntx"),
-                ).collect()[0]
-                self._stats = (
-                    self._version,
-                    row["mx"] or 0,
-                    row["mtx"] or 0,
-                    bool(row["all_added"]) and row["ntx"] <= 1,
-                )
-        return self._stats
-
-    @property
-    def clean(self) -> bool:
-        return self._compute_stats()[3]
-
-    @property
-    def has_retractions(self) -> bool:
-        return not self._compute_stats()[3]
-
-    def max_id(self) -> int:
-        return self._compute_stats()[1]
-
-    def latest_tx(self) -> int:
-        return self._compute_stats()[2]
-
-    def attr_types(self) -> dict[str, set]:
-        out: dict[str, set] = {}
-        for r in self.facts_df().select("a", "v_type").distinct().collect():
-            out.setdefault(r["a"], set()).add(r["v_type"])
-        return out
-
-    def compact(self, target_files: Optional[int] = None) -> None:
-        """Rewrite the fact log clustered by (a, e, tx).
-
-        Every transaction appends small files; at scale the log fragments
-        and pattern scans lose locality. Clustering by attribute first
-        mirrors the reference's AVET index (src/unifydb/storage.clj:57-68):
-        a concrete-attribute pattern then touches a contiguous file range
-        and parquet min/max stats on `a` prune everything else. (On Delta
-        this is OPTIMIZE ZORDER; on plain parquet it is a sorted rewrite
-        with a directory swap.)"""
-        import os
-        import shutil
-
-        if not self._exists():
-            return
-        df = self.facts_df().sortWithinPartitions("a", "e", "tx")
-        if target_files is not None:
-            df = self.facts_df().repartitionByRange(
-                target_files, "a", "e"
-            ).sortWithinPartitions("a", "e", "tx")
-        tmp = self.path.rstrip("/") + ".compact.tmp"
-        old = self.path.rstrip("/") + ".compact.old"
-        shutil.rmtree(tmp, ignore_errors=True)
-        df.write.parquet(tmp)
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        shutil.rmtree(old, ignore_errors=True)
-        self._version += 1
-
-
 class DataFrameBackend:
     """A read-only fact log defined by an arbitrary DataFrame in
     FACT_SCHEMA — the scalable way to derive a versioned fact store from an
@@ -294,13 +193,9 @@ class Db:
 class FactStore:
     """Append-only EAVT store with a time-traveling snapshot view."""
 
-    def __init__(self, spark: SparkSession, backend=None, path: Optional[str] = None):
+    def __init__(self, spark: SparkSession, backend=None):
         self.spark = spark
-        if backend is None:
-            backend = (
-                ParquetBackend(spark, path) if path else MemoryBackend(spark)
-            )
-        self.backend = backend
+        self.backend = backend if backend is not None else MemoryBackend(spark)
         # Pluggable tx pipeline hooks (reference transact/transforms.clj,
         # transact/filters.clj): transforms rewrite statements pre-commit,
         # filters redact the outgoing tx report. The reference installs its
@@ -325,7 +220,7 @@ class FactStore:
         # Cross-PROCESS writers serialize through the optimistic commit
         # log when the backend provides one (txlog.LogParquetBackend:
         # CAS-on-next-log-version with id re-allocation on conflict);
-        # plain MemoryBackend/ParquetBackend remain single-process.
+        # MemoryBackend and JdbcBackend remain single-process.
         import threading
 
         self._tx_lock = threading.Lock()
@@ -419,8 +314,9 @@ class FactStore:
         partition_by_attr: bool = True,
     ) -> "FactStore":
         """Write the collapsed snapshot view (visibility + retraction +
-        cardinality resolution already applied) as a parquet fact log and
-        return a FactStore over it.
+        cardinality resolution already applied) as a new commit-log fact
+        store at `path` (one manifest, txlog.LogParquetBackend) and return
+        a FactStore over it. An existing `path` is refused.
 
         Scale rationale: a dirty log pays the dedup windows on every
         pattern scan; analyses that hammer one as-of point should pay
@@ -428,6 +324,12 @@ class FactStore:
         retractions), so every later query takes the no-window fast path;
         `partition_by_attr` lays files out attribute-first (AVET order) so
         attribute patterns prune to their own files."""
+        import os
+
+        from unifydb_spark.txlog import LogParquetBackend
+
+        if os.path.exists(path):
+            raise FileExistsError(f"materialize_snapshot: {path} already exists")
         snap_tx = (
             self.backend.latest_tx() if tx_id == LATEST else int(tx_id)
         )
@@ -439,8 +341,9 @@ class FactStore:
         ).withColumn("added", F.lit(True))
         if partition_by_attr:
             df = df.sortWithinPartitions("a", "e")
-        df.write.mode("errorifexists").parquet(path)
-        return FactStore(self.spark, ParquetBackend(self.spark, path))
+        backend = LogParquetBackend(self.spark, path)
+        backend.bulk_append_df(df)
+        return FactStore(self.spark, backend)
 
     def materialize_snapshot_bucketed(
         self,

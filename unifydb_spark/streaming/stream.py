@@ -4,10 +4,11 @@ analytics.
 The reference has no streaming at all (SURVEY §2.6) — its closest notion
 is the transactor consuming a message queue serially
 (src/unifydb/transact.clj:116-137). On Spark that queue IS a stream:
-`stream_facts_to_store` is the transactor as a Structured Streaming sink
-(exactly-once into the parquet fact log via checkpointing), and the
-time-travel semantics compose — a fact ingested at event-time t is visible
-to `db.as_of(tx)` snapshots exactly as a batch-transacted one.
+`stream_facts_to_txlog` is the transactor as a Structured Streaming sink
+(exactly-once into the commit-log fact store: Spark's checkpoint plus
+per-epoch manifest dedup), and the time-travel semantics compose — a
+fact ingested at event-time t is visible to `db.as_of(tx)` snapshots
+exactly as a batch-transacted one.
 
 Event analytics:
  - windowed_metrics: watermarked tumbling-window aggregation (late rows
@@ -75,26 +76,6 @@ def events_to_facts(events: DataFrame) -> DataFrame:
         F.col("event_id").cast("long").alias("tx"),
         F.lit(True).alias("added"),
     )
-
-
-def stream_facts_to_store(
-    facts: DataFrame,
-    store_path: str,
-    checkpoint_path: str,
-    trigger_available_now: bool = True,
-):
-    """Plain file-sink fact append for LOG-LESS ParquetBackend stores
-    (exactly-once via the Spark checkpoint alone). A store with a commit
-    log must use :func:`stream_facts_to_txlog` instead — this sink writes
-    files directly, which a manifest reader never sees and which does not
-    serialize against txlog batch writers (the split-brain VERDICT r9
-    ask #1 names)."""
-    w = facts.writeStream.format("parquet").option(
-        "path", store_path
-    ).option("checkpointLocation", checkpoint_path).outputMode("append")
-    if trigger_available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
 
 
 def txlog_stream_id(checkpoint_path: str) -> str:

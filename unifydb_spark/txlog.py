@@ -231,7 +231,9 @@ class ConditionalPutProtocol(CommitProtocol):
 class LogParquetBackend:
     """Fact-log backend with an ACID commit log (see module docstring).
 
-    Satisfies the same backend protocol as ``store.ParquetBackend`` plus:
+    The only durable parquet fact backend. Satisfies the backend
+    protocol of ``store.MemoryBackend`` (append / facts_df / clean /
+    has_retractions / max_id / latest_tx / attr_types) plus:
 
     - :meth:`commit_rows` — compare-and-swap append used by
       ``FactStore.transact`` for cross-process id-allocation safety;
