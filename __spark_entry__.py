@@ -4610,10 +4610,11 @@ def r149_ivf_pq_trained(spark, sf_dir):
     IVF coarse stage with k-means; r146's lowest-id-vector centroids
     produced degenerate bucket structure (78/80 true neighbors in the
     query's rank-1 bucket at sf0.1, flat nprobe dial). Here the coarse
-    centroids are full-dim spherical k-means MEANS (_coarse_kmeans_train:
-    decimal folds, lowest-id init, low-id ties — q72's graded contract at
-    full dim), and one scored relation serves both the corpus assignment
-    and the query probes, so both are consistent with the FINAL means.
+    centroids are full-dim spherical k-means MEANS (_ivf_coarse over the
+    one _kmeans loop: decimal folds, lowest-id init, low-id ties — q72's
+    graded contract at full dim), and one scored relation serves both the
+    corpus assignment and the query probes, so both are consistent with
+    the FINAL means.
     Same graded shape as r146: per-query overlap with the exact top-10
     plus n_candidates/n_total as columns. Measured vs r146 at identical
     knobs: overlap 40->48 of 80 at sf0.001 — training the coarse stage
@@ -4634,7 +4635,7 @@ def r150_ivf_pq_search(spark, sf_dir):
     production index is), then ivf_pq_search answers 8 queries over the
     PERSISTED relations — probe ranking against the broadcast centroids,
     a partition-PRUNED scan of only the probed buckets, the same
-    _adc_scored kernel r146/r149 grade. The DuckDB twin
+    _ivf_pq_build and _adc_scored kernels r146/r149 grade. The DuckDB twin
     (ivf_pq_search_sql) unrolls the identical train+search lifecycle
     inline from the embeddings table, so the correctness gate still
     grades build+search end to end; the BENCH timed region is the

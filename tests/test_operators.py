@@ -270,6 +270,8 @@ def test_kmeans_partition_invariant(emb):
           for r in kmeans_assign(emb.repartition(7), k=4, iters=2).collect()}
     assert a1 == a2  # exact-decimal arithmetic -> partition invariant
     assert set(a1.values()) <= set(range(4))
+    with pytest.raises(ValueError, match="iters"):
+        kmeans_assign(emb, k=4, iters=0)
 
 
 def test_pack_sequences_invariants(spark):
@@ -1966,6 +1968,8 @@ def test_pq_codes_and_adc_match_duckdb(spark):
         "int64"
     ).tolist()
     assert len(got) == 40 * 4
+    with pytest.raises(ValueError, match="iters"):
+        pq_codes(df, m=4, k=4, iters=0, dim=8)
 
     g2 = (
         pq_adc_recall(df, m=4, k=4, iters=2, n_queries=4, topk=5, dim=8)
@@ -2034,6 +2038,15 @@ def test_ivf_pq_topk_matches_duckdb(spark):
             ).tolist(), (residual, c)
         assert (got["n_candidates"] < got["n_total"]).all()
         assert (got["n_total"] == 60).all()
+    # iters < 1 is rejected before the build runs a single job
+    sc = spark.sparkContext
+    sc.setJobGroup("ivf_pq_iters0", "ivf_pq_iters0")
+    try:
+        with pytest.raises(ValueError, match="iters"):
+            ivf_pq_topk(df, n_centroids=8, m=4, k=4, iters=0, dim=8)
+    finally:
+        sc.setJobGroup("", "")
+    assert not sc.statusTracker().getJobIdsForGroup("ivf_pq_iters0")
 
 
 def test_source_cap_auto_routes_by_measured_skew(spark):

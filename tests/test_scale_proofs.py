@@ -607,6 +607,50 @@ def test_ivf_pq_search_out_of_corpus_queries(spark, emb, tmp_path):
     )
     with pytest.raises(Exception, match="query vector has"):
         ivf_pq_search(short, idx, nprobe=2, topk=5).collect()
+    # m must divide dim: 64 // 7 = 9-dim slices would make 8 subspaces
+    # while the meta records m = 7
+    with pytest.raises(ValueError, match="not divisible"):
+        ivf_pq_index_write(
+            emb, str(tmp_path / "ivfpq_bad_m"), n_centroids=8, m=7, k=8,
+            iters=2,
+        )
+
+
+def test_local_rel_empty_and_over_threshold(spark):
+    """_local_rel keeps an empty row set to at most one (empty)
+    partition — createDataFrame([]) would schedule one empty task per
+    core — builds a row set AT its literal-expression limit as the
+    literal relation, and hands one row more to createDataFrame with
+    every row intact."""
+    from pyspark.sql import types as T
+
+    from unifydb_spark.operators.similarity import (
+        _LOCAL_REL_MAX_ROWS,
+        _local_rel,
+    )
+
+    schema = T.StructType([
+        T.StructField("query_id", T.LongType()),
+        T.StructField("dot", T.DoubleType()),
+    ])
+    empty = _local_rel(spark, schema, [])
+    assert empty.collect() == []
+    assert empty.schema.simpleString() == schema.simpleString()
+    assert empty.rdd.getNumPartitions() <= 1
+    rows = [
+        T.Row(query_id=i, dot=i / 3.0) for i in range(_LOCAL_REL_MAX_ROWS + 1)
+    ]
+
+    def literal(df):  # the pure-expression path explodes one array
+        return "Generate" in df._jdf.queryExecution().optimizedPlan().toString()
+
+    assert literal(_local_rel(spark, schema, rows[:-1]))
+    over = _local_rel(spark, schema, rows)
+    assert not literal(over)
+    got = over.collect()
+    assert sorted((r["query_id"], r["dot"]) for r in got) == [
+        (r["query_id"], r["dot"]) for r in rows
+    ]
 
 
 def test_ivf_pq_index_append_grows_index_searchably(spark, emb, tmp_path):
@@ -705,6 +749,7 @@ def test_trained_coarse_rebalances_clustered_buckets(spark):
         ivf_bucket_stats,
         ivf_coarse_assign,
     )
+    from unifydb_spark.resources import release_persisted
 
     rng = np.random.default_rng(7)
     centers = rng.normal(size=(4, 16)) * 4.0
@@ -718,9 +763,12 @@ def test_trained_coarse_rebalances_clustered_buckets(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
     stats = {}
+    release_persisted()
     for mode in ("lowid", "kmeans"):
         assigned = ivf_coarse_assign(emb, n_centroids=4, coarse=mode,
                                      coarse_iters=3)
+        # a standalone assignment leaves nothing cached behind
+        assert release_persisted() == 0
         assert assigned.count() == sum(sizes)  # every vector exactly once
         stats[mode] = ivf_bucket_stats(assigned).collect()[0].asDict()
     # untrained: all 4 centroids sit inside cluster 0, so clusters 1-3

@@ -22,6 +22,8 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -304,6 +306,132 @@ SEMDEDUP_K_DIVISOR = 625
 IVF_CENTROID_DIVISOR = 160
 
 
+def _dsum(c):
+    """Exact DECIMAL(38,18) sum re-entering double: order-independent, so
+    partition placement cannot move a bit (the SQL twins' decimal fold)."""
+    return F.sum(c.cast("decimal(38,18)")).cast("double")
+
+
+def _dmean(rel: DataFrame, keys, x: str = "x", out: str = "m") -> DataFrame:
+    """Exact decimal mean of `x` per `keys` — every k-means centroid
+    update and every codebook taken after a final assignment."""
+    return rel.groupBy(*keys).agg((_dsum(F.col(x)) / F.count(x)).alias(out))
+
+
+def _explode(emb: DataFrame, id_col: str, vec_col: str,
+             sub: "int | None" = None) -> DataFrame:
+    """Vectors as (vid, d, x) double rows; with `sub`, each `sub`-dim slice
+    becomes its own subspace: (vid, subspace, d, x) with d the in-slice
+    coordinate."""
+    ex = emb.select(
+        F.col(id_col).alias("vid"),
+        F.posexplode(F.col(vec_col)).alias("d", "x"),
+    ).withColumn("x", F.col("x").cast("double"))
+    if sub is None:
+        return ex
+    return ex.select(
+        "vid",
+        F.expr(f"d DIV {sub}").alias("subspace"),
+        F.expr(f"d % {sub}").alias("d"),
+        "x",
+    )
+
+
+def _vnorm(points: DataFrame, keys=()) -> DataFrame:
+    return points.groupBy("vid", *keys).agg(
+        _dsum(F.col("x") * F.col("x")).alias("vn2")
+    )
+
+
+def _ranked(points: DataFrame, cent: DataFrame, keys=(),
+            vnorm: "DataFrame | None" = None) -> DataFrame:
+    """Rank every centroid for every point (per `keys` group): (vid,
+    *keys, cluster, rn). Points are (vid, *keys, d, x), centroids (*keys,
+    cluster, d, m) — broadcast, they are knob-bounded. Spherical when
+    `vnorm` is given (max cosine), else L2 (min cn2 - 2·dot: the point's
+    own norm is constant per point and cannot change the argmin). Ties
+    go to the lower cluster id; every dot and norm is a decimal fold."""
+    cn2 = cent.groupBy(*keys, "cluster").agg(
+        _dsum(F.col("m") * F.col("m")).alias("cn2")
+    )
+    dots = (
+        points.join(F.broadcast(cent), [*keys, "d"])
+        .groupBy("vid", *keys, "cluster")
+        .agg(_dsum(F.col("x") * F.col("m")).alias("dot"))
+    )
+    scored = dots.join(F.broadcast(cn2), [*keys, "cluster"])
+    if vnorm is None:
+        order = (F.col("cn2") - 2.0 * F.col("dot")).asc()
+    else:
+        scored = scored.join(vnorm, ["vid", *keys]).withColumn(
+            "cos", F.col("dot") / (F.sqrt("vn2") * F.sqrt("cn2"))
+        )
+        order = F.col("cos").desc()
+    w = Window.partitionBy("vid", *keys).orderBy(order, F.col("cluster"))
+    return scored.withColumn("rn", F.row_number().over(w))
+
+
+def _kmeans(points: DataFrame, cent: DataFrame, iters: int, keys=(),
+            spherical: bool = True, means: bool = False) -> DataFrame:
+    """The one deterministic k-means loop behind every trainer here
+    (kmeans_assign, pq_codes, the IVF coarse quantizer, residual PQ) —
+    the Spark side of _kmeans_ctes / _ivf_coarse_head_ctes /
+    _pq_train_ctes. `points` (vid, *keys, d, x) is persisted by the
+    caller; `cent` (*keys, cluster, d, m) is the caller's init. Each
+    round assigns by :func:`_ranked` and re-centres by exact decimal
+    means, all subspaces (`keys`) in one batched job set.
+
+    Returns the last assignment (vid, *keys, cluster), or with
+    `means=True` the means computed from it (*keys, cluster, d, m) —
+    `iters=0` then returns the init. The returned relation is an eager
+    localCheckpoint; the in-loop ones are lazy (same plan truncation,
+    one driver job fewer per round), and an assignment run never builds
+    the dead update after its last round."""
+    if not means and iters < 1:
+        raise ValueError(f"k-means needs iters >= 1, got iters={iters}")
+    keys = list(keys)
+    cent = cent.localCheckpoint(eager=False)
+    # every round re-reads the per-point norms: persist them once
+    vnorm = _vnorm(points, keys).persist() if spherical else None
+    try:
+        for it in range(iters):
+            last = it == iters - 1
+            assign = (
+                _ranked(points, cent, keys, vnorm)
+                .filter("rn = 1")
+                .select("vid", *keys, "cluster")
+            )
+            if not means:
+                assign = assign.localCheckpoint(eager=last)
+                if last:
+                    return assign
+            cent = _dmean(
+                points.join(assign, ["vid", *keys]), [*keys, "cluster", "d"]
+            ).localCheckpoint(eager=last)
+        return cent
+    finally:
+        if vnorm is not None:
+            vnorm.unpersist()
+
+
+def _spherical_kmeans(emb: DataFrame, k: int, iters: int, id_col: str,
+                      vec_col: str, sub: "int | None" = None) -> DataFrame:
+    """Spherical k-means over whole vectors, or over every `sub`-dim
+    slice as its own subspace, init = the k lowest ids. Returns (vid,
+    [subspace,] cluster); the exploded vectors are released on return."""
+    keys = [] if sub is None else ["subspace"]
+    # hash(vid) clusters every per-vid groupBy/window/join of the loop
+    # onto one reused layout and floors parallelism (see _by_vid)
+    ex = _by_vid(_explode(emb, id_col, vec_col, sub)).persist()
+    try:
+        cent = ex.filter(F.col("vid") < k).select(
+            *keys, F.col("vid").alias("cluster"), "d", F.col("x").alias("m")
+        )
+        return _kmeans(ex, cent, iters, keys)
+    finally:
+        ex.unpersist()
+
+
 def kmeans_assign(
     emb: DataFrame,
     k: int = 8,
@@ -321,86 +449,11 @@ def kmeans_assign(
     Shape per iteration: exploded (vec, dim, x) join centroid (cluster,
     dim, m) -> one shuffle on (vec, cluster); centroid update is one
     groupBy (cluster, dim). Both map-side combinable; k and dim are
-    constants, so cost is linear in vectors per iteration."""
-    ex = _by_vid(
-        emb.select(
-            F.col(id_col).alias("vid"),
-            F.posexplode(F.col(vec_col)).alias("dim", "x"),
-        ).withColumn("x", F.col("x").cast("double"))
-    ).persist()
-    # centroids as (cluster, dim, m) rows; init from the k lowest ids
-    # eager=False everywhere inside the loop: LogicalRDD plan truncation
-    # is identical, AQE still materializes every exchange stage at
-    # checkpoint-call time, but the result-count job and the extra
-    # cache-read pass per checkpoint disappear (one driver barrier per
-    # iteration instead of two). Only the RETURNED assignment is eager —
-    # the finally-unpersist below must not run before the chain resolves.
-    cent = (
-        ex.filter(F.col("vid") < k)
-        .select(F.col("vid").alias("cluster"), "dim", F.col("x").alias("m"))
-        .localCheckpoint(eager=False)
+    constants, so cost is linear in vectors per iteration. The same call
+    as :func:`pq_codes`, with no subspaces."""
+    return _spherical_kmeans(emb, k, iters, id_col, vec_col).select(
+        F.col("vid").alias(id_col), "cluster"
     )
-    # per-vector norms: exact decimal sums (order-independent)
-    vnorm = ex.groupBy("vid").agg(
-        F.sum((F.col("x") * F.col("x")).cast("decimal(38,18)"))
-        .cast("double")
-        .alias("vn2")
-    ).persist()
-    assign = None
-    try:
-        for it in range(iters):
-            cnorm = cent.groupBy("cluster").agg(
-                F.sum((F.col("m") * F.col("m")).cast("decimal(38,18)"))
-                .cast("double")
-                .alias("cn2")
-            )
-            # cent is k x dim rows (knob-bounded) — broadcast so the
-            # corpus-side ex never shuffles for this join at any scale
-            dots = (
-                ex.join(F.broadcast(cent), "dim")
-                .groupBy("vid", "cluster")
-                .agg(
-                    F.sum((F.col("x") * F.col("m")).cast("decimal(38,18)"))
-                    .cast("double")
-                    .alias("dot")
-                )
-            )
-            scored = (
-                dots.join(F.broadcast(cnorm), "cluster")
-                .join(vnorm, "vid")
-                .withColumn(
-                    "cos", F.col("dot") / (F.sqrt("vn2") * F.sqrt("cn2"))
-                )
-            )
-            w = Window.partitionBy("vid").orderBy(F.col("cos").desc(), F.col("cluster"))
-            assign = (
-                scored.withColumn("rn", F.row_number().over(w))
-                .filter("rn = 1")
-                .select("vid", "cluster")
-                .localCheckpoint(eager=(it == iters - 1))
-            )
-            if it < iters - 1:
-                # the final round's centroid update is dead computation —
-                # nothing consumes it, so it is never built (pq_codes and
-                # _pq_train already guard the same way)
-                cent = (
-                    ex.join(assign, "vid")
-                    .groupBy("cluster", "dim")
-                    .agg(
-                        (
-                            F.sum(F.col("x").cast("decimal(38,18)")).cast(
-                                "double"
-                            )
-                            / F.count("x")
-                        ).alias("m")
-                    )
-                    .localCheckpoint(eager=False)
-                )
-        return assign.select(F.col("vid").alias(id_col), "cluster")
-    finally:
-        # loop intermediates only; `assign` is checkpointed each iteration
-        ex.unpersist()
-        vnorm.unpersist()
 
 
 def _kmeans_ctes(
@@ -1000,30 +1053,19 @@ def semdedup(
         k = auto_k(emb.count(), SEMDEDUP_K_DIVISOR)
     assign = kmeans_assign(emb, k=k, iters=iters, id_col=id_col,
                            vec_col=vec_col)
-    ex = emb.select(
-        F.col(id_col).alias("vid"),
-        F.posexplode(F.col(vec_col)).alias("dim", "x"),
-    ).withColumn("x", F.col("x").cast("double"))
-    ex = tracked_persist(ex.join(assign.withColumnRenamed(id_col, "vid"),
-                                 "vid"))
-    vnorm = ex.groupBy("vid").agg(
-        F.sum((F.col("x") * F.col("x")).cast("decimal(38,18)"))
-        .cast("double")
-        .alias("vn2")
-    )
-    a = ex.select("cluster", F.col("vid").alias("va"), "dim",
+    ex = tracked_persist(_explode(emb, id_col, vec_col).join(
+        assign.withColumnRenamed(id_col, "vid"), "vid"
+    ))
+    vnorm = _vnorm(ex)
+    a = ex.select("cluster", F.col("vid").alias("va"), "d",
                   F.col("x").alias("xa"))
-    b = ex.select("cluster", F.col("vid").alias("vb"), "dim",
+    b = ex.select("cluster", F.col("vid").alias("vb"), "d",
                   F.col("x").alias("xb"))
     dots = (
-        a.join(b, ["cluster", "dim"])
+        a.join(b, ["cluster", "d"])
         .filter(F.col("va") < F.col("vb"))
         .groupBy("cluster", "va", "vb")
-        .agg(
-            F.sum((F.col("xa") * F.col("xb")).cast("decimal(38,18)"))
-            .cast("double")
-            .alias("dot")
-        )
+        .agg(_dsum(F.col("xa") * F.col("xb")).alias("dot"))
     )
     dups = (
         dots.join(vnorm.select(F.col("vid").alias("va"),
@@ -1117,36 +1159,18 @@ def cluster_silhouette(
     emb = _spread(emb)
     assign = kmeans_assign(emb, k=k, iters=iters, id_col=id_col,
                            vec_col=vec_col)
-    ex = emb.select(
-        F.col(id_col).alias("vid"),
-        F.posexplode(F.col(vec_col)).alias("dim", "x"),
-    ).withColumn("x", F.col("x").cast("double"))
-    ex = tracked_persist(ex.join(assign.withColumnRenamed(id_col, "vid"),
-                                 "vid"))
-    cent = ex.groupBy(F.col("cluster").alias("ccl"), "dim").agg(
-        (
-            F.sum(F.col("x").cast("decimal(38,18)")).cast("double")
-            / F.count("x")
-        ).alias("m")
-    )
+    ex = tracked_persist(_explode(emb, id_col, vec_col).join(
+        assign.withColumnRenamed(id_col, "vid"), "vid"
+    ))
+    cent = _dmean(ex, [F.col("cluster").alias("ccl"), "d"])
     cnorm = cent.groupBy("ccl").agg(
-        F.sum((F.col("m") * F.col("m")).cast("decimal(38,18)"))
-        .cast("double")
-        .alias("cn2")
+        _dsum(F.col("m") * F.col("m")).alias("cn2")
     )
-    vnorm = ex.groupBy("vid").agg(
-        F.sum((F.col("x") * F.col("x")).cast("decimal(38,18)"))
-        .cast("double")
-        .alias("vn2")
-    )
+    vnorm = _vnorm(ex)
     dots = (
-        ex.join(F.broadcast(cent), "dim")
+        ex.join(F.broadcast(cent), "d")
         .groupBy("vid", "cluster", "ccl")
-        .agg(
-            F.sum((F.col("x") * F.col("m")).cast("decimal(38,18)"))
-            .cast("double")
-            .alias("dot")
-        )
+        .agg(_dsum(F.col("x") * F.col("m")).alias("dot"))
     )
     d = (
         dots.join(F.broadcast(cnorm), "ccl")
@@ -1283,91 +1307,7 @@ def pq_codes(
     vectors from 8x the fixed per-job overhead alone)."""
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
-    sub = dim // m
-    from unifydb_spark.resources import tracked_persist
-
-    ex = (
-        emb.select(
-            F.col(id_col).alias("vid"),
-            F.posexplode(F.col(vec_col)).alias("d", "x"),
-        )
-        .withColumn("x", F.col("x").cast("double"))
-        .select(
-            "vid",
-            F.expr(f"d DIV {sub}").alias("subspace"),
-            F.expr(f"d % {sub}").alias("sd"),
-            "x",
-        )
-    )
-    # hash(vid) clusters every groupBy(vid, subspace)/window(vid,
-    # subspace) below onto one reused layout AND floors parallelism
-    # (hash(vid) satisfies the clustered distribution of any key set
-    # containing vid)
-    ex = tracked_persist(_by_vid(ex))
-    # intra-loop checkpoints are lazy (same plan truncation, one fewer
-    # driver job per iteration — see kmeans_assign); the returned final
-    # assignment stays eager
-    cent = (
-        ex.filter(F.col("vid") < k)
-        .select(
-            "subspace", F.col("vid").alias("cluster"), "sd", F.col("x").alias("m")
-        )
-        .localCheckpoint(eager=False)
-    )
-    vnorm = tracked_persist(
-        ex.groupBy("vid", "subspace").agg(
-            F.sum((F.col("x") * F.col("x")).cast("decimal(38,18)"))
-            .cast("double")
-            .alias("vn2")
-        )
-    )
-    assign = None
-    for it in range(iters):
-        cnorm = cent.groupBy("subspace", "cluster").agg(
-            F.sum((F.col("m") * F.col("m")).cast("decimal(38,18)"))
-            .cast("double")
-            .alias("cn2")
-        )
-        # cent is m x k x sub rows (knob-bounded) — broadcast, never
-        # shuffle the corpus side for it
-        dots = (
-            ex.join(F.broadcast(cent), ["subspace", "sd"])
-            .groupBy("vid", "subspace", "cluster")
-            .agg(
-                F.sum((F.col("x") * F.col("m")).cast("decimal(38,18)"))
-                .cast("double")
-                .alias("dot")
-            )
-        )
-        scored = (
-            dots.join(F.broadcast(cnorm), ["subspace", "cluster"])
-            .join(vnorm, ["vid", "subspace"])
-            .withColumn("cos", F.col("dot") / (F.sqrt("vn2") * F.sqrt("cn2")))
-        )
-        w = Window.partitionBy("vid", "subspace").orderBy(
-            F.col("cos").desc(), F.col("cluster")
-        )
-        assign = (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter("rn = 1")
-            .select("vid", "subspace", "cluster")
-            .localCheckpoint(eager=(it == iters - 1))
-        )
-        if it < iters - 1:
-            # the final round's centroid update is dead computation —
-            # nothing consumes it, so it is never built
-            cent = (
-                ex.join(assign, ["vid", "subspace"])
-                .groupBy("subspace", "cluster", "sd")
-                .agg(
-                    (
-                        F.sum(F.col("x").cast("decimal(38,18)")).cast("double")
-                        / F.count("x")
-                    ).alias("m")
-                )
-                .localCheckpoint(eager=False)
-            )
-    return assign.select(
+    return _spherical_kmeans(emb, k, iters, id_col, vec_col, dim // m).select(
         F.col("vid").alias(id_col),
         "subspace",
         F.col("cluster").cast("bigint").alias("code"),
@@ -1431,204 +1371,289 @@ def pq_adc_recall(
     the same brute-force frame as cosine_topk (q27); at scale ADC's
     win is that the n side reads m small ints + a 1024-row broadcast
     codebook instead of dim floats."""
-    sub = dim // m
-    codes = pq_codes(emb, m, k, iters, id_col, vec_col, dim)
-    ex = emb.select(
-        F.col(id_col).alias("vid"),
-        F.posexplode(F.col(vec_col)).alias("d", "x"),
-    ).withColumn("x", F.col("x").cast("double")).withColumn(
-        "subspace", F.expr(f"d DIV {sub}")
-    )
     from unifydb_spark.resources import tracked_persist
 
-    ex = tracked_persist(_by_vid(ex))
-    codebook = (
-        ex.join(
-            codes.select(
-                F.col(id_col).alias("vid"), "subspace", "code"
-            ),
-            ["vid", "subspace"],
-        )
-        .groupBy("subspace", "code", "d")
-        .agg(
-            (
-                F.sum(F.col("x").cast("decimal(38,18)")).cast("double")
-                / F.count("x")
-            ).alias("mval")
-        )
+    codes = pq_codes(emb, m, k, iters, id_col, vec_col, dim).select(
+        F.col(id_col).alias("vid"), "subspace", "code"
+    )
+    ex = tracked_persist(_by_vid(
+        _explode(emb, id_col, vec_col)
+        .withColumn("subspace", F.expr(f"d DIV {dim // m}"))
+    ))
+    codebook = _dmean(
+        ex.join(codes, ["vid", "subspace"]), ["subspace", "code", "d"],
+        out="mval",
     )
     # qex is n_queries x dim rows (knob-bounded) — broadcast it into the
     # corpus-side scans so they keep their layout at any scale
-    qex = F.broadcast(
-        ex.filter(F.col("vid") < n_queries).select(
-            F.col("vid").alias("query_id"), "d", F.col("x").alias("qx")
-        )
-    )
+    qex = F.broadcast(_query_rows(ex, n_queries))
     # per-vector reconstructed coords: m codebook lookups per vector
-    recon = codes.select(
-        F.col(id_col).alias("nid"), "subspace", "code"
-    ).join(F.broadcast(codebook), ["subspace", "code"])
+    recon = codes.withColumnRenamed("vid", "nid").join(
+        F.broadcast(codebook), ["subspace", "code"]
+    )
     adc = (
         qex.join(recon, "d")
         .groupBy("query_id", "nid")
-        .agg(
-            F.sum((F.col("qx") * F.col("mval")).cast("decimal(38,18)"))
-            .cast("double")
-            .alias("score")
-        )
+        .agg(_dsum(F.col("qx") * F.col("mval")).alias("score"))
     )
+    adc_top = _topn(adc, topk)
+    return _overlap(
+        adc_top, _exact_topk(qex, ex, topk), topk,
+        adc_top.select("query_id").distinct(),
+    )
+
+
+def _query_rows(ex: DataFrame, n_queries: int) -> DataFrame:
+    """The evaluation queries — the n_queries lowest ids — exploded as
+    (query_id, d, qx)."""
+    return ex.filter(F.col("vid") < n_queries).select(
+        F.col("vid").alias("query_id"), "d", F.col("x").alias("qx")
+    )
+
+
+def _topn(scored: DataFrame, n: int) -> DataFrame:
+    """(query_id, nid) of the `n` best-scored neighbors per query, ties
+    to the lower neighbor id."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("nid")
     )
-    adc_top = (
-        adc.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= topk)
-        .select("query_id", "nid")
-    )
-    exact = (
-        qex.join(ex.select(F.col("vid").alias("nid"), "d", "x"), "d")
-        .groupBy("query_id", "nid")
-        .agg(
-            F.sum((F.col("qx") * F.col("x")).cast("decimal(38,18)"))
-            .cast("double")
-            .alias("score")
-        )
-    )
-    exact_top = (
-        exact.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= topk)
-        .select("query_id", "nid")
-    )
     return (
-        adc_top.join(exact_top, ["query_id", "nid"])
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= n)
+        .select("query_id", "nid")
+    )
+
+
+def _exact_topk(qex: DataFrame, ex: DataFrame, topk: int) -> DataFrame:
+    """The ground truth every retrieval report is graded against: the
+    exact dot-product top-`topk` over the whole corpus `ex` (vid, d, x).
+    qex is n_queries x dim (knob-bounded): broadcast, so the corpus side
+    is never shuffled for the ground-truth dots."""
+    exact = (
+        F.broadcast(qex)
+        .join(ex.select(F.col("vid").alias("nid"), "d", "x"), "d")
+        .groupBy("query_id", "nid")
+        .agg(_dsum(F.col("qx") * F.col("x")).alias("score"))
+    )
+    return _topn(exact, topk)
+
+
+def _overlap(top: DataFrame, exact_top: DataFrame, topk: int,
+             per_query: DataFrame, *more: DataFrame) -> DataFrame:
+    """The retrieval-quality report: per query of `per_query`, how many
+    of `top` are in `exact_top` (0 when none), then topk and the other
+    columns of `per_query` and `more` (inner-joined on query_id)."""
+    rel = (
+        top.join(exact_top, ["query_id", "nid"])
         .groupBy("query_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_overlap"))
-        .join(
-            adc_top.select("query_id").distinct(), "query_id", "right"
+        .join(per_query, "query_id", "right")
+    )
+    for r in more:
+        rel = rel.join(r, "query_id")
+    return rel.select(
+        "query_id",
+        F.coalesce("n_overlap", F.lit(0)).cast("bigint").alias("n_overlap"),
+        F.lit(int(topk)).cast("bigint").alias("topk"),
+        *[c for r in (per_query, *more) for c in r.columns if c != "query_id"],
+    )
+
+
+def _ivf_coarse(
+    emb: DataFrame,
+    ex: DataFrame,
+    n_centroids: int,
+    coarse: str,
+    coarse_iters: int,
+    id_col: str,
+    vec_col: str,
+    sample_stride: int = 1,
+    n_queries: "int | None" = None,
+    nprobe: "int | None" = None,
+) -> "tuple[DataFrame, DataFrame, DataFrame | None]":
+    """The IVF coarse stage: (assigned (vid, centroid_id), cex exploded
+    centroids (centroid_id, d, cx; broadcast-sized), probes (query_id,
+    centroid_id) of the n_queries lowest ids, or None without queries).
+    `ex` is the exploded corpus (vid, d, x).
+
+    coarse='lowid' is q28's untrained quantizer (:func:`ivf_assign`:
+    the `n_centroids` lowest-id vectors, ordered-double-fold cosines).
+    coarse='kmeans' (VERDICT r11 ask #1 — FAISS *trains* the coarse
+    quantizer; lowest-id centroids gave degenerate buckets) trains full-dim spherical k-means
+    means for `coarse_iters` rounds (:func:`_kmeans`, init = the
+    n_centroids lowest ids) and ranks corpus AND probes against those
+    FINAL means from one scored relation, so assignment and probing are
+    consistent. `sample_stride > 1` trains on the deterministic 1/stride
+    sample (vid % stride == 0, init = the first n_centroids sample ids)
+    — how a deployment trains at 100 TB (FAISS: train on a sample, then
+    `add` everything); the means still quantize the full corpus. Only a
+    caller with queries persists the n x n_centroids ranking (probes
+    need it); otherwise only the n-row assignment is persisted."""
+    from unifydb_spark.resources import tracked_persist
+
+    if coarse not in ("lowid", "kmeans"):
+        raise ValueError(f"unknown coarse quantizer {coarse!r}")
+    probes = None
+    if coarse == "kmeans":
+        train = (
+            ex if sample_stride <= 1
+            else ex.filter(F.col("vid") % sample_stride == 0)
         )
-        .select(
-            "query_id",
-            F.coalesce("n_overlap", F.lit(0)).cast("bigint").alias("n_overlap"),
-            F.lit(int(topk)).cast("bigint").alias("topk"),
+        init = train.filter(
+            F.col("vid") < n_centroids * max(1, sample_stride)
+        ).select(F.col("vid").alias("cluster"), "d", F.col("x").alias("m"))
+        cent = tracked_persist(_kmeans(train, init, coarse_iters, means=True))
+        cex = cent.select(
+            F.col("cluster").alias("centroid_id"), "d", F.col("m").alias("cx")
         )
-    )
-
-
-def _coarse_kmeans_train(
-    ex: DataFrame, n_centroids: int, iters: int, sample_stride: int = 1
-) -> DataFrame:
-    """Full-dim spherical k-means for the IVF COARSE quantizer (VERDICT
-    r11 ask #1 — FAISS *trains* the coarse quantizer; the lowest-id-vector
-    centroids produced degenerate bucket structure: 78/80 true neighbors
-    in the rank-1 bucket and a flat nprobe dial at sf0.1). Input `ex`:
-    exploded vectors (vid, d, x). Deterministic exactly like
-    :func:`kmeans_assign` (q72's graded contract): init = the
-    `n_centroids` lowest-id vectors, per-(vector, centroid) dots and
-    norms accumulate in DECIMAL(38,18) (order-independent), assignment
-    is max cosine with ties to the lower centroid id, means are exact
-    decimal sums / counts. Returns the FINAL trained means as exploded
-    (centroid_id, d, cx) — broadcast-sized (n_centroids x dim) at any
-    corpus scale. Callers assign against the returned means with
-    :func:`_cosine_scored`, so assignment is consistent with the final
-    centroids (kmeans_assign's last assignment predates its last mean
-    update — an IVF index needs the two consistent).
-
-    `sample_stride > 1` trains on the deterministic 1/stride stride
-    sample (vid % stride == 0; init = the first n_centroids SAMPLE ids,
-    i.e. vid < n_centroids * stride) — how a real deployment trains the
-    coarse quantizer at 100 TB (FAISS's own guidance: train on ~k*max(
-    256, …) sampled points, then `add` everything). The returned means
-    still quantize the FULL corpus; only the training scans shrink by
-    the stride. Deterministic and oracle-expressible, unlike a seeded
-    random sample."""
-    train_ex = (
-        ex
-        if sample_stride <= 1
-        else ex.filter(F.col("vid") % sample_stride == 0)
-    )
-    cent = (
-        train_ex.filter(F.col("vid") < n_centroids * max(1, sample_stride))
-        .select(F.col("vid").alias("centroid_id"), "d", F.col("x").alias("cx"))
-        .localCheckpoint(eager=False)
-    )
-    # persist the per-vector norms: every iteration's _cosine_scored
-    # re-executes this corpus-side aggregate otherwise (exchange reuse
-    # does not cross checkpointed executions) — kmeans_assign/pq_codes
-    # already persist theirs
-    vn = train_ex.groupBy("vid").agg(
-        F.sum((F.col("x") * F.col("x")).cast("decimal(38,18)"))
-        .cast("double")
-        .alias("vn2")
-    ).persist()
-    try:
-        for it in range(iters):
-            sc = _cosine_scored(train_ex, cent, vn)
-            a = (
-                sc.withColumn(
-                    "rn",
-                    F.row_number().over(
-                        Window.partitionBy("vid").orderBy(
-                            F.col("cos").desc(), F.col("centroid_id")
-                        )
-                    ),
-                )
-                .filter("rn = 1")
-                .select("vid", "centroid_id")
+        ranked = _ranked(ex, cent, vnorm=_vnorm(ex)).withColumnRenamed(
+            "cluster", "centroid_id"
+        )
+        if n_queries is None:
+            assigned = tracked_persist(
+                ranked.filter(F.col("rn") == 1).select("vid", "centroid_id")
             )
-            # intermediate rounds are lazy (see kmeans_assign); the
-            # RETURNED means are eager so the unpersist below is safe
-            cent = (
-                train_ex.join(a, "vid")
-                .groupBy("centroid_id", "d")
-                .agg(
-                    (
-                        F.sum(F.col("x").cast("decimal(38,18)")).cast("double")
-                        / F.count("x")
-                    ).alias("cx")
-                )
-                .localCheckpoint(eager=(it == iters - 1))
+        else:
+            ranked = tracked_persist(ranked)
+            assigned = ranked.filter(F.col("rn") == 1).select(
+                "vid", "centroid_id"
             )
-        return cent
-    finally:
-        vn.unpersist()
-
-
-def _cosine_scored(
-    ex: DataFrame, cex: DataFrame, vn: "DataFrame | None" = None
-) -> DataFrame:
-    """Cosine of every vector against every coarse centroid, DECIMAL
-    folds over the exploded dims (order-independent — the contract the
-    SQL twins replicate verbatim). `ex` = (vid, d, x), `cex` = exploded
-    centroids (centroid_id, d, cx; broadcast-sized). Returns (vid,
-    centroid_id, cos). One shuffle on (vid, centroid_id), map-side
-    combinable; the centroid side broadcasts."""
-    cn = cex.groupBy("centroid_id").agg(
-        F.sum((F.col("cx") * F.col("cx")).cast("decimal(38,18)"))
-        .cast("double")
-        .alias("cn2")
-    )
-    if vn is None:
-        vn = ex.groupBy("vid").agg(
-            F.sum((F.col("x") * F.col("x")).cast("decimal(38,18)"))
-            .cast("double")
-            .alias("vn2")
+            probes = ranked.filter(
+                (F.col("vid") < n_queries) & (F.col("rn") <= nprobe)
+            ).select(F.col("vid").alias("query_id"), "centroid_id")
+    else:
+        assigned = tracked_persist(
+            ivf_assign(emb, id_col, vec_col, n_centroids).select(
+                F.col(id_col).alias("vid"), "centroid_id"
+            )
         )
-    dots = (
-        ex.join(F.broadcast(cex), "d")
-        .groupBy("vid", "centroid_id")
-        .agg(
-            F.sum((F.col("x") * F.col("cx")).cast("decimal(38,18)"))
-            .cast("double")
-            .alias("dot")
+        if n_queries is not None:
+            v = with_norm(emb, id_col, vec_col)
+            cents = F.broadcast(
+                v.filter(F.col(id_col) < n_centroids).select(
+                    F.col(id_col).alias("centroid_id"),
+                    F.col(vec_col).alias("cvec"),
+                    F.col("n2").alias("cn2"),
+                )
+            )
+            qccos = _dot(F.col("cvec"), F.col("qvec")) / (
+                F.sqrt(F.col("cn2")) * F.sqrt(F.col("qn2"))
+            )
+            wq = Window.partitionBy("query_id").orderBy(
+                F.col("qccos").desc(), F.col("centroid_id")
+            )
+            probes = (
+                v.filter(F.col(id_col) < n_queries)
+                .select(
+                    F.col(id_col).alias("query_id"),
+                    F.col(vec_col).alias("qvec"),
+                    F.col("n2").alias("qn2"),
+                )
+                .crossJoin(cents)
+                .select("query_id", "centroid_id", qccos.alias("qccos"))
+                .withColumn("rn", F.row_number().over(wq))
+                .filter(F.col("rn") <= nprobe)
+                .select("query_id", "centroid_id")
+            )
+        cex = ex.filter(F.col("vid") < n_centroids).select(
+            F.col("vid").alias("centroid_id"), "d", F.col("x").alias("cx")
         )
-    )
     return (
-        dots.join(F.broadcast(cn), "centroid_id")
-        .join(vn, "vid")
-        .withColumn(
-            "cos", F.col("dot") / (F.sqrt(F.col("vn2")) * F.sqrt(F.col("cn2")))
+        assigned,
+        F.broadcast(cex),
+        None if probes is None else F.broadcast(probes),
+    )
+
+
+def _ivf_pq_build(
+    emb: DataFrame,
+    n_centroids: "int | None",
+    m: int,
+    k: int,
+    iters: int,
+    residual: bool,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    coarse: str,
+    coarse_iters: int,
+    coarse_sample_stride: int = 1,
+    n_queries: "int | None" = None,
+    nprobe: "int | None" = None,
+):
+    """The one IVF-PQ build behind :func:`ivf_pq_topk`,
+    :func:`ivf_pq_refine_topk` and :func:`ivf_pq_index_write` (the Spark
+    side of _ivf_coarse_head_ctes + _pq_train_ctes): exploded corpus ->
+    coarse stage (:func:`_ivf_coarse`) -> residuals r = x - c(x) (or raw
+    x), split into m subspaces -> per-subspace L2 k-means (all m in one
+    batched job set; init = the residuals of ids [n_centroids,
+    n_centroids + k), the first ids whose residuals are not identically
+    zero — ids < n_centroids ARE the lowid centroids) -> codes (vid,
+    subspace, code) and the codebook (subspace, code, d, mval): each
+    code's mean residual at full-dim coordinates. With queries, also the
+    evaluation relations: qex (query_id, d, qx), ncand (query_id,
+    n_candidates) and the ADC-scored candidates (query_id, nid, score).
+    Every intermediate is tracked_persist'ed (callers scope them)."""
+    from unifydb_spark.resources import tracked_persist
+
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible by m {m}")
+    if iters < 1:
+        raise ValueError(f"k-means needs iters >= 1, got iters={iters}")
+    sub = dim // m
+    # one count job serves both the auto_k derivation and the caller's
+    # n_total / n_base
+    n = emb.count()
+    if n_centroids is None:
+        n_centroids = auto_k(n, IVF_CENTROID_DIVISOR, lo=16)
+    ex = tracked_persist(_by_vid(_explode(emb, id_col, vec_col)))
+    assigned, cex, probes = _ivf_coarse(
+        emb, ex, n_centroids, coarse, coarse_iters, id_col, vec_col,
+        coarse_sample_stride, n_queries, nprobe,
+    )
+    rx = (F.col("x") - F.col("cx")) if residual else F.col("x")
+    rex = tracked_persist(
+        ex.join(assigned, "vid")
+        .join(cex, ["centroid_id", "d"])
+        .select(
+            "vid",
+            "centroid_id",
+            "d",
+            F.expr(f"d DIV {sub}").alias("subspace"),
+            F.expr(f"d % {sub}").alias("sd"),
+            rx.alias("rx"),
         )
     )
+    points = rex.select(
+        "vid", "subspace", F.col("sd").alias("d"), F.col("rx").alias("x")
+    )
+    init = points.filter(
+        (F.col("vid") >= n_centroids) & (F.col("vid") < n_centroids + k)
+    ).select(
+        "subspace", (F.col("vid") - n_centroids).alias("cluster"), "d",
+        F.col("x").alias("m"),
+    )
+    codes = _kmeans(
+        points, init, iters, ["subspace"], spherical=False
+    ).withColumnRenamed("cluster", "code")
+    cb = _dmean(
+        rex.join(codes, ["vid", "subspace"]), ["subspace", "code", "d"],
+        x="rx", out="mval",
+    )
+    b = SimpleNamespace(
+        n=n, n_centroids=n_centroids, ex=ex, assigned=assigned, cex=cex,
+        codes=codes, cb=cb,
+    )
+    if n_queries is not None:
+        b.qex = tracked_persist(_query_rows(ex, n_queries))
+        cand = probes.join(assigned, "centroid_id").select(
+            "query_id", "centroid_id", F.col("vid").alias("nid")
+        )
+        b.ncand = cand.groupBy("query_id").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_candidates")
+        )
+        b.scored = _adc_scored(codes, cb, cex, cand, b.qex, residual, "vid")
+    return b
 
 
 def ivf_coarse_assign(
@@ -1640,35 +1665,25 @@ def ivf_coarse_assign(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Coarse-quantizer assignment as a standalone relation (vec_id,
-    centroid_id) — the same helpers :func:`ivf_pq_topk` composes, exposed
-    so bucket BALANCE is measurable (VERDICT r11: 'untrained coarse
-    centroids make IVF bucket sizes data-dependent with no balance
-    measurement'). coarse='kmeans' trains with :func:`_coarse_kmeans_train`;
-    coarse='lowid' is the untrained r146 baseline (q28's ivf_assign)."""
+    centroid_id) — the coarse stage :func:`ivf_pq_topk` composes
+    (:func:`_ivf_coarse`), exposed so bucket BALANCE is measurable
+    (VERDICT r11: 'untrained coarse centroids make IVF bucket sizes
+    data-dependent with no balance measurement'). coarse='kmeans'
+    trains the quantizer; coarse='lowid' is the untrained r146 baseline
+    (q28's ivf_assign)."""
+    from unifydb_spark.resources import persist_scope
+
     if n_centroids is None:
         n_centroids = auto_k(emb.count(), IVF_CENTROID_DIVISOR, lo=16)
-    if coarse == "lowid":
-        return ivf_assign(emb, id_col, vec_col, n_centroids).select(
-            F.col(id_col), F.col("centroid_id")
+    # the coarse stage persists for the build's reuse; a standalone
+    # assignment stays lazy and caches nothing (no action runs on those
+    # persists here, and the trained means are a checkpoint)
+    with persist_scope():
+        assigned, _, _ = _ivf_coarse(
+            emb, _explode(emb, id_col, vec_col), n_centroids, coarse,
+            coarse_iters, id_col, vec_col,
         )
-    ex = emb.select(
-        F.col(id_col).alias("vid"),
-        F.posexplode(F.col(vec_col)).alias("d", "x"),
-    ).withColumn("x", F.col("x").cast("double"))
-    cex = _coarse_kmeans_train(ex, n_centroids, coarse_iters)
-    return (
-        _cosine_scored(ex, cex)
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("vid").orderBy(
-                    F.col("cos").desc(), F.col("centroid_id")
-                )
-            ),
-        )
-        .filter("rn = 1")
-        .select(F.col("vid").alias(id_col), "centroid_id")
-    )
+    return assigned.select(F.col("vid").alias(id_col), "centroid_id")
 
 
 def ivf_bucket_stats(assigned: DataFrame) -> DataFrame:
@@ -1754,7 +1769,7 @@ def ivf_pq_topk(
 
     coarse='kmeans' (VERDICT r11 ask #1) replaces the lowest-id-vector
     coarse centroids with full-dim spherical-k-means-TRAINED means
-    (:func:`_coarse_kmeans_train`, `coarse_iters` rounds — FAISS trains
+    (:func:`_ivf_coarse`, `coarse_iters` rounds — FAISS trains
     its coarse quantizer the same way) and ranks both the corpus
     assignment and the query probes against the FINAL means from one
     scored relation. Trained buckets track the data distribution, so
@@ -1763,252 +1778,13 @@ def ivf_pq_topk(
     (overlap 40->48 of 80 at sf0.001 vs coarse='lowid' at identical
     knobs). Graded as r149; coarse='lowid' remains r146's graded
     baseline."""
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    if coarse not in ("lowid", "kmeans"):
-        raise ValueError(f"unknown coarse quantizer {coarse!r}")
-    sub = dim // m
-    # one count job serves both the auto_k derivation and the graded
-    # n_total column (was two separate driver actions)
-    n_total = emb.count()
-    if n_centroids is None:
-        n_centroids = auto_k(n_total, IVF_CENTROID_DIVISOR, lo=16)
-    from unifydb_spark.resources import tracked_persist
-
-    ex = tracked_persist(
-        _by_vid(
-            emb.select(
-                F.col(id_col).alias("vid"),
-                F.posexplode(F.col(vec_col)).alias("d", "x"),
-            ).withColumn("x", F.col("x").cast("double"))
-        )
+    b = _ivf_pq_build(
+        emb, n_centroids, m, k, iters, residual, id_col, vec_col, dim,
+        coarse, coarse_iters, coarse_sample_stride, n_queries, nprobe,
     )
-    if coarse == "kmeans":
-        # ---- TRAINED coarse quantizer (VERDICT r11 ask #1): full-dim
-        # spherical k-means means, one scored relation serves both the
-        # corpus assignment (rn = 1) and the query probes (rn <= nprobe)
-        # so assignment and probing are consistent with the SAME final
-        # centroids. All decimal folds — the SQL twin unrolls them.
-        cex = F.broadcast(
-            tracked_persist(
-                _coarse_kmeans_train(
-                    ex, n_centroids, coarse_iters, coarse_sample_stride
-                )
-            )
-        )
-        scoredc = _cosine_scored(ex, cex)
-        wv = Window.partitionBy("vid").orderBy(
-            F.col("cos").desc(), F.col("centroid_id")
-        )
-        ranked = tracked_persist(
-            scoredc.withColumn("rn", F.row_number().over(wv))
-        )
-        assigned = ranked.filter(F.col("rn") == 1).select("vid", "centroid_id")
-        probes = F.broadcast(
-            ranked.filter(
-                (F.col("vid") < n_queries) & (F.col("rn") <= nprobe)
-            ).select(F.col("vid").alias("query_id"), "centroid_id")
-        )
-    else:
-        # ---- coarse quantizer + probes: the q28 machinery, verbatim ----
-        v = with_norm(emb, id_col, vec_col)
-        cents = F.broadcast(
-            v.filter(F.col(id_col) < n_centroids).select(
-                F.col(id_col).alias("centroid_id"),
-                F.col(vec_col).alias("cvec"),
-                F.col("n2").alias("cn2"),
-            )
-        )
-        cdot = _dot(F.col("cvec"), F.col(vec_col))
-        ccos = cdot / (F.sqrt(F.col("cn2")) * F.sqrt(F.col("n2")))
-        assigned = tracked_persist(
-            v.crossJoin(cents)
-            .select(F.col(id_col).alias("vid"), "centroid_id", ccos.alias("ccos"))
-            .withColumn("rn", F.row_number().over(Window.partitionBy("vid").orderBy(F.col("ccos").desc(), F.col("centroid_id"))))
-            .filter(F.col("rn") == 1)
-            .select("vid", "centroid_id")
-        )
-        q = v.filter(F.col(id_col) < n_queries).select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qvec"),
-            F.col("n2").alias("qn2"),
-        )
-        qcdot = _dot(F.col("cvec"), F.col("qvec"))
-        qccos = qcdot / (F.sqrt(F.col("cn2")) * F.sqrt(F.col("qn2")))
-        wq = Window.partitionBy("query_id").orderBy(
-            F.col("qccos").desc(), F.col("centroid_id")
-        )
-        probes = F.broadcast(
-            q.crossJoin(cents)
-            .select("query_id", "centroid_id", qccos.alias("qccos"))
-            .withColumn("rn", F.row_number().over(wq))
-            .filter(F.col("rn") <= nprobe)
-            .select("query_id", "centroid_id")
-        )
-        cex = F.broadcast(
-            ex.filter(F.col("vid") < n_centroids).select(
-                F.col("vid").alias("centroid_id"), "d", F.col("x").alias("cx")
-            )
-        )
-
-    # ---- residuals, exploded and keyed by subspace (r144 batching) ----
-    rx = (F.col("x") - F.col("cx")) if residual else F.col("x")
-    rex = tracked_persist(
-        ex.join(assigned, "vid")
-        .join(cex, ["centroid_id", "d"])
-        .select(
-            "vid",
-            "centroid_id",
-            "d",
-            F.expr(f"d DIV {sub}").alias("subspace"),
-            F.expr(f"d % {sub}").alias("sd"),
-            rx.alias("rx"),
-        )
-    )
-
-    # ---- per-subspace L2 k-means over residuals, batched like r144 ----
-    codes, cb = _pq_train(rex, n_centroids, k, iters)
-    cb = F.broadcast(cb)
-
-    # ---- search: probe -> candidates -> ADC score -> top-k ----
-    qex = tracked_persist(
-        ex.filter(F.col("vid") < n_queries).select(
-            F.col("vid").alias("query_id"), "d", F.col("x").alias("qx")
-        )
-    )
-    cand = probes.join(assigned, "centroid_id").select(
-        "query_id", "centroid_id", F.col("vid").alias("nid")
-    )
-    ncand = cand.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_candidates")
-    )
-    scored = _adc_scored(codes, cb, cex, cand, qex, residual, "vid")
-    wt = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("nid")
-    )
-    adc_top = (
-        scored.withColumn("rn", F.row_number().over(wt))
-        .filter(F.col("rn") <= topk)
-        .select("query_id", "nid")
-    )
-    exact = (
-        # qex is n_queries x dim (knob-bounded): broadcast so the
-        # corpus-side ex is never shuffled for the ground-truth dots
-        F.broadcast(qex)
-        .join(ex.select(F.col("vid").alias("nid"), "d", "x"), "d")
-        .groupBy("query_id", "nid")
-        .agg(
-            F.sum((F.col("qx") * F.col("x")).cast("decimal(38,18)"))
-            .cast("double")
-            .alias("score")
-        )
-    )
-    exact_top = (
-        exact.withColumn("rn", F.row_number().over(wt))
-        .filter(F.col("rn") <= topk)
-        .select("query_id", "nid")
-    )
-    return (
-        adc_top.join(exact_top, ["query_id", "nid"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_overlap"))
-        .join(ncand, "query_id", "right")
-        .select(
-            "query_id",
-            F.coalesce("n_overlap", F.lit(0)).cast("bigint").alias("n_overlap"),
-            F.lit(int(topk)).cast("bigint").alias("topk"),
-            F.col("n_candidates"),
-            F.lit(int(n_total)).cast("bigint").alias("n_total"),
-        )
-    )
-
-
-def _pq_train(
-    rex: DataFrame, n_centroids: int, k: int, iters: int
-) -> "tuple[DataFrame, DataFrame]":
-    """The residual-PQ training kernel shared by :func:`ivf_pq_topk`
-    (oracle-graded) and :func:`ivf_pq_index_write` (persisted index) —
-    one code path. Input `rex`: exploded residuals (vid, centroid_id,
-    d, subspace, sd, rx). Per-subspace L2 k-means, all m subspaces in
-    one batched job set (subspace as a key); init = the residuals of
-    ids [n_centroids, n_centroids + k) — the first k ids whose
-    residuals are not identically zero (ids < n_centroids ARE the
-    coarse centroids). Returns (codes, codebook): codes (vid, subspace,
-    code); codebook = mean residual of each code's members at full-dim
-    coordinates (subspace, code, d, mval) — one more deterministic
-    update past the final assignment, the r145 pattern."""
-    cent = (
-        rex.filter(
-            (F.col("vid") >= n_centroids) & (F.col("vid") < n_centroids + k)
-        )
-        .select(
-            "subspace",
-            (F.col("vid") - n_centroids).alias("cluster"),
-            "sd",
-            F.col("rx").alias("cm"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    codes = None
-    for it in range(iters):
-        cn2 = cent.groupBy("subspace", "cluster").agg(
-            F.sum((F.col("cm") * F.col("cm")).cast("decimal(38,18)"))
-            .cast("double")
-            .alias("cn2")
-        )
-        # cent is m x k x sub rows (knob-bounded) — broadcast so the
-        # corpus-side residuals never shuffle for this join
-        dots = (
-            rex.join(F.broadcast(cent), ["subspace", "sd"])
-            .groupBy("vid", "subspace", "cluster")
-            .agg(
-                F.sum((F.col("rx") * F.col("cm")).cast("decimal(38,18)"))
-                .cast("double")
-                .alias("dot")
-            )
-        )
-        # argmin ||r - c||^2 = argmin (cn2 - 2*dot): rn2 is per-vector
-        # constant, so it never changes the winner and is never built
-        wa = Window.partitionBy("vid", "subspace").orderBy(
-            (F.col("cn2") - 2.0 * F.col("dot")).asc(), F.col("cluster")
-        )
-        # intra-loop checkpoints are lazy (see kmeans_assign); the final
-        # codes stay eager — both returned values derive from them
-        codes = (
-            dots.join(F.broadcast(cn2), ["subspace", "cluster"])
-            .withColumn("rn", F.row_number().over(wa))
-            .filter("rn = 1")
-            .select("vid", "subspace", F.col("cluster").alias("code"))
-            .localCheckpoint(eager=(it == iters - 1))
-        )
-        if it < iters - 1:
-            cent = (
-                rex.join(
-                    codes.select(
-                        "vid", "subspace", F.col("code").alias("cluster")
-                    ),
-                    ["vid", "subspace"],
-                )
-                .groupBy("subspace", "cluster", "sd")
-                .agg(
-                    (
-                        F.sum(F.col("rx").cast("decimal(38,18)")).cast("double")
-                        / F.count("rx")
-                    ).alias("cm")
-                )
-                .localCheckpoint(eager=False)
-            )
-    cb = (
-        rex.join(codes, ["vid", "subspace"])
-        .groupBy("subspace", "code", "d")
-        .agg(
-            (
-                F.sum(F.col("rx").cast("decimal(38,18)")).cast("double")
-                / F.count("rx")
-            ).alias("mval")
-        )
-    )
-    return codes, cb
+    return _overlap(
+        _topn(b.scored, topk), _exact_topk(b.qex, b.ex, topk), topk, b.ncand
+    ).withColumn("n_total", F.lit(int(b.n)).cast("bigint"))
 
 
 def _adc_scored(
@@ -2137,97 +1913,29 @@ def ivf_pq_index_write(
     same as the txlog transactor: one process appends / rebuilds;
     concurrent readers are unrestricted. Pinned by
     tests/test_scale_proofs.py::test_index_rebuild_reader_isolation."""
-    # one count job serves both the auto_k derivation and the meta's
-    # n_base field (was two separate driver actions)
-    n_base = emb.count()
-    if n_centroids is None:
-        n_centroids = auto_k(n_base, IVF_CENTROID_DIVISOR, lo=16)
-    if coarse not in ("lowid", "kmeans"):
-        raise ValueError(f"unknown coarse quantizer {coarse!r}")
-    sub = dim // m
     prev_meta = _read_index_meta(path)
     epoch = int(prev_meta.get("epoch", 0)) + 1 if prev_meta else 1
     data = f"{path}/v{epoch}"
-    from unifydb_spark.resources import persist_scope, tracked_persist
+    from unifydb_spark.resources import persist_scope
 
     with persist_scope():
-        ex = tracked_persist(
-            _by_vid(
-                emb.select(
-                    F.col(id_col).alias("vid"),
-                    F.posexplode(F.col(vec_col)).alias("d", "x"),
-                ).withColumn("x", F.col("x").cast("double"))
-            )
+        # a trained coarse stage persists k-means means, so bucket sizes
+        # track the data distribution instead of whichever vectors got
+        # the low ids
+        b = _ivf_pq_build(
+            emb, n_centroids, m, k, iters, residual, id_col, vec_col, dim,
+            coarse, coarse_iters,
         )
-        if coarse == "kmeans":
-            # TRAINED coarse stage (VERDICT r11 ask #1): the persisted
-            # centroids are k-means means, so bucket sizes track the data
-            # distribution instead of whichever vectors got the low ids.
-            cex = tracked_persist(
-                _coarse_kmeans_train(ex, n_centroids, coarse_iters)
-            )
-            assigned = tracked_persist(
-                _cosine_scored(ex, cex)
-                .withColumn(
-                    "rn",
-                    F.row_number().over(
-                        Window.partitionBy("vid").orderBy(
-                            F.col("cos").desc(), F.col("centroid_id")
-                        )
-                    ),
-                )
-                .filter(F.col("rn") == 1)
-                .select("vid", "centroid_id")
-            )
-        else:
-            v = with_norm(emb, id_col, vec_col)
-            cents = F.broadcast(
-                v.filter(F.col(id_col) < n_centroids).select(
-                    F.col(id_col).alias("centroid_id"),
-                    F.col(vec_col).alias("cvec"),
-                    F.col("n2").alias("cn2"),
-                )
-            )
-            cdot = _dot(F.col("cvec"), F.col(vec_col))
-            ccos = cdot / (F.sqrt(F.col("cn2")) * F.sqrt(F.col("n2")))
-            wv = Window.partitionBy("vid").orderBy(
-                F.col("ccos").desc(), F.col("centroid_id")
-            )
-            assigned = tracked_persist(
-                v.crossJoin(cents)
-                .select(
-                    F.col(id_col).alias("vid"), "centroid_id", ccos.alias("ccos")
-                )
-                .withColumn("rn", F.row_number().over(wv))
-                .filter(F.col("rn") == 1)
-                .select("vid", "centroid_id")
-            )
-            cex = ex.filter(F.col("vid") < n_centroids).select(
-                F.col("vid").alias("centroid_id"), "d", F.col("x").alias("cx")
-            )
-        rx = (F.col("x") - F.col("cx")) if residual else F.col("x")
-        rex = tracked_persist(
-            ex.join(assigned, "vid")
-            .join(F.broadcast(cex), ["centroid_id", "d"])
-            .select(
-                "vid",
-                "centroid_id",
-                "d",
-                F.expr(f"d DIV {sub}").alias("subspace"),
-                F.expr(f"d % {sub}").alias("sd"),
-                rx.alias("rx"),
-            )
-        )
-        codes, cb = _pq_train(rex, n_centroids, k, iters)
         (
-            codes.join(assigned, "vid")
+            b.codes.join(b.assigned, "vid")
             .select("vid", "subspace", "code", "centroid_id")
             .write.mode("overwrite")
             .partitionBy("centroid_id")
             .parquet(f"{data}/codes")
         )
-        cb.write.mode("overwrite").parquet(f"{data}/codebook")
-        cex.write.mode("overwrite").parquet(f"{data}/centroids")
+        b.cb.write.mode("overwrite").parquet(f"{data}/codebook")
+        b.cex.write.mode("overwrite").parquet(f"{data}/centroids")
+    n_base, n_centroids = b.n, b.n_centroids
     index = {
         "path": path,
         "data_path": data,
@@ -2630,6 +2338,14 @@ def ivf_pq_index_maybe_maintain(
     return report
 
 
+# above this many rows createDataFrame wins: the literal relation's
+# parse/plan cost grows ~0.25 ms per row, createDataFrame's cores-wide
+# stage is flat. Measured crossover (SCALE.md "Literal relation
+# cutoff"): between 768 and 1024 rows on local[4], above 1536 on
+# local[8] — the cutoff is the narrower-parallelism one
+_LOCAL_REL_MAX_ROWS = 768
+
+
 def _local_rel(spark, schema, rows) -> DataFrame:
     """A small collected row set as a PURE-EXPRESSION local relation —
     `range(0,1,1,1).select(explode(array(named_struct...)))`, the
@@ -2644,10 +2360,17 @@ def _local_rel(spark, schema, rows) -> DataFrame:
     doubles embed as CAST('<repr>' AS DOUBLE) — Python repr is the
     shortest round-tripping decimal, so the parsed double is
     bit-identical to the collected one (NaN/±Infinity spelled
-    explicitly)."""
+    explicitly). No rows: typed nulls over an always-false filter of the
+    same one-partition range, never the cores-wide empty createDataFrame.
+    More than _LOCAL_REL_MAX_ROWS rows, or a non-numeric schema: plain
+    createDataFrame."""
     from pyspark.sql import types as T
 
-    if not rows or not all(
+    if not rows:
+        return spark.range(0, 1, 1, 1).where(F.lit(False)).select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+        )
+    if len(rows) > _LOCAL_REL_MAX_ROWS or not all(
         isinstance(f.dataType, (T.LongType, T.IntegerType, T.DoubleType))
         for f in schema.fields
     ):
@@ -2915,178 +2638,25 @@ def ivf_pq_refine_topk(
     top-k, topk, n_candidates ADC-scored, n_refined exactly re-ranked,
     n_total). Same determinism contract; the DuckDB twin
     (:func:`ivf_pq_refine_topk_sql`) unrolls the identical plan."""
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    if coarse not in ("lowid", "kmeans"):
-        raise ValueError(f"unknown coarse quantizer {coarse!r}")
-    sub = dim // m
-    # one count job serves both the auto_k derivation and the graded
-    # n_total column (was two separate driver actions)
-    n_total = emb.count()
-    if n_centroids is None:
-        n_centroids = auto_k(n_total, IVF_CENTROID_DIVISOR, lo=16)
-    from unifydb_spark.resources import tracked_persist
-
-    ex = tracked_persist(
-        _by_vid(
-            emb.select(
-                F.col(id_col).alias("vid"),
-                F.posexplode(F.col(vec_col)).alias("d", "x"),
-            ).withColumn("x", F.col("x").cast("double"))
-        )
+    b = _ivf_pq_build(
+        emb, n_centroids, m, k, iters, True, id_col, vec_col, dim,
+        coarse, coarse_iters, n_queries=n_queries, nprobe=nprobe,
     )
-    if coarse == "kmeans":
-        # trained coarse stage — identical branch to ivf_pq_topk's
-        # (r149): k-means means, one scored relation for assignment
-        # AND probes, all decimal folds
-        cex = F.broadcast(
-            tracked_persist(
-                _coarse_kmeans_train(ex, n_centroids, coarse_iters)
-            )
-        )
-        scoredc = _cosine_scored(ex, cex)
-        wv = Window.partitionBy("vid").orderBy(
-            F.col("cos").desc(), F.col("centroid_id")
-        )
-        ranked = tracked_persist(
-            scoredc.withColumn("rn", F.row_number().over(wv))
-        )
-        assigned = ranked.filter(F.col("rn") == 1).select("vid", "centroid_id")
-        probes = F.broadcast(
-            ranked.filter(
-                (F.col("vid") < n_queries) & (F.col("rn") <= nprobe)
-            ).select(F.col("vid").alias("query_id"), "centroid_id")
-        )
-    else:
-        v = with_norm(emb, id_col, vec_col)
-        cents = F.broadcast(
-            v.filter(F.col(id_col) < n_centroids).select(
-                F.col(id_col).alias("centroid_id"),
-                F.col(vec_col).alias("cvec"),
-                F.col("n2").alias("cn2"),
-            )
-        )
-        cdot = _dot(F.col("cvec"), F.col(vec_col))
-        ccos = cdot / (F.sqrt(F.col("cn2")) * F.sqrt(F.col("n2")))
-        assigned = tracked_persist(
-            v.crossJoin(cents)
-            .select(F.col(id_col).alias("vid"), "centroid_id", ccos.alias("ccos"))
-            .withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.partitionBy("vid").orderBy(
-                        F.col("ccos").desc(), F.col("centroid_id")
-                    )
-                ),
-            )
-            .filter(F.col("rn") == 1)
-            .select("vid", "centroid_id")
-        )
-        q = v.filter(F.col(id_col) < n_queries).select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qvec"),
-            F.col("n2").alias("qn2"),
-        )
-        qcdot = _dot(F.col("cvec"), F.col("qvec"))
-        qccos = qcdot / (F.sqrt(F.col("cn2")) * F.sqrt(F.col("qn2")))
-        wq = Window.partitionBy("query_id").orderBy(
-            F.col("qccos").desc(), F.col("centroid_id")
-        )
-        probes = F.broadcast(
-            q.crossJoin(cents)
-            .select("query_id", "centroid_id", qccos.alias("qccos"))
-            .withColumn("rn", F.row_number().over(wq))
-            .filter(F.col("rn") <= nprobe)
-            .select("query_id", "centroid_id")
-        )
-        cex = F.broadcast(
-            ex.filter(F.col("vid") < n_centroids).select(
-                F.col("vid").alias("centroid_id"), "d", F.col("x").alias("cx")
-            )
-        )
-    rex = tracked_persist(
-        ex.join(assigned, "vid")
-        .join(cex, ["centroid_id", "d"])
-        .select(
-            "vid",
-            "centroid_id",
-            "d",
-            F.expr(f"d DIV {sub}").alias("subspace"),
-            F.expr(f"d % {sub}").alias("sd"),
-            (F.col("x") - F.col("cx")).alias("rx"),
-        )
-    )
-    codes, cb = _pq_train(rex, n_centroids, k, iters)
-    cb = F.broadcast(cb)
-    qex = tracked_persist(
-        ex.filter(F.col("vid") < n_queries).select(
-            F.col("vid").alias("query_id"), "d", F.col("x").alias("qx")
-        )
-    )
-    cand = probes.join(assigned, "centroid_id").select(
-        "query_id", "centroid_id", F.col("vid").alias("nid")
-    )
-    ncand = cand.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_candidates")
-    )
-    scored = _adc_scored(codes, cb, cex, cand, qex, True, "vid")
-    wt = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("nid")
-    )
-    shortlist = (
-        scored.withColumn("rn", F.row_number().over(wt))
-        .filter(F.col("rn") <= refine)
-        .select("query_id", "nid")
-    )
+    shortlist = _topn(b.scored, refine)
     nref = shortlist.groupBy("query_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_refined")
     )
     # exact re-rank of the shortlist only: refine full dots per query
     refined = (
-        shortlist.join(ex.select(F.col("vid").alias("nid"), "d", "x"), "nid")
-        .join(qex, ["query_id", "d"])
+        shortlist.join(b.ex.select(F.col("vid").alias("nid"), "d", "x"), "nid")
+        .join(b.qex, ["query_id", "d"])
         .groupBy("query_id", "nid")
-        .agg(
-            F.sum((F.col("qx") * F.col("x")).cast("decimal(38,18)"))
-            .cast("double")
-            .alias("score")
-        )
+        .agg(_dsum(F.col("qx") * F.col("x")).alias("score"))
     )
-    refined_top = (
-        refined.withColumn("rn", F.row_number().over(wt))
-        .filter(F.col("rn") <= topk)
-        .select("query_id", "nid")
-    )
-    exact = (
-        F.broadcast(qex)
-        .join(ex.select(F.col("vid").alias("nid"), "d", "x"), "d")
-        .groupBy("query_id", "nid")
-        .agg(
-            F.sum((F.col("qx") * F.col("x")).cast("decimal(38,18)"))
-            .cast("double")
-            .alias("score")
-        )
-    )
-    exact_top = (
-        exact.withColumn("rn", F.row_number().over(wt))
-        .filter(F.col("rn") <= topk)
-        .select("query_id", "nid")
-    )
-    return (
-        refined_top.join(exact_top, ["query_id", "nid"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_overlap"))
-        .join(ncand, "query_id", "right")
-        .join(nref, "query_id")
-        .select(
-            "query_id",
-            F.coalesce("n_overlap", F.lit(0)).cast("bigint").alias("n_overlap"),
-            F.lit(int(topk)).cast("bigint").alias("topk"),
-            F.col("n_candidates"),
-            F.col("n_refined"),
-            F.lit(int(n_total)).cast("bigint").alias("n_total"),
-        )
-    )
+    return _overlap(
+        _topn(refined, topk), _exact_topk(b.qex, b.ex, topk), topk,
+        b.ncand, nref,
+    ).withColumn("n_total", F.lit(int(b.n)).cast("bigint"))
 
 
 def ivf_pq_refine_topk_sql(
@@ -3194,10 +2764,10 @@ def _ivf_coarse_head_ctes(
     `ex` (vid, d, x, subspace, sd), `cex` (centroid_id, d, cx),
     `assigned` (vid, centroid_id) and `probes` (query_id, centroid_id).
     coarse='lowid' is the r146 baseline (q28's ordered list_reduce
-    folds); coarse='kmeans' unrolls :func:`_coarse_kmeans_train` — the
-    full-dim spherical k-means chain (decimal folds, lowest-id init,
-    low-id ties) followed by ONE consistent assignment/probe ranking
-    against the FINAL means. `query_filter` is a SQL boolean over `vid`
+    folds); coarse='kmeans' unrolls :func:`_ivf_coarse`'s training (the
+    :func:`_kmeans` loop with means) — the full-dim spherical k-means
+    chain (decimal folds, lowest-id init, low-id ties) followed by ONE
+    consistent assignment/probe ranking against the FINAL means. `query_filter` is a SQL boolean over `vid`
     selecting the query vectors (e.g. 'vid < 8')."""
     dec = "CAST(CAST(SUM(CAST({expr} AS DECIMAL(38,18))) AS VARCHAR) AS DOUBLE)"
     ctes = [
@@ -3376,8 +2946,9 @@ def _pq_train_ctes(
     nc: str, k: int, iters: int, residual: bool
 ) -> "tuple[list[str], str]":
     """The residual-PQ training chain of the IVF-PQ SQL twins (the SQL
-    mirror of :func:`_pq_train`): CTEs rex -> cent0 -> per-iteration
-    (cn2_i, dots_i, a_i, cent_i) -> cb, consuming the head CTEs `ex` /
+    mirror of :func:`_ivf_pq_build`'s residual-PQ :func:`_kmeans`):
+    CTEs rex -> cent0 -> per-iteration (cn2_i, dots_i, a_i, cent_i) ->
+    cb, consuming the head CTEs `ex` /
     `cex` / `assigned`. Returns (ctes, final_codes_cte_name)."""
     dec = "CAST(CAST(SUM(CAST({expr} AS DECIMAL(38,18))) AS VARCHAR) AS DOUBLE)"
     rx = "e.x - ce.cx" if residual else "e.x"
