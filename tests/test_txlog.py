@@ -988,3 +988,61 @@ def test_post_commit_maintenance_failure_does_not_fail_transact(
         for r in backend.facts_df().filter("a = 'n'").collect()
     }
     assert {41, 42} <= vals
+
+
+@pytest.mark.parametrize("writer", ["append", "bulk_append_df", "checkpoint"])
+def test_writer_that_gives_up_reclaims_its_files(spark, tmp_path, writer):
+    """A writer whose CAS retries run out raises CommitConflict and
+    deletes the data files it wrote (no manifest names them), like
+    commit_rows after a lost race — giving up leaves no orphans."""
+    from unifydb_spark.values import FACT_SCHEMA
+
+    backend = LogParquetBackend(spark, str(tmp_path / "facts"))
+    row = (1, "n", "long", 1, None, None, None, None, None, None, 1, True)
+    backend.append([row])
+    before = set(os.listdir(backend.data_dir))
+    backend._try_commit = lambda manifest, version: False  # always lose
+    give_up = {
+        "append": lambda: backend.append([row], max_retries=3),
+        "bulk_append_df": lambda: backend.bulk_append_df(
+            spark.createDataFrame([row], schema=FACT_SCHEMA), max_retries=3
+        ),
+        "checkpoint": lambda: backend.checkpoint(max_retries=3),
+    }[writer]
+    with pytest.raises(CommitConflict):
+        give_up()
+    assert set(os.listdir(backend.data_dir)) == before
+    assert backend.log_version() == 1
+
+
+@pytest.mark.parametrize("reader", ["_head", "_live_entries", "history", "vacuum"])
+def test_manifest_scans_relist_when_a_manifest_vanishes(tmp_path, reader):
+    """A listed manifest unlinked before it is parsed (a concurrent
+    checkpoint + aggressive vacuum) makes every scanner re-list: one
+    vanish is recovered with the same answer, and sustained vanishing
+    surfaces as CommitConflict, never a raw FileNotFoundError."""
+    backend = LogParquetBackend(None, str(tmp_path / "facts"))
+    for i in (1, 2):
+        backend.append(
+            [(i, "n", "long", i, None, None, None, None, None, None, i, True)]
+        )
+    scan = getattr(backend, reader)
+    expected = scan()
+    real = backend._read_manifest
+
+    def vanish_once(v):
+        if not getattr(vanish_once, "hit", False):
+            vanish_once.hit = True
+            raise FileNotFoundError(backend._manifest_path(v))
+        return real(v)
+
+    backend._read_manifest = vanish_once
+    assert scan() == expected
+    assert vanish_once.hit
+
+    def vanish_always(v):
+        raise FileNotFoundError(backend._manifest_path(v))
+
+    backend._read_manifest = vanish_always
+    with pytest.raises(CommitConflict, match="kept vanishing"):
+        scan()

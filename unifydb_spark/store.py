@@ -556,8 +556,9 @@ class FactStore:
         self._schema_cache.clear()
         # backend-configured maintenance policy (txlog maintain_every):
         # cheap no-op check when idle, checkpoint+vacuum when due.
-        # Best-effort: checkpoint can lose its CAS race (CommitConflict)
-        # and vacuum can race a concurrent truncation (FileNotFoundError)
+        # Best-effort: checkpoint can lose its CAS race and vacuum's
+        # manifest scan can keep losing to a concurrent truncation (both
+        # CommitConflict), and either can hit an I/O error (OSError)
         # — maintenance failure is a deferral, not a transaction failure.
         if hasattr(self.backend, "maybe_maintain"):
             from unifydb_spark.txlog import CommitConflict

@@ -58,7 +58,7 @@ processes are plain Python; only the verifying reader needs a JVM).
 
 Time travel: ``facts_df(as_of_version=N)`` reads the manifests ``<= N``
 — log-versioned history, orthogonal to the fact-level ``tx <= T``
-as-of filter the snapshot view applies (store.py:366).
+as-of filter the snapshot view applies (``FactStore.snapshot``).
 
 Durability scope: manifests are fsynced before publish and the log
 directory is fsynced after (a visible manifest survives power loss);
@@ -107,18 +107,10 @@ class CommitConflict(Exception):
     """Another writer committed the version this writer was basing on."""
 
 
-def _fsync_dir(path: str) -> None:
-    """fsync a directory so a just-created/renamed entry survives power
-    loss (the entry itself being durable is not enough on POSIX — the
-    directory block that names it must also reach disk)."""
-    fd = os.open(path, os.O_RDONLY)
-    try:
-        os.fsync(fd)
-    finally:
-        os.close(fd)
-
-
-def _fsync_file(path: str) -> None:
+def _fsync(path: str) -> None:
+    """fsync a file, or a directory so a just-created/renamed entry
+    survives power loss (the entry itself being durable is not enough on
+    POSIX — the directory block that names it must also reach disk)."""
     fd = os.open(path, os.O_RDONLY)
     try:
         os.fsync(fd)
@@ -162,7 +154,7 @@ class PosixLinkProtocol(CommitProtocol):
             os.close(fd)
         try:
             os.link(tmp, path)
-            _fsync_dir(d)
+            _fsync(d)
             return True
         except FileExistsError:
             return False
@@ -222,7 +214,7 @@ class ConditionalPutProtocol(CommitProtocol):
             finally:
                 os.close(fd)
             os.rename(tmp, path)  # whole-object visibility
-            _fsync_dir(d)
+            _fsync(d)
             return True
         finally:
             os.close(lock_fd)  # releases the flock
@@ -245,6 +237,11 @@ class LogParquetBackend:
       ``stream_facts_to_txlog``);
     - :meth:`checkpoint` / :meth:`restore` / :meth:`vacuum` — log
       compaction, head rollback-as-a-commit, orphan GC.
+
+    All writers but :meth:`commit_rows` (one CAS at the caller's base
+    version; ``FactStore.transact`` retries it) share one
+    optimistic-commit loop, :meth:`_commit`, and all manifest scans
+    share one re-list-on-vanish reader, :meth:`_reread`.
 
     `protocol` selects the atomic publish primitive (default POSIX link;
     pass :class:`ConditionalPutProtocol` for object-store semantics).
@@ -336,27 +333,29 @@ class LogParquetBackend:
             pass
         return 0
 
-    def _head(self) -> Optional[dict]:
-        # a manifest listed as head can vanish if a concurrent
-        # checkpoint + aggressive vacuum land between the listing and
-        # the read — by then a NEWER head exists, so re-list and retry
-        for _ in range(5):
-            v = self.log_version()
-            if not v:
-                return None
+    def _reread(self, read, what: str):
+        """Run `read` (a log listing, then parses of listed manifests),
+        re-listing when a listed manifest vanished: a concurrent
+        checkpoint + aggressive vacuum can truncate it between the listing
+        and the parse, and by then a NEWER log state exists. Sustained
+        churn surfaces the protocol-level error, never a raw OSError
+        (callers retry CommitConflict)."""
+        for _ in range(6):
             try:
-                return self._read_manifest(v)
+                return read()
             except FileNotFoundError:
                 continue
-        # sustained checkpoint+truncation churn: surface the protocol-level
-        # error, never a raw OSError (callers retry CommitConflict)
-        try:
-            return self._read_manifest(self.log_version())
-        except FileNotFoundError:
-            raise CommitConflict(
-                "head manifest kept vanishing under concurrent "
-                "checkpoint + log truncation"
-            ) from None
+        raise CommitConflict(
+            f"{what}: listed manifests kept vanishing under concurrent "
+            "checkpoint + log truncation"
+        )
+
+    def _head_at(self) -> tuple[int, Optional[dict]]:
+        v = self.log_version()
+        return v, (self._read_manifest(v) if v else None)
+
+    def _head(self) -> Optional[dict]:
+        return self._reread(self._head_at, "head")[1]
 
     def _try_commit(self, manifest: dict, version: int) -> bool:
         """Atomically publish `manifest` as log version `version` via the
@@ -364,6 +363,45 @@ class LogParquetBackend:
         version — the CAS at the heart of the protocol."""
         data = json.dumps(manifest, separators=(",", ":")).encode()
         return self.protocol.put_if_absent(self._manifest_path(version), data)
+
+    def _commit(
+        self, build, max_retries: int, what: str, written: Iterable[dict] = ()
+    ) -> Optional[int]:
+        """The optimistic-commit loop every writer but :meth:`commit_rows`
+        shares: read the head, `build(head_v, head)` the next manifest,
+        CAS it at head_v+1, and on a lost CAS re-read and re-build. A
+        FileNotFoundError while reading or building means a concurrent
+        checkpoint + aggressive vacuum truncated what was listed — a newer
+        head exists, so re-list. Returns the committed version, or None
+        when `build` returns None (the commit is moot: a replayed stream
+        epoch, or a rewrite superseded by a concurrent replaces_all).
+
+        `written` are this writer's own data files, named by no manifest
+        but the one being built: they are reclaimed when the commit is
+        moot or the retries run out (CommitConflict), so a writer that
+        gives up leaves no orphans for vacuum."""
+        for _ in range(max_retries):
+            try:
+                head_v, head = self._head_at()
+                manifest = build(head_v, head)
+            except FileNotFoundError:
+                continue
+            if manifest is None:
+                self._reclaim(written)
+                return None
+            if self._try_commit(manifest, head_v + 1):
+                return head_v + 1
+        self._reclaim(written)
+        raise CommitConflict(f"{what} lost the commit race {max_retries} times")
+
+    def _reclaim(self, files: Iterable[dict]) -> None:
+        """Unlink data files this writer wrote but never committed: they
+        are private to it and provably unreferenced."""
+        for f in files:
+            try:
+                os.unlink(os.path.join(self.data_dir, f["name"]))
+            except OSError:
+                pass
 
     def _build_manifest(
         self,
@@ -440,8 +478,8 @@ class LogParquetBackend:
         # the file itself must be durable FIRST or power loss can leave a
         # visible manifest naming a vanished file (same ordering rule as
         # _publish_staged applies to Spark-written files)
-        _fsync_file(full)
-        _fsync_dir(self.data_dir)
+        _fsync(full)
+        _fsync(self.data_dir)
         return {"name": name, "rows": len(rows)}
 
     def _publish_staged(self, staging: str) -> list[dict]:
@@ -454,10 +492,10 @@ class LogParquetBackend:
                 final = f"{uuid.uuid4().hex}.parquet"
                 dst = os.path.join(self.data_dir, final)
                 os.rename(os.path.join(staging, name), dst)
-                _fsync_file(dst)
+                _fsync(dst)
                 files.append({"name": final, "rows": None})
         if files:
-            _fsync_dir(self.data_dir)
+            _fsync(self.data_dir)
         for name in os.listdir(staging):
             os.unlink(os.path.join(staging, name))
         os.rmdir(staging)
@@ -475,28 +513,21 @@ class LogParquetBackend:
         contention)."""
         rows = list(rows)
         f = self._write_data_file(rows)
-        parent = None
-        if based_on_version:
-            try:
-                parent = self._read_manifest(based_on_version)
-            except FileNotFoundError:
-                # the base was truncated by a concurrent checkpoint +
-                # aggressive vacuum — a newer head exists, so this CAS
-                # is lost by definition; report it as a clean loss
-                try:
-                    os.unlink(os.path.join(self.data_dir, f["name"]))
-                except OSError:
-                    pass
-                return False
-        manifest = self._build_manifest(parent, [f], self._rows_stats(rows))
-        if self._try_commit(manifest, based_on_version + 1):
-            return True
-        # lost the race — reclaim the private data file before the retry
         try:
-            os.unlink(os.path.join(self.data_dir, f["name"]))
-        except OSError:
-            pass
-        return False
+            parent = (
+                self._read_manifest(based_on_version) if based_on_version else None
+            )
+        except FileNotFoundError:
+            # the base was truncated by a concurrent checkpoint +
+            # aggressive vacuum — a newer head exists, so this CAS is
+            # lost by definition; report it as a clean loss
+            won = False
+        else:
+            manifest = self._build_manifest(parent, [f], self._rows_stats(rows))
+            won = self._try_commit(manifest, based_on_version + 1)
+        if not won:
+            self._reclaim([f])
+        return won
 
     def append(self, rows: Iterable[tuple], max_retries: int = 64) -> None:
         """Raw append (seed path): the rows' ids are the caller's problem,
@@ -504,15 +535,12 @@ class LogParquetBackend:
         rows = list(rows)
         f = self._write_data_file(rows)
         stats = self._rows_stats(rows)
-        for _ in range(max_retries):
-            head_v = self.log_version()
-            try:
-                parent = self._read_manifest(head_v) if head_v else None
-            except FileNotFoundError:
-                continue  # head truncated under us — re-list and retry
-            if self._try_commit(self._build_manifest(parent, [f], stats), head_v + 1):
-                return
-        raise CommitConflict(f"append lost the commit race {max_retries} times")
+        self._commit(
+            lambda head_v, head: self._build_manifest(head, [f], stats),
+            max_retries,
+            "append",
+            [f],
+        )
 
     def bulk_append_df(
         self,
@@ -550,11 +578,16 @@ class LogParquetBackend:
                 f"bulk_append_df: frame schema {got} does not match "
                 f"FACT_SCHEMA {expected}"
             )
-        if stream_epoch is not None:
+
+        def replayed(head: Optional[dict]) -> bool:
+            # this (stream, epoch) is already committed
+            if stream_epoch is None or not head:
+                return False
             sid, epoch = stream_epoch
-            head = self._head()
-            if head and head.get("streams", {}).get(sid, -1) >= int(epoch):
-                return False  # replayed micro-batch: already committed
+            return head.get("streams", {}).get(sid, -1) >= int(epoch)
+
+        if stream_epoch is not None and replayed(self._head()):
+            return False  # replayed micro-batch
         staging = os.path.join(self.data_dir, f".stage.{uuid.uuid4().hex}")
         # the manifest stats ride the WRITE job via the Observation API —
         # no second scan of the staged data (measured: the re-read tripled
@@ -595,76 +628,49 @@ class LogParquetBackend:
             "txs": sorted(txs)[:2],
             "n": int(agg["n"]),
         }
-        for _ in range(max_retries):
-            head_v = self.log_version()
-            try:
-                parent = self._read_manifest(head_v) if head_v else None
-            except FileNotFoundError:
-                continue  # head truncated under us — re-list and retry
-            if stream_epoch is not None and parent:
-                sid, epoch = stream_epoch
-                if parent.get("streams", {}).get(sid, -1) >= int(epoch):
-                    # another attempt of the SAME epoch won the race
-                    for fobj in files:
-                        try:
-                            os.unlink(os.path.join(self.data_dir, fobj["name"]))
-                        except OSError:
-                            pass
-                    return False
-            m = self._build_manifest(parent, files, stats, stream_epoch)
-            if self._try_commit(m, head_v + 1):
-                return True
-        raise CommitConflict(f"bulk append lost the commit race {max_retries} times")
+
+        def build(head_v: int, head: Optional[dict]) -> Optional[dict]:
+            if replayed(head):
+                return None  # another attempt of the SAME epoch won the race
+            return self._build_manifest(head, files, stats, stream_epoch)
+
+        return self._commit(build, max_retries, "bulk append", files) is not None
 
     # ---- reads ------------------------------------------------------------
 
     def _live_entries(self, as_of_version: Optional[int] = None) -> list[dict]:
         """The live manifest file ENTRIES (name/rows dicts) at a log
         version — the shared resolution behind facts_df and restore.
-        A listed manifest can vanish mid-scan if a concurrent
-        checkpoint + aggressive vacuum truncate the log — re-list and
-        retry (bounded), exactly like the writer loops do."""
-        for _ in range(5):
-            try:
-                return self._live_entries_once(as_of_version)
-            except FileNotFoundError:
-                continue
-        try:
-            return self._live_entries_once(as_of_version)
-        except FileNotFoundError:
-            raise CommitConflict(
-                "manifest listing kept vanishing under concurrent "
-                "checkpoint + log truncation"
-            ) from None
+        A listed manifest can vanish mid-scan (see :meth:`_reread`)."""
 
-    def _live_entries_once(
-        self, as_of_version: Optional[int] = None
-    ) -> list[dict]:
-        versions = self._list_versions()
-        if as_of_version is not None:
-            if versions and 0 < as_of_version < versions[0] and versions[0] > 1:
-                raise ValueError(
-                    f"time travel to version {as_of_version}: the log was "
-                    f"truncated at version {versions[0]} (vacuum with "
-                    "retain_before_checkpoint=False forfeits older history)"
-                )
-            versions = [v for v in versions if v <= as_of_version]
-        # skip ahead to the newest known checkpoint — only manifests at or
-        # after it can contribute files (replaces_all), so the scan is
-        # O(commits since checkpoint), not O(all commits ever)
-        lc = self._read_last_checkpoint()
-        if lc and (as_of_version is None or lc <= as_of_version):
-            versions = [v for v in versions if v >= lc]
-        entries: list[dict] = []
-        start = 0
-        manifests = [self._read_manifest(v) for v in versions]
-        # a checkpoint manifest replaces everything before it
-        for i, m in enumerate(manifests):
-            if m.get("replaces_all"):
-                start = i
-        for m in manifests[start:]:
-            entries.extend(m["files"])
-        return entries
+        def scan() -> list[dict]:
+            versions = self._list_versions()
+            if as_of_version is not None:
+                if versions and 0 < as_of_version < versions[0] and versions[0] > 1:
+                    raise ValueError(
+                        f"time travel to version {as_of_version}: the log was "
+                        f"truncated at version {versions[0]} (vacuum with "
+                        "retain_before_checkpoint=False forfeits older history)"
+                    )
+                versions = [v for v in versions if v <= as_of_version]
+            # skip ahead to the newest known checkpoint — only manifests at or
+            # after it can contribute files (replaces_all), so the scan is
+            # O(commits since checkpoint), not O(all commits ever)
+            lc = self._read_last_checkpoint()
+            if lc and (as_of_version is None or lc <= as_of_version):
+                versions = [v for v in versions if v >= lc]
+            entries: list[dict] = []
+            start = 0
+            manifests = [self._read_manifest(v) for v in versions]
+            # a checkpoint manifest replaces everything before it
+            for i, m in enumerate(manifests):
+                if m.get("replaces_all"):
+                    start = i
+            for m in manifests[start:]:
+                entries.extend(m["files"])
+            return entries
+
+        return self._reread(scan, "manifest listing")
 
     def _live_files(self, as_of_version: Optional[int] = None) -> list[str]:
         return [
@@ -706,12 +712,15 @@ class LogParquetBackend:
         version number, operation kind (append / checkpoint / restore),
         writer identity, commit timestamp, file count and the
         cumulative stats. Reads only manifests — no Spark job."""
-        versions = self._list_versions()
-        if limit is not None:
-            versions = versions[-int(limit):]
+
+        def scan() -> list[tuple[int, dict]]:
+            versions = self._list_versions()
+            if limit is not None:
+                versions = versions[-int(limit):]
+            return [(v, self._read_manifest(v)) for v in reversed(versions)]
+
         out = []
-        for v in reversed(versions):
-            m = self._read_manifest(v)
+        for v, m in self._reread(scan, "history"):
             if m.get("restored_from") is not None:
                 op = "restore"
             elif m.get("replaces_all"):
@@ -789,29 +798,8 @@ class LogParquetBackend:
             staging = os.path.join(self.data_dir, f".stage.{uuid.uuid4().hex}")
             df.write.parquet(staging)
             ckpt_files = self._publish_staged(staging)
-            v = self._ckpt_commit(base_v, ckpt_files, max_retries)
-            if v is not None:
-                return v
-            # superseded by a concurrent replaces_all: our compacted
-            # prefix is stale — reclaim it and rewrite from the new head
-            for fobj in ckpt_files:
-                try:
-                    os.unlink(os.path.join(self.data_dir, fobj["name"]))
-                except OSError:
-                    pass
-        raise CommitConflict("checkpoint superseded repeatedly")
 
-    def _ckpt_commit(
-        self, base_v: int, ckpt_files: list[dict], max_retries: int
-    ) -> Optional[int]:
-        """CAS a checkpoint manifest for a rewrite of versions <= base_v,
-        folding concurrent APPEND manifests in. Returns the committed
-        version, or None if a concurrent replaces_all superseded the
-        rewrite (the caller must redo it from the new head)."""
-        for _ in range(max_retries):
-            head_v = self.log_version()
-            try:
-                head = self._read_manifest(head_v)
+            def build(head_v: int, head: dict) -> Optional[dict]:
                 # re-base: concurrent commits in (base_v, head_v] stay live
                 # by carrying their file lists after the compacted prefix
                 extra_files: list[dict] = []
@@ -820,24 +808,27 @@ class LogParquetBackend:
                     if m.get("replaces_all"):
                         return None  # superseded — folding would corrupt
                     extra_files.extend(m["files"])
-            except FileNotFoundError:
-                continue  # a concurrent truncation landed — re-list
-            manifest = dict(
-                head,  # cumulative stats of everything being replaced
-                files=ckpt_files + extra_files,
-                rows=None,  # a rewrite ADDS no rows; never inherit head's
-                replaces_all=True,
-                writer=self._writer,
-                ts_millis=int(time.time() * 1000),
-            )
-            manifest.pop("restored_from", None)  # stats adopted, op is ours
-            if self._try_commit(manifest, head_v + 1):
+                manifest = dict(
+                    head,  # cumulative stats of everything being replaced
+                    files=ckpt_files + extra_files,
+                    rows=None,  # a rewrite ADDS no rows; never inherit head's
+                    replaces_all=True,
+                    writer=self._writer,
+                    ts_millis=int(time.time() * 1000),
+                )
+                manifest.pop("restored_from", None)  # stats adopted, op is ours
+                return manifest
+
+            v = self._commit(build, max_retries, "checkpoint", ckpt_files)
+            if v is not None:
                 # advisory read-optimization pointer (Delta _last_checkpoint
                 # shape); racing checkpoints leave it at SOME valid
                 # checkpoint, which readers validate anyway
-                self._write_last_checkpoint(head_v + 1)
-                return head_v + 1
-        raise CommitConflict("checkpoint lost the commit race")
+                self._write_last_checkpoint(v)
+                return v
+            # superseded by a concurrent replaces_all: the moot commit
+            # reclaimed our stale compacted prefix — rewrite from the new head
+        raise CommitConflict("checkpoint superseded repeatedly")
 
     def restore(self, version: int, max_retries: int = 16) -> int:
         """Roll the store's HEAD back to log version `version` by
@@ -875,31 +866,49 @@ class LogParquetBackend:
         False, retention_seconds=0); the default 1h retention window
         makes the race practically unreachable."""
         try:
-            target = self._read_manifest(version)
-            files = self._live_entries(as_of_version=version)
+            files, build = self._restore_build(version)
         except FileNotFoundError:
             raise ValueError(
                 f"restore to version {version}: its manifests were "
                 "truncated by an aggressive vacuum"
             ) from None
-        missing = [
-            f["name"]
-            for f in files
-            if not os.path.exists(os.path.join(self.data_dir, f["name"]))
-        ]
+        missing = self._missing(files)
         if missing:
             raise ValueError(
                 f"restore to version {version}: {len(missing)} of its "
                 f"data files were reclaimed by vacuum (e.g. {missing[0]}) "
                 "— that history is gone"
             )
-        for _ in range(max_retries):
-            head_v = self.log_version()
-            try:
-                head = self._read_manifest(head_v)
-            except FileNotFoundError:
-                continue  # head truncated under us — re-list and retry
-            manifest = dict(
+        v = self._commit(build, max_retries, "restore")
+        lost = self._missing(files)
+        if lost:
+            rolled = self._roll_forward(v - 1)
+            outcome = (
+                "the head was rolled forward to the pre-restore state"
+                if rolled
+                else "roll-forward FAILED (CAS exhausted or pre-restore "
+                "history gone) — the head still references reclaimed "
+                "files; verify the head and restore manually"
+            )
+            raise ValueError(
+                f"restore to version {version}: {len(lost)} of its data "
+                f"files were reclaimed by a concurrent vacuum mid-restore "
+                f"(e.g. {lost[0]}); {outcome}"
+            )
+        self._write_last_checkpoint(v)
+        return v
+
+    def _restore_build(self, version: int):
+        """(live entries of log version `version`, the `_commit` build
+        callback whose manifest makes exactly them the head) — shared by
+        restore and its roll-forward. Raises FileNotFoundError,
+        ValueError or CommitConflict when that version's history is
+        gone."""
+        target = self._read_manifest(version)
+        files = self._live_entries(as_of_version=version)
+
+        def build(head_v: int, head: dict) -> dict:
+            return dict(
                 head,
                 files=files,
                 rows=None,
@@ -910,35 +919,17 @@ class LogParquetBackend:
                 writer=self._writer,
                 ts_millis=int(time.time() * 1000),
             )
-            if self._try_commit(manifest, head_v + 1):
-                lost = [
-                    f["name"]
-                    for f in files
-                    if not os.path.exists(
-                        os.path.join(self.data_dir, f["name"])
-                    )
-                ]
-                if lost:
-                    rolled = self._roll_forward(head_v, head_v + 1)
-                    outcome = (
-                        "the head was rolled forward to the pre-restore "
-                        "state"
-                        if rolled
-                        else "roll-forward FAILED (CAS exhausted or "
-                        "pre-restore history gone) — the head still "
-                        "references reclaimed files; verify the head "
-                        "and restore manually"
-                    )
-                    raise ValueError(
-                        f"restore to version {version}: {len(lost)} of "
-                        f"its data files were reclaimed by a concurrent "
-                        f"vacuum mid-restore (e.g. {lost[0]}); {outcome}"
-                    )
-                self._write_last_checkpoint(head_v + 1)
-                return head_v + 1
-        raise CommitConflict("restore lost the commit race")
 
-    def _roll_forward(self, to_version: int, broken_v: int) -> bool:
+        return files, build
+
+    def _missing(self, files: list[dict]) -> list[str]:
+        return [
+            f["name"]
+            for f in files
+            if not os.path.exists(os.path.join(self.data_dir, f["name"]))
+        ]
+
+    def _roll_forward(self, to_version: int) -> bool:
         """Re-publish log version `to_version`'s live state as a new
         replaces_all commit — the recovery path when a just-committed
         restore turned out to reference vacuumed files. Best-effort
@@ -948,31 +939,12 @@ class LogParquetBackend:
         error message can state the head's real condition instead of
         claiming health after an exhausted CAS or vanished history."""
         try:
-            target = self._read_manifest(to_version)
-            files = self._live_entries(as_of_version=to_version)
+            _, build = self._restore_build(to_version)
+            v = self._commit(build, 16, "roll-forward")
         except (FileNotFoundError, ValueError, CommitConflict):
-            return False  # pre-restore history is gone; nothing to publish
-        for _ in range(16):
-            head_v = self.log_version()
-            try:
-                head = self._read_manifest(head_v)
-            except FileNotFoundError:
-                continue
-            manifest = dict(
-                head,
-                files=files,
-                rows=None,
-                replaces_all=True,
-                any_retraction=target["any_retraction"],
-                tx_state=target["tx_state"],
-                restored_from=to_version,
-                writer=self._writer,
-                ts_millis=int(time.time() * 1000),
-            )
-            if self._try_commit(manifest, head_v + 1):
-                self._write_last_checkpoint(head_v + 1)
-                return True
-        return False
+            return False
+        self._write_last_checkpoint(v)
+        return True
 
     def maintain(
         self,
@@ -1059,8 +1031,12 @@ class LogParquetBackend:
         ever) — this is the log-retention half of Delta's
         VACUUM/logRetentionDuration split. Time travel below the
         truncation point then raises (facts_df checks)."""
-        versions = self._list_versions()
-        manifests = [self._read_manifest(v) for v in versions]
+
+        def scan() -> tuple[list[int], list[dict]]:
+            versions = self._list_versions()
+            return versions, [self._read_manifest(v) for v in versions]
+
+        versions, manifests = self._reread(scan, "vacuum")
         ckpt_i = 0
         for i, m in enumerate(manifests):
             if m.get("replaces_all"):
