@@ -386,12 +386,12 @@ def test_manifest_stats_track_clean_flag(spark, tmp_path):
 
 
 def test_last_checkpoint_pointer_bounds_manifest_reads(spark, tmp_path):
-    """The _last_checkpoint pointer (Delta-shaped read optimization):
-    after a checkpoint, a head read parses only the manifests at/after
+    """After a checkpoint, a head read parses only the manifests at/after
     the checkpoint version — O(commits since checkpoint), not O(all
-    commits ever) — while pre-checkpoint time travel still full-scans
-    correctly, and a corrupt pointer degrades to a full scan, never a
-    wrong answer."""
+    commits ever) — while pre-checkpoint time travel reads the versions
+    below it correctly. Reads scan newest-first to the checkpoint, so a
+    corrupt _last_checkpoint pointer (maintenance scheduling only) changes
+    neither the answer nor the bound."""
     from unifydb_spark.values import FACT_SCHEMA
 
     path = str(tmp_path / "facts")
@@ -416,19 +416,21 @@ def test_last_checkpoint_pointer_bounds_manifest_reads(spark, tmp_path):
 
     backend._read_manifest = counting
     assert backend.facts_df().count() == 7
-    # pointer validation (ckpt_v) + live scan from ckpt_v onward only
+    # live scan from ckpt_v onward only
     assert min(reads) >= ckpt_v
     reads.clear()
-    # pre-checkpoint time travel ignores the pointer and full-scans
+    # pre-checkpoint time travel reads the versions below the checkpoint
     assert backend.facts_df(as_of_version=3).count() == 3
     assert min(reads) < ckpt_v
-    backend._read_manifest = real
+    reads.clear()
 
-    # corrupt pointer: degraded to a full scan, same answer
+    # corrupt pointer: same answer, same bound
     with open(backend._lc_path, "w") as f:
         f.write("not json")
     assert backend._read_last_checkpoint() == 0
     assert backend.facts_df().count() == 7
+    assert min(reads) >= ckpt_v
+    backend._read_manifest = real
 
 
 def test_vacuum_truncates_log_after_checkpoint(spark, tmp_path):
@@ -1046,3 +1048,50 @@ def test_manifest_scans_relist_when_a_manifest_vanishes(tmp_path, reader):
     backend._read_manifest = vanish_always
     with pytest.raises(CommitConflict, match="kept vanishing"):
         scan()
+
+
+def test_query_reads_one_log_version_while_a_writer_commits(spark, tmp_path):
+    """A commit that lands between two pattern scans of one query must
+    not be half-visible: the query's answer comes from one log version.
+    The interposed `facts_df` commits right after the query's first fact
+    scan has resolved its files; the commit swaps Alice for Bob, so a
+    join of the name scan at one version with the age scan at the next
+    finds nobody."""
+    store = FactStore(spark, LogParquetBackend(spark, str(tmp_path / "facts")))
+    eng = Engine(spark, store)
+    eng.transact([["add", "c", ":city", "Oslo"]])  # two txs: not `clean`
+    a = eng.transact([["add", "a", ":name", "Alice"], ["add", "a", ":age", 30]])[
+        "tempids"
+    ]["a"]
+    q = {
+        "find": ["?n", "?age"],
+        "where": [["?p", ":name", "?n"], ["?p", ":age", "?age"]],
+    }
+    backend = store.backend
+    before = backend.log_version()
+    scan = backend.facts_df
+    commits = []
+
+    def facts_df(*args, **kwargs):
+        df = scan(*args, **kwargs)
+        if not commits:
+            commits.append(
+                eng.transact(
+                    [
+                        ["retract", a, ":name", "Alice"],
+                        ["retract", a, ":age", 30],
+                        ["add", "b", ":name", "Bob"],
+                        ["add", "b", ":age", 40],
+                    ]
+                )
+            )
+        return df
+
+    backend.facts_df = facts_df
+    try:
+        rows = eng.query_rows(q)
+    finally:
+        del backend.facts_df
+    assert commits and backend.log_version() == before + 1
+    assert rows == [("Alice", 30)]
+    assert eng.query_rows(q) == [("Bob", 40)]

@@ -74,7 +74,8 @@ class Engine:
     # -- read path (V1) -----------------------------------------------------
 
     def compile(self, q: dict, db: Optional[Db] = None):
-        db = db if db is not None else self.store.db()
+        # one log version for every read of this query (Db.pinned)
+        db = (db if db is not None else self.store.db()).pinned()
         parsed = parse_query(q)
         env = RulesEnv(parsed.rules, self.max_rule_iterations)
         rel = compile_where(db, parsed.where, env)

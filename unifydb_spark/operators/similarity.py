@@ -1812,7 +1812,9 @@ def _adc_scored(
     ranking's dot aggregate (same decimal fold over the same rows), so
     callers that already ranked probes pass them in instead of paying a
     second qex×cex aggregate in the executed plan; None keeps the
-    self-computed fold (bit-identical by construction)."""
+    self-computed fold (bit-identical by construction). Only a supplied
+    `qc` is broadcast: it is probe-sized, while the self-computed fold
+    has n_queries × n_centroids rows."""
     # candidate-FIRST join order: restrict the corpus-sized codes to the
     # probed candidates before attaching the codebook values. The former
     # shape (codes x codebook first, candidates second) reconstructed
@@ -1852,7 +1854,9 @@ def _adc_scored(
                 .alias("qcdot")
             )
         )
-    return rdot.join(F.broadcast(qc), ["query_id", "centroid_id"]).select(
+    else:
+        qc = F.broadcast(qc)
+    return rdot.join(qc, ["query_id", "centroid_id"]).select(
         "query_id", "nid", (F.col("qcdot") + F.col("rdot")).alias("score")
     )
 

@@ -13,7 +13,10 @@ Reference parity map (see SURVEY.md §1, §2.3, §2.4):
    `Db.visible_facts()` is the reference's post-scan visibility filter +
    retraction collapse + cardinality resolution
    (src/unifydb/storage.clj:46, src/unifydb/query.clj:132-204) expressed as
-   window functions, computed once per pattern instead of per probed frame;
+   window functions (`_collapse`). On a commit-log store a `Db` pins one
+   log version per query, and the collapsed snapshot is built once per
+   (version, tx) and shared by every pattern and query that reads it;
+   other backends run the windows inline, once per pattern;
  - the transactor (src/unifydb/transact.clj:98-137) is `FactStore.transact`:
    map-form expansion, tempid allocation, tx metadata, transforms/filters,
    single atomic append.
@@ -28,14 +31,21 @@ from __future__ import annotations
 
 import datetime as _dt
 import itertools
+import threading
 import time
-from dataclasses import dataclass, field, replace
-from typing import Any, Callable, Iterable, Optional, Sequence, Union
+import weakref
+from collections import OrderedDict
+from concurrent.futures import Future
+from dataclasses import dataclass, replace
+from typing import TYPE_CHECKING, Any, Callable, Iterable, Optional, Sequence, Union
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from unifydb_spark.values import FACT_SCHEMA, Ref, V_COLS, encode_value
+
+if TYPE_CHECKING:
+    from unifydb_spark.txlog import Pin
 
 LATEST = "latest"
 
@@ -44,6 +54,12 @@ TX_INSTANT_ATTR = "unifydb/txInstant"
 SCHEMA_ATTR = "unifydb/schema"
 CARDINALITY_ATTR = "unifydb/cardinality"
 CARDINALITY_MANY = "cardinality/many"
+
+# Collapsed snapshots a commit-log store keeps materialized, per FactStore.
+SNAPSHOT_CACHE_SIZE = 4
+# Store versions whose schema rows and attr types a FactStore keeps.
+META_CACHE_SIZE = 8
+_SCHEMA_ROW = ("e", "a", "v_str", "tx", "added")
 
 
 def norm_attr(a: str) -> str:
@@ -168,11 +184,17 @@ class DataFrameBackend:
 @dataclass(frozen=True)
 class Db:
     """A database value: the facts visible as of `tx_id` (reference
-    src/unifydb/server.clj:23, src/unifydb/query.clj:216-229)."""
+    src/unifydb/server.clj:23, src/unifydb/query.clj:216-229).
+
+    `pin` fixes the log version of a commit-log store (txlog.Pin), so
+    every read through this value sees one version while writers
+    commit; `pinned()` takes the current head. Without a pin each read
+    resolves the head itself (backends without log versions never pin)."""
 
     store: "FactStore"
     tx_id: Union[int, str] = LATEST
     historical: bool = False
+    pin: Optional["Pin"] = None
 
     def as_of(self, tx_id: int) -> "Db":
         return replace(self, tx_id=tx_id)
@@ -180,14 +202,100 @@ class Db:
     def history(self) -> "Db":
         return replace(self, historical=True)
 
+    def pinned(self) -> "Db":
+        if self.pin is not None:
+            return self
+        pin = self.store.pin()
+        return self if pin is None else replace(self, pin=pin)
+
     def visible_facts(self, attr: Optional[str] = None) -> DataFrame:
-        return self.store.snapshot(self.tx_id, self.historical, attr=attr)
+        return self.store.snapshot(self.tx_id, self.historical, attr=attr, pin=self.pin)
 
     def cardinality_many_attrs(self) -> frozenset:
-        return self.store.cardinality_many_attrs(self.tx_id)
+        return self.store.cardinality_many_attrs(self.tx_id, pin=self.pin)
 
     def attr_types(self) -> dict[str, set]:
-        return self.store.attr_types()
+        return self.store.attr_types(pin=self.pin)
+
+
+class _BuildOnce:
+    """A small LRU of values built once per key: concurrent misses on a
+    key wait for its one build (a failed build is not kept), and a value
+    evicted past `size` entries is handed to `release`."""
+
+    def __init__(self, size: int, release: Callable[[Any], Any] = lambda v: None):
+        self._size = size
+        self._release = release
+        self._lock = threading.Lock()
+        self._slots: "OrderedDict[Any, Future]" = OrderedDict()
+
+    def get(self, key, build: Callable[[], Any]) -> Any:
+        with self._lock:
+            slot = self._slots.get(key)
+            owner = slot is None
+            if owner:
+                slot = self._slots[key] = Future()
+            self._slots.move_to_end(key)
+        if owner:
+            try:
+                slot.set_result(build())
+            except BaseException as exc:
+                with self._lock:
+                    if self._slots.get(key) is slot:
+                        del self._slots[key]
+                slot.set_exception(exc)
+                raise
+            self._drop(len(self._slots) - self._size)
+        return slot.result()
+
+    def __len__(self) -> int:
+        return len(self._slots)
+
+    def clear(self) -> None:
+        self._drop(len(self._slots))
+
+    def _drop(self, n: int) -> None:
+        """Release the `n` least recently used built values (builds in
+        flight stay)."""
+        with self._lock:
+            done = [k for k, f in self._slots.items() if f.done()][: max(n, 0)]
+            gone = [self._slots.pop(k).result() for k in done]
+        for v in gone:
+            self._release(v)
+
+
+def _unpersist(df: DataFrame) -> None:
+    """Release a snapshot's blocks. A query still holding the frame
+    recomputes it from its lineage (the pinned log version's files)."""
+    try:
+        df.unpersist()
+    except Exception:  # the session is gone: nothing left to release
+        pass
+
+
+def _collapse(df: DataFrame, has_retractions: bool, many: frozenset) -> DataFrame:
+    """The visible values of a fact slice, as window functions: a value
+    is live iff its latest fact per (e, a, value) is an assert (a retract
+    outranks an assert in the same tx), and cardinality-one attributes
+    keep only the latest live value per (e, a). The only copy of both
+    windows: inline per pattern on backends without log versions, once
+    per cached (version, tx) snapshot on a commit-log store."""
+    if has_retractions:
+        w = Window.partitionBy("e", "a", *V_COLS).orderBy(
+            F.col("tx").desc(), F.col("added").asc()
+        )
+        df = (
+            df.withColumn("_rn", F.row_number().over(w))
+            .filter((F.col("_rn") == 1) & F.col("added"))
+            .drop("_rn")
+        )
+    w1 = Window.partitionBy("e", "a").orderBy(F.col("tx").desc())
+    keep_many = F.col("a").isin(*sorted(many)) if many else F.lit(False)
+    return (
+        df.withColumn("_rn1", F.row_number().over(w1))
+        .filter(keep_many | (F.col("_rn1") == 1))
+        .drop("_rn1")
+    )
 
 
 class FactStore:
@@ -204,8 +312,12 @@ class FactStore:
 
         self.transforms: list[Callable[[list], list]] = [new_user_transform]
         self.report_filters: list[Callable[[dict], dict]] = [filter_auth_facts]
-        self._schema_cache: dict = {}
-        self._attr_types_cache: Optional[tuple] = None
+        # per store version: schema rows and attr types (`_meta`); per
+        # (version, tx): the persisted collapsed snapshot, released on
+        # eviction and when this store is garbage-collected
+        self._metas = _BuildOnce(META_CACHE_SIZE)
+        self._snapshots = _BuildOnce(SNAPSHOT_CACHE_SIZE, _unpersist)
+        weakref.finalize(self, self._snapshots.clear).atexit = False
         # Relation-producing query functions (compile._apply_table_fn):
         # name -> callable(db, keys_df, *params) returning
         # (DataFrame(__tf_in, __tf_out), out_repr). Registered through
@@ -221,8 +333,6 @@ class FactStore:
         # log when the backend provides one (txlog.LogParquetBackend:
         # CAS-on-next-log-version with id re-allocation on conflict);
         # MemoryBackend and JdbcBackend remain single-process.
-        import threading
-
         self._tx_lock = threading.Lock()
 
     # ---- reads -----------------------------------------------------------
@@ -230,14 +340,25 @@ class FactStore:
     def db(self, tx_id: Union[int, str] = LATEST, historical: bool = False) -> Db:
         return Db(self, tx_id, historical)
 
-    def facts(self, attr: Optional[str] = None) -> DataFrame:
+    def pin(self) -> Optional["Pin"]:
+        """The backend's current log version (txlog.Pin), or None when it
+        has no immutable versions to pin."""
+        pin = getattr(self.backend, "pin", None)
+        return pin() if pin is not None else None
+
+    def facts(
+        self, attr: Optional[str] = None, pin: Optional["Pin"] = None
+    ) -> DataFrame:
         """Raw fact tuples, optionally narrowed to one attribute (the
         reference's index selection, src/unifydb/storage.clj:31-46 — here
         either a backend-provided single-attribute projection or a
-        pushed-down filter)."""
+        pushed-down filter); `pin` reads that log version."""
         if attr is not None and hasattr(self.backend, "facts_for_attr"):
             return self.backend.facts_for_attr(attr)
-        df = self.backend.facts_df()
+        if pin is None:
+            df = self.backend.facts_df()
+        else:
+            df = self.backend.facts_df(as_of_version=pin.version)
         if attr is not None:
             df = df.filter(F.col("a") == attr)
         return df
@@ -247,10 +368,18 @@ class FactStore:
         tx_id: Union[int, str] = LATEST,
         historical: bool = False,
         attr: Optional[str] = None,
+        pin: Optional["Pin"] = None,
     ) -> DataFrame:
         """The visible-facts view: tx visibility filter + retraction collapse
         + cardinality resolution (reference src/unifydb/query.clj:132-204 and
-        src/unifydb/storage.clj:43-46), as window functions.
+        src/unifydb/storage.clj:43-46), as window functions (`_collapse`).
+
+        A commit-log store is read at one log version (`pin`, else its
+        head now). A non-clean, non-historical read there filters the
+        collapsed snapshot of (version, tx) to `attr`: the snapshot is
+        built once, persisted on the executors and kept in a small LRU,
+        and every tx at or past the version's newest tx shares the
+        LATEST one. Other backends run the windows inline on the slice.
 
         Semantics notes vs the reference:
          - a value is live iff the most recent fact for (e,a,value) is an
@@ -263,33 +392,38 @@ class FactStore:
            when two live values coexist without retraction — an artifact its
            tests never exercise (documented divergence).
         """
-        df = self.facts(attr=attr)
+        pin = pin if pin is not None else self.pin()
+        src = pin if pin is not None else self.backend
+        if pin is not None and not (src.clean or historical):
+            if tx_id != LATEST and int(tx_id) < pin.latest_tx:
+                tx_id = int(tx_id)
+            else:
+                tx_id = LATEST
+            df = self._snapshots.get(
+                (pin.version, tx_id), lambda: self._build_snapshot(tx_id, pin)
+            )
+            return df if attr is None else df.filter(F.col("a") == attr)
+        df = self.facts(attr=attr, pin=pin)
         if tx_id != LATEST:
             df = df.filter(F.col("tx") <= F.lit(int(tx_id)))
-        if historical:
+        if historical or src.clean:
             return df
-        if not self.backend.clean:
-            if self.backend.has_retractions:
-                w = Window.partitionBy("e", "a", *V_COLS).orderBy(
-                    F.col("tx").desc(), F.col("added").asc()
-                )
-                df = (
-                    df.withColumn("_rn", F.row_number().over(w))
-                    .filter((F.col("_rn") == 1) & F.col("added"))
-                    .drop("_rn")
-                )
-            # cardinality-one: keep only the latest live assertion per (e, a)
-            many = self.cardinality_many_attrs(tx_id)
-            w1 = Window.partitionBy("e", "a").orderBy(F.col("tx").desc())
-            keep_many = (
-                F.col("a").isin(*sorted(many)) if many else F.lit(False)
-            )
-            df = (
-                df.withColumn("_rn1", F.row_number().over(w1))
-                .filter(keep_many | (F.col("_rn1") == 1))
-                .drop("_rn1")
-            )
-        return df
+        return _collapse(df, src.has_retractions, self.cardinality_many_attrs(tx_id))
+
+    def _build_snapshot(self, tx_id: Union[int, str], pin: "Pin") -> DataFrame:
+        """The collapsed snapshot of log version `pin` as of `tx_id`,
+        persisted and materialized on the executors (never collected)."""
+        df = self.facts(pin=pin)
+        if tx_id != LATEST:
+            df = df.filter(F.col("tx") <= F.lit(int(tx_id)))
+        many = self.cardinality_many_attrs(tx_id, pin=pin)
+        # hash(e, a) satisfies both windows' clustering: one shuffle
+        snap = _collapse(df.repartition("e", "a"), pin.has_retractions, many)
+        snap = snap.persist()
+        # a JVM-side row count of the cached plan fills every cached
+        # partition without an aggregate (and its job) on top
+        snap._jdf.queryExecution().toRdd().count()
+        return snap
 
     def tx_as_of(self, instant: Union[int, _dt.datetime]) -> int:
         """The newest transaction whose txInstant <= instant (epoch millis
@@ -330,15 +464,9 @@ class FactStore:
 
         if os.path.exists(path):
             raise FileExistsError(f"materialize_snapshot: {path} already exists")
-        snap_tx = (
-            self.backend.latest_tx() if tx_id == LATEST else int(tx_id)
-        )
-        # stamp every surviving fact with the snapshot tx: the result is a
-        # single-tx assert-only log, so the `clean` fast path applies and
+        # a single-tx assert-only log: the `clean` fast path applies and
         # later reads never pay the dedup windows again
-        df = self.snapshot(tx_id).withColumn(
-            "tx", F.lit(snap_tx).cast("long")
-        ).withColumn("added", F.lit(True))
+        df = self._stamped_snapshot(tx_id)
         if partition_by_attr:
             df = df.sortWithinPartitions("a", "e")
         backend = LogParquetBackend(self.spark, path)
@@ -364,12 +492,7 @@ class FactStore:
         provide within one job — the parquet analog of the reference's
         EAVT clustering (src/unifydb/storage.clj:23-27), except the
         cluster key survives restarts and is shared by every reader."""
-        snap_tx = (
-            self.backend.latest_tx() if tx_id == LATEST else int(tx_id)
-        )
-        df = self.snapshot(tx_id).withColumn(
-            "tx", F.lit(snap_tx).cast("long")
-        ).withColumn("added", F.lit(True))
+        df = self._stamped_snapshot(tx_id)
         (
             df.write.mode("errorifexists")
             .format("parquet")
@@ -382,21 +505,37 @@ class FactStore:
         )
         return FactStore(self.spark, backend=backend)
 
-    def cardinality_many_attrs(self, tx_id: Union[int, str] = LATEST) -> frozenset:
-        """Attributes declared :cardinality/many via schema facts (reference
-        src/unifydb/schema.clj:5-15). Cached per (backend version, tx) —
-        fixing the reference's re-query-per-pattern TODO (schema.clj:17)."""
-        key = (getattr(self.backend, "_version", 0), tx_id)
-        if key in self._schema_cache:
-            return self._schema_cache[key]
-        df = self.facts(SCHEMA_ATTR).unionByName(self.facts(CARDINALITY_ATTR))
+    def _stamped_snapshot(self, tx_id: Union[int, str]) -> DataFrame:
+        """The collapsed snapshot as of `tx_id` (one log version) with
+        every surviving fact stamped as an assert of the snapshot tx."""
+        db = self.db(tx_id).pinned()
         if tx_id != LATEST:
-            df = df.filter(F.col("tx") <= F.lit(int(tx_id)))
-        rows = df.select("e", "a", "v_str", "tx", "added").collect()
-        # collapse add/retract per (e, a, v) in the driver: schema facts are few
+            snap_tx = int(tx_id)
+        elif db.pin is not None:
+            snap_tx = db.pin.latest_tx
+        else:
+            snap_tx = self.backend.latest_tx()
+        return (
+            db.visible_facts()
+            .withColumn("tx", F.lit(snap_tx).cast("long"))
+            .withColumn("added", F.lit(True))
+        )
+
+    def cardinality_many_attrs(
+        self, tx_id: Union[int, str] = LATEST, pin: Optional["Pin"] = None
+    ) -> frozenset:
+        """Attributes declared :cardinality/many via schema facts (reference
+        src/unifydb/schema.clj:5-15). The schema rows are collected once per
+        store version — fixing the reference's re-query-per-pattern TODO
+        (schema.clj:17) — and the tx bound is resolved on the Spark driver."""
+        rows = self._meta("rows", pin if pin is not None else self.pin())
+        if tx_id != LATEST:
+            rows = [r for r in rows if r[3] <= int(tx_id)]
+        # collapse add/retract per (e, a, v) on the Spark driver: schema facts are
+        # few; the latest tx wins, a retract outranking an assert within one
         state: dict = {}
-        for r in sorted(rows, key=lambda r: (r["tx"], r["added"])):
-            state[(r["e"], r["a"], r["v_str"])] = r["added"]
+        for e, a, v, _tx, added in sorted(rows, key=lambda r: (r[3], not r[4])):
+            state[(e, a, v)] = added
         schema_attr_of: dict = {}
         card_of: dict = {}
         for (e, a, v), live in state.items():
@@ -406,21 +545,53 @@ class FactStore:
                 schema_attr_of[e] = v
             elif a == CARDINALITY_ATTR:
                 card_of[e] = v
-        many = frozenset(
+        return frozenset(
             norm_attr(schema_attr_of[e])
             for e, c in card_of.items()
             if c in (CARDINALITY_MANY, ":" + CARDINALITY_MANY) and e in schema_attr_of
         )
-        self._schema_cache[key] = many
-        return many
 
-    def attr_types(self) -> dict[str, set]:
+    def attr_types(self, pin: Optional["Pin"] = None) -> dict[str, set]:
         """attr -> set of v_type tags seen; drives the compiler's static
         type inference for value-position variables."""
-        ver = getattr(self.backend, "_version", 0)
-        if self._attr_types_cache is None or self._attr_types_cache[0] != ver:
-            self._attr_types_cache = (ver, self.backend.attr_types())
-        return self._attr_types_cache[1]
+        return self._meta("types", pin if pin is not None else self.pin())
+
+    def _meta(self, kind: str, pin: Optional["Pin"]):
+        """Per store version, kept in a small LRU: the schema rows
+        (`kind` "rows": the few schema/cardinality facts as (e, a, v_str,
+        tx, added)) or the attr types ("types"). A log version reads both
+        in one aggregate job; other backends answer attr types themselves."""
+        if pin is not None:
+            rows, types = self._metas.get(pin.version, lambda: self._log_meta(pin))
+            return rows if kind == "rows" else types
+        version = getattr(self.backend, "_version", 0)
+        if kind == "types":
+            return self._metas.get(("types", version), self.backend.attr_types)
+
+        def collect() -> list:
+            df = self.facts(SCHEMA_ATTR).unionByName(self.facts(CARDINALITY_ATTR))
+            return [tuple(r) for r in df.select(*_SCHEMA_ROW).collect()]
+
+        return self._metas.get(("rows", version), collect)
+
+    def _log_meta(self, pin: "Pin") -> tuple:
+        row = (
+            self.facts(pin=pin)
+            .agg(
+                F.collect_list(
+                    F.when(
+                        F.col("a").isin(SCHEMA_ATTR, CARDINALITY_ATTR),
+                        F.struct(*_SCHEMA_ROW),
+                    )
+                ).alias("rows"),
+                F.collect_set(F.struct("a", "v_type")).alias("types"),
+            )
+            .collect()[0]
+        )
+        types: dict[str, set] = {}
+        for a, t in row["types"]:
+            types.setdefault(a, set()).add(t)
+        return [tuple(r) for r in row["rows"]], types
 
     # ---- writes ----------------------------------------------------------
 
@@ -553,7 +724,7 @@ class FactStore:
             raise RuntimeError("transact: lost the optimistic-commit race 64 times")
         # The transaction IS committed at this point; everything below is
         # post-commit bookkeeping and must not make it look failed.
-        self._schema_cache.clear()
+        self._metas.clear()
         # backend-configured maintenance policy (txlog maintain_every):
         # cheap no-op check when idle, checkpoint+vacuum when due.
         # Best-effort: checkpoint can lose its CAS race and vacuum's

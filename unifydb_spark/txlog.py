@@ -15,8 +15,8 @@ Layout::
 
     <path>/_txlog/00000000000001.json   one manifest per commit
     <path>/_txlog/_last_checkpoint      advisory pointer to the newest
-                                        replaces_all manifest (read
-                                        optimization, Delta-shaped; never
+                                        replaces_all manifest (maintenance
+                                        scheduling, Delta-shaped; never
                                         load-bearing for correctness)
     <path>/data/<uuid>.parquet          data files; INVISIBLE until a
                                         manifest references them
@@ -75,9 +75,20 @@ import os
 import socket
 import time
 import uuid
-from typing import Iterable, Optional
+from typing import Iterable, NamedTuple, Optional
 
 _MANIFEST_DIGITS = 14
+
+
+class Pin(NamedTuple):
+    """One log version and the head stats a read of it needs: the
+    `clean` fast-path flag, whether any retraction exists, and the
+    newest tx (an as-of bound at or past it filters nothing)."""
+
+    version: int
+    clean: bool
+    has_retractions: bool
+    latest_tx: int
 
 
 def _arrow_fact_schema():
@@ -225,12 +236,15 @@ class LogParquetBackend:
 
     The only durable parquet fact backend. Satisfies the backend
     protocol of ``store.MemoryBackend`` (append / facts_df / clean /
-    has_retractions / max_id / latest_tx / attr_types) plus:
+    has_retractions / max_id / latest_tx; attr types come from
+    ``FactStore``'s one-job read per log version) plus:
 
     - :meth:`commit_rows` — compare-and-swap append used by
       ``FactStore.transact`` for cross-process id-allocation safety;
     - :meth:`log_version` / ``facts_df(as_of_version=...)`` —
       log-versioned time travel;
+    - :meth:`pin` — the head's version and read stats from one manifest
+      read, which a database value pins a query's reads to;
     - :meth:`bulk_append_df` — executor-side big appends (manifest commit
       of Spark-written files), with optional per-stream epoch tracking
       for exactly-once streaming ingest (streaming/stream.py
@@ -287,25 +301,22 @@ class LogParquetBackend:
         vs = self._list_versions()
         return vs[-1] if vs else 0
 
-    # FactStore caches key on backend._version; the log head IS the version.
-    @property
-    def _version(self) -> int:
-        return self.log_version()
-
     def _read_manifest(self, version: int) -> dict:
         with open(self._manifest_path(version)) as f:
             return json.load(f)
 
     # ---- _last_checkpoint pointer ----------------------------------------
     #
-    # Without it every read re-parses the WHOLE log — O(total commits),
-    # forever, even after compaction. The pointer (same role as Delta's
-    # _last_checkpoint file) lets readers start at the newest replaces_all
-    # manifest: read cost becomes O(commits since last checkpoint). It is
-    # ADVISORY, not part of the commit protocol: written last-writer-wins
-    # after a successful checkpoint CAS, validated against the real
-    # manifest on read, and a stale/missing/corrupt pointer only costs a
-    # full log scan (never correctness).
+    # Readers do not need it: `_live_entries` scans newest-first and stops
+    # at the first replaces_all manifest, so a read of any version costs
+    # O(commits since the checkpoint at or below it). The pointer (same
+    # shape as Delta's _last_checkpoint file) lets maintain() tell how many
+    # commits landed since the newest checkpoint from one small read. It
+    # is ADVISORY, not part of the commit protocol: written
+    # last-writer-wins after a successful checkpoint CAS, validated
+    # against the real manifest on read, and a stale/missing/corrupt
+    # pointer only makes a checkpoint come due early (never a wrong
+    # answer).
 
     @property
     def _lc_path(self) -> str:
@@ -356,6 +367,16 @@ class LogParquetBackend:
 
     def _head(self) -> Optional[dict]:
         return self._reread(self._head_at, "head")[1]
+
+    def pin(self) -> Pin:
+        """The current head as a :class:`Pin`, from one listing and one
+        manifest read: a database value pins every read of a query to
+        it (``facts_df(as_of_version=pin.version)``)."""
+        v, head = self._reread(self._head_at, "head")
+        if head is None:
+            return Pin(v, True, False, 0)
+        retr = bool(head["any_retraction"])
+        return Pin(v, not retr and head["tx_state"] != "multi", retr, head["latest_tx"])
 
     def _try_commit(self, manifest: dict, version: int) -> bool:
         """Atomically publish `manifest` as log version `version` via the
@@ -653,22 +674,16 @@ class LogParquetBackend:
                         "retain_before_checkpoint=False forfeits older history)"
                     )
                 versions = [v for v in versions if v <= as_of_version]
-            # skip ahead to the newest known checkpoint — only manifests at or
-            # after it can contribute files (replaces_all), so the scan is
-            # O(commits since checkpoint), not O(all commits ever)
-            lc = self._read_last_checkpoint()
-            if lc and (as_of_version is None or lc <= as_of_version):
-                versions = [v for v in versions if v >= lc]
-            entries: list[dict] = []
-            start = 0
-            manifests = [self._read_manifest(v) for v in versions]
-            # a checkpoint manifest replaces everything before it
-            for i, m in enumerate(manifests):
-                if m.get("replaces_all"):
-                    start = i
-            for m in manifests[start:]:
-                entries.extend(m["files"])
-            return entries
+            # newest first, down to the newest checkpoint at or below the
+            # read version: a replaces_all manifest replaces everything
+            # before it, so the scan is O(commits since that checkpoint),
+            # not O(all commits ever) — for a pinned older version too
+            manifests: list[dict] = []
+            for v in reversed(versions):
+                manifests.append(self._read_manifest(v))
+                if manifests[-1].get("replaces_all"):
+                    break
+            return [f for m in reversed(manifests) for f in m["files"]]
 
         return self._reread(scan, "manifest listing")
 
@@ -688,23 +703,18 @@ class LogParquetBackend:
 
     @property
     def clean(self) -> bool:
-        head = self._head()
-        if head is None:
-            return True
-        return not head["any_retraction"] and head["tx_state"] != "multi"
+        return self.pin().clean
 
     @property
     def has_retractions(self) -> bool:
-        head = self._head()
-        return bool(head and head["any_retraction"])
+        return self.pin().has_retractions
 
     def max_id(self) -> int:
         head = self._head()
         return head["max_id"] if head else 0
 
     def latest_tx(self) -> int:
-        head = self._head()
-        return head["latest_tx"] if head else 0
+        return self.pin().latest_tx
 
     def history(self, limit: Optional[int] = None) -> list[dict]:
         """Commit history, newest first (the DESCRIBE HISTORY
@@ -751,12 +761,6 @@ class LogParquetBackend:
         if not head:
             return -1
         return int(head.get("streams", {}).get(stream_id, -1))
-
-    def attr_types(self) -> dict[str, set]:
-        out: dict[str, set] = {}
-        for r in self.facts_df().select("a", "v_type").distinct().collect():
-            out.setdefault(r["a"], set()).add(r["v_type"])
-        return out
 
     # ---- maintenance --------------------------------------------------------
 
@@ -821,7 +825,7 @@ class LogParquetBackend:
 
             v = self._commit(build, max_retries, "checkpoint", ckpt_files)
             if v is not None:
-                # advisory read-optimization pointer (Delta _last_checkpoint
+                # advisory maintenance pointer (Delta _last_checkpoint
                 # shape); racing checkpoints leave it at SOME valid
                 # checkpoint, which readers validate anyway
                 self._write_last_checkpoint(v)
@@ -960,8 +964,8 @@ class LogParquetBackend:
 
         - CHECKPOINT when >= `checkpoint_every` commits landed since the
           newest checkpoint (compacts small files AND bounds the
-          manifest scan; with the _last_checkpoint pointer, read cost
-          returns to O(1)-ish after each checkpoint);
+          manifest scan: a read stops at the newest checkpoint, so read
+          cost returns to O(1)-ish after each one);
         - VACUUM afterwards with `vacuum_retention_seconds` (crash
           orphans older than the window are reclaimed; referenced files
           are never touched). With `truncate_log=True` pre-checkpoint
