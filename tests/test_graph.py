@@ -175,13 +175,18 @@ def test_kcore_hand_graph(spark):
 
 
 def test_kcore_cascading_peel(spark):
+    from unifydb_spark import instrument
     from unifydb_spark.operators.graph import kcore
 
     # a path graph has an empty 2-core (peeling cascades end to end)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 8)], ["src", "dst"]
     )
+    instrument.reset()
     assert kcore(edges, k=2).count() == 0
+    # both path ends peel each round: 4 shrinking peels, then one that
+    # finds the edge set unchanged (scripts/scale_stress.py reads this)
+    assert instrument.counters["kcore_peel_rounds"] == 5
 
 
 def test_kcore_every_member_has_k_neighbors_in_core(spark):

@@ -1,7 +1,8 @@
 """Operator calls must not leak CacheManager entries: iterative operators
-unpersist their loop intermediates inline (try/finally); single-plan
-operators route persists through `resources.tracked_persist` and callers
-release them with `resources.release_persisted()` after materializing.
+unpersist their loop intermediates inline (try/finally) or checkpoint
+them (kcore's peels); single-plan operators route persists through
+`resources.tracked_persist` and callers release them with
+`resources.release_persisted()` after materializing.
 
 The assertion surface is Spark's CacheManager (DataFrame persists are
 registered there and are NEVER auto-released — the leak the bench's
@@ -26,6 +27,7 @@ def _edges(spark):
 def test_graph_fixpoints_self_release(spark):
     from unifydb_spark.operators.graph import (
         connected_components,
+        kcore,
         shortest_paths,
         triangle_count,
     )
@@ -38,6 +40,8 @@ def test_graph_fixpoints_self_release(spark):
     assert _cache_empty(spark), "shortest_paths leaked its edge cache"
     assert triangle_count(_edges(spark)).collect()[0][0] >= 1
     assert _cache_empty(spark), "triangle_count leaked canon/oriented caches"
+    kcore(_edges(spark), k=2).count()
+    assert _cache_empty(spark), "kcore leaked its peel caches"
 
 
 def test_kmeans_self_release(spark):

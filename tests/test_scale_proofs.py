@@ -1169,3 +1169,71 @@ def test_concurrent_fixpoints_shared_session(spark):
     assert results["b"] == [(Ref(i),) for i in range(202, 214)]
     assert seen_widths == {width}  # (b) never narrowed, never mutated
     assert spark.conf.get("spark.sql.shuffle.partitions") == width
+
+
+@pytest.mark.parametrize("rows", [None, 10], ids=["session", "narrowed"])
+def test_observed_checkpoint_counts_on_its_own_job(spark, rows):
+    """iterate.checkpoint returns (frame, n) with n observed on the
+    checkpoint's own job: the default metric is the row count, an
+    aggregate metric (count_if) is observed as given, an empty frame
+    gives 0, and the call launches exactly the jobs of a bare eager
+    localCheckpoint — no count job. rows=10 takes the private-session
+    path, where the observation must be attached after the re-bind or
+    `Observation.get` waits forever; the calls run in a worker thread
+    joined with a timeout so that fault fails here instead of hanging."""
+    import threading
+
+    from unifydb_spark import iterate
+
+    sc = spark.sparkContext
+
+    def frame():
+        # a fresh Dataset per call: re-running one Dataset reuses its
+        # already-materialized shuffle stages, which would skew job counts
+        return (
+            spark.range(50)
+            .groupBy((F.col("id") % 7).alias("k"))
+            .agg(F.max("id").alias("m"))
+        )
+
+    expect_rows = sorted(frame().collect())
+    expect_big = frame().filter(F.col("m") > 45).count()
+    empty = frame().filter(F.col("m") < 0)
+    big = F.count_if(F.col("m") > 45)
+    got: dict = {}
+
+    def jobs(group, fn):
+        """(fn(), Spark jobs it launched) under a job group."""
+        group = f"{group}-{rows}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup("", "")
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def run():
+        try:
+            got["bare_jobs"] = jobs(
+                "bare", lambda: frame().localCheckpoint(eager=True)
+            )[1]
+            (got["ck"], got["n"]), got["jobs"] = jobs(
+                "observed", lambda: iterate.checkpoint(frame(), rows)
+            )
+            got["big"] = iterate.checkpoint(frame(), rows, metric=big)[1]
+            got["empty"] = iterate.checkpoint(empty, rows)[1]
+            got["empty_big"] = iterate.checkpoint(empty, rows, metric=big)[1]
+        except Exception as e:  # surface in the main thread
+            got["error"] = e
+
+    worker = threading.Thread(target=run, daemon=True)
+    worker.start()
+    worker.join(timeout=180)
+    assert not worker.is_alive(), "observed checkpoint never returned"
+    assert "error" not in got, got.get("error")
+    assert got["n"] == len(expect_rows) == 7
+    assert sorted(got["ck"].collect()) == expect_rows
+    assert got["ck"].sparkSession is spark  # re-bound to the caller
+    assert got["big"] == expect_big > 0
+    assert got["empty"] == 0 and got["empty_big"] == 0
+    assert got["jobs"] == got["bare_jobs"] > 0

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from unifydb_spark import iterate
+from unifydb_spark import instrument, iterate
 
 DEC = "decimal(38,18)"
 
@@ -105,8 +105,6 @@ def _edge_stats(edges: DataFrame, nodes: DataFrame | None = None) -> tuple[int, 
 
     The counters let harnesses assert the job accounting
     (tests/test_graph.py::test_edge_stats_probe_once)."""
-    from unifydb_spark import instrument
-
     cached = getattr(edges, "_unifydb_edge_stats", None)
     if cached is not None:
         instrument.bump("edge_stats_cache_hits")
@@ -196,13 +194,11 @@ def connected_components(
     # the edge cache feeds only the loop; the returned labels derive from a
     # checkpointed frame, so the finally-unpersist leaks nothing to callers
     try:
-        from unifydb_spark import instrument
-
         supersteps = 0
         converged = False
         for _ in range(max_iter):
             # carry old + new labels in one checkpointed frame: the change
-            # check is then a scan of this node-sized frame, not another join
+            # count is then observed on the checkpoint's own job
             merged = _cc_superstep(und, labels, broadcast_labels)
             # pointer jumping: component <- label(component). Labels are
             # node ids, so looking the label up in the same table chases
@@ -211,7 +207,7 @@ def connected_components(
             lab2 = merged.select(
                 F.col("node").alias("_jn"), F.col("component").alias("_jc")
             )
-            merged = iterate.checkpoint(
+            merged, changed = iterate.checkpoint(
                 merged.join(
                     lab2, merged["component"] == lab2["_jn"], "left"
                 )
@@ -224,13 +220,9 @@ def connected_components(
                     ).alias("component"),
                 ),
                 hint,
+                metric=F.count_if(F.col("component") != F.col("old_component")),
             )
             supersteps += 1
-            changed = (
-                merged.filter(F.col("component") != F.col("old_component"))
-                .limit(1)
-                .count()
-            )
             labels = merged.select("node", "component")
             if changed == 0:
                 converged = True
@@ -390,22 +382,20 @@ def shortest_paths(edges: DataFrame, sources: list[int], max_iter: int = 20) -> 
     try:
         d = 0  # max_iter=0: the sources alone, no superstep
         for d in range(1, max_iter + 1):
-            nxt = iterate.checkpoint(
+            nxt, n = iterate.checkpoint(
                 und.join(frontier, und["src"] == frontier["node"])
                 .select(F.col("dst").alias("node"))
                 .distinct()
                 .join(dist, "node", "left_anti")
                 .withColumn("dist", F.lit(d))
             )
-            if nxt.limit(1).count() == 0:
+            if n == 0:
                 break
             # lazy union: every frontier is checkpointed above, so the
             # accumulated distance set is a scan of materialized blocks —
             # re-checkpointing it would rewrite all rows every superstep
             dist = dist.unionByName(nxt)
             frontier = nxt
-        from unifydb_spark import instrument
-
         instrument.note("bfs_supersteps", d)
         return dist
     finally:
@@ -560,19 +550,15 @@ def kcore(edges: DataFrame, k: int = 2, max_rounds: int = 20) -> DataFrame:
     Scale: each round is one combinable degree count + two semi-joins
     hash-partitioned on the edge endpoints; the edge relation shrinks
     monotonically. Rounds needed in practice ~ graph diameter of the
-    peeled fringe (single digits); the checkpoint-every-round pattern
-    of connected_components applies beyond toy scale."""
-    from unifydb_spark.resources import tracked_persist
-
-    und = (
+    peeled fringe (single digits). Like connected_components, every peel
+    is an `iterate.checkpoint` that observes its own edge count (no count
+    job, no cache left behind), planned at the width of the previous
+    peel's edge count, which bounds every shuffle input of the next."""
+    core, prev_edges = iterate.checkpoint(
         edges.select("src", "dst")
         .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
     )
-    from unifydb_spark import instrument
-
-    core = tracked_persist(und)
-    prev_edges = core.count()
     peels = 0
     for _ in range(int(max_rounds)):
         peels += 1
@@ -582,15 +568,14 @@ def kcore(edges: DataFrame, k: int = 2, max_rounds: int = 20) -> DataFrame:
             .filter(F.col("deg") >= int(k))
             .select(F.col("src").alias("node"))
         )
-        nxt = tracked_persist(
+        core, n_edges = iterate.checkpoint(
             core.join(
                 keep.select(F.col("node").alias("src")), "src", "left_semi"
             ).join(
                 keep.select(F.col("node").alias("dst")), "dst", "left_semi"
-            )
+            ),
+            prev_edges,
         )
-        n_edges = nxt.count()
-        core = nxt
         if n_edges == prev_edges:
             break
         prev_edges = n_edges

@@ -484,13 +484,13 @@ def _magic_seed(db, name: str, env: "RulesEnv", scc: set, app_args) -> Optional[
     # (rest-clauses join -> select -> distinct). Checkpoint each ONCE at
     # the session shuffle width, before any frontier narrowing: (a) the
     # full-EDB distinct no longer re-executes every round, and (b) it can
-    # never be planned inside a narrowed round. The counted step sizes
+    # never be planned inside a narrowed round. The observed step sizes
     # fold into the per-round row bound so it bounds shuffle INPUT size,
     # not just frontier rows (round-14 ADVICE, medium).
     ckpt_steps, max_step_rows = [], 0
     for step, kinds in steps:
-        df = step.df.localCheckpoint(eager=True)
-        max_step_rows = max(max_step_rows, df.count())
+        df, n = iterate.checkpoint(step.df)
+        max_step_rows = max(max_step_rows, n)
         ckpt_steps.append((C.Rel(df, dict(step.vars)), kinds))
 
     def advance(_name, deltas):
@@ -517,7 +517,7 @@ def _magic_seed(db, name: str, env: "RulesEnv", scc: set, app_args) -> Optional[
     if not closed:
         return None  # demand set did not close — fall back to the full closure
     instrument.note("rule_magic_rounds", rounds)
-    # the total is the seed row UNION ALL each (disjoint) counted delta
+    # the total is the seed row UNION ALL each (disjoint) observed delta
     instrument.note("rule_magic_size", 1 + fresh_rows)
     return bound, totals[name]
 
@@ -527,8 +527,8 @@ def _semi_naive(totals: dict, advance, rows: Optional[int], max_rounds: int) -> 
     are advanced in place. Each round, name by name, `advance(name,
     deltas)` derives candidate tuples from the previous round's deltas;
     the distinct candidates not yet in the name's total are checkpointed
-    (`iterate.checkpoint`, sized by `rows`: counted rows that bound every
-    shuffle input of a round, None when unknown), counted, and unioned
+    (`iterate.checkpoint`, sized by `rows`: observed rows that bound every
+    shuffle input of a round, None when unknown), observed, and unioned
     into the total. A round that finds nothing new closes the loop.
 
     Returns (rounds, fresh rows over all rounds, closed); closed is False
@@ -545,8 +545,7 @@ def _semi_naive(totals: dict, advance, rows: Optional[int], max_rounds: int) -> 
                 totals[n],
                 "left_anti",
             )
-            fresh_df = iterate.checkpoint(fresh.df, rows)
-            cnt = fresh_df.count()
+            fresh_df, cnt = iterate.checkpoint(fresh.df, rows)
             round_rows += cnt
             if rows is not None:
                 rows += cnt
@@ -611,6 +610,7 @@ def _fixpoint(db, name: str, env: "RulesEnv", seed_args=None) -> C.Rel:
             magic = None
 
     totals: dict[str, C.Rel] = {}
+    base_rows: dict[str, int] = {}
     for n in scc:
         if not base[n]:
             raise QueryError(
@@ -618,7 +618,7 @@ def _fixpoint(db, name: str, env: "RulesEnv", seed_args=None) -> C.Rel:
             )
         r = C.align_union([_positional(db, rule, env) for rule in base[n]])
         r = _restrict_to_magic(r, magic)
-        df = r.df.distinct().localCheckpoint(eager=True)
+        df, base_rows[n] = iterate.checkpoint(r.df.distinct())
         totals[n] = C.Rel(df, dict(r.vars))
 
     def advance(n, deltas):
@@ -631,15 +631,12 @@ def _fixpoint(db, name: str, env: "RulesEnv", seed_args=None) -> C.Rel:
                 env.overlays.pop(m, None)
         return _restrict_to_magic(produced, magic)
 
-    base_rows = totals[name].df.count()
-    # row bound: exact for single-member SCCs (the counted base + every
-    # counted delta = every row any round's plan can hold); for
-    # multi-member SCCs the other members' bases are never counted, so it
-    # stays unknown and rounds keep the session shuffle width
-    rounds, fresh_rows, closed = _semi_naive(
-        totals, advance, base_rows if len(scc) == 1 else None, env.max_iterations
-    )
-    instrument.bump("rule_fixpoint_delta_rows", base_rows + fresh_rows)
+    # row bound: exact for single-member SCCs (the observed base + every
+    # observed delta = every row any round's plan can hold); multi-member
+    # SCCs leave it unknown, so their rounds keep the session shuffle width
+    rows = base_rows[name] if len(scc) == 1 else None
+    rounds, fresh_rows, closed = _semi_naive(totals, advance, rows, env.max_iterations)
+    instrument.bump("rule_fixpoint_delta_rows", base_rows[name] + fresh_rows)
     instrument.note("rule_fixpoint_rounds", rounds)
     if not closed:
         raise QueryError(

@@ -17,8 +17,8 @@ so concurrent requests in a ThreadingHTTPServer release only their own
 intermediates — a global drain there would silently evict caches a
 concurrent in-flight query is still using (correct but cache-defeating).
 Iterative operators whose loop intermediates are NOT referenced by the
-returned frame (graph fixpoints, k-means) instead unpersist inline via
-try/finally — they need no caller cooperation.
+returned frame (cc, BFS, k-means: try/finally unpersist; kcore: one
+`iterate.checkpoint` per peel) leave no cache, with no caller cooperation.
 """
 
 from __future__ import annotations
