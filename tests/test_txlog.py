@@ -26,7 +26,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from unifydb_spark.engine import Engine
-from unifydb_spark.store import FactStore
+from unifydb_spark.store import FactStore, _meta_of
 from unifydb_spark.txlog import (
     CommitConflict,
     ConditionalPutProtocol,
@@ -192,7 +192,7 @@ def test_cross_process_writers_serialize(spark, tmp_path, protocol_name):
         """
         import sys, time
         sys.path.insert(0, sys.argv[4])
-        from unifydb_spark.store import FactStore
+        from unifydb_spark.store import FactStore, _meta_of
         from unifydb_spark import txlog
 
         tag, path, proto_cls = sys.argv[1], sys.argv[2], sys.argv[3]
@@ -710,7 +710,7 @@ def test_cross_process_writers_with_parent_checkpoints(spark, tmp_path):
         """
         import os, sys, time
         sys.path.insert(0, sys.argv[4])
-        from unifydb_spark.store import FactStore
+        from unifydb_spark.store import FactStore, _meta_of
         from unifydb_spark import txlog
 
         tag, path, marker = sys.argv[1], sys.argv[2], sys.argv[3]
@@ -1095,3 +1095,131 @@ def test_query_reads_one_log_version_while_a_writer_commits(spark, tmp_path):
     assert commits and backend.log_version() == before + 1
     assert rows == [("Alice", 30)]
     assert eng.query_rows(q) == [("Bob", 40)]
+
+
+# ---- attr types and schema rows ride the head ------------------------------
+
+
+def _norm_meta(meta):
+    rows, types = meta
+    return sorted(rows, key=repr), types
+
+
+def _assert_head_meta_matches_scan(store):
+    """The head's carried (schema rows, attr types) equal a fresh scan
+    of the same version's facts."""
+    pin = store.pin()
+    assert pin.meta is not None, pin
+    assert _norm_meta(_meta_of(*pin.meta)) == _norm_meta(store._log_meta(pin))
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run fn under a job group and return how many Spark jobs it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup("", "")
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_head_meta_matches_a_scan_after_every_writer(spark, tmp_path):
+    from unifydb_spark.values import FACT_SCHEMA
+
+    path = str(tmp_path / "facts")
+    backend = LogParquetBackend(spark, path)
+    store = FactStore(spark, backend)
+    eng = Engine(spark, store)
+    store.seed([(1, ":name", "ann", 1, True)])  # append
+    _assert_head_meta_matches_scan(store)
+    before_schema = backend.log_version()
+    s = eng.transact(  # commit_rows
+        [{"unifydb/id": "s", "unifydb/schema": "tag",
+          "unifydb/cardinality": "cardinality/many"}]
+    )["tempids"]["s"]
+    eng.transact([["add", 1, ":tag", "x"], ["add", 1, ":tag", "y"]])
+    _assert_head_meta_matches_scan(store)
+    assert store.cardinality_many_attrs() == frozenset({"tag"})
+    bulk = [
+        (2, "score", "double", None, 1.5, None, None, None, None, None, 1000, True),
+        (s, "unifydb/cardinality", "string", None, None, "cardinality/many",
+         None, None, None, None, 1000, False),
+    ]
+    backend.bulk_append_df(spark.createDataFrame(bulk, FACT_SCHEMA))
+    _assert_head_meta_matches_scan(store)
+    assert store.cardinality_many_attrs() == frozenset()
+    assert store.attr_types()["score"] == {"double"}
+    # a commit landing mid-rewrite is carried into the checkpoint's head
+    other = FactStore(spark, LogParquetBackend(spark, path))
+    hook = _interpose_once(
+        backend, lambda: Engine(spark, other).transact([["add", 1, ":flag", True]])
+    )
+    backend.checkpoint()
+    assert hook.hit and backend._read_manifest(backend.log_version())["replaces_all"]
+    _assert_head_meta_matches_scan(store)
+    assert store.attr_types()["flag"] == {"bool"}
+    # restore to a version before the schema declaration
+    backend.restore(before_schema)
+    _assert_head_meta_matches_scan(store)
+    assert store.cardinality_many_attrs() == frozenset()
+    assert set(store.attr_types()) == {"name"}
+
+
+def test_head_without_meta_falls_back_to_the_scan(spark, tmp_path):
+    """A log written before heads carried attr types and schema rows:
+    commits, checkpoints and restores on it keep the fields absent, and
+    reads answer from one scan of the version's facts instead."""
+    backend = LogParquetBackend(spark, str(tmp_path / "facts"))
+    store = FactStore(spark, backend)
+    eng = Engine(spark, store)
+    eng.transact(
+        [{"unifydb/schema": "tag", "unifydb/cardinality": "cardinality/many"}]
+    )
+    legacy = backend._read_manifest(1)
+    del legacy["attr_types"], legacy["schema_rows"]
+    with open(backend._manifest_path(1), "w") as f:
+        json.dump(legacy, f)
+    eng.transact([["add", "p", ":tag", "x"], ["add", "p", ":tag", "y"]])
+    backend.checkpoint()
+    backend.restore(2)
+    scanned = []
+    scan = store._log_meta
+    store._log_meta = lambda pin: scanned.append(pin.version) or scan(pin)
+    for v in (2, 3, 4):
+        assert "attr_types" not in backend._read_manifest(v)
+    assert store.pin().meta is None
+    q = {"find": ["?v"], "where": [["?e", ":tag", "?v"]]}
+    assert sorted(eng.query_rows(q)) == [("x",), ("y",)]  # cardinality many
+    assert store.attr_types()["tag"] == {"string"}
+    assert scanned == [4]
+
+
+def test_latest_read_after_transact_runs_no_metadata_job(spark, tmp_path):
+    store = FactStore(spark, LogParquetBackend(spark, str(tmp_path / "facts")))
+    eng = Engine(spark, store)
+    eng.transact(
+        [{"unifydb/schema": "tag", "unifydb/cardinality": "cardinality/many"}]
+    )
+    eng.transact([["add", "p", ":tag", "x"], ["add", "p", ":age", 7]])
+
+    def no_scan(pin):
+        raise AssertionError("the head carries the meta; no scan")
+
+    store._log_meta = no_scan
+    meta = []
+    jobs = _jobs_in_group(
+        spark,
+        "meta-after-transact",
+        lambda: meta.append((store.attr_types(), store.cardinality_many_attrs())),
+    )
+    assert jobs == 0
+    assert meta == [
+        (
+            {"unifydb/schema": {"string"}, "unifydb/cardinality": {"string"},
+             "unifydb/txInstant": {"long"}, "tag": {"string"}, "age": {"long"}},
+            frozenset({"tag"}),
+        )
+    ]
+    q = {"find": ["?v"], "where": [["?e", ":tag", "?v"]]}
+    assert eng.query_rows(q) == [("x",)]

@@ -38,13 +38,7 @@ def ref_edges(db, attrs: list[str] | None = None) -> DataFrame:
     """Edge view of the fact store: (src, attr, dst, tx) for every
     reference-valued fact visible in this snapshot (the VAET index as a
     relation). Pass db.as_of(tx) for the graph as of a past transaction."""
-    if attrs:
-        slices = [db.visible_facts(attr=a) for a in attrs]
-        facts = slices[0]
-        for s in slices[1:]:
-            facts = facts.unionByName(s)
-    else:
-        facts = db.visible_facts()
+    facts = db.visible_facts(attrs=attrs or None)
     return facts.filter(F.col("v_type") == "ref").select(
         F.col("e").alias("src"),
         F.col("a").alias("attr"),

@@ -7,12 +7,18 @@ then row re-nesting into maps/lists by attribute cardinality
 the spec), so the whole pull is a fixed join pipeline — no recursion at
 execution time.
 
-Spark-first shape: one pull *level* = snapshot facts semi-joined to the
-entity-id set, each value rendered to canonical JSON JVM-side (same codec
-as values.py), ref-attributes with sub-specs left-joined to the recursively
-assembled sub-entity JSON, then two groupBys build the ``{"attr": value}``
-object per entity (collect_list + array_sort + array_join — all
-whole-stage-codegen builtins, no Python UDF anywhere).
+Spark-first shape: one pull *level* = ONE slice of the snapshot holding
+the spec's attributes (``Db.visible_facts(attrs=...)``: a single
+``a IN (...)`` filter of a commit-log store's cached snapshot, the
+per-attribute table projections of the table fact store) semi-joined to
+the entity-id set, each value rendered to canonical JSON JVM-side (same
+codec as values.py), ref-attributes with sub-specs left-joined to the
+recursively assembled sub-entity JSON, then one groupBy builds the
+``{"attr": value}`` object per entity (collect_list + array_sort +
+array_join — all whole-stage-codegen builtins, no Python UDF anywhere).
+The value codec and the object assembly are each one SQL expression
+(``F.expr``): under PySpark's call-site capture every ``F.*`` call costs
+several py4j round trips, and a level is compiled on every pull query.
 
 Scale notes: each level is one shuffle on `e` (the assembly groupBy); the
 id-set semi-join prunes the fact scan to exactly the pulled entities, and
@@ -27,45 +33,51 @@ card-one as the bare value. Missing sub-entities render as ``{}``.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from unifydb_spark.query.parse import QueryError, FindPull, Var
+from unifydb_spark.query.parse import QueryError, FindPull
 from unifydb_spark.store import Db, norm_attr
 
 
-def _escape_json(c: Column) -> Column:
-    """JSON-encode a scalar column JVM-side: to_json on a one-field struct,
-    then strip the '{"v":' prefix and '}' suffix."""
-    wrapped = F.to_json(F.struct(c.alias("v")))
-    return F.substring(wrapped, F.lit(6), F.length(wrapped) - F.lit(6))
+def _sql_str(s: str) -> str:
+    """A Spark SQL string literal of `s`."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def _value_json() -> Column:
-    """Fact typed-value columns -> canonical JSON (values.py codec)."""
-    return (
-        F.when(F.col("v_type") == "long", F.col("v_long").cast("string"))
-        .when(F.col("v_type") == "double", _escape_json(F.col("v_double")))
-        .when(F.col("v_type") == "string", _escape_json(F.col("v_str")))
-        .when(
-            F.col("v_type") == "bool",
-            F.when(F.col("v_bool"), F.lit("true")).otherwise(F.lit("false")),
-        )
-        .when(
-            F.col("v_type") == "ref",
-            F.concat(F.lit('{"$ref":'), F.col("v_ref").cast("string"), F.lit("}")),
-        )
-        .when(
-            F.col("v_type") == "ts",
-            F.concat(
-                F.lit('"'),
-                F.date_format("v_ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"),
-                F.lit('"'),
-            ),
-        )
-        .when(F.col("v_type") == "json", F.col("v_json"))
-        .otherwise(F.lit("null"))
-    )
+def _json_sql(x: str) -> str:
+    """SQL: JSON-encode the scalar expression `x` JVM-side — to_json of a
+    one-field struct, minus its '{"v":' prefix and '}' suffix."""
+    j = f"to_json(named_struct('v', {x}))"
+    return f"substring({j}, 6, length({j}) - 6)"
+
+
+# Fact typed-value columns -> canonical JSON (values.py codec).
+_VALUE_JSON = f"""CASE v_type
+    WHEN 'long' THEN CAST(v_long AS STRING)
+    WHEN 'double' THEN {_json_sql("v_double")}
+    WHEN 'string' THEN {_json_sql("v_str")}
+    WHEN 'bool' THEN IF(v_bool, 'true', 'false')
+    WHEN 'ref' THEN concat('{{"$ref":', CAST(v_ref AS STRING), '}}')
+    WHEN 'ts' THEN concat('"', date_format(v_ts, 'yyyy-MM-dd\\'T\\'HH:mm:ss.SSSSSS'), '"')
+    WHEN 'json' THEN v_json
+    ELSE 'null' END"""
+
+
+def _object_sql(many: list[str]) -> str:
+    """SQL: one entity's JSON object from its collected (a, vj) structs
+    ``__avs``, grouped and sorted INSIDE the row with higher-order
+    functions (the attr list is spec-sized, so the O(attrs^2) row-local
+    work is constant): keys sorted, a card-many attribute's values as a
+    sorted JSON array, any other's as its single (smallest) value."""
+    vjs = "array_sort(transform(filter(__avs, x -> x.a = k), x -> x.vj))"
+    val = f"element_at({vjs}, 1)"
+    if many:
+        lits = ", ".join(map(_sql_str, many))
+        val = f"IF(array_contains(array({lits}), k), concat('[', array_join({vjs}, ','), ']'), {val})"
+    keys = "array_sort(array_distinct(transform(__avs, x -> x.a)))"
+    kv = f"concat({_json_sql('k')}, ':', {val})"
+    return f"concat('{{', array_join(transform({keys}, k -> {kv}), ','), '}}')"
 
 
 def _parse_spec(spec) -> tuple[list, dict, bool]:
@@ -90,7 +102,8 @@ def _parse_spec(spec) -> tuple[list, dict, bool]:
 
 def pull_level(db: Db, ids_df: DataFrame, spec) -> DataFrame:
     """One pull level: (``__pe`` entity-id) -> (``__pe``, ``__pjson`` JSON
-    object string). `ids_df` must have a single long column ``__pe``."""
+    object string). `ids_df` must have a single long column ``__pe``
+    (duplicates are fine: it is only the right side of a semi-join)."""
     plain, refs, wildcard = _parse_spec(spec)
     if wildcard:
         facts = db.visible_facts()
@@ -98,75 +111,31 @@ def pull_level(db: Db, ids_df: DataFrame, spec) -> DataFrame:
         attrs = plain + list(refs)
         if not attrs:
             raise QueryError("invalid-pull", "empty pull spec")
-        # union of per-attribute slices, NOT a filter over the whole fact
-        # view: virtual-table backends serve each attribute as a narrow
-        # column projection of one source table, so this keeps the scan
-        # (and the logical plan) proportional to the spec, not the schema
-        slices = [db.visible_facts(attr=a) for a in attrs]
-        facts = slices[0]
-        for s in slices[1:]:
-            facts = facts.unionByName(s)
-    facts = facts.join(ids_df, facts["e"] == ids_df["__pe"], "left_semi")
-    base = facts.withColumn("__vj", _value_json())
+        # the spec's attributes only, NOT the whole fact view: the table
+        # fact store serves each attribute as a narrow column projection
+        # of one source table, so the scan (and the logical plan) stays
+        # proportional to the spec, not the schema
+        facts = db.visible_facts(attrs=attrs)
+    base = facts.join(ids_df, F.expr("e = __pe"), "left_semi").withColumn(
+        "__vj", F.expr(_VALUE_JSON)
+    )
     for attr, subspec in refs.items():
-        sub_ids = (
-            base.filter((F.col("a") == attr) & (F.col("v_type") == "ref"))
-            .select(F.col("v_ref").alias("__pe"))
-            .distinct()
-        )
-        sub = (
-            pull_level(db, sub_ids, subspec)
-            .withColumnRenamed("__pe", "__se")
-            .withColumnRenamed("__pjson", "__sj")
-        )
+        is_ref = f"a = {_sql_str(attr)} AND v_type = 'ref'"
+        sub_ids = base.filter(F.expr(is_ref)).select(F.col("v_ref").alias("__pe"))
+        sub = pull_level(db, sub_ids, subspec).toDF("__se", "__sj")
         base = (
-            base.join(
-                sub,
-                (F.col("a") == attr) & (F.col("v_ref") == F.col("__se")),
-                "left",
-            )
-            .withColumn(
-                "__vj",
-                F.when(
-                    (F.col("a") == attr) & (F.col("v_type") == "ref"),
-                    F.coalesce(F.col("__sj"), F.lit("{}")),
-                ).otherwise(F.col("__vj")),
-            )
+            base.join(sub, F.expr(f"a = {_sql_str(attr)} AND v_ref = __se"), "left")
+            .withColumn("__vj", F.expr(f"IF({is_ref}, coalesce(__sj, '{{}}'), __vj)"))
             .drop("__se", "__sj")
         )
     # SINGLE groupBy per level: collect (attr, value-json) structs per
-    # entity once, then do the per-attribute grouping/sorting INSIDE the
-    # row with higher-order functions (the attr list is spec-sized, so
-    # the O(attrs^2) row-local work is constant) — one shuffle per level,
-    # not two nearly-identical ones on (e,a) then (e)
+    # entity once and assemble the object inside the row — one shuffle
+    # per level, not two nearly-identical ones on (e,a) then (e)
     many = sorted(db.cardinality_many_attrs())
-    per_e = base.groupBy("e").agg(
-        F.collect_list(F.struct(F.col("a"), F.col("__vj").alias("vj"))).alias("__avs")
-    )
-    attrs_arr = F.array_sort(
-        F.array_distinct(F.transform(F.col("__avs"), lambda x: x["a"]))
-    )
-
-    def attr_val(a):
-        vjs = F.array_sort(
-            F.transform(
-                F.filter(F.col("__avs"), lambda x: x["a"] == a),
-                lambda x: x["vj"],
-            )
-        )
-        if not many:
-            return F.element_at(vjs, 1)
-        return F.when(
-            F.array_contains(F.array(*[F.lit(m) for m in many]), a),
-            F.concat(F.lit("["), F.array_join(vjs, ","), F.lit("]")),
-        ).otherwise(F.element_at(vjs, 1))
-
-    kvs = F.transform(
-        attrs_arr, lambda a: F.concat(_escape_json(a), F.lit(":"), attr_val(a))
-    )
-    return per_e.select(
-        F.col("e").alias("__pe"),
-        F.concat(F.lit("{"), F.array_join(kvs, ","), F.lit("}")).alias("__pjson"),
+    return (
+        base.groupBy("e")
+        .agg(F.expr("collect_list(named_struct('a', a, 'vj', __vj))").alias("__avs"))
+        .selectExpr("e AS __pe", f"{_object_sql(many)} AS __pjson")
     )
 
 
@@ -189,7 +158,7 @@ def attach_pulls(db: Db, rel, parsed):
             raise QueryError(
                 "invalid-pull", f"pull variable ?{f.var.name} must bind entity ids"
             )
-        ids = rel.df.select(bt(f.var.name).alias("__pe")).distinct()
+        ids = rel.df.select(bt(f.var.name).alias("__pe"))
         pulled = pull_level(db, ids, f.spec)
         joined = rel.df.join(
             pulled, bt(f.var.name) == pulled["__pe"], "left"

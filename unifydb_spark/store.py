@@ -30,6 +30,7 @@ Bulk-ingested analytics tables take the clean path and never shuffle.
 from __future__ import annotations
 
 import datetime as _dt
+import functools
 import itertools
 import threading
 import time
@@ -37,22 +38,19 @@ import weakref
 from collections import OrderedDict
 from concurrent.futures import Future
 from dataclasses import dataclass, replace
-from typing import TYPE_CHECKING, Any, Callable, Iterable, Optional, Sequence, Union
+from typing import Any, Callable, Iterable, Optional, Sequence, Union
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from unifydb_spark.txlog import META_ATTRS, Pin
 from unifydb_spark.values import FACT_SCHEMA, Ref, V_COLS, encode_value
-
-if TYPE_CHECKING:
-    from unifydb_spark.txlog import Pin
 
 LATEST = "latest"
 
 TX_TEMPID = "unifydb.tx"
 TX_INSTANT_ATTR = "unifydb/txInstant"
-SCHEMA_ATTR = "unifydb/schema"
-CARDINALITY_ATTR = "unifydb/cardinality"
+SCHEMA_ATTR, CARDINALITY_ATTR = META_ATTRS
 CARDINALITY_MANY = "cardinality/many"
 
 # Collapsed snapshots a commit-log store keeps materialized, per FactStore.
@@ -194,7 +192,7 @@ class Db:
     store: "FactStore"
     tx_id: Union[int, str] = LATEST
     historical: bool = False
-    pin: Optional["Pin"] = None
+    pin: Optional[Pin] = None
 
     def as_of(self, tx_id: int) -> "Db":
         return replace(self, tx_id=tx_id)
@@ -208,8 +206,14 @@ class Db:
         pin = self.store.pin()
         return self if pin is None else replace(self, pin=pin)
 
-    def visible_facts(self, attr: Optional[str] = None) -> DataFrame:
-        return self.store.snapshot(self.tx_id, self.historical, attr=attr, pin=self.pin)
+    def visible_facts(
+        self, attr: Optional[str] = None, attrs: Optional[Sequence[str]] = None
+    ) -> DataFrame:
+        """The visible facts of one attribute, of the attributes `attrs`
+        (one slice), or of all attributes."""
+        if attr is not None:
+            attrs = [attr]
+        return self.store.snapshot(self.tx_id, self.historical, attrs=attrs, pin=self.pin)
 
     def cardinality_many_attrs(self) -> frozenset:
         return self.store.cardinality_many_attrs(self.tx_id, pin=self.pin)
@@ -271,6 +275,15 @@ def _unpersist(df: DataFrame) -> None:
         df.unpersist()
     except Exception:  # the session is gone: nothing left to release
         pass
+
+
+def _meta_of(rows: Iterable, pairs: Iterable) -> tuple:
+    """(schema rows as tuples, {attr: set of value types}) from schema
+    rows and (attr, value type) pairs."""
+    types: dict[str, set] = {}
+    for a, t in pairs:
+        types.setdefault(a, set()).add(t)
+    return [tuple(r) for r in rows], types
 
 
 def _collapse(df: DataFrame, has_retractions: bool, many: frozenset) -> DataFrame:
@@ -340,35 +353,45 @@ class FactStore:
     def db(self, tx_id: Union[int, str] = LATEST, historical: bool = False) -> Db:
         return Db(self, tx_id, historical)
 
-    def pin(self) -> Optional["Pin"]:
+    def pin(self) -> Optional[Pin]:
         """The backend's current log version (txlog.Pin), or None when it
         has no immutable versions to pin."""
         pin = getattr(self.backend, "pin", None)
         return pin() if pin is not None else None
 
     def facts(
-        self, attr: Optional[str] = None, pin: Optional["Pin"] = None
+        self,
+        attr: Optional[str] = None,
+        pin: Optional[Pin] = None,
+        attrs: Optional[Sequence[str]] = None,
     ) -> DataFrame:
-        """Raw fact tuples, optionally narrowed to one attribute (the
-        reference's index selection, src/unifydb/storage.clj:31-46 — here
-        either a backend-provided single-attribute projection or a
-        pushed-down filter); `pin` reads that log version."""
-        if attr is not None and hasattr(self.backend, "facts_for_attr"):
-            return self.backend.facts_for_attr(attr)
+        """Raw fact tuples, optionally narrowed to one attribute or to the
+        attributes `attrs` (the reference's index selection,
+        src/unifydb/storage.clj:31-46 — here either the union of
+        backend-provided single-attribute projections or one pushed-down
+        `a IN (...)` filter); `pin` reads that log version."""
+        if attr is not None:
+            attrs = [attr]
+        if attrs is not None and hasattr(self.backend, "facts_for_attr"):
+            # a table fact store projects each attribute from its own
+            # table; its whole-schema facts_df() unions every table
+            return functools.reduce(
+                DataFrame.unionByName, map(self.backend.facts_for_attr, attrs)
+            )
         if pin is None:
             df = self.backend.facts_df()
         else:
             df = self.backend.facts_df(as_of_version=pin.version)
-        if attr is not None:
-            df = df.filter(F.col("a") == attr)
+        if attrs is not None:
+            df = df.filter(F.col("a").isin(*attrs))
         return df
 
     def snapshot(
         self,
         tx_id: Union[int, str] = LATEST,
         historical: bool = False,
-        attr: Optional[str] = None,
-        pin: Optional["Pin"] = None,
+        attrs: Optional[Sequence[str]] = None,
+        pin: Optional[Pin] = None,
     ) -> DataFrame:
         """The visible-facts view: tx visibility filter + retraction collapse
         + cardinality resolution (reference src/unifydb/query.clj:132-204 and
@@ -376,10 +399,13 @@ class FactStore:
 
         A commit-log store is read at one log version (`pin`, else its
         head now). A non-clean, non-historical read there filters the
-        collapsed snapshot of (version, tx) to `attr`: the snapshot is
-        built once, persisted on the executors and kept in a small LRU,
-        and every tx at or past the version's newest tx shares the
-        LATEST one. Other backends run the windows inline on the slice.
+        collapsed snapshot of (version, tx) to the attributes `attrs`: the
+        snapshot is built once, persisted on the executors and kept in a
+        small LRU, and every tx at or past the version's newest tx shares
+        the LATEST one. Other backends run the windows inline on the
+        slice (`facts`): both windows partition by attribute, so one
+        collapse of an `attrs` slice equals the union of per-attribute
+        collapses.
 
         Semantics notes vs the reference:
          - a value is live iff the most recent fact for (e,a,value) is an
@@ -402,15 +428,15 @@ class FactStore:
             df = self._snapshots.get(
                 (pin.version, tx_id), lambda: self._build_snapshot(tx_id, pin)
             )
-            return df if attr is None else df.filter(F.col("a") == attr)
-        df = self.facts(attr=attr, pin=pin)
+            return df if attrs is None else df.filter(F.col("a").isin(*attrs))
+        df = self.facts(pin=pin, attrs=attrs)
         if tx_id != LATEST:
             df = df.filter(F.col("tx") <= F.lit(int(tx_id)))
         if historical or src.clean:
             return df
         return _collapse(df, src.has_retractions, self.cardinality_many_attrs(tx_id))
 
-    def _build_snapshot(self, tx_id: Union[int, str], pin: "Pin") -> DataFrame:
+    def _build_snapshot(self, tx_id: Union[int, str], pin: Pin) -> DataFrame:
         """The collapsed snapshot of log version `pin` as of `tx_id`,
         persisted and materialized on the executors (never collected)."""
         df = self.facts(pin=pin)
@@ -522,7 +548,7 @@ class FactStore:
         )
 
     def cardinality_many_attrs(
-        self, tx_id: Union[int, str] = LATEST, pin: Optional["Pin"] = None
+        self, tx_id: Union[int, str] = LATEST, pin: Optional[Pin] = None
     ) -> frozenset:
         """Attributes declared :cardinality/many via schema facts (reference
         src/unifydb/schema.clj:5-15). The schema rows are collected once per
@@ -551,47 +577,49 @@ class FactStore:
             if c in (CARDINALITY_MANY, ":" + CARDINALITY_MANY) and e in schema_attr_of
         )
 
-    def attr_types(self, pin: Optional["Pin"] = None) -> dict[str, set]:
+    def attr_types(self, pin: Optional[Pin] = None) -> dict[str, set]:
         """attr -> set of v_type tags seen; drives the compiler's static
         type inference for value-position variables."""
         return self._meta("types", pin if pin is not None else self.pin())
 
-    def _meta(self, kind: str, pin: Optional["Pin"]):
+    def _meta(self, kind: str, pin: Optional[Pin]):
         """Per store version, kept in a small LRU: the schema rows
         (`kind` "rows": the few schema/cardinality facts as (e, a, v_str,
-        tx, added)) or the attr types ("types"). A log version reads both
-        in one aggregate job; other backends answer attr types themselves."""
+        tx, added)) or the attr types ("types"). A log version answers
+        both from its pin (the head manifest carries them, no job); only a
+        head whose lineage predates those fields reads them in one
+        aggregate job (`_log_meta`). Other backends answer attr types
+        themselves and collect their schema rows."""
         if pin is not None:
-            rows, types = self._metas.get(pin.version, lambda: self._log_meta(pin))
+            rows, types = self._metas.get(
+                pin.version,
+                lambda: _meta_of(*pin.meta) if pin.meta is not None else self._log_meta(pin),
+            )
             return rows if kind == "rows" else types
         version = getattr(self.backend, "_version", 0)
         if kind == "types":
             return self._metas.get(("types", version), self.backend.attr_types)
 
         def collect() -> list:
-            df = self.facts(SCHEMA_ATTR).unionByName(self.facts(CARDINALITY_ATTR))
-            return [tuple(r) for r in df.select(*_SCHEMA_ROW).collect()]
+            df = self.facts(attrs=META_ATTRS).select(*_SCHEMA_ROW)
+            return [tuple(r) for r in df.collect()]
 
         return self._metas.get(("rows", version), collect)
 
-    def _log_meta(self, pin: "Pin") -> tuple:
+    def _log_meta(self, pin: Pin) -> tuple:
+        """Schema rows and attr types of a log version whose head does not
+        carry them, by one aggregate over its facts."""
         row = (
             self.facts(pin=pin)
             .agg(
                 F.collect_list(
-                    F.when(
-                        F.col("a").isin(SCHEMA_ATTR, CARDINALITY_ATTR),
-                        F.struct(*_SCHEMA_ROW),
-                    )
+                    F.when(F.col("a").isin(*META_ATTRS), F.struct(*_SCHEMA_ROW))
                 ).alias("rows"),
                 F.collect_set(F.struct("a", "v_type")).alias("types"),
             )
             .collect()[0]
         )
-        types: dict[str, set] = {}
-        for a, t in row["types"]:
-            types.setdefault(a, set()).add(t)
-        return [tuple(r) for r in row["rows"]], types
+        return _meta_of(row["rows"], row["types"])
 
     # ---- writes ----------------------------------------------------------
 

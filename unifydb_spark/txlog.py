@@ -49,9 +49,12 @@ protocol requirement — a cluster deployment points the staging write at
 the table's object prefix and commits the written keys directly).
 
 Each manifest carries *cumulative* stats (``max_id``, ``latest_tx``,
-``any_retraction``, distinct-tx bound, per-stream last committed epoch),
-so id allocation, the `clean`-fastpath decision and streaming
-exactly-once dedup are O(1) manifest reads — no Spark job, which
+``any_retraction``, distinct-tx bound, per-stream last committed epoch,
+``attr_types`` — the (attribute, value type) pairs — and
+``schema_rows`` — every schema/cardinality fact as
+``[e, a, v_str, tx, added]``), so id allocation, the `clean`-fastpath
+decision, the compiler's attr types, the cardinality-many set and
+streaming exactly-once dedup are O(1) manifest reads — no Spark job, which
 also makes the whole WRITE path runnable without a SparkSession (the
 cross-process tests in tests/test_txlog.py exploit this: child writer
 processes are plain Python; only the verifying reader needs a JVM).
@@ -80,15 +83,24 @@ from typing import Iterable, NamedTuple, Optional
 _MANIFEST_DIGITS = 14
 
 
+# Attributes whose facts a manifest carries as `schema_rows` (the
+# store's SCHEMA_ATTR and CARDINALITY_ATTR).
+META_ATTRS = ("unifydb/schema", "unifydb/cardinality")
+
+
 class Pin(NamedTuple):
     """One log version and the head stats a read of it needs: the
-    `clean` fast-path flag, whether any retraction exists, and the
-    newest tx (an as-of bound at or past it filters nothing)."""
+    `clean` fast-path flag, whether any retraction exists, the newest tx
+    (an as-of bound at or past it filters nothing), and `meta`: the
+    version's schema rows ((e, a, v_str, tx, added) tuples) and
+    (attribute, value type) pairs, or None when the head's lineage
+    predates those fields (a log written by older code)."""
 
     version: int
     clean: bool
     has_retractions: bool
     latest_tx: int
+    meta: Optional[tuple] = None
 
 
 def _arrow_fact_schema():
@@ -236,15 +248,17 @@ class LogParquetBackend:
 
     The only durable parquet fact backend. Satisfies the backend
     protocol of ``store.MemoryBackend`` (append / facts_df / clean /
-    has_retractions / max_id / latest_tx; attr types come from
-    ``FactStore``'s one-job read per log version) plus:
+    has_retractions / max_id / latest_tx; attr types and schema rows
+    ride the head manifest and reach ``FactStore`` through :meth:`pin`,
+    with no job) plus:
 
     - :meth:`commit_rows` — compare-and-swap append used by
       ``FactStore.transact`` for cross-process id-allocation safety;
     - :meth:`log_version` / ``facts_df(as_of_version=...)`` —
       log-versioned time travel;
-    - :meth:`pin` — the head's version and read stats from one manifest
-      read, which a database value pins a query's reads to;
+    - :meth:`pin` — the head's version and read stats (attr types and
+      schema rows included) from one manifest read, which a database
+      value pins a query's reads to;
     - :meth:`bulk_append_df` — executor-side big appends (manifest commit
       of Spark-written files), with optional per-stream epoch tracking
       for exactly-once streaming ingest (streaming/stream.py
@@ -374,9 +388,16 @@ class LogParquetBackend:
         it (``facts_df(as_of_version=pin.version)``)."""
         v, head = self._reread(self._head_at, "head")
         if head is None:
-            return Pin(v, True, False, 0)
+            return Pin(v, True, False, 0, ((), ()))
         retr = bool(head["any_retraction"])
-        return Pin(v, not retr and head["tx_state"] != "multi", retr, head["latest_tx"])
+        meta = None
+        if "attr_types" in head:
+            meta = (
+                tuple(map(tuple, head["schema_rows"])),
+                tuple((a, t) for a, ts in head["attr_types"].items() for t in ts),
+            )
+        clean = not retr and head["tx_state"] != "multi"
+        return Pin(v, clean, retr, head["latest_tx"], meta)
 
     def _try_commit(self, manifest: dict, version: int) -> bool:
         """Atomically publish `manifest` as log version `version` via the
@@ -448,6 +469,19 @@ class LogParquetBackend:
         if stream_epoch is not None:
             sid, epoch = stream_epoch
             streams[sid] = max(int(epoch), streams.get(sid, -1))
+        # attr types and schema rows fold forward only from a parent that
+        # has them: a lineage that predates the fields keeps them absent
+        # and its readers scan (FactStore._log_meta)
+        meta = {}
+        if parent is None or "attr_types" in parent:
+            types = {a: set(ts) for a, ts in (parent or {}).get("attr_types", {}).items()}
+            for a, t in rows_stats["types"]:
+                types.setdefault(a, set()).add(t)
+            meta = {
+                "attr_types": {a: sorted(types[a]) for a in sorted(types)},
+                "schema_rows": (parent["schema_rows"] if parent else [])
+                + [list(r) for r in rows_stats["schema_rows"]],
+            }
         return {
             "files": files,
             # rows THIS commit added (None when unknown — e.g. a
@@ -460,6 +494,7 @@ class LogParquetBackend:
             "any_retraction": p_retr or rows_stats["any_retraction"],
             "tx_state": tx_state,
             "streams": streams,
+            **meta,
             "base": parent.get("base", 0) if parent else 0,
             "writer": self._writer,
             "ts_millis": int(time.time() * 1000),
@@ -467,19 +502,24 @@ class LogParquetBackend:
 
     @staticmethod
     def _rows_stats(rows: list[tuple]) -> dict:
-        mx, mtx, retr, txs = 0, 0, False, set()
+        mx, mtx, retr, txs, types, schema_rows = 0, 0, False, set(), set(), []
         for r in rows:
             mx = max(mx, r[0], r[10], r[7] or 0)
             mtx = max(mtx, r[10])
             txs.add(r[10])
             if not r[11]:
                 retr = True
+            types.add((r[1], r[2]))
+            if r[1] in META_ATTRS:
+                schema_rows.append((r[0], r[1], r[5], r[10], r[11]))
         return {
             "max_id": mx,
             "latest_tx": mtx,
             "any_retraction": retr,
             "txs": sorted(txs),
             "n": len(rows),
+            "types": sorted(types),
+            "schema_rows": schema_rows,
         }
 
     def _write_data_file(self, rows: list[tuple]) -> dict:
@@ -625,6 +665,13 @@ class LogParquetBackend:
             F.min("added").alias("all_added"),
             F.collect_set("tx").alias("txs"),
             F.count(F.lit(1)).alias("n"),
+            F.collect_set(F.struct("a", "v_type")).alias("types"),
+            F.collect_list(
+                F.when(
+                    F.col("a").isin(*META_ATTRS),
+                    F.struct("e", "a", "v_str", "tx", "added"),
+                )
+            ).alias("schema_rows"),
         ).write.parquet(staging)
         agg = obs.get
         if agg["n"] == 0:
@@ -648,6 +695,8 @@ class LogParquetBackend:
             "any_retraction": not bool(agg["all_added"]) if agg["n"] else False,
             "txs": sorted(txs)[:2],
             "n": int(agg["n"]),
+            "types": sorted(map(tuple, agg["types"] or [])),
+            "schema_rows": [tuple(r) for r in agg["schema_rows"] or []],
         }
 
         def build(head_v: int, head: Optional[dict]) -> Optional[dict]:
@@ -841,9 +890,9 @@ class LogParquetBackend:
         commit, never history rewriting — every version including the
         rolled-back ones stays time-travel readable until vacuumed).
 
-        Stats in the restore manifest: `any_retraction`/`tx_state`
-        describe the restored VISIBLE facts (they come from the target
-        version), while `max_id`/`latest_tx` keep the head's high-water
+        Stats in the restore manifest: `any_retraction`/`tx_state`/
+        `attr_types`/`schema_rows` describe the restored VISIBLE facts
+        (they come from the target version), while `max_id`/`latest_tx` keep the head's high-water
         marks — id/tx allocation is monotone across a restore, so facts
         transacted afterwards can never collide with rolled-back ids
         that remain readable in history. Concurrent commits that land
@@ -912,7 +961,7 @@ class LogParquetBackend:
         files = self._live_entries(as_of_version=version)
 
         def build(head_v: int, head: dict) -> dict:
-            return dict(
+            manifest = dict(
                 head,
                 files=files,
                 rows=None,
@@ -923,6 +972,13 @@ class LogParquetBackend:
                 writer=self._writer,
                 ts_millis=int(time.time() * 1000),
             )
+            # the restored facts' attr types and schema rows: the target's,
+            # or none (readers scan) when its lineage predates them
+            for k in ("attr_types", "schema_rows"):
+                manifest.pop(k, None)
+                if k in target:
+                    manifest[k] = target[k]
+            return manifest
 
         return files, build
 
