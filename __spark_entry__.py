@@ -56,7 +56,7 @@ def _events_engine(spark: SparkSession, sf_dir: str):
             ev.event_id.cast("long").alias("tx"),
             F.lit(True).alias("added"),
         )
-        backend = DataFrameBackend(spark, facts, clean=False, has_retractions=False)
+        backend = DataFrameBackend(spark, facts)
         _ENGINES[key] = Engine(spark, FactStore(spark, backend=backend))
     return _ENGINES[key]
 
@@ -1015,7 +1015,7 @@ def _seq_engine(spark, sf_dir):
             F.lit(0).cast("long").alias("tx"),
             F.lit(True).alias("added"),
         )
-        backend = DataFrameBackend(spark, facts, clean=True)
+        backend = DataFrameBackend(spark, facts)
         _ENGINES[key] = Engine(spark, FactStore(spark, backend=backend))
     return _ENGINES[key]
 
@@ -1078,10 +1078,7 @@ def _retract_engine(spark, sf_dir):
             ],
             schema=FACT_SCHEMA,
         )
-        backend = DataFrameBackend(
-            spark, facts.unionByName(schema_rows), clean=False,
-            has_retractions=True,
-        )
+        backend = DataFrameBackend(spark, facts.unionByName(schema_rows))
         _ENGINES[key] = Engine(spark, FactStore(spark, backend=backend))
     return _ENGINES[key]
 

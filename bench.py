@@ -745,9 +745,15 @@ def _write_ref(times: dict, sf, jobcounts: dict, merge: bool = False) -> None:
     medians on a shared host where a 7-minute quiet window exists but a
     40-minute one does not. The subset run passes the SAME canary + tail
     gates; each merged entry records its own capture commit in
-    `entry_git` so source-drift adjudication stays per-entry-honest."""
+    `entry_git` so source-drift adjudication stays per-entry-honest.
+
+    The reference records the core count it ran at (`cpus`, from
+    SPARK_GRAFT_CPUS; a reference without it ran at 32). A merge at
+    another core count keeps its job counts (plan shape) but not its
+    medians: wall-clock at local[4] does not compare with local[32]."""
     if os.environ.get("SPARK_GRAFT_WRITE_REF", "1") == "0":
         return
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     head = (_git(["rev-parse", "HEAD"]) or "").strip() or None
     now = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
     if merge:
@@ -755,20 +761,22 @@ def _write_ref(times: dict, sf, jobcounts: dict, merge: bool = False) -> None:
             with open(REF_PATH) as f:
                 ref = json.load(f)
         except (OSError, ValueError):
-            ref = {"git": head, "sf": sf, "captured": now, "queries": {}}
+            ref = {"git": head, "sf": sf, "cpus": cpus, "captured": now}
         if ref.get("sf") is not None and sf is not None and ref["sf"] != sf:
             return
-        ref.setdefault("queries", {}).update(times)
         ref.setdefault("jobs", {}).update(jobcounts)
-        eg = ref.setdefault("entry_git", {})
-        ec = ref.setdefault("entry_captured", {})
-        for name in times:
-            eg[name] = head
-            ec[name] = now
+        if ref.get("cpus", 32) == cpus:
+            ref.setdefault("queries", {}).update(times)
+            eg = ref.setdefault("entry_git", {})
+            ec = ref.setdefault("entry_captured", {})
+            for name in times:
+                eg[name] = head
+                ec[name] = now
     else:
         ref = {
             "git": head,
             "sf": sf,
+            "cpus": cpus,
             "captured": now,
             "queries": times,
             "jobs": jobcounts,

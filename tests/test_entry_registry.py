@@ -145,6 +145,38 @@ def test_bench_regression_adjudication(tmp_path):
     )
 
 
+def test_bench_ref_merge_keeps_medians_of_its_own_core_count(tmp_path, monkeypatch):
+    """A reference records its core count (one without it ran at 32); a
+    subset merge at another core count folds its job counts, never its
+    medians."""
+    import json
+
+    spec = importlib.util.spec_from_file_location("bench", REPO / "bench.py")
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+    ref = tmp_path / "ref.json"
+    bench.REF_PATH = str(ref)
+    monkeypatch.delenv("SPARK_GRAFT_WRITE_REF", raising=False)
+    old = {"git": "x", "sf": 0.1, "queries": {"q09": 2.0}, "jobs": {"q09": 27}}
+    ref.write_text(json.dumps(old))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    times, jobs = {"q09": 9.0, "r137": 5.0}, {"q09": 26, "r137": 71}
+    bench._write_ref(times, 0.1, jobs, merge=True)
+    got = json.loads(ref.read_text())
+    assert got["queries"] == {"q09": 2.0} and "entry_git" not in got
+    assert got["jobs"] == {"q09": 26, "r137": 71}
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
+    bench._write_ref({"q09": 3.0}, 0.1, {"q09": 27}, merge=True)
+    got = json.loads(ref.read_text())
+    assert got["queries"] == {"q09": 3.0} and "q09" in got["entry_git"]
+    # a full capture records its core count; merges then compare to it
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
+    bench._write_ref({"q09": 4.0}, 0.1, {"q09": 27})
+    assert json.loads(ref.read_text())["cpus"] == 8
+    bench._write_ref({"q09": 5.0}, 0.1, {"q09": 27}, merge=True)
+    assert json.loads(ref.read_text())["queries"] == {"q09": 5.0}
+
+
 def test_scale_sf1_count_pinned_to_registry():
     """VERDICT r10 ask #3: SCALE_SF1.md's §3b coverage claim must track
     the registry size — the artifact can never silently go stale against
@@ -159,13 +191,16 @@ def test_scale_sf1_count_pinned_to_registry():
     )
 
 
-def test_bench_ref_subset_merge(tmp_path):
+def test_bench_ref_subset_merge(tmp_path, monkeypatch):
     """Round-13: a quotable SUBSET capture (SPARK_GRAFT_BENCH_ONLY)
     merges its medians into the existing reference — other entries are
     untouched, and each merged entry records its own capture commit in
     entry_git so source-drift adjudication stays per-entry-honest."""
     import json
 
+    # the capture runs at the reference's core count (a reference
+    # without `cpus` ran at 32)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
     spec = importlib.util.spec_from_file_location("bench", REPO / "bench.py")
     bench = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench)

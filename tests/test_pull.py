@@ -179,7 +179,8 @@ def test_nested_pull_job_count_on_a_warm_snapshot(spark, log_and_memory):
     snapshot: each level filters the cached snapshot once to the spec's
     attributes, and neither pull semi-join deduplicates its ids first.
     The count is copied from a run (it was 33 when each level unioned
-    one snapshot filter per attribute and deduplicated both id sets)."""
+    one snapshot filter per attribute and deduplicated both id sets, and
+    17 while the snapshot was hash-partitioned on (e, a) instead of e)."""
     log, _ = log_and_memory
     log.query_rows(NESTED)  # builds the snapshot of the head version
     sc = spark.sparkContext
@@ -188,4 +189,4 @@ def test_nested_pull_job_count_on_a_warm_snapshot(spark, log_and_memory):
         log.query_rows(NESTED)
     finally:
         sc.setJobGroup("", "")
-    assert len(sc.statusTracker().getJobIdsForGroup("pull-warm")) == 17
+    assert len(sc.statusTracker().getJobIdsForGroup("pull-warm")) == 12

@@ -1,14 +1,16 @@
-"""The collapsed-snapshot cache of a commit-log store.
+"""The collapsed-snapshot cache of a commit-log store, and the pin every
+backend answers.
 
 A non-clean, non-historical read of a `LogParquetBackend` store filters
 one persisted snapshot per (log version, tx); every other backend runs
-the same `_collapse` windows inline per pattern. The differential test
-checks both paths against an independent pure-Python model of the
-visibility rules over seeded small histories; the lifecycle tests check
-the cache's bound, its single build per key, and that a request's
+the same `_collapse` windows inline per pattern. The differential tests
+check both paths, and every backend's `pin()`, against an independent
+pure-Python model over seeded small histories; the lifecycle tests
+check the cache's bound, its single build per key, and that a request's
 `persist_scope` leaves shared snapshots alone.
 """
 
+import json
 import random
 import threading
 import time
@@ -17,6 +19,7 @@ import pytest
 
 from unifydb_spark.engine import Engine
 from unifydb_spark.resources import persist_scope
+from unifydb_spark.sources.jdbc import JdbcBackend
 from unifydb_spark.store import (
     LATEST,
     SNAPSHOT_CACHE_SIZE,
@@ -67,12 +70,8 @@ def history(seed: int, n_tx: int = 4) -> list:
     return txs
 
 
-def model(facts: list, tx) -> set:
-    """{(e, a, v)} visible as of `tx`: the latest fact per (e, a, v) must
-    be an assert (a retract outranks an assert in the same tx); an
-    attribute is cardinality-many while a live schema entity names it
-    and carries a live cardinality/many; otherwise only the values of the
-    latest live tx per (e, a) stay."""
+def _live(facts: list, tx) -> dict:
+    """{(e, a, v): tx of its latest fact} of the values live as of `tx`."""
     last = {}
     for e, a, v, t, added in facts:
         if tx != LATEST and t > tx:
@@ -80,12 +79,22 @@ def model(facts: list, tx) -> set:
         k = (e, a, v)
         if k not in last or (t, not added) > (last[k][0], not last[k][1]):
             last[k] = (t, added)
-    live = {k: t for k, (t, added) in last.items() if added}
-    many = {
-        v
-        for (e, a, v) in live
-        if a == SCHEMA and (e, CARD, MANY) in live
-    }
+    return {k: t for k, (t, added) in last.items() if added}
+
+
+def _many(live: dict) -> set:
+    """The attributes a live schema entity declares cardinality-many."""
+    return {v for (e, a, v) in live if a == SCHEMA and (e, CARD, MANY) in live}
+
+
+def model(facts: list, tx) -> set:
+    """{(e, a, v)} visible as of `tx`: the latest fact per (e, a, v) must
+    be an assert (a retract outranks an assert in the same tx); an
+    attribute is cardinality-many while a live schema entity names it
+    and carries a live cardinality/many; otherwise only the values of the
+    latest live tx per (e, a) stay."""
+    live = _live(facts, tx)
+    many = _many(live)
     newest = {}
     for (e, a, v), t in live.items():
         newest[(e, a)] = max(newest.get((e, a), t), t)
@@ -150,6 +159,127 @@ def test_cardinality_undeclared_in_its_own_tx_is_one(spark, tmp_path):
         ],
     ]
     _check(spark, str(tmp_path / "facts"), txs)
+
+
+# ---- one pin from every backend ---------------------------------------
+
+
+def model_pin(facts: list, n_tx: int) -> dict:
+    """The read stats of `facts` by a pure-Python model: what every
+    backend's pin, and the store's meta read through it, must answer
+    (the cardinality-many set at every tx included)."""
+    txs = {f[3] for f in facts}
+    retr = any(not f[4] for f in facts)
+    types = {}
+    for _e, a, v, _t, _added in facts:
+        types.setdefault(a, set()).add("string" if isinstance(v, str) else "long")
+    return {
+        "clean": not retr and len(txs) <= 1,
+        "has_retractions": retr,
+        "latest_tx": max(txs, default=0),
+        "max_id": max([f[0] for f in facts] + list(txs), default=0),
+        "schema_rows": sorted(f for f in facts if f[1] in (SCHEMA, CARD)),
+        "attr_types": types,
+        "many": {t: _many(_live(facts, t)) for t in [LATEST, *range(n_tx + 1)]},
+    }
+
+
+def store_pin(store, n_tx: int) -> dict:
+    pin = store.pin()
+    rows, types = store._meta(pin)
+    return {
+        "clean": pin.clean,
+        "has_retractions": pin.has_retractions,
+        "latest_tx": pin.latest_tx,
+        "max_id": pin.max_id,
+        "schema_rows": sorted(rows),
+        "attr_types": {a: set(ts) for a, ts in types.items()},
+        "many": {
+            t: set(store.cardinality_many_attrs(t, pin=pin))
+            for t in [LATEST, *range(n_tx + 1)]
+        },
+    }
+
+
+def _strip_head_meta(backend, version):
+    """Make a log head look written by code that predates head meta."""
+    m = backend._read_manifest(version)
+    del m["attr_types"], m["schema_rows"]
+    with open(backend._manifest_path(version), "w") as f:
+        json.dump(m, f)
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_every_backend_pins_the_model_stats(spark, tmp_path, seed):
+    txs = history(seed)
+    n = len(txs)
+    mem = FactStore(spark)
+    log = FactStore(spark, LogParquetBackend(spark, str(tmp_path / "log")))
+    legacy = FactStore(spark, LogParquetBackend(spark, str(tmp_path / "legacy")))
+    jdbc = FactStore(
+        spark,
+        JdbcBackend(
+            spark,
+            f"jdbc:derby:{tmp_path / 'derby'};create=true",
+            driver="org.apache.derby.jdbc.EmbeddedDriver",
+        ),
+    )
+    facts = []
+    for k in range(n + 1):
+        if k:
+            for store in (mem, log, legacy, jdbc):
+                store.seed(txs[k - 1])  # one store version per tx
+            facts += txs[k - 1]
+            if k == 1:  # every later head folds from a head without meta
+                _strip_head_meta(legacy.backend, 1)
+        frame = FactStore(spark, DataFrameBackend(spark, mem.facts()))
+        want = model_pin(facts, n)
+        for store in (mem, log, legacy, frame, jdbc):
+            assert store_pin(store, n) == want, (k, type(store.backend).__name__)
+        assert log.pin().version == legacy.pin().version == k
+        assert (legacy.pin().meta is None) == (k > 0)
+        assert {mem.pin().version, frame.pin().version, jdbc.pin().version} == {None}
+
+
+def test_unversioned_read_takes_stats_after_its_facts(spark):
+    """A backend without log versions reads its current facts, so a value
+    pinned before the store's first retraction must not decide the
+    collapse of facts read after it."""
+    store = FactStore(spark)
+    eng = Engine(spark, store)
+    e = eng.transact([["add", "x", ":tag", "a"]])["tempids"]["x"]
+    db = store.db().pinned()
+    assert db.pin.clean
+    eng.transact([["retract", e, ":tag", "a"]])
+    assert db.visible_facts(attr="tag").count() == 0
+
+
+def _jobs(spark, group, fn) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup("", "")
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pin_job_counts(spark):
+    """A store's stats read through its pin: no job on an in-memory
+    store; one observed aggregate (one job), once, on a DataFrame store
+    (job counts taken from a run)."""
+    mem = FactStore(spark)
+
+    def read(store):
+        store.attr_types()
+        store.cardinality_many_attrs()
+
+    for i, facts in enumerate(history(7)):
+        mem.seed(facts)
+        assert _jobs(spark, f"pin-mem-{i}", lambda: read(mem)) == 0
+    frame = FactStore(spark, DataFrameBackend(spark, mem.facts()))
+    assert _jobs(spark, "pin-frame-first", lambda: read(frame)) == 1
+    assert _jobs(spark, "pin-frame-again", lambda: read(frame)) == 0
 
 
 # ---- lifecycle ---------------------------------------------------------

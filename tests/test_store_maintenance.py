@@ -69,8 +69,8 @@ def test_materialize_snapshot(spark, tmp_path):
     eng.transact([[":unifydb/retract", eid, ":color", "red"],
                   ["add", eid, ":color", "blue"]])
     snap = store.materialize_snapshot(str(tmp_path / "snap"))
-    snap_tx = snap.backend.latest_tx()
-    assert snap.backend.clean  # no retractions survive materialization
+    snap_tx = snap.pin().latest_tx
+    assert snap.pin().clean  # no retractions survive materialization
     with pytest.raises(FileExistsError):  # an existing path is refused
         store.materialize_snapshot(str(tmp_path / "snap"))
     got = Engine(spark, snap).query_rows(

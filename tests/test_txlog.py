@@ -26,7 +26,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from unifydb_spark.engine import Engine
-from unifydb_spark.store import FactStore, _meta_of
+from unifydb_spark.store import FactStore
 from unifydb_spark.txlog import (
     CommitConflict,
     ConditionalPutProtocol,
@@ -192,7 +192,7 @@ def test_cross_process_writers_serialize(spark, tmp_path, protocol_name):
         """
         import sys, time
         sys.path.insert(0, sys.argv[4])
-        from unifydb_spark.store import FactStore, _meta_of
+        from unifydb_spark.store import FactStore
         from unifydb_spark import txlog
 
         tag, path, proto_cls = sys.argv[1], sys.argv[2], sys.argv[3]
@@ -254,8 +254,8 @@ def test_bulk_append_df_atomic(spark, tmp_path):
     assert backend.bulk_append_df(df)
     assert backend.log_version() == 1
     assert backend.facts_df().count() == 100
-    assert backend.max_id() == 100
-    assert backend.clean  # single tx, no retractions -> snapshot fast path
+    assert backend.pin().max_id == 100
+    assert backend.pin().clean  # single tx, no retractions -> snapshot fast path
 
 
 def test_bulk_append_df_empty_input(spark, tmp_path):
@@ -274,6 +274,30 @@ def test_bulk_append_df_empty_input(spark, tmp_path):
     assert backend.log_version() == 1
     assert backend.last_stream_epoch("s1") == 0
     assert backend.facts_df().count() == 0
+
+
+@pytest.mark.parametrize("n_tx", [0, 1, 40])
+def test_bulk_append_df_bounds_its_tx_stats(spark, tmp_path, n_tx):
+    """The bulk-append manifest stats come from min(tx)/max(tx), so the
+    driver never receives a tx per row: no rows keep the parent's
+    tx_state, one tx keeps it exact, more collapse to "multi"."""
+    from unifydb_spark.values import FACT_SCHEMA
+
+    backend = LogParquetBackend(spark, str(tmp_path / "facts"))
+    rows = [
+        (i, "n", "long", i, None, None, None, None, None, None, tx, True)
+        for tx in range(100, 100 + n_tx)
+        for i in range(1, 4)
+    ]
+    df = spark.createDataFrame(rows, schema=FACT_SCHEMA)
+    assert backend.bulk_append_df(df, stream_epoch=("s", 0))
+    head = backend._read_manifest(1)
+    want = {0: None, 1: 100}.get(n_tx, "multi")
+    assert head["tx_state"] == want and head["rows"] == len(rows)
+    pin = backend.pin()
+    assert pin.clean == (n_tx <= 1) and not pin.has_retractions
+    assert pin.latest_tx == (99 + n_tx if n_tx else 0)
+    assert pin.max_id == (99 + n_tx if n_tx else 0)
 
 
 def test_bulk_append_stream_epoch_idempotent(spark, tmp_path):
@@ -367,7 +391,7 @@ def test_checkpoint_rebases_concurrent_commit(spark, tmp_path, protocol_name):
     )
     assert vals == [1, 2]
     # cumulative stats adopted from the raced head: max_id covers writer b
-    assert head["max_id"] == backend.max_id() >= 4
+    assert head["max_id"] == backend.pin().max_id >= 4
     # history intact: version 1 still reads exactly the first transaction
     assert backend.facts_df(as_of_version=1).select("tx").distinct().count() == 1
 
@@ -380,9 +404,9 @@ def test_manifest_stats_track_clean_flag(spark, tmp_path):
     # one transact = one tx: single tx, no retractions -> clean fast path
     head = store.backend._head()
     assert head["tx_state"] != "multi" and not head["any_retraction"]
-    assert store.backend.clean
+    assert store.pin().clean
     eng.transact([[":unifydb/retract", r["tempids"]["x"], ":n", 1]])
-    assert store.backend.has_retractions and not store.backend.clean
+    assert store.pin().has_retractions and not store.pin().clean
 
 
 def test_last_checkpoint_pointer_bounds_manifest_reads(spark, tmp_path):
@@ -483,8 +507,8 @@ def test_restore_rolls_head_back_without_rewriting_history(spark, tmp_path):
         eng.transact([["add", f"e{val}", ":n", val]])
     backend = store.backend
     assert backend.log_version() == 3
-    high_tx = backend.latest_tx()
-    high_id = backend.max_id()
+    high_tx = backend.pin().latest_tx
+    high_id = backend.pin().max_id
 
     rv = backend.restore(1)
     assert rv == 4
@@ -493,7 +517,7 @@ def test_restore_rolls_head_back_without_rewriting_history(spark, tmp_path):
     # rolled-back versions still time-travel readable
     assert backend.facts_df(as_of_version=3).filter("a = 'n'").count() == 3
     # allocation marks kept the head's high-water values
-    assert backend.max_id() == high_id and backend.latest_tx() == high_tx
+    assert backend.pin().max_id == high_id and backend.pin().latest_tx == high_tx
     # a new transaction lands above the rolled-back ids, no collision
     rep = eng.transact([["add", "e9", ":n", 9]])
     assert rep["tempids"]["e9"] > high_id
@@ -710,7 +734,7 @@ def test_cross_process_writers_with_parent_checkpoints(spark, tmp_path):
         """
         import os, sys, time
         sys.path.insert(0, sys.argv[4])
-        from unifydb_spark.store import FactStore, _meta_of
+        from unifydb_spark.store import FactStore
         from unifydb_spark import txlog
 
         tag, path, marker = sys.argv[1], sys.argv[2], sys.argv[3]
@@ -1110,7 +1134,7 @@ def _assert_head_meta_matches_scan(store):
     of the same version's facts."""
     pin = store.pin()
     assert pin.meta is not None, pin
-    assert _norm_meta(_meta_of(*pin.meta)) == _norm_meta(store._log_meta(pin))
+    assert _norm_meta(pin.meta) == _norm_meta(store._log_meta(pin))
 
 
 def _jobs_in_group(spark, group, fn):

@@ -557,7 +557,7 @@ def _group_pivots(db: Db, clauses: list) -> list:
         backend is None
         or not getattr(backend, "supports_pivot", False)
         or db.historical
-        or (db.tx_id != "latest" and db.tx_id < backend.latest_tx())
+        or (db.tx_id != "latest" and db.tx_id < db.pinned().pin.latest_tx)
     ):
         return clauses
     many = db.cardinality_many_attrs()

@@ -21,6 +21,7 @@ from typing import Iterable, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from unifydb_spark.txlog import Pin, aggregate_stats
 from unifydb_spark.values import FACT_SCHEMA
 
 # Spark's Derby dialect maps StringType to CLOB, which Derby's JDBC driver
@@ -54,7 +55,7 @@ class JdbcBackend:
             self.properties["driver"] = driver
         self.read_partitions = read_partitions
         self._version = 0
-        self._stats: Optional[tuple] = None
+        self._pin: Optional[tuple] = None  # (version, Pin)
         self._exists = False
 
     def _ensure_table(self) -> None:
@@ -129,16 +130,9 @@ class JdbcBackend:
         self._version += 1
 
     def facts_df(self) -> DataFrame:
-        if not self._exists:
-            try:
-                probe = self.spark.read.jdbc(
-                    self.url, self.table, properties=self.properties
-                )
-                probe.schema  # force resolution
-                self._exists = True
-            except Exception:
-                return self.spark.createDataFrame([], schema=FACT_SCHEMA)
-        hi = max(self.latest_tx(), 1)
+        if not self._probe():
+            return self.spark.createDataFrame([], schema=FACT_SCHEMA)
+        hi = max(self.pin().latest_tx, 1)
         df = self.spark.read.jdbc(
             self.url,
             self.table,
@@ -156,51 +150,21 @@ class JdbcBackend:
     def _raw(self) -> DataFrame:
         return self.spark.read.jdbc(self.url, self.table, properties=self.properties)
 
-    def _compute_stats(self) -> tuple:
-        if self._stats is None or self._stats[0] != self._version:
-            if not self._exists:
-                try:
-                    self._raw().schema
-                    self._exists = True
-                except Exception:
-                    self._stats = (self._version, 0, 0, True)
-                    return self._stats
-            row = self._raw().agg(
-                F.greatest(
-                    F.max("e"), F.max("tx"), F.coalesce(F.max("v_ref"), F.lit(0))
-                ).alias("mx"),
-                F.max("tx").alias("mtx"),
-                F.min("added").alias("all_added"),
-                F.countDistinct("tx").alias("ntx"),
-            ).collect()[0]
-            self._stats = (
-                self._version,
-                row["mx"] or 0,
-                row["mtx"] or 0,
-                bool(row["all_added"]) and (row["ntx"] or 0) <= 1,
-            )
-        return self._stats
-
-    @property
-    def clean(self) -> bool:
-        return self._compute_stats()[3]
-
-    @property
-    def has_retractions(self) -> bool:
-        return not self._compute_stats()[3]
-
-    def max_id(self) -> int:
-        return self._compute_stats()[1]
-
-    def latest_tx(self) -> int:
-        return self._compute_stats()[2]
-
-    def attr_types(self) -> dict[str, set]:
-        out: dict[str, set] = {}
+    def _probe(self) -> bool:
+        """Whether the fact table exists (a missing one reads as empty)."""
         if not self._exists:
-            self._compute_stats()
-        if not self._exists:
-            return out
-        for r in self._raw().select("a", "v_type").distinct().collect():
-            out.setdefault(r["a"], set()).add(r["v_type"])
-        return out
+            try:
+                self._raw().schema  # force resolution
+                self._exists = True
+            except Exception:
+                pass
+        return self._exists
+
+    def pin(self) -> Pin:
+        """The table's read stats from one aggregate, once per `_version`
+        (each append through this handle starts a new one)."""
+        version = self._version
+        if self._pin is None or self._pin[0] != version:
+            stats = aggregate_stats(self._raw()) if self._probe() else None
+            self._pin = (version, Pin.of(None, stats))
+        return self._pin[1]

@@ -18,18 +18,20 @@ Why this scales to 100 TB:
  - entity ids are arithmetic (table base + primary key): no id-allocation
    shuffle, stable across runs, ref joins are long==long equi-joins.
 
-The view is read-only and `clean` (single tx, no retractions) so snapshots
-skip the dedup windows entirely.
+The view is read-only and its pin is `clean` (single tx, no retractions),
+so snapshots skip the dedup windows entirely.
 """
 
 from __future__ import annotations
 
+from collections.abc import Mapping
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from unifydb_spark.store import FactStore
+from unifydb_spark.txlog import Pin
 from unifydb_spark.values import FACT_SCHEMA
 
 # entity-id bases, 10^12 apart: composite lineitem keys at TPC-H sf100k
@@ -198,17 +200,14 @@ TABLE_SPECS: dict[str, dict] = {
 class TableFactView:
     """A FactStore backend that *is* a set of parquet tables.
 
-    Implements the backend protocol (facts_df / clean / attr_types / ...)
-    plus the two fast paths the compiler exploits:
+    Implements the backend protocol (facts_df / pin / ...) plus the two
+    fast paths the compiler exploits:
      - `facts_for_attr(attr)`: one-table projection (virtual AVET index);
      - `pivot_df(attrs)`: entity-pivoted wide scan when all attrs come from
        one table (collapses N patterns -> 1 scan).
     """
 
     supports_pivot = True
-    clean = True
-    has_retractions = False
-    _version = 0
 
     def __init__(self, spark: SparkSession, sf_dir: Optional[str] = None):
         self.spark = spark
@@ -220,7 +219,7 @@ class TableFactView:
         self._specs: dict[str, dict] = dict(TABLE_SPECS) if sf_dir else {}
         self._bases: dict[str, int] = dict(BASES)
         self._attr_index: dict[str, tuple] = {}
-        self._attr_type_cache: Optional[dict] = None
+        self._types = _SchemaTypes(self)
         for tname, spec in self._specs.items():
             for attr, colname, ref in spec["attrs"]:
                 self._attr_index[attr] = (tname, colname, ref)
@@ -253,8 +252,7 @@ class TableFactView:
         self._specs[name] = spec
         for attr, colname, ref in spec["attrs"]:
             self._attr_index[attr] = (name, colname, ref)
-        self._attr_type_cache = None
-        self._version += 1
+        self._types = _SchemaTypes(self)
         return self
 
     def base_of(self, table: str) -> int:
@@ -317,12 +315,11 @@ class TableFactView:
             return src.cast("timestamp")
         return src
 
-    def attr_types(self) -> dict[str, set]:
-        if self._attr_type_cache is None:
-            self._attr_type_cache = {
-                a: {self._attr_vtype(a)} for a in self._attr_index
-            }
-        return self._attr_type_cache
+    def pin(self) -> Pin:
+        """Every fact is an assert of tx 1: the view is clean, and its
+        attr types are its table schemas'."""
+        max_id = max(self._bases.values()) + _B
+        return Pin(None, True, False, 1, max_id, ((), self._types))
 
     # -- fact projections ----------------------------------------------------
 
@@ -391,16 +388,31 @@ class TableFactView:
             reprs[a] = self._attr_vtype(a)
         return df.select(*select), reprs
 
-    # -- backend protocol stubs (read-only view) -----------------------------
-
     def append(self, rows):
         raise NotImplementedError("TableFactView is read-only")
 
-    def max_id(self) -> int:
-        return max(self._bases.values()) + _B
 
-    def latest_tx(self) -> int:
-        return 1
+class _SchemaTypes(Mapping):
+    """{attribute: {value type}} of a TableFactView, each read from its
+    table's schema on first use (a table's first schema read can cost a
+    Spark job)."""
+
+    def __init__(self, view: TableFactView):
+        self._view = view
+        self._memo: dict[str, set] = {}
+
+    def __getitem__(self, attr: str) -> set:
+        if attr not in self._memo:
+            if attr not in self._view._attr_index:
+                raise KeyError(attr)
+            self._memo[attr] = {self._view._attr_vtype(attr)}
+        return self._memo[attr]
+
+    def __iter__(self):
+        return iter(self._view._attr_index)
+
+    def __len__(self) -> int:
+        return len(self._view._attr_index)
 
 
 def table_fact_store(spark: SparkSession, sf_dir: str) -> FactStore:

@@ -13,16 +13,26 @@ Reference parity map (see SURVEY.md §1, §2.3, §2.4):
    `Db.visible_facts()` is the reference's post-scan visibility filter +
    retraction collapse + cardinality resolution
    (src/unifydb/storage.clj:46, src/unifydb/query.clj:132-204) expressed as
-   window functions (`_collapse`). On a commit-log store a `Db` pins one
-   log version per query, and the collapsed snapshot is built once per
-   (version, tx) and shared by every pattern and query that reads it;
-   other backends run the windows inline, once per pattern;
+   window functions (`_collapse`). A `Db` pins one `txlog.Pin` per query;
+   on a commit-log store that is one log version, and the collapsed
+   snapshot is built once per (version, tx) and shared by every pattern
+   and query that reads it; other backends run the windows inline;
  - the transactor (src/unifydb/transact.clj:98-137) is `FactStore.transact`:
    map-form expansion, tempid allocation, tx metadata, transforms/filters,
    single atomic append.
 
-Scale notes (100 TB): the snapshot dedup windows shuffle on (e, a[, value]) —
-they only run when the store actually contains retractions / multi-tx
+Backend protocol (the reference's storage protocol,
+src/unifydb/kvstore.clj:25-127): `append(rows)`, `facts_df()` and `pin()`;
+optionally `facts_for_attr`/`pivot_df` (the table fact store),
+`commit_rows` (optimistic commits) and `maybe_maintain`. `pin()` is the
+only way the store reads a backend's stats (`clean`, retractions,
+`latest_tx`, `max_id`, attr types, schema rows), all shaped like a commit
+manifest's cumulative fields: folded in Python on append
+(`txlog.rows_stats` + `txlog.fold_stats`, no job) or measured by one
+aggregate (`txlog.stats_columns`).
+
+Scale notes (100 TB): the snapshot dedup windows shuffle on (e, a) — they
+only run when the store actually contains retractions / multi-tx
 re-asserts (`clean` fast path otherwise, like Delta's no-deletes read path).
 Bulk-ingested analytics tables take the clean path and never shuffle.
 """
@@ -43,7 +53,13 @@ from typing import Any, Callable, Iterable, Optional, Sequence, Union
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from unifydb_spark.txlog import META_ATTRS, Pin
+from unifydb_spark.txlog import (
+    META_ATTRS,
+    Pin,
+    aggregate_stats,
+    fold_stats,
+    rows_stats,
+)
 from unifydb_spark.values import FACT_SCHEMA, Ref, V_COLS, encode_value
 
 LATEST = "latest"
@@ -57,7 +73,6 @@ CARDINALITY_MANY = "cardinality/many"
 SNAPSHOT_CACHE_SIZE = 4
 # Store versions whose schema rows and attr types a FactStore keeps.
 META_CACHE_SIZE = 8
-_SCHEMA_ROW = ("e", "a", "v_str", "tx", "added")
 
 
 def norm_attr(a: str) -> str:
@@ -81,7 +96,8 @@ def _norm_value(v: Any) -> Any:
 class MemoryBackend:
     """Driver-side fact log (the reference's in-memory KV store,
     src/unifydb/kvstore/memory.clj:5-25). Facts live as Python rows and are
-    shipped to the cluster as one cached DataFrame per version."""
+    shipped to the cluster as one cached DataFrame per version; each
+    append folds its rows' stats into the log's (no job)."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
@@ -89,16 +105,12 @@ class MemoryBackend:
         self._df: Optional[DataFrame] = None
         self._version = 0
         self._df_version = -1
-        self.has_retractions = False
-        self._txs: set[int] = set()
+        self._stats: Optional[dict] = None
 
     def append(self, rows: Iterable[tuple]) -> None:
         rows = list(rows)
         self.rows.extend(rows)
-        for r in rows:
-            if not r[-1]:
-                self.has_retractions = True
-            self._txs.add(r[-2])
+        self._stats = fold_stats(self._stats, rows_stats(rows))
         self._version += 1
 
     def facts_df(self) -> DataFrame:
@@ -107,47 +119,21 @@ class MemoryBackend:
             self._df_version = self._version
         return self._df
 
-    @property
-    def clean(self) -> bool:
-        return not self.has_retractions and len(self._txs) <= 1
-
-    def max_id(self) -> int:
-        m = 0
-        for r in self.rows:
-            m = max(m, r[0], r[-2])
-            if r[2] == "ref" and r[7] is not None:
-                m = max(m, r[7])
-        return m
-
-    def latest_tx(self) -> int:
-        return max(self._txs) if self._txs else 0
-
-    def attr_types(self) -> dict[str, set]:
-        out: dict[str, set] = {}
-        for r in self.rows:
-            out.setdefault(r[1], set()).add(r[2])
-        return out
+    def pin(self) -> Pin:
+        return Pin.of(None, self._stats)
 
 
 class DataFrameBackend:
     """A read-only fact log defined by an arbitrary DataFrame in
     FACT_SCHEMA — the scalable way to derive a versioned fact store from an
     existing event log (e.g. the events table: tx = event id) without
-    materializing anything. Stats are computed lazily once."""
+    materializing anything. Its read stats come from one aggregate,
+    computed on the first pin."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        df: DataFrame,
-        clean: bool = False,
-        has_retractions: Optional[bool] = None,
-    ):
+    def __init__(self, spark: SparkSession, df: DataFrame):
         self.spark = spark
         self._df = df
-        self.clean = clean
-        self.has_retractions = (not clean) if has_retractions is None else has_retractions
-        self._version = 0
-        self._stats: Optional[tuple] = None
+        self._pin: Optional[Pin] = None
 
     def facts_df(self) -> DataFrame:
         return self._df
@@ -155,28 +141,10 @@ class DataFrameBackend:
     def append(self, rows):
         raise NotImplementedError("DataFrameBackend is read-only")
 
-    def _compute(self):
-        if self._stats is None:
-            row = self._df.agg(
-                F.greatest(
-                    F.max("e"), F.max("tx"), F.coalesce(F.max("v_ref"), F.lit(0))
-                ).alias("mx"),
-                F.max("tx").alias("mtx"),
-            ).collect()[0]
-            self._stats = (row["mx"] or 0, row["mtx"] or 0)
-        return self._stats
-
-    def max_id(self) -> int:
-        return self._compute()[0]
-
-    def latest_tx(self) -> int:
-        return self._compute()[1]
-
-    def attr_types(self) -> dict[str, set]:
-        out: dict[str, set] = {}
-        for r in self._df.select("a", "v_type").distinct().collect():
-            out.setdefault(r["a"], set()).add(r["v_type"])
-        return out
+    def pin(self) -> Pin:
+        if self._pin is None:
+            self._pin = Pin.of(None, aggregate_stats(self._df))
+        return self._pin
 
 
 @dataclass(frozen=True)
@@ -184,10 +152,10 @@ class Db:
     """A database value: the facts visible as of `tx_id` (reference
     src/unifydb/server.clj:23, src/unifydb/query.clj:216-229).
 
-    `pin` fixes the log version of a commit-log store (txlog.Pin), so
+    `pin` fixes the store version and its read stats (txlog.Pin), so
     every read through this value sees one version while writers
-    commit; `pinned()` takes the current head. Without a pin each read
-    resolves the head itself (backends without log versions never pin)."""
+    commit; `pinned()` takes the backend's current pin. Without a pin
+    each read takes the backend's pin itself."""
 
     store: "FactStore"
     tx_id: Union[int, str] = LATEST
@@ -201,10 +169,7 @@ class Db:
         return replace(self, historical=True)
 
     def pinned(self) -> "Db":
-        if self.pin is not None:
-            return self
-        pin = self.store.pin()
-        return self if pin is None else replace(self, pin=pin)
+        return self if self.pin is not None else replace(self, pin=self.store.pin())
 
     def visible_facts(
         self, attr: Optional[str] = None, attrs: Optional[Sequence[str]] = None
@@ -277,15 +242,6 @@ def _unpersist(df: DataFrame) -> None:
         pass
 
 
-def _meta_of(rows: Iterable, pairs: Iterable) -> tuple:
-    """(schema rows as tuples, {attr: set of value types}) from schema
-    rows and (attr, value type) pairs."""
-    types: dict[str, set] = {}
-    for a, t in pairs:
-        types.setdefault(a, set()).add(t)
-    return [tuple(r) for r in rows], types
-
-
 def _collapse(df: DataFrame, has_retractions: bool, many: frozenset) -> DataFrame:
     """The visible values of a fact slice, as window functions: a value
     is live iff its latest fact per (e, a, value) is an assert (a retract
@@ -294,6 +250,10 @@ def _collapse(df: DataFrame, has_retractions: bool, many: frozenset) -> DataFram
     windows: inline per pattern on backends without log versions, once
     per cached (version, tx) snapshot on a commit-log store."""
     if has_retractions:
+        # hash(e) satisfies both windows' clustering, so they share one
+        # shuffle (also where the optimizer folds a constant `a` out of
+        # their partitioning)
+        df = df.repartition("e")
         w = Window.partitionBy("e", "a", *V_COLS).orderBy(
             F.col("tx").desc(), F.col("added").asc()
         )
@@ -325,9 +285,10 @@ class FactStore:
 
         self.transforms: list[Callable[[list], list]] = [new_user_transform]
         self.report_filters: list[Callable[[dict], dict]] = [filter_auth_facts]
-        # per store version: schema rows and attr types (`_meta`); per
-        # (version, tx): the persisted collapsed snapshot, released on
-        # eviction and when this store is garbage-collected
+        # per log version whose head lacks them: schema rows and attr
+        # types (`_log_meta`); per (version, tx): the persisted collapsed
+        # snapshot, released on eviction and when this store is
+        # garbage-collected
         self._metas = _BuildOnce(META_CACHE_SIZE)
         self._snapshots = _BuildOnce(SNAPSHOT_CACHE_SIZE, _unpersist)
         weakref.finalize(self, self._snapshots.clear).atexit = False
@@ -353,11 +314,9 @@ class FactStore:
     def db(self, tx_id: Union[int, str] = LATEST, historical: bool = False) -> Db:
         return Db(self, tx_id, historical)
 
-    def pin(self) -> Optional[Pin]:
-        """The backend's current log version (txlog.Pin), or None when it
-        has no immutable versions to pin."""
-        pin = getattr(self.backend, "pin", None)
-        return pin() if pin is not None else None
+    def pin(self) -> Pin:
+        """The backend's current version and read stats (txlog.Pin)."""
+        return self.backend.pin()
 
     def facts(
         self,
@@ -378,7 +337,7 @@ class FactStore:
             return functools.reduce(
                 DataFrame.unionByName, map(self.backend.facts_for_attr, attrs)
             )
-        if pin is None:
+        if pin is None or pin.version is None:
             df = self.backend.facts_df()
         else:
             df = self.backend.facts_df(as_of_version=pin.version)
@@ -397,13 +356,15 @@ class FactStore:
         + cardinality resolution (reference src/unifydb/query.clj:132-204 and
         src/unifydb/storage.clj:43-46), as window functions (`_collapse`).
 
-        A commit-log store is read at one log version (`pin`, else its
-        head now). A non-clean, non-historical read there filters the
-        collapsed snapshot of (version, tx) to the attributes `attrs`: the
-        snapshot is built once, persisted on the executors and kept in a
-        small LRU, and every tx at or past the version's newest tx shares
-        the LATEST one. Other backends run the windows inline on the
-        slice (`facts`): both windows partition by attribute, so one
+        The read stats come from `pin` (else the backend's pin now). A
+        commit-log store is read at the pin's log version; a non-clean,
+        non-historical read there filters the collapsed snapshot of
+        (version, tx) to the attributes `attrs`: the snapshot is built
+        once, persisted on the executors and kept in a small LRU, and
+        every tx at or past the version's newest tx shares the LATEST
+        one. A backend without versions is read as it is now, with the
+        stats it has after that read, and runs the windows inline on
+        the slice (`facts`): both windows partition by attribute, so one
         collapse of an `attrs` slice equals the union of per-attribute
         collapses.
 
@@ -419,8 +380,7 @@ class FactStore:
            tests never exercise (documented divergence).
         """
         pin = pin if pin is not None else self.pin()
-        src = pin if pin is not None else self.backend
-        if pin is not None and not (src.clean or historical):
+        if pin.version is not None and not (historical or pin.clean):
             if tx_id != LATEST and int(tx_id) < pin.latest_tx:
                 tx_id = int(tx_id)
             else:
@@ -430,11 +390,18 @@ class FactStore:
             )
             return df if attrs is None else df.filter(F.col("a").isin(*attrs))
         df = self.facts(pin=pin, attrs=attrs)
+        if pin.version is None:
+            # no version to read at: stats taken after the facts cover
+            # them, where an older pin could skip windows a commit that
+            # landed since needs
+            pin = self.pin()
         if tx_id != LATEST:
             df = df.filter(F.col("tx") <= F.lit(int(tx_id)))
-        if historical or src.clean:
+        if historical or pin.clean:
             return df
-        return _collapse(df, src.has_retractions, self.cardinality_many_attrs(tx_id))
+        return _collapse(
+            df, pin.has_retractions, self.cardinality_many_attrs(tx_id, pin=pin)
+        )
 
     def _build_snapshot(self, tx_id: Union[int, str], pin: Pin) -> DataFrame:
         """The collapsed snapshot of log version `pin` as of `tx_id`,
@@ -443,9 +410,7 @@ class FactStore:
         if tx_id != LATEST:
             df = df.filter(F.col("tx") <= F.lit(int(tx_id)))
         many = self.cardinality_many_attrs(tx_id, pin=pin)
-        # hash(e, a) satisfies both windows' clustering: one shuffle
-        snap = _collapse(df.repartition("e", "a"), pin.has_retractions, many)
-        snap = snap.persist()
+        snap = _collapse(df, pin.has_retractions, many).persist()
         # a JVM-side row count of the cached plan fills every cached
         # partition without an aggregate (and its job) on top
         snap._jdf.queryExecution().toRdd().count()
@@ -526,21 +491,14 @@ class FactStore:
             .sortBy(bucket_by)
             .saveAsTable(table_name)
         )
-        backend = DataFrameBackend(
-            self.spark, self.spark.table(table_name), clean=True
-        )
+        backend = DataFrameBackend(self.spark, self.spark.table(table_name))
         return FactStore(self.spark, backend=backend)
 
     def _stamped_snapshot(self, tx_id: Union[int, str]) -> DataFrame:
         """The collapsed snapshot as of `tx_id` (one log version) with
         every surviving fact stamped as an assert of the snapshot tx."""
         db = self.db(tx_id).pinned()
-        if tx_id != LATEST:
-            snap_tx = int(tx_id)
-        elif db.pin is not None:
-            snap_tx = db.pin.latest_tx
-        else:
-            snap_tx = self.backend.latest_tx()
+        snap_tx = db.pin.latest_tx if tx_id == LATEST else int(tx_id)
         return (
             db.visible_facts()
             .withColumn("tx", F.lit(snap_tx).cast("long"))
@@ -554,7 +512,7 @@ class FactStore:
         src/unifydb/schema.clj:5-15). The schema rows are collected once per
         store version — fixing the reference's re-query-per-pattern TODO
         (schema.clj:17) — and the tx bound is resolved on the Spark driver."""
-        rows = self._meta("rows", pin if pin is not None else self.pin())
+        rows = self._meta(pin if pin is not None else self.pin())[0]
         if tx_id != LATEST:
             rows = [r for r in rows if r[3] <= int(tx_id)]
         # collapse add/retract per (e, a, v) on the Spark driver: schema facts are
@@ -580,46 +538,21 @@ class FactStore:
     def attr_types(self, pin: Optional[Pin] = None) -> dict[str, set]:
         """attr -> set of v_type tags seen; drives the compiler's static
         type inference for value-position variables."""
-        return self._meta("types", pin if pin is not None else self.pin())
+        return self._meta(pin if pin is not None else self.pin())[1]
 
-    def _meta(self, kind: str, pin: Optional[Pin]):
-        """Per store version, kept in a small LRU: the schema rows
-        (`kind` "rows": the few schema/cardinality facts as (e, a, v_str,
-        tx, added)) or the attr types ("types"). A log version answers
-        both from its pin (the head manifest carries them, no job); only a
-        head whose lineage predates those fields reads them in one
-        aggregate job (`_log_meta`). Other backends answer attr types
-        themselves and collect their schema rows."""
-        if pin is not None:
-            rows, types = self._metas.get(
-                pin.version,
-                lambda: _meta_of(*pin.meta) if pin.meta is not None else self._log_meta(pin),
-            )
-            return rows if kind == "rows" else types
-        version = getattr(self.backend, "_version", 0)
-        if kind == "types":
-            return self._metas.get(("types", version), self.backend.attr_types)
-
-        def collect() -> list:
-            df = self.facts(attrs=META_ATTRS).select(*_SCHEMA_ROW)
-            return [tuple(r) for r in df.collect()]
-
-        return self._metas.get(("rows", version), collect)
+    def _meta(self, pin: Pin) -> tuple:
+        """(schema rows as (e, a, v_str, tx, added) tuples, attr types) of
+        a pinned version: the pin carries them, except for a log head
+        whose lineage predates them, which `_log_meta` scans once per
+        version (kept in a small LRU)."""
+        if pin.meta is not None:
+            return pin.meta
+        return self._metas.get(pin.version, lambda: self._log_meta(pin))
 
     def _log_meta(self, pin: Pin) -> tuple:
-        """Schema rows and attr types of a log version whose head does not
-        carry them, by one aggregate over its facts."""
-        row = (
-            self.facts(pin=pin)
-            .agg(
-                F.collect_list(
-                    F.when(F.col("a").isin(*META_ATTRS), F.struct(*_SCHEMA_ROW))
-                ).alias("rows"),
-                F.collect_set(F.struct("a", "v_type")).alias("types"),
-            )
-            .collect()[0]
-        )
-        return _meta_of(row["rows"], row["types"])
+        """The meta of a log version whose head does not carry it, by one
+        aggregate over its facts."""
+        return Pin.of(pin.version, aggregate_stats(self.facts(pin=pin))).meta
 
     # ---- writes ----------------------------------------------------------
 
@@ -698,10 +631,8 @@ class FactStore:
         # single transactor thread (transact.clj:116-137).
         supports_occ = hasattr(self.backend, "commit_rows")
         for _attempt in range(64):
-            base_version = (
-                self.backend.log_version() if supports_occ else None
-            )
-            next_id = self.backend.max_id() + 1
+            base = self.backend.pin()
+            next_id = base.max_id + 1
             tempids = {}
             for e, _a, _v, _add in raw:
                 if isinstance(e, str) and e not in tempids:
@@ -737,7 +668,7 @@ class FactStore:
                 )
                 facts_out.append([eid, a, v, tx_id, add])
             if supports_occ:
-                if self.backend.commit_rows(rows, base_version):
+                if self.backend.commit_rows(rows, base.version):
                     break
                 # lost the CAS: linear backoff scaled by the attempt and
                 # a per-process phase offset so N contending writers
@@ -752,7 +683,6 @@ class FactStore:
             raise RuntimeError("transact: lost the optimistic-commit race 64 times")
         # The transaction IS committed at this point; everything below is
         # post-commit bookkeeping and must not make it look failed.
-        self._metas.clear()
         # backend-configured maintenance policy (txlog maintain_every):
         # cheap no-op check when idle, checkpoint+vacuum when due.
         # Best-effort: checkpoint can lose its CAS race and vacuum's

@@ -58,6 +58,10 @@ streaming exactly-once dedup are O(1) manifest reads — no Spark job, which
 also makes the whole WRITE path runnable without a SparkSession (the
 cross-process tests in tests/test_txlog.py exploit this: child writer
 processes are plain Python; only the verifying reader needs a JVM).
+Those stats are the shape every fact backend pins (:class:`Pin`): a
+commit folds the stats of its rows (:func:`rows_stats`) into its
+parent's (:func:`fold_stats`), and a bulk append observes the same
+stats on its write job (:func:`stats_columns`).
 
 Time travel: ``facts_df(as_of_version=N)`` reads the manifests ``<= N``
 — log-versioned history, orthogonal to the fact-level ``tx <= T``
@@ -89,18 +93,147 @@ META_ATTRS = ("unifydb/schema", "unifydb/cardinality")
 
 
 class Pin(NamedTuple):
-    """One log version and the head stats a read of it needs: the
-    `clean` fast-path flag, whether any retraction exists, the newest tx
-    (an as-of bound at or past it filters nothing), and `meta`: the
-    version's schema rows ((e, a, v_str, tx, added) tuples) and
-    (attribute, value type) pairs, or None when the head's lineage
+    """The read stats of one store version, which every fact backend
+    answers through `pin()`: `version`, the log version that
+    ``facts_df(as_of_version=...)`` reads (None on a backend that cannot
+    read a past version); the `clean` fast-path flag; whether any
+    retraction exists; the newest tx (an as-of bound at or past it
+    filters nothing); the id high-water mark `max_id`; and `meta`: the
+    schema rows ((e, a, v_str, tx, added) tuples) and attr types
+    ({attribute: value types}), or None when a log head's lineage
     predates those fields (a log written by older code)."""
 
-    version: int
+    version: Optional[int]
     clean: bool
     has_retractions: bool
     latest_tx: int
+    max_id: int
     meta: Optional[tuple] = None
+
+    @classmethod
+    def of(cls, version: Optional[int], stats: Optional[dict]) -> "Pin":
+        """The Pin of `stats` (a manifest, or stats of its shape; None
+        for an empty store) read at `version`."""
+        s = EMPTY_STATS if stats is None else stats
+        retr = bool(s["any_retraction"])
+        meta = None
+        if "attr_types" in s:
+            meta = (
+                [tuple(r) for r in s["schema_rows"]],
+                {a: set(ts) for a, ts in s["attr_types"].items()},
+            )
+        clean = not retr and s.get("tx_state") != "multi"
+        return cls(version, clean, retr, s["latest_tx"], s["max_id"], meta)
+
+
+def rows_stats(rows: list[tuple]) -> dict:
+    """The stats of FACT_SCHEMA row tuples, shaped like a manifest's
+    cumulative fields, plus their count `rows`. Pure Python: no job."""
+    mx, mtx, retr, tx_state, types, schema_rows = 0, 0, False, None, {}, []
+    for r in rows:
+        mx = max(mx, r[0], r[10], r[7] or 0)
+        mtx = max(mtx, r[10])
+        tx_state = _fold_tx_state(tx_state, r[10])
+        retr = retr or not r[11]
+        types.setdefault(r[1], set()).add(r[2])
+        if r[1] in META_ATTRS:
+            schema_rows.append([r[0], r[1], r[5], r[10], r[11]])
+    return {
+        "rows": len(rows),
+        "max_id": mx,
+        "latest_tx": mtx,
+        "any_retraction": retr,
+        "tx_state": tx_state,
+        "attr_types": {a: sorted(types[a]) for a in sorted(types)},
+        "schema_rows": schema_rows,
+    }
+
+
+def stats_columns() -> list:
+    """The same stats as one aggregate column list, for `DataFrame.agg`
+    or an `Observation` (read back by :func:`stats_of`). What reaches the
+    driver is bounded by the distinct (attribute, value type) pairs and
+    the schema facts, never by the rows or their txs."""
+    from pyspark.sql import functions as F
+
+    return [
+        F.count(F.lit(1)).alias("rows"),
+        F.greatest(
+            F.max("e"), F.max("tx"), F.coalesce(F.max("v_ref"), F.lit(0))
+        ).alias("max_id"),
+        F.max("tx").alias("latest_tx"),
+        F.min("tx").alias("min_tx"),
+        F.min("added").alias("all_added"),
+        F.collect_set(F.struct("a", "v_type")).alias("types"),
+        F.collect_list(
+            F.when(
+                F.col("a").isin(*META_ATTRS),
+                F.struct("e", "a", "v_str", "tx", "added"),
+            )
+        ).alias("schema_rows"),
+    ]
+
+
+def stats_of(agg) -> dict:
+    """The stats of one :func:`stats_columns` result (a Row, or an
+    Observation's dict)."""
+    types: dict = {}
+    for a, t in agg["types"] or []:
+        types.setdefault(a, set()).add(t)
+    lo, hi = agg["min_tx"], agg["latest_tx"]
+    return {
+        "rows": int(agg["rows"]),
+        "max_id": agg["max_id"] or 0,
+        "latest_tx": hi or 0,
+        "any_retraction": agg["all_added"] is False,
+        "tx_state": lo if lo == hi else "multi",
+        "attr_types": {a: sorted(types[a]) for a in sorted(types)},
+        "schema_rows": [list(r) for r in agg["schema_rows"] or []],
+    }
+
+
+def aggregate_stats(df) -> dict:
+    """The stats of a FACT_SCHEMA DataFrame, by one scan: the aggregate
+    is observed on a no-op write, so it costs one job and no shuffle."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    df.observe(obs, *stats_columns()).write.format("noop").mode("overwrite").save()
+    return stats_of(obs.get)
+
+
+def _fold_tx_state(a, b):
+    """`tx_state` bounds the distinct txs for the `clean` fast path: None
+    (no tx), the single tx while there is one, or "multi"."""
+    if a is None:
+        return b
+    return a if b is None or b == a else "multi"
+
+
+# The read stats of a store with no facts.
+EMPTY_STATS = rows_stats([])
+
+
+def fold_stats(parent: Optional[dict], delta: dict) -> dict:
+    """The cumulative stats after `delta` (the stats of new rows) lands
+    on `parent` (cumulative stats or a manifest; None for an empty
+    store). Attr types and schema rows fold forward only from a parent
+    that has them: a log lineage that predates the fields keeps them
+    absent, and its readers scan (``FactStore._log_meta``)."""
+    p = EMPTY_STATS if parent is None else parent
+    out = {
+        "max_id": max(p["max_id"], delta["max_id"]),
+        "latest_tx": max(p["latest_tx"], delta["latest_tx"]),
+        "any_retraction": p["any_retraction"] or delta["any_retraction"],
+        "tx_state": _fold_tx_state(p.get("tx_state"), delta["tx_state"]),
+    }
+    if "attr_types" in p:
+        types = {a: set(ts) for a, ts in p["attr_types"].items()}
+        for a, ts in delta["attr_types"].items():
+            types.setdefault(a, set()).update(ts)
+        out["attr_types"] = {a: sorted(types[a]) for a in sorted(types)}
+        out["schema_rows"] = p["schema_rows"] + delta["schema_rows"]
+    return out
 
 
 def _arrow_fact_schema():
@@ -246,19 +379,17 @@ class ConditionalPutProtocol(CommitProtocol):
 class LogParquetBackend:
     """Fact-log backend with an ACID commit log (see module docstring).
 
-    The only durable parquet fact backend. Satisfies the backend
-    protocol of ``store.MemoryBackend`` (append / facts_df / clean /
-    has_retractions / max_id / latest_tx; attr types and schema rows
-    ride the head manifest and reach ``FactStore`` through :meth:`pin`,
-    with no job) plus:
+    The only durable parquet fact backend. Answers the backend
+    protocol of ``store.FactStore`` (append / facts_df / pin): :meth:`pin`
+    is the head's version and cumulative read stats (attr types and
+    schema rows included) from one manifest read, with no job, and a
+    database value pins a query's reads to it. On top of that:
 
-    - :meth:`commit_rows` — compare-and-swap append used by
-      ``FactStore.transact`` for cross-process id-allocation safety;
+    - :meth:`commit_rows` — compare-and-swap append at a pin's version,
+      used by ``FactStore.transact`` for cross-process id-allocation
+      safety;
     - :meth:`log_version` / ``facts_df(as_of_version=...)`` —
       log-versioned time travel;
-    - :meth:`pin` — the head's version and read stats (attr types and
-      schema rows included) from one manifest read, which a database
-      value pins a query's reads to;
     - :meth:`bulk_append_df` — executor-side big appends (manifest commit
       of Spark-written files), with optional per-stream epoch tracking
       for exactly-once streaming ingest (streaming/stream.py
@@ -384,20 +515,10 @@ class LogParquetBackend:
 
     def pin(self) -> Pin:
         """The current head as a :class:`Pin`, from one listing and one
-        manifest read: a database value pins every read of a query to
-        it (``facts_df(as_of_version=pin.version)``)."""
-        v, head = self._reread(self._head_at, "head")
-        if head is None:
-            return Pin(v, True, False, 0, ((), ()))
-        retr = bool(head["any_retraction"])
-        meta = None
-        if "attr_types" in head:
-            meta = (
-                tuple(map(tuple, head["schema_rows"])),
-                tuple((a, t) for a, ts in head["attr_types"].items() for t in ts),
-            )
-        clean = not retr and head["tx_state"] != "multi"
-        return Pin(v, clean, retr, head["latest_tx"], meta)
+        manifest read (no job): a database value pins every read of a
+        query to it (``facts_df(as_of_version=pin.version)``), and
+        ``FactStore.transact`` allocates ids above its ``max_id``."""
+        return Pin.of(*self._reread(self._head_at, "head"))
 
     def _try_commit(self, manifest: dict, version: int) -> bool:
         """Atomically publish `manifest` as log version `version` via the
@@ -449,77 +570,27 @@ class LogParquetBackend:
         self,
         parent: Optional[dict],
         files: list[dict],
-        rows_stats: dict,
+        delta: dict,
         stream_epoch: Optional[tuple[str, int]] = None,
     ) -> dict:
-        """Fold a new commit's stats into the cumulative head stats."""
-        p_max = parent["max_id"] if parent else 0
-        p_tx = parent["latest_tx"] if parent else 0
-        p_retr = parent["any_retraction"] if parent else False
-        # distinct-tx bound for the `clean` fast path: track the single tx
-        # value while there is one; collapse to "multi" after.
-        p_txs = parent.get("tx_state") if parent else None  # None | int | "multi"
-        tx_state = p_txs
-        for t in rows_stats["txs"]:
-            if tx_state is None:
-                tx_state = t
-            elif tx_state != "multi" and tx_state != t:
-                tx_state = "multi"
+        """The next manifest: a new commit's stats `delta` folded into the
+        parent head's cumulative stats (:func:`fold_stats`)."""
         streams = dict(parent.get("streams", {})) if parent else {}
         if stream_epoch is not None:
             sid, epoch = stream_epoch
             streams[sid] = max(int(epoch), streams.get(sid, -1))
-        # attr types and schema rows fold forward only from a parent that
-        # has them: a lineage that predates the fields keeps them absent
-        # and its readers scan (FactStore._log_meta)
-        meta = {}
-        if parent is None or "attr_types" in parent:
-            types = {a: set(ts) for a, ts in (parent or {}).get("attr_types", {}).items()}
-            for a, t in rows_stats["types"]:
-                types.setdefault(a, set()).add(t)
-            meta = {
-                "attr_types": {a: sorted(types[a]) for a in sorted(types)},
-                "schema_rows": (parent["schema_rows"] if parent else [])
-                + [list(r) for r in rows_stats["schema_rows"]],
-            }
         return {
             "files": files,
             # rows THIS commit added (None when unknown — e.g. a
             # checkpoint rewrite); the manifest-level total is the
             # honest aggregate, per-file entries are all-real (pyarrow
             # single-file path) or all-None (Spark multi-file staging)
-            "rows": rows_stats.get("n"),
-            "max_id": max(p_max, rows_stats["max_id"]),
-            "latest_tx": max(p_tx, rows_stats["latest_tx"]),
-            "any_retraction": p_retr or rows_stats["any_retraction"],
-            "tx_state": tx_state,
+            "rows": delta["rows"],
+            **fold_stats(parent, delta),
             "streams": streams,
-            **meta,
             "base": parent.get("base", 0) if parent else 0,
             "writer": self._writer,
             "ts_millis": int(time.time() * 1000),
-        }
-
-    @staticmethod
-    def _rows_stats(rows: list[tuple]) -> dict:
-        mx, mtx, retr, txs, types, schema_rows = 0, 0, False, set(), set(), []
-        for r in rows:
-            mx = max(mx, r[0], r[10], r[7] or 0)
-            mtx = max(mtx, r[10])
-            txs.add(r[10])
-            if not r[11]:
-                retr = True
-            types.add((r[1], r[2]))
-            if r[1] in META_ATTRS:
-                schema_rows.append((r[0], r[1], r[5], r[10], r[11]))
-        return {
-            "max_id": mx,
-            "latest_tx": mtx,
-            "any_retraction": retr,
-            "txs": sorted(txs),
-            "n": len(rows),
-            "types": sorted(types),
-            "schema_rows": schema_rows,
         }
 
     def _write_data_file(self, rows: list[tuple]) -> dict:
@@ -584,7 +655,7 @@ class LogParquetBackend:
             # lost by definition; report it as a clean loss
             won = False
         else:
-            manifest = self._build_manifest(parent, [f], self._rows_stats(rows))
+            manifest = self._build_manifest(parent, [f], rows_stats(rows))
             won = self._try_commit(manifest, based_on_version + 1)
         if not won:
             self._reclaim([f])
@@ -595,7 +666,7 @@ class LogParquetBackend:
         so a conflict only needs the manifest re-based, not the data."""
         rows = list(rows)
         f = self._write_data_file(rows)
-        stats = self._rows_stats(rows)
+        stats = rows_stats(rows)
         self._commit(
             lambda head_v, head: self._build_manifest(head, [f], stats),
             max_retries,
@@ -625,7 +696,7 @@ class LogParquetBackend:
         stream's epoch); with no stream_epoch an empty frame is a pure
         no-op — no version churn for a no-op batch write. Returns True
         if a commit happened, False if skipped as a replay/no-op."""
-        from pyspark.sql import functions as F
+        from pyspark.sql import Observation
 
         from unifydb_spark.values import FACT_SCHEMA
 
@@ -653,28 +724,10 @@ class LogParquetBackend:
         # the manifest stats ride the WRITE job via the Observation API —
         # no second scan of the staged data (measured: the re-read tripled
         # bulk-append wall time at ~1M rows)
-        from pyspark.sql import Observation
-
         obs = Observation()
-        df.observe(
-            obs,
-            F.greatest(
-                F.max("e"), F.max("tx"), F.coalesce(F.max("v_ref"), F.lit(0))
-            ).alias("mx"),
-            F.max("tx").alias("mtx"),
-            F.min("added").alias("all_added"),
-            F.collect_set("tx").alias("txs"),
-            F.count(F.lit(1)).alias("n"),
-            F.collect_set(F.struct("a", "v_type")).alias("types"),
-            F.collect_list(
-                F.when(
-                    F.col("a").isin(*META_ATTRS),
-                    F.struct("e", "a", "v_str", "tx", "added"),
-                )
-            ).alias("schema_rows"),
-        ).write.parquet(staging)
-        agg = obs.get
-        if agg["n"] == 0:
+        df.observe(obs, *stats_columns()).write.parquet(staging)
+        stats = stats_of(obs.get)
+        if stats["rows"] == 0:
             # nothing to publish: drop the staging dir, and commit a
             # zero-file manifest only when there is an epoch to record
             for name in os.listdir(staging):
@@ -685,19 +738,6 @@ class LogParquetBackend:
             files = []
         else:
             files = self._publish_staged(staging)
-        # bound the distinct-tx set carried in the manifest: 0/1 distinct
-        # txs keep the exact value (the `clean` fast path needs only that);
-        # more collapse to "multi" anyway.
-        txs = agg["txs"] or []
-        stats = {
-            "max_id": agg["mx"] or 0,
-            "latest_tx": agg["mtx"] or 0,
-            "any_retraction": not bool(agg["all_added"]) if agg["n"] else False,
-            "txs": sorted(txs)[:2],
-            "n": int(agg["n"]),
-            "types": sorted(map(tuple, agg["types"] or [])),
-            "schema_rows": [tuple(r) for r in agg["schema_rows"] or []],
-        }
 
         def build(head_v: int, head: Optional[dict]) -> Optional[dict]:
             if replayed(head):
@@ -749,21 +789,6 @@ class LogParquetBackend:
         if not files:
             return self.spark.createDataFrame([], schema=FACT_SCHEMA)
         return self.spark.read.schema(FACT_SCHEMA).parquet(*files)
-
-    @property
-    def clean(self) -> bool:
-        return self.pin().clean
-
-    @property
-    def has_retractions(self) -> bool:
-        return self.pin().has_retractions
-
-    def max_id(self) -> int:
-        head = self._head()
-        return head["max_id"] if head else 0
-
-    def latest_tx(self) -> int:
-        return self.pin().latest_tx
 
     def history(self, limit: Optional[int] = None) -> list[dict]:
         """Commit history, newest first (the DESCRIBE HISTORY
