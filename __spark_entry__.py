@@ -1721,9 +1721,9 @@ def q86_bpe_merges(spark, sf_dir):
     round proves a prefix of disjoint top pairs is what the sequential
     loop would pick, then applies them in one vocab rewrite). The
     DuckDB oracle unrolls the SEQUENTIAL loop exactly (64 argmax +
-    rewrite levels, text.py bpe_learn_unrolled_sql) — sound because the
-    batched selection is pinned equal to the sequential loop by
-    tests/test_operators.py (6 and 64 merges) and the fuzz suite."""
+    rewrite levels, oracle/text.py bpe_learn_unrolled_sql) — sound
+    because the batched selection is pinned equal to the sequential loop
+    by tests/test_operators.py (6 and 64 merges) and the fuzz suite."""
     from unifydb_spark.operators.text import bpe_learn
 
     merges = bpe_learn(_docs(spark, sf_dir), n_merges=64)
@@ -1757,8 +1757,8 @@ def q89_bpe_encode(spark, sf_dir):
     count, BPE token count, char count. The merge kernel runs over
     DISTINCT WORDS only (vocab-sized mapInPandas) and joins back via a
     broadcast; the corpus is never touched by Python. The DuckDB oracle
-    (text.py bpe_encode_unrolled_sql) relearns the merges via the same
-    unrolled sequential chain as q86, then expresses the greedy merge
+    (oracle/text.py bpe_encode_unrolled_sql) relearns the merges via the
+    same unrolled sequential chain as q86, then expresses the greedy merge
     fold as leftmost non-overlapping replace over separator-wrapped
     token states — a full value-hash check; tests additionally pin
     word-level parity with the pure-Python kernel."""
@@ -5539,20 +5539,20 @@ def oracle_sql() -> dict[str, str]:
 
 
 def _operator_oracles() -> dict[str, str]:
-    from unifydb_spark.operators import dedup as _d
-    from unifydb_spark.operators import events as _ev
-    from unifydb_spark.operators import linkage as _lk
-    from unifydb_spark.operators import graph as _g
-    from unifydb_spark.operators import multimodal as _m
-    from unifydb_spark.operators import similarity as _s
-    from unifydb_spark.operators import stats as _st
-    from unifydb_spark.operators import text as _t
-    from unifydb_spark.operators import layout as _lay
-    from unifydb_spark.operators import olap as _ol
-    from unifydb_spark.operators import search as _se
-    from unifydb_spark.operators import sketch as _sk
-    from unifydb_spark.operators import quality as _ql
-    from unifydb_spark.sources import ingest as _ingest
+    from unifydb_spark.oracle import dedup as _d
+    from unifydb_spark.oracle import events as _ev
+    from unifydb_spark.oracle import linkage as _lk
+    from unifydb_spark.oracle import graph as _g
+    from unifydb_spark.oracle import multimodal as _m
+    from unifydb_spark.oracle import similarity as _s
+    from unifydb_spark.oracle import stats as _st
+    from unifydb_spark.oracle import text as _t
+    from unifydb_spark.oracle import layout as _lay
+    from unifydb_spark.oracle import olap as _ol
+    from unifydb_spark.oracle import search as _se
+    from unifydb_spark.oracle import sketch as _sk
+    from unifydb_spark.oracle import quality as _ql
+    from unifydb_spark.oracle import ingest as _ingest
 
     pii_injected = """
         WITH injected AS (
@@ -5566,7 +5566,7 @@ def _operator_oracles() -> dict[str, str]:
         )
     """
 
-    from unifydb_spark.streaming import interval_join_sql as _ij_sql
+    from unifydb_spark.oracle.streaming import interval_join_sql as _ij_sql
 
     return {
         "q63_chunk_dedup": _d.chunk_dedup_sql(chunk_words=12),
@@ -5659,7 +5659,7 @@ def _operator_oracles() -> dict[str, str]:
         "q82_video_features": _m.video_features_sql(every_n=6),
         "q83_image_features_real": _m.image_features_real_sql(),
         "q84_hll_distinct": __import__(
-            "unifydb_spark.operators.sketch", fromlist=["x"]
+            "unifydb_spark.oracle.sketch", fromlist=["x"]
         ).hll_distinct_sql(
             "(SELECT event_type, CAST(user_id AS VARCHAR) AS uid FROM events)",
             "uid",
@@ -5741,7 +5741,7 @@ def _operator_oracles() -> dict[str, str]:
         "q45_vocab_stats": _t.vocab_stats_sql(top_k=50),
         "q49_corpus_mix": _t.mix_by_token_budget_sql(total_tokens=10_000),
         "q48_count_min": __import__(
-            "unifydb_spark.operators.sketch", fromlist=["x"]
+            "unifydb_spark.oracle.sketch", fromlist=["x"]
         ).term_frequency_cms_sql(top_k=50),
         "q78_label_centroids": _s.label_centroids_sql(),
         "q72_kmeans": _s.kmeans_assign_sql(k=8, iters=3),

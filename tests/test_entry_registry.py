@@ -5,10 +5,13 @@ different names (e.g. slot q30 served by a function named q79_*) — correct at
 the time, but exactly how a future edit wires a slot to the wrong query.
 These tests pin the invariants so drift fails fast instead of silently.
 """
+import ast
 import importlib.util
 import os
 import sys
 from pathlib import Path
+
+import pytest
 
 REPO = Path(__file__).resolve().parent.parent
 
@@ -37,6 +40,39 @@ def test_oracle_keys_subset_of_queries():
     qkeys = set(entry.queries())
     okeys = set(entry.oracle_sql())
     assert okeys <= qkeys, f"oracle-only keys: {sorted(okeys - qkeys)}"
+
+
+def test_oracle_sql_lives_only_in_the_oracle_package():
+    """The DuckDB twins are verification code: none sits in a runtime
+    module, and no runtime module imports unifydb_spark.oracle."""
+    pkg = REPO / "unifydb_spark"
+    twins, importers = [], []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel.startswith("oracle/"):
+            continue
+        tree = ast.parse(path.read_text())
+        if rel.split("/")[0] in ("operators", "sources", "streaming"):
+            twins += [
+                f"{rel}:{node.name}" for node in tree.body
+                if isinstance(node, ast.FunctionDef)
+                and node.name.endswith(("_sql", "_ctes"))
+            ]
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and node.module:
+                mods = [node.module] + [f"{node.module}.{a.name}" for a in node.names]
+            elif isinstance(node, ast.Import):
+                mods = [a.name for a in node.names]
+            elif (isinstance(node, ast.Constant) and isinstance(node.value, str)
+                  and node.value.startswith("unifydb_spark.oracle")):
+                mods = [node.value]  # __import__ / importlib by name
+            else:
+                continue
+            if any(m == "unifydb_spark.oracle" or m.startswith("unifydb_spark.oracle.")
+                   for m in mods):
+                importers.append(f"{rel}:{node.lineno}")
+    assert twins == [], f"oracle SQL outside unifydb_spark/oracle/: {twins}"
+    assert importers == [], f"runtime modules importing the oracle: {importers}"
 
 
 def test_rows_only_queries_are_documented():

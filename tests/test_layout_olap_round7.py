@@ -187,10 +187,8 @@ def test_zonemap_eq_prune_profile_matches_duckdb_oracle(spark):
     layout scans nearly everything."""
     import duckdb
     import pandas as pd
-    from unifydb_spark.operators.layout import (
-        zonemap_eq_prune_profile,
-        zonemap_eq_prune_profile_sql,
-    )
+    from unifydb_spark.operators.layout import zonemap_eq_prune_profile
+    from unifydb_spark.oracle.layout import zonemap_eq_prune_profile_sql
 
     rows = [(i, (i * 7) % 50, (i * 13) % 997) for i in range(1, 2001)]
     df = spark.createDataFrame(rows, ["k", "p", "z"])
@@ -226,10 +224,8 @@ def test_zonemap_eq_prune_profile_string_values(spark):
     (including embedded quotes), no BIGINT cast."""
     import duckdb
     import pandas as pd
-    from unifydb_spark.operators.layout import (
-        zonemap_eq_prune_profile,
-        zonemap_eq_prune_profile_sql,
-    )
+    from unifydb_spark.operators.layout import zonemap_eq_prune_profile
+    from unifydb_spark.oracle.layout import zonemap_eq_prune_profile_sql
 
     langs = ["en", "fr", "de", "o'brien", "zz"]
     rows = [(i, langs[(i * 3) % 5]) for i in range(1, 501)]

@@ -50,6 +50,16 @@ def test_simhash_identical_distance_zero(docs):
     assert d[(0, 1)] == 0  # identical text -> identical signature
 
 
+def test_hamming_pairs_reject_radius_past_the_block_pigeonhole(spark, docs):
+    """b blocks only guarantee a shared block up to hamming b-1: a wider
+    radius would silently miss pairs, so both callers raise instead."""
+    with pytest.raises(ValueError):
+        D.simhash_pairs(docs, max_hamming=4)
+    emb = spark.createDataFrame([(0, [1.0])], "vec_id bigint, embedding array<double>")
+    with pytest.raises(ValueError):
+        D.embedding_rp_pairs(emb, n_blocks=8, max_hamming=8)
+
+
 def test_simhash_signature_deterministic(spark, docs):
     s1 = {r["doc_id"]: (r["hi"], r["lo"])
           for r in D.simhash_signatures(docs).collect()}
@@ -129,8 +139,8 @@ def test_auto_k_rule_and_sql_twin():
         IVF_CENTROID_DIVISOR,
         SEMDEDUP_K_DIVISOR,
         auto_k,
-        auto_k_sql,
     )
+    from unifydb_spark.oracle.similarity import auto_k_sql
 
     # semdedup: 500/2000 vectors -> historical k=8; 20k (sf1) -> 32
     assert auto_k(500, SEMDEDUP_K_DIVISOR) == 8
@@ -1849,11 +1859,8 @@ def test_source_cap_salted_identical_and_report_exact(spark):
     top-cap row), and the report matches the DuckDB twin."""
     import duckdb
     import pandas as pd
-    from unifydb_spark.operators.quality import (
-        source_cap,
-        source_cap_report,
-        source_cap_report_sql,
-    )
+    from unifydb_spark.operators.quality import source_cap, source_cap_report
+    from unifydb_spark.oracle.quality import source_cap_report_sql
 
     rows = [
         (i, f"s{i % 3}", (i * 37) % 101) for i in range(1, 301)
@@ -1937,12 +1944,8 @@ def test_pq_codes_and_adc_match_duckdb(spark):
     graded r144/r145 at dim=64."""
     import duckdb
     import pandas as pd
-    from unifydb_spark.operators.similarity import (
-        pq_adc_recall,
-        pq_adc_recall_sql,
-        pq_codes,
-        pq_codes_sql,
-    )
+    from unifydb_spark.operators.similarity import pq_adc_recall, pq_codes
+    from unifydb_spark.oracle.similarity import pq_adc_recall_sql, pq_codes_sql
 
     rows = [
         (i, [float(((i * 7 + j * 13) % 19) - 9) / 3.0 for j in range(8)])
@@ -1998,10 +2001,8 @@ def test_ivf_pq_topk_matches_duckdb(spark):
     corpus)."""
     import duckdb
     import pandas as pd
-    from unifydb_spark.operators.similarity import (
-        ivf_pq_topk,
-        ivf_pq_topk_sql,
-    )
+    from unifydb_spark.operators.similarity import ivf_pq_topk
+    from unifydb_spark.oracle.similarity import ivf_pq_topk_sql
 
     rows = [
         (i, [float(((i * 11 + j * 5) % 23) - 11) / 4.0 for j in range(8)])
@@ -2078,11 +2079,8 @@ def test_ivf_pq_refine_matches_duckdb(spark):
     shortlist contains ADC's top-k by construction)."""
     import duckdb
     import pandas as pd
-    from unifydb_spark.operators.similarity import (
-        ivf_pq_refine_topk,
-        ivf_pq_refine_topk_sql,
-        ivf_pq_topk,
-    )
+    from unifydb_spark.operators.similarity import ivf_pq_refine_topk, ivf_pq_topk
+    from unifydb_spark.oracle.similarity import ivf_pq_refine_topk_sql
 
     rows = [
         (i, [float(((i * 11 + j * 5) % 23) - 11) / 4.0 for j in range(8)])

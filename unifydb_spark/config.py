@@ -5,9 +5,9 @@ merged with overrides and exposes typed accessors with defaults /
 required checks. Same shape here: `load_env` reads an EDN or JSON config
 file plus UNIFYDB_* environment-variable overrides into module state;
 accessors mirror config.clj's (secret, port, token-ttl-seconds,
-storage-backend, cache-backend, jdbc-url). Queue-backend has no analog —
-the driver is the coordinator (SURVEY §3, V5/V6 n/a by design) — but the
-key is accepted for config-file compatibility.
+storage-backend, jdbc-url). Queue-backend has no analog — the driver is
+the coordinator (SURVEY §3, V5/V6 n/a by design) — and nothing reads
+cache-backend, but both keys are accepted for config-file compatibility.
 """
 
 from __future__ import annotations
@@ -109,10 +109,6 @@ def token_ttl_seconds() -> int:
 
 def storage_backend() -> str:
     return str(get_config("storage-backend", DEFAULTS["storage-backend"]))
-
-
-def cache_backend() -> str:
-    return str(get_config("cache-backend", DEFAULTS["cache-backend"]))
 
 
 def jdbc_url() -> str:

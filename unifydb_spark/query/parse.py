@@ -24,8 +24,8 @@ Python surface syntax (EDN -> Python):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from typing import Any, Optional, Tuple, Union
+from dataclasses import dataclass
+from typing import Any, Optional, Tuple
 
 from unifydb_spark.store import norm_attr
 
@@ -167,11 +167,6 @@ class FindPull:
     var: Var
     spec: tuple
     alias: str
-
-
-@dataclass(frozen=True)
-class SortKey:
-    element: Union[FindVar, FindAgg]
 
 
 @dataclass(frozen=True)
