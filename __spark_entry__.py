@@ -37,25 +37,12 @@ def _events_engine(spark: SparkSession, sf_dir: str):
     snapshots resolve last-writer-wins per user (SURVEY R1/§1.3)."""
     from unifydb_spark import Engine, FactStore
     from unifydb_spark.store import DataFrameBackend
+    from unifydb_spark.streaming.stream import events_to_facts
 
     key = (id(spark), sf_dir, "events")
     if key not in _ENGINES:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        facts = ev.select(
-            ev.user_id.cast("long").alias("e"),
-            F.lit("user/value").alias("a"),
-            F.lit("double").alias("v_type"),
-            F.lit(None).cast("bigint").alias("v_long"),
-            ev.value.cast("double").alias("v_double"),
-            F.lit(None).cast("string").alias("v_str"),
-            F.lit(None).cast("boolean").alias("v_bool"),
-            F.lit(None).cast("bigint").alias("v_ref"),
-            F.lit(None).cast("timestamp").alias("v_ts"),
-            F.lit(None).cast("string").alias("v_json"),
-            ev.event_id.cast("long").alias("tx"),
-            F.lit(True).alias("added"),
-        )
+        facts = events_to_facts(spark.read.parquet(f"{sf_dir}/events.parquet"))
         backend = DataFrameBackend(spark, facts)
         _ENGINES[key] = Engine(spark, FactStore(spark, backend=backend))
     return _ENGINES[key]
@@ -988,6 +975,7 @@ def _seq_engine(spark, sf_dir):
     assert-only single-tx, so the clean fast path applies."""
     from unifydb_spark import Engine, FactStore
     from unifydb_spark.store import DataFrameBackend
+    from unifydb_spark.values import fact_columns
 
     key = (id(spark), sf_dir, "seq")
     if key not in _ENGINES:
@@ -1004,14 +992,7 @@ def _seq_engine(spark, sf_dir):
         facts = c.select(
             F.col("c_custkey").cast("long").alias("e"),
             F.lit("customer/info").alias("a"),
-            F.lit("json").alias("v_type"),
-            F.lit(None).cast("bigint").alias("v_long"),
-            F.lit(None).cast("double").alias("v_double"),
-            F.lit(None).cast("string").alias("v_str"),
-            F.lit(None).cast("boolean").alias("v_bool"),
-            F.lit(None).cast("bigint").alias("v_ref"),
-            F.lit(None).cast("timestamp").alias("v_ts"),
-            vj.alias("v_json"),
+            *fact_columns("json", vj),
             F.lit(0).cast("long").alias("tx"),
             F.lit(True).alias("added"),
         )
@@ -1048,7 +1029,7 @@ def _retract_engine(spark, sf_dir):
     retraction-collapse window rather than last-writer-wins."""
     from unifydb_spark import Engine, FactStore
     from unifydb_spark.store import DataFrameBackend
-    from unifydb_spark.values import FACT_SCHEMA
+    from unifydb_spark.values import FACT_SCHEMA, fact_columns, fact_row
 
     key = (id(spark), sf_dir, "retract")
     if key not in _ENGINES:
@@ -1057,24 +1038,17 @@ def _retract_engine(spark, sf_dir):
         facts = ev.select(
             ev.user_id.cast("long").alias("e"),
             F.lit("user/bucket").alias("a"),
-            F.lit("long").alias("v_type"),
-            F.floor(F.col("value") / F.lit(10.0)).cast("long").alias("v_long"),
-            F.lit(None).cast("double").alias("v_double"),
-            F.lit(None).cast("string").alias("v_str"),
-            F.lit(None).cast("boolean").alias("v_bool"),
-            F.lit(None).cast("bigint").alias("v_ref"),
-            F.lit(None).cast("timestamp").alias("v_ts"),
-            F.lit(None).cast("string").alias("v_json"),
+            *fact_columns(
+                "long", F.floor(F.col("value") / F.lit(10.0)).cast("long")
+            ),
             ev.event_id.cast("long").alias("tx"),
             (F.col("event_type") != "error").alias("added"),
         )
         sid = 10**15
         schema_rows = spark.createDataFrame(
             [
-                (sid, "unifydb/schema", "string", None, None, "user/bucket",
-                 None, None, None, None, 0, True),
-                (sid, "unifydb/cardinality", "string", None, None,
-                 "cardinality/many", None, None, None, None, 0, True),
+                fact_row(sid, "unifydb/schema", "user/bucket", 0, True),
+                fact_row(sid, "unifydb/cardinality", "cardinality/many", 0, True),
             ],
             schema=FACT_SCHEMA,
         )

@@ -169,3 +169,28 @@ def test_query_compiles_once(spark):
     assert res["columns"] == ["y"]
     assert sorted(r[0]["$ref"] for r in res["results"]) == [2, 3, 4, 5]
     assert len(compiles) == 1
+
+
+def test_internal_error_is_500_without_details(spark, monkeypatch):
+    import io
+
+    from unifydb_spark import structlog
+
+    eng = Engine(spark, FactStore(spark))
+
+    def boom(q, db=None):
+        raise RuntimeError("secret detail")
+
+    monkeypatch.setattr(eng, "compile", boom)
+    log = io.StringIO()
+    monkeypatch.setitem(structlog._STATE, "stream", log)
+    server, port = serve_background(eng)
+    try:
+        status, res = _post(port, "/query", {"query": {"find": ["?x"],
+                                                       "where": [["?x", ":a", 1]]}})
+    finally:
+        server.shutdown()
+    assert status == 500
+    assert res == {"error": {"code": "internal-error", "message": "internal error"}}
+    assert "RuntimeError: secret detail" in log.getvalue()
+    assert "Traceback" in log.getvalue()

@@ -18,8 +18,8 @@ from typing import Any, Optional, Union
 from pyspark.sql import DataFrame, SparkSession
 
 from unifydb_spark.store import Db, FactStore, LATEST
-from unifydb_spark.values import Ref, decode_json_value
-from unifydb_spark.query.parse import parse_query, QueryError
+from unifydb_spark.values import STRUCT_SLOT, Ref, decode_json_value, decode_value
+from unifydb_spark.query.parse import parse_query
 from unifydb_spark.query.compile import compile_where
 from unifydb_spark.query.results import process_find
 from unifydb_spark.query.rules import RulesEnv, MAX_ITERATIONS
@@ -124,19 +124,7 @@ def _decode(v: Any, repr_: str) -> Any:
         return decode_json_value(json.loads(v))
     if repr_ == "struct":
         d = v.asDict() if hasattr(v, "asDict") else v
-        t = d.get("t")
-        if t == "ref":
-            return Ref(d["r"])
-        if t == "json":
-            return decode_json_value(json.loads(d["j"]))
-        return {
-            "long": d.get("l"),
-            "double": d.get("d"),
-            "string": d.get("s"),
-            "bool": d.get("b"),
-            "ts": d.get("ts"),
-            "null": None,
-        }.get(t)
+        return decode_json_value(decode_value(d["t"], d, STRUCT_SLOT))
     if repr_.startswith("array<"):
         inner = repr_[6:-1]
         return [_decode(x, inner) for x in v]

@@ -77,7 +77,7 @@ def _resolve_query_vectors(
 ) -> DataFrame:
     """The key arrives in the relation's repr: a raw long where the
     compiler narrowed the type, the tagged value struct
-    (compile.to_struct) whose long slot is `.l`, or — for a seq LITERAL
+    (values.to_struct) whose long slot is `.l`, or — for a seq LITERAL
     key (round-13, the serving case: a query vector that is NOT in the
     corpus) — a one-row array<double>, searched directly without the
     corpus lookup."""

@@ -28,14 +28,23 @@ struct): monotyped attributes bind native parquet columns (JVM codegen path);
 only statically untypeable positions fall back to a value struct. The
 reference's boxed ID type (src/unifydb/id.clj:3-26) is repr 'ref' — a long
 column that deliberately does not unify with plain longs, matching ID
-equality semantics.
+equality semantics. A variable bound inside a sequence pattern is repr
+'json': the canonical-JSON text of the element it matched.
+
+How a value is encoded is values.py's alone (its `CODEC` table). Two
+variables of the same repr unify by column equality; of different reprs,
+by equality of their decoded value structs (`values.to_struct`, which
+decodes JSON text JVM-side), so a double bound from a fact and the same
+double bound inside a vector unify without rendering either as text. An
+`or` whose branches bind a variable at different reprs merges it as a
+value struct.
 """
 
 from __future__ import annotations
 
 import json
 from dataclasses import dataclass
-from typing import Any, Optional
+from typing import Optional
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -44,9 +53,11 @@ from pyspark.sql import functions as F
 from unifydb_spark.store import Db
 from unifydb_spark.values import (
     NATURAL_COL,
+    REPR_DDL,
     Ref,
     canonical_json,
     encode_value,
+    to_struct,
     value_struct_col,
 )
 from unifydb_spark.query.parse import (
@@ -63,41 +74,6 @@ from unifydb_spark.query.parse import (
     WILDCARD,
 )
 from unifydb_spark.query import functions as fnreg
-
-STRUCT_DDL = (
-    "struct<t:string,l:bigint,d:double,s:string,b:boolean,r:bigint,"
-    "ts:timestamp,j:string>"
-)
-REPR_DDL = {
-    "long": "bigint",
-    "double": "double",
-    "string": "string",
-    "bool": "boolean",
-    "ref": "bigint",
-    "ts": "timestamp",
-    "json": "string",
-    "struct": STRUCT_DDL,
-}
-# v_type tag a repr corresponds to (for struct promotion)
-REPR_TAG = {
-    "long": "long",
-    "double": "double",
-    "string": "string",
-    "bool": "bool",
-    "ref": "ref",
-    "ts": "ts",
-    "json": "json",
-}
-_STRUCT_FIELD = {
-    "long": "l",
-    "double": "d",
-    "string": "s",
-    "bool": "b",
-    "ref": "r",
-    "ts": "ts",
-    "json": "j",
-}
-
 
 def bt(name: str) -> Column:
     return F.col("`" + name + "`")
@@ -120,115 +96,30 @@ def empty_rel(spark, vars: dict) -> Rel:
     return Rel(spark.createDataFrame([], schema=schema), dict(vars))
 
 
-def to_struct(c: Column, repr_: str) -> Column:
-    if repr_ == "struct":
-        return c
-    tag = REPR_TAG[repr_]
-    fields = []
-    for r, fld in [
-        ("long", "l"), ("double", "d"), ("string", "s"), ("bool", "b"),
-        ("ref", "r"), ("ts", "ts"), ("json", "j"),
-    ]:
-        fields.append(
-            (c if repr_ == r else F.lit(None).cast(REPR_DDL[r])).alias(fld)
-        )
-    return F.struct(F.lit(tag).alias("t"), *fields).alias("v")
-
-
 def to_json_repr(c: Column, repr_: str) -> Column:
-    """Promote a typed column to the canonical-JSON string repr (for
-    unification against values bound inside sequence patterns)."""
+    """The canonical-JSON text a sequence pattern destructures: a scalar
+    never matches a sequence pattern, so only JSON values carry one."""
     if repr_ == "json":
         return c
-    if repr_ == "long":
-        return c.cast("string")
-    if repr_ == "bool":
-        return F.when(c, F.lit("true")).when(~c, F.lit("false"))
-    if repr_ == "ref":
-        return F.when(c.isNotNull(), F.concat(F.lit('{"$ref":'), c.cast("string"), F.lit("}")))
-    if repr_ in ("string", "double"):
-        # JSON-escape via to_json on a one-field struct, then strip the
-        # '{"v":' prefix and '}' suffix
-        wrapped = F.to_json(F.struct(c.alias("v")))
-        return F.when(
-            c.isNotNull(), F.substring(wrapped, F.lit(6), F.length(wrapped) - 6)
-        )
-    if repr_ == "ts":
-        return F.when(
-            c.isNotNull(),
-            F.concat(F.lit('"'), F.date_format(c, "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"), F.lit('"')),
-        )
     if repr_ == "struct":
-        return _struct_to_json_udf()(c)
-    raise QueryError("internal", f"cannot json-promote repr {repr_}")
-
-
-_S2J = None
-
-
-def _struct_to_json_udf():
-    global _S2J
-    if _S2J is None:
-
-        @F.pandas_udf("string")
-        def s2j(s: pd.DataFrame) -> pd.Series:
-            out = []
-            for row in s.itertuples(index=False):
-                t = row.t
-                if t is None:
-                    out.append(None)
-                elif t == "long":
-                    out.append(json.dumps(int(row.l)))
-                elif t == "double":
-                    out.append(json.dumps(float(row.d)))
-                elif t == "string":
-                    out.append(json.dumps(row.s))
-                elif t == "bool":
-                    out.append(json.dumps(bool(row.b)))
-                elif t == "ref":
-                    out.append('{"$ref":%d}' % int(row.r))
-                elif t == "ts":
-                    out.append(json.dumps(row.ts.isoformat()))
-                elif t == "json":
-                    out.append(row.j)
-                else:
-                    out.append(None)
-            return pd.Series(out)
-
-        _S2J = s2j
-    return _S2J
+        return c["j"]
+    return F.lit(None).cast("string")
 
 
 def unify_condition(lc: Column, lrepr: str, rc: Column, rrepr: str):
-    """Equality condition between two variable columns, promoting reprs when
-    they differ. Returns None when unification is statically impossible
-    (strict typing: the reference's ID type and Clojure `=` are type-strict)."""
+    """Equality condition between two variable columns. Different reprs
+    compare as decoded value structs; returns None when unification is
+    statically impossible (strict typing: the reference's ID type and
+    Clojure `=` are type-strict)."""
     if lrepr == rrepr:
         return lc == rc
-    pair = {lrepr, rrepr}
-    if "json" in pair:
-        return to_json_repr(lc, lrepr) == to_json_repr(rc, rrepr)
-    if "struct" in pair:
+    if "json" in (lrepr, rrepr) or "struct" in (lrepr, rrepr):
         return to_struct(lc, lrepr) == to_struct(rc, rrepr)
     return None
 
 
 def merge_repr(r1: str, r2: str) -> str:
-    if r1 == r2:
-        return r1
-    if "json" in (r1, r2):
-        return "json"
-    return "struct"
-
-
-def promote_col(c: Column, from_repr: str, to_repr: str) -> Column:
-    if from_repr == to_repr:
-        return c
-    if to_repr == "json":
-        return to_json_repr(c, from_repr)
-    if to_repr == "struct":
-        return to_struct(c, from_repr)
-    raise QueryError("internal", f"cannot promote {from_repr} -> {to_repr}")
+    return r1 if r1 == r2 else "struct"
 
 
 def join_rels(left: Optional[Rel], right: Rel, how: str = "inner") -> Rel:
@@ -372,7 +263,7 @@ def infer_value_repr(db: Db, attr: Optional[str]) -> str:
     types = db.attr_types().get(attr)
     if types and len(types) == 1:
         t = next(iter(types))
-        if t in REPR_TAG.values() and t != "null":
+        if t in NATURAL_COL:
             return t
     return "struct"
 
@@ -552,10 +443,9 @@ def _pivotable(db: Db, c) -> bool:
 
 
 def _group_pivots(db: Db, clauses: list) -> list:
-    backend = getattr(db.store, "backend", None)
+    backend = db.store.backend
     if (
-        backend is None
-        or not getattr(backend, "supports_pivot", False)
+        not getattr(backend, "supports_pivot", False)
         or db.historical
         or (db.tx_id != "latest" and db.tx_id < db.pinned().pin.latest_tx)
     ):
@@ -1034,7 +924,7 @@ def _apply_clause(db: Db, rel: Optional[Rel], c, rules_env) -> Rel:
         cond, _ = fnreg.apply_call(c.fn, args, kind="predicate")
         return Rel(rel.df.filter(cond), dict(rel.vars))
     if isinstance(c, FnBind):
-        tf = (getattr(db.store, "table_fns", None) or {}).get(c.fn)
+        tf = db.store.table_fns.get(c.fn)
         if tf is not None:
             # a LITERAL-key table fn can start the relation (its key
             # needs no prior binding); _apply_table_fn handles rel=None
@@ -1155,7 +1045,8 @@ def align_union(rels: list) -> Rel:
         cols = []
         for n, rp in target.items():
             if n in r.vars:
-                cols.append(promote_col(bt(n), r.vars[n], rp).alias(n))
+                c = bt(n) if r.vars[n] == rp else to_struct(bt(n), r.vars[n])
+                cols.append(c.alias(n))
             else:
                 cols.append(F.lit(None).cast(REPR_DDL[rp]).alias(n))
         aligned.append(r.df.select(*cols))

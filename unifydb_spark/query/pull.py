@@ -11,9 +11,10 @@ Spark-first shape: one pull *level* = ONE slice of the snapshot holding
 the spec's attributes (``Db.visible_facts(attrs=...)``: a single
 ``a IN (...)`` filter of a commit-log store's cached snapshot, the
 per-attribute table projections of the table fact store) semi-joined to
-the entity-id set, each value rendered to canonical JSON JVM-side (same
-codec as values.py), ref-attributes with sub-specs left-joined to the
-recursively assembled sub-entity JSON, then one groupBy builds the
+the entity-id set, each value rendered to JSON JVM-side
+(``values.VALUE_JSON_SQL``, an output-only rendering), ref-attributes
+with sub-specs left-joined to the recursively assembled sub-entity
+JSON, then one groupBy builds the
 ``{"attr": value}`` object per entity (collect_list + array_sort +
 array_join — all whole-stage-codegen builtins, no Python UDF anywhere).
 The value codec and the object assembly are each one SQL expression
@@ -38,30 +39,12 @@ from pyspark.sql import functions as F
 
 from unifydb_spark.query.parse import QueryError, FindPull
 from unifydb_spark.store import Db, norm_attr
+from unifydb_spark.values import VALUE_JSON_SQL, json_sql
 
 
 def _sql_str(s: str) -> str:
     """A Spark SQL string literal of `s`."""
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def _json_sql(x: str) -> str:
-    """SQL: JSON-encode the scalar expression `x` JVM-side — to_json of a
-    one-field struct, minus its '{"v":' prefix and '}' suffix."""
-    j = f"to_json(named_struct('v', {x}))"
-    return f"substring({j}, 6, length({j}) - 6)"
-
-
-# Fact typed-value columns -> canonical JSON (values.py codec).
-_VALUE_JSON = f"""CASE v_type
-    WHEN 'long' THEN CAST(v_long AS STRING)
-    WHEN 'double' THEN {_json_sql("v_double")}
-    WHEN 'string' THEN {_json_sql("v_str")}
-    WHEN 'bool' THEN IF(v_bool, 'true', 'false')
-    WHEN 'ref' THEN concat('{{"$ref":', CAST(v_ref AS STRING), '}}')
-    WHEN 'ts' THEN concat('"', date_format(v_ts, 'yyyy-MM-dd\\'T\\'HH:mm:ss.SSSSSS'), '"')
-    WHEN 'json' THEN v_json
-    ELSE 'null' END"""
 
 
 def _object_sql(many: list[str]) -> str:
@@ -76,7 +59,7 @@ def _object_sql(many: list[str]) -> str:
         lits = ", ".join(map(_sql_str, many))
         val = f"IF(array_contains(array({lits}), k), concat('[', array_join({vjs}, ','), ']'), {val})"
     keys = "array_sort(array_distinct(transform(__avs, x -> x.a)))"
-    kv = f"concat({_json_sql('k')}, ':', {val})"
+    kv = f"concat({json_sql('k')}, ':', {val})"
     return f"concat('{{', array_join(transform({keys}, k -> {kv}), ','), '}}')"
 
 
@@ -117,7 +100,7 @@ def pull_level(db: Db, ids_df: DataFrame, spec) -> DataFrame:
         # proportional to the spec, not the schema
         facts = db.visible_facts(attrs=attrs)
     base = facts.join(ids_df, F.expr("e = __pe"), "left_semi").withColumn(
-        "__vj", F.expr(_VALUE_JSON)
+        "__vj", F.expr(VALUE_JSON_SQL)
     )
     for attr, subspec in refs.items():
         is_ref = f"a = {_sql_str(attr)} AND v_type = 'ref'"

@@ -24,12 +24,11 @@ columns (cc-cmp, src/unifydb/comparison.clj:91-129) via type-rank sort keys.
 
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from unifydb_spark.query.compile import Rel, bt
+from unifydb_spark.query.functions import num
 from unifydb_spark.query.parse import (
     FindAgg,
     FindPull,
@@ -43,12 +42,6 @@ from unifydb_spark.values import cc_seq_sort_key, struct_sort_keys
 DEC = "decimal(30,10)"
 
 
-def _numeric(col: Column, repr_: str) -> Column:
-    if repr_ == "struct":
-        return F.coalesce(col["l"].cast("double"), col["d"])
-    return col
-
-
 def _agg_expr(fn: str, col: Column, repr_: str, alias: str):
     """Returns (agg Column, output repr)."""
     if fn == "sum":
@@ -57,10 +50,10 @@ def _agg_expr(fn: str, col: Column, repr_: str, alias: str):
         # exact decimal partial sums: order- and partition-count-independent
         # (a double sum is run-order dependent — fatal for reproducibility
         # at scale); stays DECIMAL(38,10) in the output
-        return F.sum(_numeric(col, repr_).cast(DEC)).alias(alias), "decimal"
+        return F.sum(num((col, repr_)).cast(DEC)).alias(alias), "decimal"
     if fn in ("min", "max"):
         f = F.min if fn == "min" else F.max
-        return f(_numeric(col, repr_) if repr_ == "struct" else col).alias(alias), (
+        return f(num((col, repr_)) if repr_ == "struct" else col).alias(alias), (
             "double" if repr_ == "struct" else repr_
         )
     if fn in ("mean", "avg"):
@@ -69,12 +62,12 @@ def _agg_expr(fn: str, col: Column, repr_: str, alias: str):
         # exact decimal sum -> double, THEN double division: deterministic
         # and bit-identical to the oracle's same expression (a decimal
         # division would round at an engine-specific scale instead)
-        num = _numeric(col, repr_).cast(DEC)
-        return (F.sum(num).cast("double") / F.count(num)).alias(alias), "double"
+        dec = num((col, repr_)).cast(DEC)
+        return (F.sum(dec).cast("double") / F.count(dec)).alias(alias), "double"
     if fn == "median":
-        return F.median(_numeric(col, repr_)).alias(alias), "double"
+        return F.median(num((col, repr_))).alias(alias), "double"
     if fn == "stddev":
-        return F.stddev_samp(_numeric(col, repr_)).alias(alias), "double"
+        return F.stddev_samp(num((col, repr_))).alias(alias), "double"
     if fn == "count":
         return F.count(col).alias(alias), "long"
     if fn == "count-distinct":

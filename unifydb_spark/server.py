@@ -13,7 +13,9 @@ POST /transact {"tx-data": [...]}
                -> {"tx-id": int, "tempids": {...}, "tx-data": [...]}
 Errors        -> 400 {"error": {"code": ..., "message": ...}}
                (the reference's structured error payload,
-               src/unifydb/query.clj:505-517)
+               src/unifydb/query.clj:505-517) for query errors and bad
+               values; any other failure is a 500 {"error": {"code":
+               "internal-error", ...}} whose traceback goes to the log
 
 Content negotiation (V4, reference wrap-content-type / wrap-accept-type,
 server.clj:54-81): requests may be application/json or application/edn
@@ -30,6 +32,7 @@ import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+from unifydb_spark import structlog
 from unifydb_spark.query.parse import QueryError
 from unifydb_spark.values import Ref
 
@@ -228,8 +231,12 @@ class EngineHandler(BaseHTTPRequestHandler):
                 400,
                 {"error": {"code": e.code, "message": str(e), **e.info}},
             )
-        except Exception as e:  # structured error payload, like the reference
+        except (ValueError, TypeError) as e:  # a bad request, reported as such
             return self._send(400, {"error": {"code": "error", "message": str(e)}})
+        except Exception as e:  # a server fault: logged, never sent to the client
+            structlog.error("request failed", _err=e, path=self.path)
+            return self._send(500, {"error": {"code": "internal-error",
+                                              "message": "internal error"}})
 
 
 def make_server(

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from unifydb_spark.store import FactStore
 from unifydb_spark.txlog import Pin
-from unifydb_spark.values import FACT_SCHEMA
+from unifydb_spark.values import FACT_SCHEMA, fact_columns
 
 # entity-id bases, 10^12 apart: composite lineitem keys at TPC-H sf100k
 # (~600B rows, orderkey*8+linenumber < 10^12) still fit with headroom
@@ -323,44 +323,16 @@ class TableFactView:
 
     # -- fact projections ----------------------------------------------------
 
-    def _value_col(self, attr: str):
-        """(typed value expression columns) for one attribute."""
-        vtype = self._attr_vtype(attr)
-        src = self._src_col(attr)
-        cols = {
-            "v_long": F.lit(None).cast("bigint"),
-            "v_double": F.lit(None).cast("double"),
-            "v_str": F.lit(None).cast("string"),
-            "v_bool": F.lit(None).cast("boolean"),
-            "v_ref": F.lit(None).cast("bigint"),
-            "v_ts": F.lit(None).cast("timestamp"),
-            "v_json": F.lit(None).cast("string"),
-        }
-        natural = {
-            "ref": "v_ref", "long": "v_long", "double": "v_double",
-            "string": "v_str", "bool": "v_bool", "ts": "v_ts",
-        }[vtype]
-        cols[natural] = src
-        return vtype, cols
-
     def facts_for_attr(self, attr: str) -> DataFrame:
         if attr not in self._attr_index:
             return self.spark.createDataFrame([], schema=FACT_SCHEMA)
         tname, colname, _ = self._attr_index[attr]
         spec = self._specs[tname]
         df = self.table(tname)
-        vtype, cols = self._value_col(attr)
         return df.filter(df[colname].isNotNull()).select(
             spec["pk"](df),
             F.lit(attr).alias("a"),
-            F.lit(vtype).alias("v_type"),
-            cols["v_long"].alias("v_long"),
-            cols["v_double"].alias("v_double"),
-            cols["v_str"].alias("v_str"),
-            cols["v_bool"].alias("v_bool"),
-            cols["v_ref"].alias("v_ref"),
-            cols["v_ts"].alias("v_ts"),
-            cols["v_json"].alias("v_json"),
+            *fact_columns(self._attr_vtype(attr), self._src_col(attr)),
             F.lit(1).cast("long").alias("tx"),
             F.lit(True).alias("added"),
         )

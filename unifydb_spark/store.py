@@ -60,7 +60,7 @@ from unifydb_spark.txlog import (
     fold_stats,
     rows_stats,
 )
-from unifydb_spark.values import FACT_SCHEMA, Ref, V_COLS, encode_value
+from unifydb_spark.values import FACT_SCHEMA, Ref, V_COLS, fact_row
 
 LATEST = "latest"
 
@@ -560,25 +560,10 @@ class FactStore:
         """Load raw [e a v tx added] tuples (the reference tests seed storage
         directly, test/unifydb/query_test.clj:12-22). e/tx may be ints or
         Ref."""
-        rows = []
-        for e, a, v, tx, added in facts:
-            enc = encode_value(_norm_value(v))
-            rows.append(
-                (
-                    int(e),
-                    norm_attr(a),
-                    enc["v_type"],
-                    enc["v_long"],
-                    enc["v_double"],
-                    enc["v_str"],
-                    enc["v_bool"],
-                    enc["v_ref"],
-                    enc["v_ts"],
-                    enc["v_json"],
-                    int(tx),
-                    bool(added),
-                )
-            )
+        rows = [
+            fact_row(e, norm_attr(a), _norm_value(v), tx, added)
+            for e, a, v, tx, added in facts
+        ]
         self.backend.append(rows)
         return self
 
@@ -649,23 +634,7 @@ class FactStore:
                         v = v[1:]
                     elif v in tempids:
                         v = Ref(tempids[v])
-                enc = encode_value(v)
-                rows.append(
-                    (
-                        int(eid),
-                        a,
-                        enc["v_type"],
-                        enc["v_long"],
-                        enc["v_double"],
-                        enc["v_str"],
-                        enc["v_bool"],
-                        enc["v_ref"],
-                        enc["v_ts"],
-                        enc["v_json"],
-                        tx_id,
-                        add,
-                    )
-                )
+                rows.append(fact_row(eid, a, v, tx_id, add))
                 facts_out.append([eid, a, v, tx_id, add])
             if supports_occ:
                 if self.backend.commit_rows(rows, base.version):

@@ -25,12 +25,14 @@ per micro-batch and its state store is RocksDB-backed on a real cluster.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from unifydb_spark.values import fact_columns
 
 # transformWithStateInPandas needs a protobuf runtime in BOTH the driver
 # and the Python worker; this container lacks google.protobuf, so seed the
@@ -65,14 +67,7 @@ def events_to_facts(events: DataFrame) -> DataFrame:
     return events.select(
         F.col("user_id").cast("long").alias("e"),
         F.lit("user/value").alias("a"),
-        F.lit("double").alias("v_type"),
-        F.lit(None).cast("bigint").alias("v_long"),
-        F.col("value").cast("double").alias("v_double"),
-        F.lit(None).cast("string").alias("v_str"),
-        F.lit(None).cast("boolean").alias("v_bool"),
-        F.lit(None).cast("bigint").alias("v_ref"),
-        F.lit(None).cast("timestamp").alias("v_ts"),
-        F.lit(None).cast("string").alias("v_json"),
+        *fact_columns("double", F.col("value").cast("double")),
         F.col("event_id").cast("long").alias("tx"),
         F.lit(True).alias("added"),
     )
@@ -205,14 +200,7 @@ def stream_embeddings_to_index(
             facts = batch_df.select(
                 F.col(id_col).cast("long").alias("e"),
                 F.lit("emb/id").alias("a"),
-                F.lit("long").alias("v_type"),
-                F.col(id_col).cast("long").alias("v_long"),
-                F.lit(None).cast("double").alias("v_double"),
-                F.lit(None).cast("string").alias("v_str"),
-                F.lit(None).cast("boolean").alias("v_bool"),
-                F.lit(None).cast("bigint").alias("v_ref"),
-                F.lit(None).cast("timestamp").alias("v_ts"),
-                F.lit(None).cast("string").alias("v_json"),
+                *fact_columns("long", F.col(id_col).cast("long")),
                 F.col(id_col).cast("long").alias("tx"),
                 F.lit(True).alias("added"),
             )

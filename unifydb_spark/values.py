@@ -1,13 +1,26 @@
-"""Typed-value codec for the facts table.
+"""Typed-value codec for the facts table — the one module that knows how
+a value is encoded.
 
 The reference stores arbitrary EDN values in the fact's value position
 (survey §1.1; reference src/unifydb/facts.clj:3-26). Spark has no
 dynamically-typed column, so a value is a *union type*: a `v_type` tag plus
-one non-null typed column. Nested vectors (reference
-test/unifydb/query_test.clj:19 — ``[:slumerville [:ridge :road] 10]``) are
-canonical-JSON encoded into `v_json`; entity references get their own
-`v_ref` column so ref-joins (VAET semantics, reference
-src/unifydb/storage.clj:23-27) stay JVM-native long==long equi-joins.
+one non-null typed column. `CODEC` maps each tag to its fact column, its
+slot in the value struct and its Spark type; the fact schema, the value
+struct, the compiler's per-repr DDL, Python fact rows (`fact_row`) and
+Spark fact frames (`fact_columns`) are all derived from it.
+
+Nested vectors (reference test/unifydb/query_test.clj:19 —
+``[:slumerville [:ridge :road] 10]``) are canonical-JSON encoded into
+`v_json`; an entity reference inside one is written ``{"$ref": n}`` at any
+depth. Top-level entity references get their own `v_ref` column so
+ref-joins (VAET semantics, reference src/unifydb/storage.clj:23-27) stay
+JVM-native long==long equi-joins.
+
+Unification compares decoded values, never JSON text of two renderers:
+values of different compile-time reprs meet as value structs
+(`to_struct`), and a canonical-JSON binding from a sequence pattern is
+decoded JVM-side into its typed slot (`json_to_struct`). JSON text is
+compared only against JSON text written by `canonical_json`.
 
 Design note (100 TB): the typed columns are all scalar parquet-native types,
 so scans prune to exactly the columns a query touches and predicates push
@@ -67,102 +80,109 @@ TYPE_RANK = {
     T_JSON: 6,
 }
 
-V_COLS = ["v_type", "v_long", "v_double", "v_str", "v_bool", "v_ref", "v_ts", "v_json"]
+# One row per value tag: (fact column, value-struct slot, Spark type).
+CODEC = {
+    T_LONG: ("v_long", "l", LongType()),
+    T_DOUBLE: ("v_double", "d", DoubleType()),
+    T_STRING: ("v_str", "s", StringType()),
+    T_BOOL: ("v_bool", "b", BooleanType()),
+    T_REF: ("v_ref", "r", LongType()),
+    T_TS: ("v_ts", "ts", TimestampType()),
+    T_JSON: ("v_json", "j", StringType()),
+}
+
+# Typed column / struct slot a value of each type lives in.
+NATURAL_COL = {t: col for t, (col, _, _) in CODEC.items()}
+STRUCT_SLOT = {t: slot for t, (_, slot, _) in CODEC.items()}
+V_COLS = ["v_type", *NATURAL_COL.values()]
+
+# Spark DDL of each compile-time repr: a tag's column type, or the value
+# struct for variables whose type cannot be statically inferred.
+REPR_DDL = {t: dt.simpleString() for t, (_, _, dt) in CODEC.items()}
+STRUCT_DDL = "struct<t:string,%s>" % ",".join(
+    f"{STRUCT_SLOT[t]}:{ddl}" for t, ddl in REPR_DDL.items()
+)
+REPR_DDL["struct"] = STRUCT_DDL
 
 FACT_SCHEMA = StructType(
     [
         StructField("e", LongType(), False),
         StructField("a", StringType(), False),
         StructField("v_type", StringType(), False),
-        StructField("v_long", LongType(), True),
-        StructField("v_double", DoubleType(), True),
-        StructField("v_str", StringType(), True),
-        StructField("v_bool", BooleanType(), True),
-        StructField("v_ref", LongType(), True),
-        StructField("v_ts", TimestampType(), True),
-        StructField("v_json", StringType(), True),
+        *[StructField(col, dt, True) for col, _, dt in CODEC.values()],
         StructField("tx", LongType(), False),
         StructField("added", BooleanType(), False),
     ]
 )
 
-_EMPTY = {
-    "v_long": None,
-    "v_double": None,
-    "v_str": None,
-    "v_bool": None,
-    "v_ref": None,
-    "v_ts": None,
-    "v_json": None,
-}
+_EMPTY = dict.fromkeys(NATURAL_COL.values())
 
 
 def canonical_json(v: Any) -> str:
-    """Deterministic JSON for nested sequence values (sorted keys, no spaces)."""
-    return json.dumps(v, sort_keys=True, separators=(",", ":"), default=_json_default)
+    """Deterministic JSON for nested sequence values (sorted keys, no
+    spaces); a `Ref` at any depth is written ``{"$ref": n}``."""
+    return json.dumps(_jsonable(v), sort_keys=True, separators=(",", ":"))
 
 
-def _json_default(v: Any):
+def _jsonable(v: Any):
+    # json writes int subclasses natively, so Refs are rewritten up front
     if isinstance(v, Ref):
         return {"$ref": int(v)}
+    if isinstance(v, (list, tuple)):
+        return [_jsonable(x) for x in v]
+    if isinstance(v, dict):
+        return {k: _jsonable(x) for k, x in v.items()}
     if isinstance(v, (_dt.datetime, _dt.date)):
         return v.isoformat()
+    if isinstance(v, (str, int, float)) or v is None:
+        return v
     raise TypeError(f"not JSON-encodable in a fact value: {v!r}")
 
 
 def encode_value(v: Any) -> dict:
     """Python value -> {v_type, v_long, ...} column dict (exactly one typed
     column non-null, per FIXTURES.md §A)."""
-    out = dict(_EMPTY)
     if v is None:
-        out["v_type"] = T_NULL
+        tag, x = T_NULL, None
     elif isinstance(v, Ref):
-        out["v_type"] = T_REF
-        out["v_ref"] = int(v)
+        tag, x = T_REF, int(v)
     elif isinstance(v, bool):  # before int: bool subclasses int
-        out["v_type"] = T_BOOL
-        out["v_bool"] = v
+        tag, x = T_BOOL, v
     elif isinstance(v, int):
-        out["v_type"] = T_LONG
-        out["v_long"] = v
+        tag, x = T_LONG, v
     elif isinstance(v, float):
         if math.isnan(v):
             raise ValueError("NaN fact values are not supported")
-        out["v_type"] = T_DOUBLE
-        out["v_double"] = v
+        tag, x = T_DOUBLE, v
     elif isinstance(v, str):
-        out["v_type"] = T_STRING
-        out["v_str"] = v
+        tag, x = T_STRING, v
     elif isinstance(v, _dt.datetime):
-        out["v_type"] = T_TS
-        out["v_ts"] = v
+        tag, x = T_TS, v
     elif isinstance(v, (list, tuple)):
-        out["v_type"] = T_JSON
-        out["v_json"] = canonical_json(list(v))
+        tag, x = T_JSON, canonical_json(list(v))
     else:
         raise TypeError(f"unsupported fact value type: {type(v).__name__}")
+    out = dict(_EMPTY, v_type=tag)
+    if tag != T_NULL:
+        out[NATURAL_COL[tag]] = x
     return out
 
 
-def decode_value(v_type: str, row: Any) -> Any:
-    """Typed columns -> Python value (inverse of encode_value)."""
+def decode_value(v_type: str, row: Any, slots: dict = NATURAL_COL) -> Any:
+    """Typed columns -> Python value (inverse of encode_value); `slots`
+    names where each tag's value lives in `row` (fact columns, or
+    STRUCT_SLOT for a value struct). JSON values come back parsed, with
+    ``{"$ref": n}`` wrappers left for `decode_json_value`."""
     if v_type == T_NULL:
         return None
-    if v_type == T_LONG:
-        return row["v_long"]
-    if v_type == T_DOUBLE:
-        return row["v_double"]
-    if v_type == T_STRING:
-        return row["v_str"]
-    if v_type == T_BOOL:
-        return row["v_bool"]
+    if v_type not in slots:
+        raise ValueError(f"unknown v_type {v_type!r}")
+    x = row[slots[v_type]]
     if v_type == T_REF:
-        return Ref(row["v_ref"])
-    if v_type == T_TS:
-        return row["v_ts"]
+        return Ref(x)
     if v_type == T_JSON:
-        return json.loads(row["v_json"])
-    raise ValueError(f"unknown v_type {v_type!r}")
+        return json.loads(x)
+    return x
 
 
 def decode_json_value(v: Any) -> Any:
@@ -177,16 +197,23 @@ def decode_json_value(v: Any) -> Any:
     return v
 
 
-# Typed column a value of each type naturally lives in.
-NATURAL_COL = {
-    T_LONG: "v_long",
-    T_DOUBLE: "v_double",
-    T_STRING: "v_str",
-    T_BOOL: "v_bool",
-    T_REF: "v_ref",
-    T_TS: "v_ts",
-    T_JSON: "v_json",
-}
+def fact_row(e, a: str, v: Any, tx, added) -> tuple:
+    """One FACT_SCHEMA row for the Python value `v`."""
+    enc = encode_value(v)
+    return (
+        int(e), a, enc["v_type"], *[enc[c] for c in NATURAL_COL.values()],
+        int(tx), bool(added),
+    )
+
+
+def fact_columns(v_type: str, value_col) -> list:
+    """The FACT_SCHEMA value columns (`v_type` .. `v_json`) of a frame whose
+    every value has tag `v_type` and is `value_col` (already of the tag's
+    Spark type)."""
+    return [F.lit(v_type).alias("v_type")] + [
+        (value_col if t == v_type else F.lit(None).cast(dt)).alias(col)
+        for t, (col, _, dt) in CODEC.items()
+    ]
 
 
 def value_struct_col():
@@ -196,14 +223,83 @@ def value_struct_col():
     (cc-cmp total order)."""
     return F.struct(
         F.col("v_type").alias("t"),
-        F.col("v_long").alias("l"),
-        F.col("v_double").alias("d"),
-        F.col("v_str").alias("s"),
-        F.col("v_bool").alias("b"),
-        F.col("v_ref").alias("r"),
-        F.col("v_ts").alias("ts"),
-        F.col("v_json").alias("j"),
+        *[F.col(col).alias(slot) for col, slot, _ in CODEC.values()],
     )
+
+
+def to_struct(c, repr_: str):
+    """A column of compile-time repr `repr_` as the value struct: typed
+    columns fill their tag's slot, JSON text is decoded (`json_to_struct`)."""
+    if repr_ == "struct":
+        return c
+    if repr_ == T_JSON:
+        return json_to_struct(c)
+    return F.struct(
+        F.lit(repr_).alias("t"),
+        *[
+            (c if t == repr_ else F.lit(None).cast(dt)).alias(slot)
+            for t, (_, slot, dt) in CODEC.items()
+        ],
+    )
+
+
+_REF_JSON = r'^\{"\$ref":(-?[0-9]+)\}$'
+
+
+def json_to_struct(c):
+    """Canonical-JSON text -> the value struct, decoded JVM-side: a scalar
+    lands in its typed slot exactly as `encode_value` would put it (an
+    integer literal is a long, any other number a double, ``{"$ref": n}``
+    a ref), a container stays JSON text in `j`. Null text -> null."""
+    head = F.substring(c, 1, 1)
+    ref = F.regexp_extract(c, _REF_JSON, 1)
+    tag = (
+        F.when(ref != "", F.lit(T_REF))
+        .when(head.isin("[", "{"), F.lit(T_JSON))
+        .when(head == '"', F.lit(T_STRING))
+        .when(c.isin("true", "false"), F.lit(T_BOOL))
+        .when(c == "null", F.lit(T_NULL))
+        .when(c.rlike("^-?[0-9]+$"), F.lit(T_LONG))
+        .otherwise(F.lit(T_DOUBLE))
+    )
+    value = {
+        T_LONG: c.try_cast("bigint"),
+        T_DOUBLE: c.try_cast("double"),
+        # JSON string unescaping by the JVM's own JSON reader
+        T_STRING: F.from_json(F.concat(F.lit("["), c, F.lit("]")), "array<string>")[0],
+        T_BOOL: c == "true",
+        T_REF: ref.try_cast("bigint"),
+        T_JSON: c,
+    }  # no T_TS: canonical_json writes a timestamp as an ISO string
+    return F.when(c.isNotNull(), F.struct(
+        tag.alias("t"),
+        *[
+            (F.when(tag == t, value[t]) if t in value
+             else F.lit(None).cast(dt)).alias(slot)
+            for t, (_, slot, dt) in CODEC.items()
+        ],
+    ))
+
+
+def json_sql(x: str) -> str:
+    """SQL: JSON-encode the scalar expression `x` JVM-side — to_json of a
+    one-field struct, minus its '{"v":' prefix and '}' suffix."""
+    j = f"to_json(named_struct('v', {x}))"
+    return f"substring({j}, 6, length({j}) - 6)"
+
+
+# SQL: a fact's typed value as JSON text, for output only (pull documents):
+# the JVM renders doubles and non-ASCII text differently from
+# canonical_json, so this text is never compared with stored JSON.
+VALUE_JSON_SQL = f"""CASE v_type
+    WHEN 'long' THEN CAST(v_long AS STRING)
+    WHEN 'double' THEN {json_sql("v_double")}
+    WHEN 'string' THEN {json_sql("v_str")}
+    WHEN 'bool' THEN IF(v_bool, 'true', 'false')
+    WHEN 'ref' THEN concat('{{"$ref":', CAST(v_ref AS STRING), '}}')
+    WHEN 'ts' THEN concat('"', date_format(v_ts, 'yyyy-MM-dd\\'T\\'HH:mm:ss.SSSSSS'), '"')
+    WHEN 'json' THEN v_json
+    ELSE 'null' END"""
 
 
 def struct_sort_keys(col):
