@@ -194,3 +194,23 @@ def test_internal_error_is_500_without_details(spark, monkeypatch):
     assert res == {"error": {"code": "internal-error", "message": "internal error"}}
     assert "RuntimeError: secret detail" in log.getvalue()
     assert "Traceback" in log.getvalue()
+
+
+def test_non_map_body_is_400(srv):
+    status, res = _post(srv, "/query", [1, 2])
+    assert status == 400
+    assert res["error"]["code"] == "bad-request"
+
+
+def test_ill_typed_query_is_400(srv):
+    # `join` reads a JSON vector; a long column fails Spark's analysis,
+    # which is the query's fault, not the server's
+    status, _ = _post(srv, "/transact", {"tx-data": [["add", "n", ":n", 1]]})
+    assert status == 200
+    status, res = _post(srv, "/query", {
+        "query": {"find": ["?r"],
+                  "where": [["?e", ":n", "?n"],
+                            [{"$call": ["join", ",", "?n"]}, "?r"]]},
+    })
+    assert status == 400
+    assert "DATATYPE_MISMATCH" in res["error"]["message"]

@@ -3,10 +3,12 @@ fact's typed column, an element matched inside a vector, an `or` branch)
 unify by their decoded value, and refs survive inside vectors.
 
 Each regression test below is a wrong answer the engine used to give when
-two JSON renderers (Python's and Spark's) disagreed; the property test
-checks the JVM-side decoder against the Python encoder on one Spark job
-per drawn batch."""
+two JSON renderers (Python's and Spark's) disagreed; the property tests
+check the JVM-side decoder (`json_to_struct`) and string-vector encoder
+(`json_strings`) against the Python codec on one Spark job per drawn
+batch."""
 
+import datetime
 import math
 
 from hypothesis import given, settings, strategies as st
@@ -16,6 +18,7 @@ from unifydb_spark.values import (
     CODEC,
     canonical_json,
     encode_value,
+    json_strings,
     json_to_struct,
 )
 
@@ -84,6 +87,43 @@ def test_canonical_json_writes_refs_at_any_depth():
     assert canonical_json([[Ref(2)]]) == '[[{"$ref":2}]]'
 
 
+def test_split_output_unifies_with_stored_strings(spark):
+    store = FactStore(spark).seed(
+        [(1, ":text", "café ☃", 1, True), (1, ":words", ["café", "☃"], 1, True)]
+    )
+    q = {
+        "find": ["?e"],
+        "where": [
+            ["?e", ":text", "?s"],
+            [("split", "?s", " "), "?w"],
+            ["?e", ":words", "?w"],
+        ],
+    }
+    assert Engine(spark, store).query_rows(q) == [(Ref(1),)]
+
+
+def test_timestamp_inside_a_vector_is_a_string(spark):
+    at = datetime.datetime(2020, 1, 2, 3, 4, 5, 678)
+    store = FactStore(spark).seed(
+        [
+            (1, ":at", at, 1, True),
+            (1, ":vec", [at, "x"], 1, True),
+            (1, ":label", at.isoformat(), 1, True),
+        ]
+    )
+    eng = Engine(spark, store)
+    [(vec,)] = eng.query_rows({"find": ["?v"], "where": [[1, ":vec", "?v"]]})
+    assert vec == ["2020-01-02T03:04:05.000678", "x"]
+
+    def join(attr):
+        return eng.query_rows(
+            {"find": ["?e"], "where": [["?e", attr, "?t"], ["?e", ":vec", ["?t", "_"]]]}
+        )
+
+    assert join(":at") == []
+    assert join(":label") == [(Ref(1),)]
+
+
 _scalars = st.one_of(
     st.integers(min_value=-(2**63), max_value=2**63 - 1),
     st.floats(allow_nan=False),  # subnormal, huge, +-0.0 and +-inf included
@@ -118,3 +158,12 @@ def test_json_to_struct_decodes_like_encode_value(spark, drawn):
         assert got["t"] == enc["v_type"], (v, got)
         for col, slot, _ in CODEC.values():
             assert _same(got[slot], enc[col]), (v, slot, got)
+
+
+@settings(max_examples=8, deadline=None)
+@given(st.lists(st.lists(st.text(max_size=8), max_size=4), max_size=20))
+def test_json_strings_writes_canonical_json(spark, drawn):
+    arrays = [["café", "☃", "\U0001f600", 'q"\\\n\t\x00\x1f\x7f', ""], []] + drawn
+    df = spark.createDataFrame(list(enumerate(arrays)), "i long, a array<string>")
+    rows = df.select("i", json_strings(df["a"]).alias("j")).orderBy("i").collect()
+    assert [r["j"] for r in rows] == [canonical_json(a) for a in arrays]

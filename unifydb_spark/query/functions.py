@@ -23,6 +23,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from unifydb_spark.query.parse import QueryError
+from unifydb_spark.values import json_strings
 
 # (Column, repr) pairs flow through; repr tags are the compiler's static
 # types: long double string bool ref ts json struct
@@ -188,7 +189,7 @@ REGISTRY: dict[str, Callable] = {
         "long",
     ),
     "split": lambda s, re_: (
-        F.to_json(F.split(as_col(s)[0], as_col(re_)[0])),
+        json_strings(F.split(as_col(s)[0], as_col(re_)[0])),
         "json",
     ),
     "join": lambda sep, coll: (

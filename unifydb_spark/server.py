@@ -13,8 +13,9 @@ POST /transact {"tx-data": [...]}
                -> {"tx-id": int, "tempids": {...}, "tx-data": [...]}
 Errors        -> 400 {"error": {"code": ..., "message": ...}}
                (the reference's structured error payload,
-               src/unifydb/query.clj:505-517) for query errors and bad
-               values; any other failure is a 500 {"error": {"code":
+               src/unifydb/query.clj:505-517) for query errors, bad
+               values and queries Spark rejects as ill-typed or invalid
+               for their data; any other failure is a 500 {"error": {"code":
                "internal-error", ...}} whose traceback goes to the log
 
 Content negotiation (V4, reference wrap-content-type / wrap-accept-type,
@@ -31,6 +32,8 @@ from __future__ import annotations
 import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+from pyspark.errors import PySparkException
 
 from unifydb_spark import structlog
 from unifydb_spark.query.parse import QueryError
@@ -172,6 +175,9 @@ class EngineHandler(BaseHTTPRequestHandler):
         except (ValueError, TypeError):
             return self._send(400, {"error": {"code": "bad-request",
                                               "message": "invalid request body"}})
+        if not isinstance(req, dict):
+            return self._send(400, {"error": {"code": "bad-request",
+                                              "message": "request body must be a map"}})
         try:
             if self.path == "/authenticate" and self.secret is not None:
                 from unifydb_spark.auth import login
@@ -231,12 +237,23 @@ class EngineHandler(BaseHTTPRequestHandler):
                 400,
                 {"error": {"code": e.code, "message": str(e), **e.info}},
             )
-        except (ValueError, TypeError) as e:  # a bad request, reported as such
-            return self._send(400, {"error": {"code": "error", "message": str(e)}})
-        except Exception as e:  # a server fault: logged, never sent to the client
+        except Exception as e:
+            if _bad_request(e):
+                return self._send(400, {"error": {"code": "error", "message": str(e)}})
+            # a server fault: logged, never sent to the client
             structlog.error("request failed", _err=e, path=self.path)
             return self._send(500, {"error": {"code": "internal-error",
                                               "message": "internal error"}})
+
+
+def _bad_request(e: Exception) -> bool:
+    """A bad value, or a query that fails Spark's analysis or a data check
+    (SQLSTATE class 42 or 22, e.g. ill-typed function arguments), is the
+    client's fault; anything else is the server's."""
+    if isinstance(e, (ValueError, TypeError)):
+        return True
+    state = e.getSqlState() if isinstance(e, PySparkException) else None
+    return (state or "")[:2] in ("22", "42")
 
 
 def make_server(

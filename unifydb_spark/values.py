@@ -20,7 +20,8 @@ Unification compares decoded values, never JSON text of two renderers:
 values of different compile-time reprs meet as value structs
 (`to_struct`), and a canonical-JSON binding from a sequence pattern is
 decoded JVM-side into its typed slot (`json_to_struct`). JSON text is
-compared only against JSON text written by `canonical_json`.
+compared only against JSON text written by `canonical_json` (or by its
+JVM-side twin for string vectors, `json_strings`).
 
 Design note (100 TB): the typed columns are all scalar parquet-native types,
 so scans prune to exactly the columns a query touches and predicates push
@@ -234,6 +235,8 @@ def to_struct(c, repr_: str):
         return c
     if repr_ == T_JSON:
         return json_to_struct(c)
+    if repr_ not in CODEC:  # an aggregate's repr (decimal, array<..>)
+        raise ValueError(f"no value struct for repr {repr_!r}")
     return F.struct(
         F.lit(repr_).alias("t"),
         *[
@@ -250,35 +253,75 @@ def json_to_struct(c):
     """Canonical-JSON text -> the value struct, decoded JVM-side: a scalar
     lands in its typed slot exactly as `encode_value` would put it (an
     integer literal is a long, any other number a double, ``{"$ref": n}``
-    a ref), a container stays JSON text in `j`. Null text -> null."""
+    a ref), a container stays JSON text in `j`. Null text -> null. A
+    timestamp inside a vector was written as an ISO string, so it decodes
+    as a string (and never unifies with a `ts` fact).
+
+    The tag is one CASE; each slot carries its own cheap guard, so the
+    CASE is not repeated per slot inside join keys."""
     head = F.substring(c, 1, 1)
     ref = F.regexp_extract(c, _REF_JSON, 1)
+    is_long = c.rlike("^-?[0-9]+$")
+    is_text = head == '"'
+    is_container = head.isin("[", "{") & (ref == "")
+    is_bool = c.isin("true", "false")
     tag = (
         F.when(ref != "", F.lit(T_REF))
-        .when(head.isin("[", "{"), F.lit(T_JSON))
-        .when(head == '"', F.lit(T_STRING))
-        .when(c.isin("true", "false"), F.lit(T_BOOL))
+        .when(is_container, F.lit(T_JSON))
+        .when(is_text, F.lit(T_STRING))
+        .when(is_bool, F.lit(T_BOOL))
         .when(c == "null", F.lit(T_NULL))
-        .when(c.rlike("^-?[0-9]+$"), F.lit(T_LONG))
+        .when(is_long, F.lit(T_LONG))
         .otherwise(F.lit(T_DOUBLE))
     )
     value = {
-        T_LONG: c.try_cast("bigint"),
-        T_DOUBLE: c.try_cast("double"),
+        T_LONG: F.when(is_long, c.try_cast("bigint")),
+        # quoted text, containers, true/false/null and refs never cast
+        T_DOUBLE: F.when(~is_long, c.try_cast("double")),
         # JSON string unescaping by the JVM's own JSON reader
-        T_STRING: F.from_json(F.concat(F.lit("["), c, F.lit("]")), "array<string>")[0],
-        T_BOOL: c == "true",
-        T_REF: ref.try_cast("bigint"),
-        T_JSON: c,
+        T_STRING: F.when(is_text, F.from_json(
+            F.concat(F.lit("["), c, F.lit("]")), "array<string>")[0]),
+        T_BOOL: F.when(is_bool, c == "true"),
+        T_REF: ref.try_cast("bigint"),  # '' (no ref) -> null
+        T_JSON: F.when(is_container, c),
     }  # no T_TS: canonical_json writes a timestamp as an ISO string
     return F.when(c.isNotNull(), F.struct(
         tag.alias("t"),
         *[
-            (F.when(tag == t, value[t]) if t in value
-             else F.lit(None).cast(dt)).alias(slot)
+            (value[t] if t in value else F.lit(None).cast(dt)).alias(slot)
             for t, (_, slot, dt) in CODEC.items()
         ],
     ))
+
+
+# Python json.dumps' two-character escapes; every other character outside
+# printable ASCII is written \uXXXX (ensure_ascii, lowercase hex).
+_JSON_ESCAPES = {'"': '\\"', "\\": "\\\\", "\n": "\\n", "\r": "\\r",
+                 "\t": "\\t", "\b": "\\b", "\f": "\\f"}
+
+
+def json_strings(arr):
+    """`canonical_json` of an array<string> column, JVM-side: each string
+    escaped exactly as Python's json.dumps does, so the text compares
+    equal to stored JSON of the same strings. Null array -> null."""
+
+    def esc(ch):
+        out = F.when(ch.rlike("^[ -~]$") & ~ch.isin(*_JSON_ESCAPES), ch)
+        for raw, e in _JSON_ESCAPES.items():
+            out = out.when(ch == raw, F.lit(e))
+        return out.otherwise(
+            # UTF-16 code units (a surrogate pair for astral characters)
+            F.regexp_replace(F.lower(F.hex(F.encode(ch, "UTF-16BE"))),
+                             "(.{4})", "\\\\u$1")
+        )
+
+    def text(s):
+        chars = F.regexp_extract_all(s, F.lit("(?s)."), F.lit(0))
+        return F.concat(
+            F.lit('"'), F.array_join(F.transform(chars, esc), ""), F.lit('"')
+        )
+
+    return F.concat(F.lit("["), F.array_join(F.transform(arr, text), ","), F.lit("]"))
 
 
 def json_sql(x: str) -> str:
