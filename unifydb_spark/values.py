@@ -212,8 +212,8 @@ def fact_columns(v_type: str, value_col) -> list:
     every value has tag `v_type` and is `value_col` (already of the tag's
     Spark type)."""
     return [F.lit(v_type).alias("v_type")] + [
-        (value_col if t == v_type else F.lit(None).cast(dt)).alias(col)
-        for t, (col, _, dt) in CODEC.items()
+        (value_col if t == v_type else F.lit(None).cast(REPR_DDL[t])).alias(col)
+        for t, col in NATURAL_COL.items()
     ]
 
 
@@ -240,8 +240,8 @@ def to_struct(c, repr_: str):
     return F.struct(
         F.lit(repr_).alias("t"),
         *[
-            (c if t == repr_ else F.lit(None).cast(dt)).alias(slot)
-            for t, (_, slot, dt) in CODEC.items()
+            (c if t == repr_ else F.lit(None).cast(REPR_DDL[t])).alias(slot)
+            for t, slot in STRUCT_SLOT.items()
         ],
     )
 
@@ -288,8 +288,8 @@ def json_to_struct(c):
     return F.when(c.isNotNull(), F.struct(
         tag.alias("t"),
         *[
-            (value[t] if t in value else F.lit(None).cast(dt)).alias(slot)
-            for t, (_, slot, dt) in CODEC.items()
+            (value[t] if t in value else F.lit(None).cast(REPR_DDL[t])).alias(slot)
+            for t, slot in STRUCT_SLOT.items()
         ],
     ))
 
