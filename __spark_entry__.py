@@ -4879,7 +4879,7 @@ def r158_ann_datalog_filtered(spark, sf_dir):
 
 def r159_ann_var_k(spark, sf_dir):
     """VARIABLE-valued table-fn parameter (VERDICT r13 ask #5;
-    query/compile.py _apply_table_fn_var_params): the reference's
+    query/compile.py _apply_table_fn): the reference's
     fn-binds accept any bound term in any position
     (src/unifydb/query.clj:106-130) — here k itself is computed by an
     earlier scalar fn-bind (`[(+ ?q 3) ?k]`) and `[(ann-topk ?q ?k) ?n]`

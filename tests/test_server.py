@@ -214,3 +214,15 @@ def test_ill_typed_query_is_400(srv):
     })
     assert status == 400
     assert "DATATYPE_MISMATCH" in res["error"]["message"]
+
+
+def test_non_ground_vector_rule_argument_is_400(srv):
+    # a vector constant must be ground wherever it appears; a rule call
+    # holding a variable inside one is the query's fault
+    status, res = _post(srv, "/query", {
+        "query": {"find": ["?e"],
+                  "rules": [[{"$call": ["r", "?e", "?v"]}, ["?e", ":name", "?v"]]],
+                  "where": [{"$call": ["r", "?e", ["?x", 1]]}]},
+    })
+    assert status == 400
+    assert res["error"]["code"] == "invalid-query"

@@ -9,8 +9,10 @@ check the JVM-side decoder (`json_to_struct`) and string-vector encoder
 batch."""
 
 import datetime
+import itertools
 import math
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from unifydb_spark import Engine, FactStore, Ref
@@ -122,6 +124,58 @@ def test_timestamp_inside_a_vector_is_a_string(spark):
 
     assert join(":at") == []
     assert join(":label") == [(Ref(1),)]
+
+
+# Each constant is held in :a by exactly one entity (11, 12, ...); entity
+# 30 holds the double 1.0, which no constant below unifies with.
+CONSTANTS = [Ref(1), 1, 1.5, "a", True, None, [1, 2], [Ref(1), "x"]]
+HOLDER = {i: 11 + i for i in range(len(CONSTANTS))}
+
+
+@pytest.fixture(scope="module")
+def const_engine(spark):
+    facts = [(HOLDER[i], ":a", c, 1, True) for i, c in enumerate(CONSTANTS)]
+    facts += [(30, ":a", 1.0, 1, True), (31, ":link", Ref(30), 1, True)]
+    return Engine(spark, FactStore(spark).seed(facts))
+
+
+def _entities(eng, where, rules=()):
+    q = {"find": ["?e"], "where": where, "rules": list(rules)}
+    return sorted(int(e) for (e,) in eng.query_rows(q))
+
+
+def _constant_forms(c) -> dict:
+    """Five ways a query can demand that ?e's :a value unify with `c`."""
+    rules = [
+        [("r", "?e", "?v"), ["?e", ":a", "?v"]],
+        [("hc", "?e", c), ["?e", ":a", "_"]],
+        [("rr", "?e", "?v"), ["?e", ":a", "?v"]],
+        [("rr", "?e", "?v"), ["?e", ":link", "?f"], ("rr", "?f", "?v")],
+    ]
+    return {
+        "pattern": ([["?e", ":a", c]], rules),
+        "rule call": ([("r", "?e", c)], rules),
+        "rule-head constant": ([["?e", ":a", "?v"], ("hc", "?e", "?v")], rules),
+        "predicate": ([["?e", ":a", "?v"], [("=", "?v", c)]], rules),
+        "seeded recursive call": ([("rr", "?e", c)], rules),
+    }
+
+
+@pytest.mark.parametrize("i", range(len(CONSTANTS)), ids=[repr(c) for c in CONSTANTS])
+def test_a_constant_unifies_alike_in_every_clause_kind(const_engine, i):
+    want = [HOLDER[i]]
+    for form, (where, rules) in _constant_forms(CONSTANTS[i]).items():
+        assert _entities(const_engine, where, rules) == want, form
+
+
+def test_one_one_point_zero_true_and_ref_one_never_unify(const_engine):
+    for x, y in itertools.permutations([1, 1.0, True, Ref(1)], 2):
+        rules = [[("hc", "?e", x), ["?e", ":a", "_"]], [("same", "?a", "?a")]]
+        # a call constant against a rule-head constant
+        assert _entities(const_engine, [("hc", "?e", y)], rules) == [], (x, y)
+        # an axiom over two constants
+        where = [("same", x, y), ["?e", ":a", "_"]]
+        assert _entities(const_engine, where, rules) == [], (x, y)
 
 
 _scalars = st.one_of(

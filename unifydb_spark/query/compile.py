@@ -37,7 +37,10 @@ by equality of their decoded value structs (`values.to_struct`, which
 decodes JSON text JVM-side), so a double bound from a fact and the same
 double bound inside a vector unify without rendering either as text. An
 `or` whose branches bind a variable at different reprs merges it as a
-value struct.
+value struct. A constant, wherever it appears (pattern, rule call or
+head, axiom, predicate or function argument), is one `(Column, repr)`
+from `values.encode_const` and unifies through the same
+`unify_condition`.
 """
 
 from __future__ import annotations
@@ -54,10 +57,12 @@ from unifydb_spark.store import Db
 from unifydb_spark.values import (
     NATURAL_COL,
     REPR_DDL,
+    T_NULL,
     Ref,
     canonical_json,
-    encode_value,
+    encode_const,
     to_struct,
+    unify_condition,
     value_struct_col,
 )
 from unifydb_spark.query.parse import (
@@ -87,9 +92,6 @@ class Rel:
     df: DataFrame
     vars: dict  # var name -> repr tag
 
-    def col(self, name: str) -> Column:
-        return bt(name)
-
 
 def empty_rel(spark, vars: dict) -> Rel:
     schema = ", ".join(f"`{n}` {REPR_DDL[r]}" for n, r in vars.items()) or "`__x` int"
@@ -104,18 +106,6 @@ def to_json_repr(c: Column, repr_: str) -> Column:
     if repr_ == "struct":
         return c["j"]
     return F.lit(None).cast("string")
-
-
-def unify_condition(lc: Column, lrepr: str, rc: Column, rrepr: str):
-    """Equality condition between two variable columns. Different reprs
-    compare as decoded value structs; returns None when unification is
-    statically impossible (strict typing: the reference's ID type and
-    Clojure `=` are type-strict)."""
-    if lrepr == rrepr:
-        return lc == rc
-    if "json" in (lrepr, rrepr) or "struct" in (lrepr, rrepr):
-        return to_struct(lc, lrepr) == to_struct(rc, rrepr)
-    return None
 
 
 def merge_repr(r1: str, r2: str) -> str:
@@ -159,18 +149,6 @@ def join_rels(left: Optional[Rel], right: Rel, how: str = "inner") -> Rel:
 
 # ---------------------------------------------------------------------------
 # sequence-pattern (Q9) unification
-
-
-def seqpat_to_value(sp: SeqPat):
-    out = []
-    for it in sp.items:
-        if isinstance(it, SeqPat):
-            out.append(seqpat_to_value(it))
-        elif isinstance(it, (Var,)) or it is WILDCARD:
-            raise QueryError("internal", "seqpat_to_value on non-ground pattern")
-        else:
-            out.append(it)
-    return out
 
 
 def _serialize_seqpat(sp: SeqPat):
@@ -302,19 +280,16 @@ def compile_pattern(db: Db, pat: Pattern) -> Rel:
         else:
             conds.append(F.col("v_type") == repr_)
             bind(pat.v, col, repr_)
-    elif isinstance(pat.v, SeqPat):
-        if pat.v.is_ground():
-            conds.append(F.col("v_type") == "json")
-            conds.append(F.col("v_json") == canonical_json(seqpat_to_value(pat.v)))
-        else:
-            seq_udf_pat = json.dumps(_serialize_seqpat(pat.v))
-            conds.append(F.col("v_type") == "json")
+    elif isinstance(pat.v, SeqPat) and not pat.v.is_ground():
+        seq_udf_pat = json.dumps(_serialize_seqpat(pat.v))
+        conds.append(F.col("v_type") == "json")
     elif pat.v is not WILDCARD:
-        enc = encode_value(pat.v)
-        conds.append(F.col("v_type") == enc["v_type"])
-        if enc["v_type"] != "null":
-            ncol = NATURAL_COL[enc["v_type"]]
-            conds.append(F.col(ncol) == F.lit(enc[ncol]))
+        c, r = encode_const(pat.v)
+        if r == "struct":  # nil: the tag alone
+            conds.append(F.col("v_type") == T_NULL)
+        else:
+            conds.append(F.col("v_type") == r)
+            conds.append(F.col(NATURAL_COL[r]) == c)
     # tx position
     if isinstance(pat.tx, Var):
         bind(pat.tx, F.col("tx"), "ref")
@@ -492,11 +467,8 @@ def compile_pivot_group(db: Db, g: PivotGroup) -> Rel:
         elif p.v is WILDCARD:
             conds.append(col.isNotNull())
         else:
-            enc = encode_value(p.v)
-            if enc["v_type"] != repr_:
-                conds.append(F.lit(False))
-            else:
-                conds.append(col == F.lit(enc[NATURAL_COL[repr_]]))
+            c = unify_condition(col, repr_, *encode_const(p.v))
+            conds.append(c if c is not None else F.lit(False))
     df = pdf
     for c in conds:
         df = df.filter(c)
@@ -555,48 +527,27 @@ def _axiom_filter(rel: Rel, app: RuleApp, rules_env) -> Rel:
     rules.clj:3-7) over already-bound variables is a pure constraint: unify
     the call args with each head, OR the resulting conditions (the idiom is
     `[(same ?x ?x)]` used inside :not, test query_test.clj:133-141)."""
-    rule_conds = []
+    total = F.lit(False)
     for rule in rules_env.by_name[app.name]:
         groups: dict[str, list] = {}
         conds: list = []
-        ok = True
         for param, arg in zip(rule.params, app.args):
+            if arg is WILDCARD:
+                continue
             if isinstance(arg, Var):
                 a = (bt(arg.name), rel.vars[arg.name])
-            elif arg is WILDCARD:
-                a = None
             else:
-                from unifydb_spark.query.functions import as_col
-
-                a = as_col(arg)
+                a = fnreg.as_col(arg)
             if isinstance(param, Var):
-                if a is not None:
-                    groups.setdefault(param.name, []).append(a)
+                groups.setdefault(param.name, []).append(a)
             else:
-                if a is not None:
-                    from unifydb_spark.query.functions import as_col
-
-                    pc, pr = as_col(param)
-                    c = unify_condition(a[0], a[1], pc, pr)
-                    if c is None:
-                        ok = False
-                        break
-                    conds.append(c)
-        if not ok:
-            continue
+                conds.append(unify_condition(*a, *fnreg.as_col(param)))
         for members in groups.values():
-            for (c1, r1), (c2, r2) in zip(members, members[1:]):
-                c = unify_condition(c1, r1, c2, r2)
-                conds.append(c if c is not None else F.lit(False))
+            conds += [unify_condition(*x, *y) for x, y in zip(members, members[1:])]
         cond = F.lit(True)
         for c in conds:
-            cond = cond & c
-        rule_conds.append(cond)
-    if not rule_conds:
-        return Rel(rel.df.filter(F.lit(False)), dict(rel.vars))
-    total = rule_conds[0]
-    for c in rule_conds[1:]:
-        total = total | c
+            cond = cond & (c if c is not None else F.lit(False))
+        total = total | cond
     return Rel(rel.df.filter(total), dict(rel.vars))
 
 
@@ -629,7 +580,7 @@ def _apply_table_fn(db: Db, rel: Rel, c: FnBind, tf) -> Rel:
     fn-binds allow any bound term in any position, query.clj:106-130:
     `[(ann-topk ?q ?k) ?n]` evaluates the function once per distinct
     parameter-value combination, tags each call's output with its combo,
-    and joins back on key + parameters; see _apply_table_fn_var_params);
+    and joins back on key + parameters; see _tf_param_combos);
     the output must be a plain variable."""
     key = c.args[0]
     literal_key = None
@@ -721,36 +672,94 @@ def _apply_table_fn(db: Db, rel: Rel, c: FnBind, tf) -> Rel:
             "invalid-query",
             f"table function {c.fn} output must be a single variable",
         )
-    if param_vars:
-        return _apply_table_fn_var_params(
-            db, rel, c, tf, key, literal_key, params, param_vars, out
-        )
-    if literal_key is not None:
-        keys_df = db.store.spark.range(1).select(
-            F.array(*[F.lit(float(x)) for x in literal_key]).alias("__tf_in")
-        )
-        out_df, _in_repr, out_repr = tf(db, keys_df, *params)
-        # constant key: nothing to join back on — the (<= k)-row output
-        # broadcast-joins onto every binding row, or simply IS the
-        # relation when this is the first clause
-        if rel is None:
-            rel = Rel(out_df.drop("__tf_in", "__tf_out").limit(0), {})
-            joined = out_df.drop("__tf_in")
+    pv_names = [v.name for v in param_vars.values()]
+    combos = _tf_param_combos(rel, c, pv_names)
+
+    def _eval_combo(vals):
+        # one call of the function with the combo's values in its
+        # variable parameter positions, over the keys that carry them
+        resolved = list(params)
+        for i, v in param_vars.items():
+            resolved[i] = vals[v.name]
+        if literal_key is not None:
+            keys_df = db.store.spark.range(1).select(
+                F.array(*[F.lit(float(x)) for x in literal_key]).alias("__tf_in")
+            )
         else:
-            joined = rel.df.crossJoin(
-                F.broadcast(out_df.drop("__tf_in"))
+            keyed = rel.df
+            for n, x in vals.items():
+                keyed = keyed.filter(bt(n) == F.lit(x))
+            keys_df = keyed.select(bt(key.name).alias("__tf_in")).distinct()
+        out_df, in_repr, out_repr = tf(db, keys_df, *resolved)
+        for n, x in vals.items():
+            out_df = out_df.withColumn(f"__tfp_{n}", F.lit(x))
+        return out_df, in_repr, out_repr
+
+    # Evaluate combos CONCURRENTLY (guide §2.6: actions are sequential
+    # only because the driver calls them sequentially): each combo's
+    # table-fn call runs eager setup jobs (ANN probe ranking, persists)
+    # that are independent across combos, so a small driver pool lets
+    # one combo's tail back-fill the cores another's barrier left idle
+    # — measured 6.6s -> 3.5s on r159 (6 combos) at sf0.1. Results are
+    # order-preserved (pool.map) and per-combo values are unaffected by
+    # scheduling; the cap bounds the pool like the loop it replaces.
+    # inheritable_thread_target propagates the caller's JVM-thread-local
+    # properties (job group/description) into the pool threads, so jobs
+    # submitted by combo workers still count toward the caller's group
+    # (the bench's per-entry job metric counts by group).
+    if len(combos) > 1:
+        from concurrent.futures import ThreadPoolExecutor
+
+        from pyspark import inheritable_thread_target
+
+        with ThreadPoolExecutor(max_workers=min(4, len(combos))) as pool:
+            results = list(
+                pool.map(
+                    inheritable_thread_target(db.store.spark)(_eval_combo),
+                    combos,
+                )
             )
     else:
-        keys_df = rel.df.select(bt(key.name).alias("__tf_in")).distinct()
-        out_df, in_repr, out_repr = tf(db, keys_df, *params)
+        results = [_eval_combo(vals) for vals in combos]
+    if not results:
+        # empty input relation (or all-NULL params): the result is empty;
+        # no call was made, so the output repr is unconstrained — long
+        # keeps the schema concrete for downstream projection (zero rows,
+        # so no unification can observe the choice)
+        if out.name in rel.vars:
+            return Rel(rel.df.limit(0), dict(rel.vars))
+        df = rel.df.limit(0).withColumn(out.name, F.lit(None).cast("bigint"))
+        return Rel(df, {**rel.vars, out.name: "long"})
+    out_df, in_repr, out_repr = results[0]
+    for o, _, _ in results[1:]:
+        out_df = out_df.unionByName(o)
+    # join back on the key and every variable parameter
+    pconds = [bt(n) == F.col(f"__tfp_{n}") for n in pv_names]
+    if literal_key is None:
         jcond = unify_condition(
             bt(key.name), rel.vars[key.name], F.col("__tf_in"), in_repr
         )
         # None = statically impossible key type; an always-false join
         # keeps the unified schema while producing the empty relation
-        joined = rel.df.join(
-            out_df, jcond if jcond is not None else F.lit(False)
-        ).drop("__tf_in")
+        cond = jcond if jcond is not None else F.lit(False)
+        for x in pconds:
+            cond = cond & x
+        joined = rel.df.join(out_df, cond).drop("__tf_in")
+    else:
+        # constant key: nothing to join back on but the parameters — the
+        # (<= k)-row output broadcast-joins onto every binding row, or
+        # simply IS the relation when this is the first clause
+        out_df = out_df.drop("__tf_in")
+        if rel is None:
+            rel, joined = Rel(out_df.drop("__tf_out").limit(0), {}), out_df
+        elif not pconds:
+            joined = rel.df.crossJoin(F.broadcast(out_df))
+        else:
+            cond = pconds[0]
+            for x in pconds[1:]:
+                cond = cond & x
+            joined = rel.df.join(F.broadcast(out_df), cond)
+    joined = joined.drop(*[f"__tfp_{n}" for n in pv_names])
     return _bind_tf_out(rel, joined, out, out_repr)
 
 
@@ -771,139 +780,35 @@ def _bind_tf_out(rel: Rel, joined: DataFrame, out: Var, out_repr: str) -> Rel:
 _TF_PARAM_COMBO_CAP = 64
 
 
-def _apply_table_fn_var_params(
-    db: Db,
-    rel: Rel,
-    c: FnBind,
-    tf,
-    key,
-    literal_key,
-    params: list,
-    param_vars: "dict[int, Var]",
-    out: Var,
-) -> Rel:
-    """Table-fn invocation with BOUND-VARIABLE parameters (VERDICT r13
-    ask #5; the reference's fn-binds accept any bound term in any
-    position, src/unifydb/query.clj:106-130).
-
-    Semantics: the function is evaluated once per DISTINCT combination
-    of the parameter variables' values (per-key dedup inside each call
-    is unchanged), each call's keys are restricted to the rows that
-    actually carry that combo, the outputs are tagged with their combo
-    and unioned, and the union joins back on key + parameter columns —
-    so `[(ann-topk ?q ?k) ?n]` binds each query's own-k neighbor list.
+def _tf_param_combos(rel: Optional[Rel], c: FnBind, names: list) -> list:
+    """The distinct value combinations of a table-fn call's variable
+    parameters, as {name: value} dicts: the function is evaluated once
+    per combination (VERDICT r13 ask #5; the reference's fn-binds accept
+    any bound term in any position, src/unifydb/query.clj:106-130). With
+    no variable parameters there is exactly one, empty, combination and
+    no job runs.
 
     Scale: the collected combos are knob metadata, capped at
     _TF_PARAM_COMBO_CAP (structured invalid-query beyond — a
-    data-cardinality column is not a knob); rows whose parameter value
-    is NULL produce no bindings (SQL predicate semantics)."""
-    pv_names = [v.name for v in param_vars.values()]
-    combo_rows = (
-        rel.df.select(*[bt(n) for n in pv_names])
+    data-cardinality column is not a knob); a combination holding a NULL
+    produces no bindings (SQL predicate semantics), so it is dropped."""
+    if not names:
+        return [{}]
+    rows = (
+        rel.df.select(*[bt(n) for n in names])
         .distinct()
         .limit(_TF_PARAM_COMBO_CAP + 1)
         .collect()
     )
-    if len(combo_rows) > _TF_PARAM_COMBO_CAP:
+    if len(rows) > _TF_PARAM_COMBO_CAP:
         raise QueryError(
             "invalid-query",
             f"table function {c.fn} variable parameters take more than "
             f"{_TF_PARAM_COMBO_CAP} distinct value combinations — "
             "parameter variables are knobs, not data columns",
         )
-    def _eval_combo(row):
-        vals = {n: row[n] for n in pv_names}
-        resolved = list(params)
-        for i, v in param_vars.items():
-            resolved[i] = vals[v.name]
-        if literal_key is not None:
-            keys_df = db.store.spark.range(1).select(
-                F.array(*[F.lit(float(x)) for x in literal_key]).alias(
-                    "__tf_in"
-                )
-            )
-        else:
-            cond = F.lit(True)
-            for n in pv_names:
-                cond = cond & (bt(n) == F.lit(vals[n]))
-            keys_df = (
-                rel.df.filter(cond).select(bt(key.name).alias("__tf_in"))
-                .distinct()
-            )
-        out_df, in_repr, out_repr = tf(db, keys_df, *resolved)
-        for n in pv_names:
-            out_df = out_df.withColumn(f"__tfp_{n}", F.lit(vals[n]))
-        return out_df, in_repr, out_repr
-
-    live_rows = [
-        row
-        for row in combo_rows
-        # NULL never satisfies an equality predicate -> no bindings
-        if not any(row[n] is None for n in pv_names)
-    ]
-    # Evaluate combos CONCURRENTLY (guide §2.6: actions are sequential
-    # only because the driver calls them sequentially): each combo's
-    # table-fn call runs eager setup jobs (ANN probe ranking, persists)
-    # that are independent across combos, so a small driver pool lets
-    # one combo's tail back-fill the cores another's barrier left idle
-    # — measured 6.6s -> 3.5s on r159 (6 combos) at sf0.1. Results are
-    # order-preserved (pool.map) and per-combo values are unaffected by
-    # scheduling; the cap bounds the pool like the loop it replaces.
-    # inheritable_thread_target propagates the caller's JVM-thread-local
-    # properties (job group/description) into the pool threads, so jobs
-    # submitted by combo workers still count toward the caller's group
-    # (the bench's per-entry job metric counts by group).
-    in_repr = out_repr = None
-    outs = []
-    if len(live_rows) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
-
-        with ThreadPoolExecutor(
-            max_workers=min(4, len(live_rows))
-        ) as pool:
-            results = list(
-                pool.map(
-                    inheritable_thread_target(db.store.spark)(_eval_combo),
-                    live_rows,
-                )
-            )
-    else:
-        results = [_eval_combo(row) for row in live_rows]
-    for out_df, in_repr, out_repr in results:
-        outs.append(out_df)
-    if not outs:
-        # empty input relation (or all-NULL params): the result is empty;
-        # no call was made, so the output repr is unconstrained — long
-        # keeps the schema concrete for downstream projection (zero rows,
-        # so no unification can observe the choice)
-        if out.name in rel.vars:
-            return Rel(rel.df.limit(0), dict(rel.vars))
-        df = rel.df.limit(0).withColumn(
-            out.name, F.lit(None).cast("bigint")
-        )
-        return Rel(df, {**rel.vars, out.name: "long"})
-    union = outs[0]
-    for o in outs[1:]:
-        union = union.unionByName(o)
-    if literal_key is not None:
-        cond = F.lit(True)
-        for n in pv_names:
-            cond = cond & (bt(n) == F.col(f"__tfp_{n}"))
-        joined = rel.df.join(
-            F.broadcast(union.drop("__tf_in")), cond
-        )
-    else:
-        jcond = unify_condition(
-            bt(key.name), rel.vars[key.name], F.col("__tf_in"), in_repr
-        )
-        cond = jcond if jcond is not None else F.lit(False)
-        for n in pv_names:
-            cond = cond & (bt(n) == F.col(f"__tfp_{n}"))
-        joined = rel.df.join(union, cond).drop("__tf_in")
-    joined = joined.drop(*[f"__tfp_{n}" for n in pv_names])
-    return _bind_tf_out(rel, joined, out, out_repr)
+    combos = [{n: row[n] for n in names} for row in rows]
+    return [vals for vals in combos if None not in vals.values()]
 
 
 def _apply_clause(db: Db, rel: Optional[Rel], c, rules_env) -> Rel:

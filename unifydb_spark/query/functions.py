@@ -17,39 +17,23 @@ Documented divergences from Clojure semantics (SURVEY §7 "genuinely hard"):
 
 from __future__ import annotations
 
-from typing import Any, Callable
+from typing import Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from unifydb_spark.query.parse import QueryError
-from unifydb_spark.values import json_strings
+from unifydb_spark.values import encode_const, json_strings, unify_condition
 
 # (Column, repr) pairs flow through; repr tags are the compiler's static
 # types: long double string bool ref ts json struct
 
 
-def _lit(v: Any):
-    from unifydb_spark.values import Ref
-
-    if isinstance(v, bool):
-        return F.lit(v), "bool"
-    if isinstance(v, Ref):  # int(...) — py4j serializes int subclasses by repr
-        return F.lit(int(v)), "ref"
-    if isinstance(v, int):
-        return F.lit(v), "long"
-    if isinstance(v, float):
-        return F.lit(v), "double"
-    if isinstance(v, str):
-        return F.lit(v), "string"
-    return F.lit(v), "unknown"
-
-
 def as_col(arg) -> tuple:
-    """arg is (Column, repr) or a Python constant."""
+    """arg is (Column, repr) or a query constant (`values.encode_const`)."""
     if isinstance(arg, tuple) and isinstance(arg[0], Column):
         return arg
-    return _lit(arg)
+    return encode_const(arg)
 
 
 def num(arg) -> Column:
@@ -76,10 +60,16 @@ def _variadic_cmp(op: Callable) -> Callable:
 
 
 def _eq(*args):
-    cols = [as_col(a)[0] for a in args]
+    """`=`: a side holding a value struct or vector text compares by
+    unification (`unify_condition`, type-strict); two typed scalars
+    compare with Spark `=`, so `(= 1 1.0)` holds (unlike Clojure)."""
+    sides = [as_col(a) for a in args]
     cond = F.lit(True)
-    for x, y in zip(cols, cols[1:]):
-        cond = cond & (x == y)
+    for (x, rx), (y, ry) in zip(sides, sides[1:]):
+        if {rx, ry} & {"struct", "json"}:
+            cond = cond & unify_condition(x, rx, y, ry)
+        else:
+            cond = cond & (x == y)
     return cond, "bool"
 
 

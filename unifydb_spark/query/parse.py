@@ -90,6 +90,10 @@ class SeqPat:
                 return False
         return True
 
+    def value(self) -> list:
+        """The vector a ground pattern denotes."""
+        return [it.value() if isinstance(it, SeqPat) else it for it in self.items]
+
 
 @dataclass(frozen=True)
 class Pattern:

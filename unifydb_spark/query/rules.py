@@ -18,6 +18,12 @@ query.clj:271). Here:
    demand seeding; an iteration cap guards non-termination on
    pathological rules.
 
+Every term pair of a call and a rule conclusion unifies the way a fact
+pattern does: a constant on either side (call argument, head parameter,
+axiom argument, magic-set seed) is `values.encode_const`'s column and
+repr, compared through `unify_condition`, so `1`, `1.0`, `true` and
+`Ref(1)` stay distinct and a vector or nil constant works everywhere.
+
 Scale notes: the fixpoint's per-iteration work is distinct+anti-join on the
 IDB key columns — both shuffle on the same keys, so AQE coalesces them; the
 delta shrinks monotonically. Recursion through :not (unstratified negation)
@@ -33,6 +39,7 @@ from pyspark.sql import functions as F
 
 from unifydb_spark import instrument, iterate
 from unifydb_spark.query import compile as C
+from unifydb_spark.values import encode_const
 from unifydb_spark.query.parse import (
     And,
     FnBind,
@@ -132,67 +139,40 @@ def _rename_clause(c, mapping):
     return c
 
 
-def _const_repr(v) -> str:
-    from unifydb_spark.values import Ref
-
-    if isinstance(v, Ref):
-        return "ref"
-    if isinstance(v, bool):
-        return "bool"
-    if isinstance(v, int):
-        return "long"
-    if isinstance(v, float):
-        return "double"
-    if isinstance(v, str):
-        return "string"
-    return "json"
-
-
 def _adapt(rel: C.Rel, params: tuple, args: tuple) -> C.Rel:
     """Unify a rule-result relation (columns = head params) with the
     call-site argument terms (reference unify of query against rule
-    conclusion, query.clj:260-274)."""
-    df = rel.df
+    conclusion, query.clj:260-274). A head constant and a call constant
+    are both `encode_const` columns, so every pair of terms unifies the
+    way a fact pattern does (`unify_condition`)."""
     out_vars: dict[str, str] = {}
     select = []
     conds = []
     seen_args: dict[str, tuple] = {}
     for param, arg in zip(params, args):
-        if isinstance(param, Var):
-            if param.name not in rel.vars:
-                raise QueryError(
-                    "unbound-variable",
-                    f"rule head variable ?{param.name} is never bound in the body",
-                )
-            prepr = rel.vars[param.name]
-            pcol = C.bt(param.name)
-            if isinstance(arg, Var):
-                if arg.name in seen_args:  # repeated call arg: (r ?x ?x)
-                    c0, r0 = seen_args[arg.name]
-                    cond = C.unify_condition(pcol, prepr, c0, r0)
-                    conds.append(cond if cond is not None else F.lit(False))
-                else:
-                    seen_args[arg.name] = (pcol, prepr)
-                    select.append(pcol.alias(arg.name))
-                    out_vars[arg.name] = prepr
-            elif arg is WILDCARD:
-                pass
-            else:
-                cond = C.unify_condition(
-                    pcol, prepr, F.lit(int(arg) if _const_repr(arg) == "ref" else arg),
-                    _const_repr(arg),
-                )
-                conds.append(cond if cond is not None else F.lit(False))
-        else:  # constant head param
-            if isinstance(arg, Var):
-                if arg.name not in seen_args:
-                    r = _const_repr(param)
-                    lit = F.lit(int(param) if r == "ref" else param)
-                    seen_args[arg.name] = (lit, r)
-                    select.append(lit.alias(arg.name))
-                    out_vars[arg.name] = r
-            elif arg is not WILDCARD and arg != param:
-                conds.append(F.lit(False))
+        if not isinstance(param, Var):
+            side = encode_const(param)
+        elif param.name in rel.vars:
+            side = (C.bt(param.name), rel.vars[param.name])
+        else:
+            raise QueryError(
+                "unbound-variable",
+                f"rule head variable ?{param.name} is never bound in the body",
+            )
+        if arg is WILDCARD:
+            continue
+        if not isinstance(arg, Var):
+            other = encode_const(arg)
+        elif arg.name in seen_args:  # repeated call arg: (r ?x ?x)
+            other = seen_args[arg.name]
+        else:
+            seen_args[arg.name] = side
+            select.append(side[0].alias(arg.name))
+            out_vars[arg.name] = side[1]
+            continue
+        cond = C.unify_condition(*side, *other)
+        conds.append(cond if cond is not None else F.lit(False))
+    df = rel.df
     for c in conds:
         df = df.filter(c)
     if not select:
@@ -235,40 +215,26 @@ def _expand_rule(db, rule: Rule, env: "RulesEnv") -> tuple:
     return params, rel
 
 
-def _axiom_rel(db, rule: Rule, app: RuleApp) -> Optional[C.Rel]:
-    """Bodiless rule: succeeds iff call args unify with head params."""
-    binds: dict[str, object] = {}
-    for param, arg in zip(rule.params, app.args):
-        if isinstance(param, Var):
-            if param.name in binds:
-                if binds[param.name] != arg:
-                    return None
-            else:
-                binds[param.name] = arg
-        else:
-            if arg is not WILDCARD and not isinstance(arg, Var) and arg != param:
-                return None
-    # every distinct arg var must end up with a concrete value
-    out = {}
-    for param, arg in zip(rule.params, app.args):
-        if isinstance(arg, Var):
-            val = param if not isinstance(param, Var) else binds.get(param.name)
-            if isinstance(val, (Var,)) or val is None or val is WILDCARD:
-                raise QueryError(
-                    "unbound-variable",
-                    f"axiom call leaves ?{arg.name} unbound",
-                )
-            out[arg.name] = val
-    df = db.store.spark.range(1)
-    cols, vars_out = [], {}
-    for name, val in out.items():
-        r = _const_repr(val)
-        cols.append(F.lit(int(val) if r == "ref" else val).alias(name))
-        vars_out[name] = r
-    return C.Rel(
-        df.select(*cols) if cols else df.select(F.lit(1).alias(f"__t{next(_FRESH)}")),
-        vars_out,
+def _axiom_rel(db, rule: Rule, app: RuleApp) -> C.Rel:
+    """Bodiless rule (reference rules.clj:3-7): one row holding each head
+    variable's value from the call's constants, unified with the call
+    like any rule conclusion (`_adapt`), so the row survives iff the call
+    args unify with the head params."""
+    pairs = [(p, a) for p, a in zip(rule.params, app.args) if a is not WILDCARD]
+    values: dict[str, tuple] = {}
+    for param, arg in pairs:
+        if isinstance(param, Var) and not isinstance(arg, Var):
+            values.setdefault(param.name, encode_const(arg))
+    for param, arg in pairs:
+        if isinstance(param, Var) and param.name not in values:
+            raise QueryError(
+                "unbound-variable", f"axiom call leaves ?{arg.name} unbound"
+            )
+    df = db.store.spark.range(1).select(
+        *[c.alias(n) for n, (c, _) in values.items()]
     )
+    rel = C.Rel(df, {n: r for n, (_, r) in values.items()})
+    return _adapt(rel, tuple(p for p, _ in pairs), tuple(a for _, a in pairs))
 
 
 def compile_rule_app(db, app: RuleApp, env: Optional["RulesEnv"]) -> C.Rel:
@@ -285,14 +251,10 @@ def compile_rule_app(db, app: RuleApp, env: Optional["RulesEnv"]) -> C.Rel:
     rels = []
     for rule in env.by_name[app.name]:
         if not rule.body.clauses:
-            ax = _axiom_rel(db, rule, app)
-            if ax is not None:
-                rels.append(ax)
+            rels.append(_axiom_rel(db, rule, app))
             continue
         params, rel = _expand_rule(db, rule, env)
         rels.append(_adapt(rel, params, app.args))
-    if not rels:
-        raise QueryError("unknown-rule", f"no applicable rule {app.name}")
     return C.align_union(rels)
 
 
@@ -451,11 +413,8 @@ def _magic_seed(db, name: str, env: "RulesEnv", scc: set, app_args) -> Optional[
                     sel.append(C.bt(a).alias(f"__c{k}"))
                     vars_out[f"__c{k}"] = rel.vars[a]
                 elif kind == "const":
-                    r = _const_repr(a)
-                    sel.append(
-                        F.lit(int(a) if r == "ref" else a).alias(f"__c{k}")
-                    )
-                    vars_out[f"__c{k}"] = r
+                    c, vars_out[f"__c{k}"] = encode_const(a)
+                    sel.append(c.alias(f"__c{k}"))
                 # 'pass' slots carry the delta's own __m{k} through the join
             steps.append(
                 (
@@ -467,10 +426,8 @@ def _magic_seed(db, name: str, env: "RulesEnv", scc: set, app_args) -> Optional[
     spark = db.store.spark
     seed_cols, seed_vars = [], {}
     for k, i in enumerate(bound):
-        a = app_args[i]
-        r = _const_repr(a)
-        seed_cols.append(F.lit(int(a) if r == "ref" else a).alias(f"__m{k}"))
-        seed_vars[f"__m{k}"] = r
+        c, seed_vars[f"__m{k}"] = encode_const(app_args[i])
+        seed_cols.append(c.alias(f"__m{k}"))
     total = C.Rel(
         spark.range(1).select(*seed_cols).localCheckpoint(eager=True), seed_vars
     )

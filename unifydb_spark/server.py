@@ -37,29 +37,7 @@ from pyspark.errors import PySparkException
 
 from unifydb_spark import structlog
 from unifydb_spark.query.parse import QueryError
-from unifydb_spark.values import Ref
-
-
-def _jsonable(v):
-    if isinstance(v, Ref):
-        return {"$ref": int(v)}
-    if isinstance(v, (list, tuple)):
-        return [_jsonable(x) for x in v]
-    if isinstance(v, dict):
-        return {k: _jsonable(x) for k, x in v.items()}
-    if hasattr(v, "isoformat"):
-        return v.isoformat()
-    return v
-
-
-def _decode_refs(v):
-    if isinstance(v, dict) and set(v) == {"$ref"}:
-        return Ref(v["$ref"])
-    if isinstance(v, list):
-        return [_decode_refs(x) for x in v]
-    if isinstance(v, dict):
-        return {k: _decode_refs(x) for k, x in v.items()}
-    return v
+from unifydb_spark.values import decode_json_value, jsonable
 
 
 def _normalize_query(q):
@@ -78,7 +56,7 @@ def _normalize_query(q):
             return [walk(i) for i in x]
         return x
 
-    return walk(_decode_refs(q))
+    return walk(decode_json_value(q))
 
 
 class EngineHandler(BaseHTTPRequestHandler):
@@ -137,7 +115,7 @@ class EngineHandler(BaseHTTPRequestHandler):
             body = edn.dumps(payload).encode("utf-8")
             ctype = "application/edn"
         else:
-            body = json.dumps(_jsonable(payload)).encode("utf-8")
+            body = json.dumps(jsonable(payload)).encode("utf-8")
             ctype = "application/json"
         self.send_response(code)
         self.send_header("Content-Type", ctype)

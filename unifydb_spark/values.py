@@ -122,22 +122,25 @@ _EMPTY = dict.fromkeys(NATURAL_COL.values())
 def canonical_json(v: Any) -> str:
     """Deterministic JSON for nested sequence values (sorted keys, no
     spaces); a `Ref` at any depth is written ``{"$ref": n}``."""
-    return json.dumps(_jsonable(v), sort_keys=True, separators=(",", ":"))
+    return json.dumps(jsonable(v), sort_keys=True, separators=(",", ":"))
 
 
-def _jsonable(v: Any):
-    # json writes int subclasses natively, so Refs are rewritten up front
+def jsonable(v: Any):
+    """`v` as plain JSON data: a `Ref` at any depth becomes ``{"$ref": n}``
+    (json writes int subclasses natively, so Refs are rewritten up front),
+    a date or datetime its ISO string (`decode_json_value` reads the Refs
+    back)."""
     if isinstance(v, Ref):
         return {"$ref": int(v)}
     if isinstance(v, (list, tuple)):
-        return [_jsonable(x) for x in v]
+        return [jsonable(x) for x in v]
     if isinstance(v, dict):
-        return {k: _jsonable(x) for k, x in v.items()}
+        return {k: jsonable(x) for k, x in v.items()}
     if isinstance(v, (_dt.datetime, _dt.date)):
         return v.isoformat()
     if isinstance(v, (str, int, float)) or v is None:
         return v
-    raise TypeError(f"not JSON-encodable in a fact value: {v!r}")
+    raise TypeError(f"not JSON-encodable: {v!r}")
 
 
 def encode_value(v: Any) -> dict:
@@ -230,12 +233,13 @@ def value_struct_col():
 
 def to_struct(c, repr_: str):
     """A column of compile-time repr `repr_` as the value struct: typed
-    columns fill their tag's slot, JSON text is decoded (`json_to_struct`)."""
+    columns fill their tag's slot, JSON text is decoded (`json_to_struct`);
+    repr `null` is nil, every slot empty (`c` unused)."""
     if repr_ == "struct":
         return c
     if repr_ == T_JSON:
         return json_to_struct(c)
-    if repr_ not in CODEC:  # an aggregate's repr (decimal, array<..>)
+    if repr_ not in CODEC and repr_ != T_NULL:  # an aggregate's repr
         raise ValueError(f"no value struct for repr {repr_!r}")
     return F.struct(
         F.lit(repr_).alias("t"),
@@ -244,6 +248,45 @@ def to_struct(c, repr_: str):
             for t, slot in STRUCT_SLOT.items()
         ],
     )
+
+
+def encode_const(v: Any) -> tuple:
+    """A query constant as (Column, repr), the one encoding every clause
+    kind uses (fact pattern, rule call and head, axiom, predicate and
+    function argument), so a constant unifies the same way wherever it
+    appears: a `Ref` is repr `ref`, a scalar its tag (a datetime `ts`), a
+    ground vector `json` (its `canonical_json` text), nil the value
+    struct of tag `null` (repr `struct`). Anything else, a vector holding
+    a variable included, is an `invalid-query`."""
+    # parse imports the store, which imports this module
+    from unifydb_spark.query.parse import QueryError, SeqPat
+
+    if isinstance(v, SeqPat):
+        if not v.is_ground():
+            raise QueryError(
+                "invalid-query", f"a vector constant must be ground: {v!r}"
+            )
+        v = v.value()
+    try:
+        enc = encode_value(v)
+    except (TypeError, ValueError) as e:
+        raise QueryError("invalid-query", f"unsupported constant {v!r}") from e
+    tag = enc["v_type"]
+    if tag == T_NULL:
+        return to_struct(None, T_NULL), "struct"
+    return F.lit(enc[NATURAL_COL[tag]]).cast(REPR_DDL[tag]), tag
+
+
+def unify_condition(lc, lrepr: str, rc, rrepr: str):
+    """Equality condition between two value columns of compile-time reprs
+    `lrepr` and `rrepr`. Different reprs compare as decoded value structs;
+    returns None when unification is statically impossible (strict
+    typing: the reference's ID type and Clojure `=` are type-strict)."""
+    if lrepr == rrepr:
+        return lc == rc
+    if "json" in (lrepr, rrepr) or "struct" in (lrepr, rrepr):
+        return to_struct(lc, lrepr) == to_struct(rc, rrepr)
+    return None
 
 
 _REF_JSON = r'^\{"\$ref":(-?[0-9]+)\}$'
